@@ -1,5 +1,9 @@
 """Advanced directive tests — binary formats use the reference's own
-golden test resources (titanic.xlsx, cdap-log.avro) as INPUT DATA."""
+golden test resources (titanic.xlsx, cdap-log.avro) as INPUT DATA when
+they are present, and payloads of the same shape built with the
+package's own writers when they are not."""
+
+import os
 
 import pytest
 
@@ -8,9 +12,42 @@ from pyspark.sql import functions as F
 from wrangler_spark import Pipeline
 from wrangler_spark.directives.stemmer import porter_stem
 from wrangler_spark.errors import DirectiveApplyError
+from wrangler_spark.formats.avro_ocf import write_ocf
+from wrangler_spark.formats.xlsx import write_xlsx
 
 XLSX = "/root/reference/wrangler-core/src/test/resources/titanic.xlsx"
 AVRO = "/root/reference/wrangler-core/src/test/resources/cdap-log.avro"
+
+
+def _titanic_xlsx() -> bytes:
+    """titanic.xlsx's shape: a header row plus 891 passenger rows."""
+    header = ["PassengerId", "Survived", "Pclass", "Name", "Sex", "Age", "Fare"]
+    rows = [[i, i % 2, 1 + i % 3, f"Passenger, Mr. No{i}", ("male", "female")[i % 2],
+             None if i % 5 == 0 else 20 + i % 40, round(7.25 + i % 50, 2)]
+            for i in range(1, 892)]
+    return write_xlsx([header] + rows)
+
+
+def _cdap_log_avro() -> bytes:
+    """cdap-log.avro's shape: 1689 log records with a long timestamp."""
+    schema = {"type": "record", "name": "LogEvent", "fields": [
+        {"name": "timestamp", "type": "long"},
+        {"name": "level", "type": "string"},
+        {"name": "logger", "type": "string"},
+        {"name": "message", "type": "string"},
+    ]}
+    levels = ["INFO", "DEBUG", "WARN", "ERROR"]
+    records = [{"timestamp": 1_500_000_000_000 + 37 * i, "level": levels[i % 4],
+                "logger": f"co.cask.cdap.app{i % 9}", "message": f"event {i} handled"}
+               for i in range(1689)]
+    return write_ocf(schema, records)
+
+
+def _payload(path: str, synthesize) -> bytes:
+    if os.path.exists(path):
+        with open(path, "rb") as fh:
+            return fh.read()
+    return synthesize()
 
 
 def test_porter_stem_golden():
@@ -39,7 +76,7 @@ def test_stemming_directive(spark):
 
 @pytest.fixture(scope="module")
 def xlsx_df(spark):
-    payload = open(XLSX, "rb").read()
+    payload = _payload(XLSX, _titanic_xlsx)
     return spark.createDataFrame([(payload,)], "body binary")
 
 
@@ -69,7 +106,7 @@ def test_parse_as_excel_missing_sheet_routes_to_errors(xlsx_df):
 
 
 def test_parse_as_avro_file(spark):
-    payload = open(AVRO, "rb").read()
+    payload = _payload(AVRO, _cdap_log_avro)
     df = spark.createDataFrame([(payload,)], "body binary")
     out = Pipeline.compile("parse-as-avro-file :body").apply(df)
     assert out.count() == 1689
@@ -282,7 +319,7 @@ def test_parse_as_excel_mixed_payloads_keep_cell_schema(spark):
     one has it, the schema must come from the readable payload — not
     silently degrade to fwd/bkd-only (which dropped every cell column for
     the payloads that DO contain the sheet)."""
-    payload = open(XLSX, "rb").read()
+    payload = _payload(XLSX, _titanic_xlsx)
     bogus = b"PK\x03\x04 not actually a workbook"
     df = spark.createDataFrame([(1, bogus), (2, payload)], "rid int, body binary")
     res = Pipeline.compile("parse-as-excel :body '0' true").transform(df.orderBy("rid"))

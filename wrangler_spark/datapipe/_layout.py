@@ -56,20 +56,54 @@ the lock can COMMIT; the loser fails loudly before its marker create,
 so a double-steal can no longer publish interleaved files. Releases are
 token-checked too: a fenced-out writer's release never deletes the
 usurper's lock.
+
+Replay ledger (the state-fold family's exactly-once check): every fold
+that carries a non-empty ``batch_id`` goes through :func:`fold_once`,
+which records committed batch ids as one empty marker file per id in
+``<path>/_batches/`` — the file name is the sha256 hex of the id, so
+any id (slashes, spaces, non-ASCII, any length) is a valid name. The
+ledger sits at the artifact root, outside every ``v_NNNNNN`` dir:
+compaction never copies it, vacuum skips it (``_``-prefixed), and a
+replay check is a file-existence test instead of a Spark probe job over
+the state rows. All ledger reads and writes happen under the writer
+lease. The protocol, per fold of id K:
+
+1. ``_batches/<K>`` exists — the batch is already folded: no-op.
+2. ``_batches/<K>.pending`` exists — an earlier attempt died between
+   its pending mark and its done mark, so its append may or may not
+   have committed. Fall back to probing the state rows for the id: if
+   they hold it, write ``<K>`` and no-op; if not, fold.
+3. Otherwise write ``<K>.pending``, append, write ``<K>``, delete
+   ``<K>.pending``.
+
+Crash windows: before ``.pending`` nothing happened; between
+``.pending`` and the append's commit the rows lack the id and the
+replay folds; between the append's commit and ``<K>`` the rows hold the
+id (compaction preserves ids, as zero-count ledger rows for vocab and
+funnel state) and the replay only writes ``<K>``; after ``<K>`` the
+replay is a file test. A state written before the ledger existed
+(``rows`` but no ``_batches/``) is backfilled once: the distinct
+non-empty ids of its rows are collected in one job and their markers
+written into a scratch dir that is renamed into place, so a crash
+mid-backfill leaves no partial ledger. An empty ``batch_id`` means no
+dedup: the fold appends and no marker is written.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import threading
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 _VERSION_RE = re.compile(r"^v_(\d{6,})$")
 _MARKER = "_COMMITTED"
 _LOCK = "_LOCK"
+_LEDGER = "_batches"
 
 # fencing tokens for leases held by THIS process, keyed by artifact
 # path: acquire writes the token into _LOCK, commit re-verifies it on
@@ -335,3 +369,102 @@ def vacuum(spark: SparkSession, path: str, keep: int = 2) -> list[str]:
             fs.delete(st.getPath(), True)
             deleted.append(f"{path}/{name}")
     return deleted
+
+
+def _ledger_key(batch_id: str) -> str:
+    return hashlib.sha256(str(batch_id).encode("utf-8")).hexdigest()
+
+
+def _rows_hold(spark: SparkSession, root: str, batch_id: str) -> bool:
+    """The Spark probe the ledger replaces: does ``<root>/rows`` hold a
+    row of ``batch_id``? False when no fold has appended yet."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        rows = spark.read.parquet(f"{root}/rows")
+    except AnalysisException as ex:
+        if "PATH_NOT_FOUND" not in str(ex):
+            raise
+        return False
+    return bool(rows.filter(F.col("batch_id") == batch_id).limit(1).count())
+
+
+def _backfill_ledger(spark: SparkSession, path: str, root: str) -> None:
+    """Build ``<path>/_batches/`` for a state written before the ledger
+    existed: one marker per distinct non-empty batch id of its rows
+    (compaction's ledger rows included), written into a scratch dir and
+    renamed into place, so the ledger appears whole or not at all."""
+    fs, base, jvm = _fs(spark, path)
+    P = jvm.org.apache.hadoop.fs.Path
+    rows = P(f"{root}/rows")
+    if not fs.exists(rows):
+        fs.mkdirs(P(base, _LEDGER))             # fresh state: nothing to backfill
+        return
+    scratch = P(base, _LEDGER + ".backfill")
+    fs.delete(scratch, True)
+    fs.mkdirs(scratch)
+    ids = (spark.read.parquet(rows.toString()).filter(F.col("batch_id") != "")
+           .select("batch_id").distinct().collect())
+    for r in ids:
+        fs.create(P(scratch, _ledger_key(r["batch_id"])), True).close()
+    fs.rename(scratch, P(base, _LEDGER))
+
+
+@contextmanager
+def fold_once(spark: SparkSession, path: str, batch_id: str):
+    """Run one state fold exactly once per ``batch_id``: hold the
+    writer lease, then yield the resolved root the fold appends under,
+    or ``None`` when the batch is already folded (the caller returns).
+    The done marker is written only after the body returns; a body that
+    raises leaves its ``.pending`` mark, so the next attempt probes the
+    rows. See the module docstring for the protocol and its crash
+    windows. An empty ``batch_id`` yields the root with no ledger
+    access at all."""
+    with writer_lease(spark, path):
+        root = resolve(spark, path)
+        if not batch_id:
+            yield root
+            return
+        fs, base, jvm = _fs(spark, path)
+        P = jvm.org.apache.hadoop.fs.Path
+        ledger, key = P(base, _LEDGER), _ledger_key(batch_id)
+        done, pending = P(ledger, key), P(ledger, key + ".pending")
+        if not fs.exists(done) and not fs.exists(ledger):
+            _backfill_ledger(spark, path, root)
+        if fs.exists(done):
+            yield None
+            return
+        if not fs.exists(pending):
+            fs.create(pending, True).close()
+        elif _rows_hold(spark, root, str(batch_id)):
+            fs.create(done, True).close()
+            fs.delete(pending, False)
+            yield None
+            return
+        yield root
+        fs.create(done, True).close()
+        fs.delete(pending, False)
+
+
+def drop_ledger(spark: SparkSession, path: str) -> None:
+    """Forget every recorded batch id of ``path`` — for a build that
+    replaces the state rows wholesale (a re-init), whose old ids must
+    fold again. Call it under the writer lease, BEFORE the new version
+    commits: a crash in between leaves the old rows visible with no
+    ledger, which the next fold backfills from those rows."""
+    fs, base, jvm = _fs(spark, path)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(base, _LEDGER), True)
+
+
+def fold_stream(stream, checkpoint: str, trigger: dict | None, fold):
+    """Start the foreachBatch sink every state family's ``*_update_stream``
+    shares: each micro-batch runs ``fold(batch, batch_id)`` with the
+    micro-batch id as the batch id, so at-least-once delivery plus
+    :func:`fold_once` is exactly-once state. Returns the started
+    StreamingQuery; default trigger availableNow (drain-and-stop)."""
+    return (
+        stream.writeStream.option("checkpointLocation", checkpoint)
+        .foreachBatch(lambda batch, bid: fold(batch, str(bid)))
+        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
+        .start()
+    )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wrangler_spark.datapipe import _layout
 from wrangler_spark.datapipe._local import local_table
 
 from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
@@ -1783,14 +1784,11 @@ def report_update_state(
     all batches must agree on it, and it may not collide with the
     report's own metric names.
 
-    Idempotence: a non-empty ``batch_id`` already present in the state
-    makes the fold a NO-OP, so a replayed micro-batch
-    (report_update_stream's crash-recovery path) never double-counts —
-    the vocab_update_state contract. The check + append hold the
-    ``_layout`` writer lease."""
-    from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
+    Idempotence: a non-empty ``batch_id`` already folded makes the
+    fold a NO-OP, so a replayed micro-batch (report_update_stream's
+    crash-recovery path) never double-counts — the vocab_update_state
+    contract (the ``_layout`` replay ledger). The check + append hold
+    the ``_layout`` writer lease."""
     from wrangler_spark.datapipe.dedup import normalize_text
 
     if by and by in _REPORT_STATE_COLS:
@@ -1798,22 +1796,9 @@ def report_update_state(
             f"by={by!r} collides with a report state column; rename the "
             "group column before folding it into state"
         )
-    with _layout.writer_lease(df.sparkSession, path):
-        if batch_id:
-            try:
-                seen = (
-                    df.sparkSession.read.parquet(
-                        f"{_layout.resolve(df.sparkSession, path)}/rows"
-                    )
-                    .filter(F.col("batch_id") == str(batch_id))
-                    .limit(1)
-                    .count()
-                )
-                if seen:
-                    return
-            except AnalysisException as ex:
-                if "PATH_NOT_FOUND" not in str(ex):
-                    raise
+    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
+        if root is None:
+            return
         key = F.md5(normalize_text(F.col(text_col)))
         words = F.size(F.split(normalize_text(F.col(text_col)), " "))
         aggs = [
@@ -1828,7 +1813,6 @@ def report_update_state(
             aggs.append(F.hll_sketch_agg(F.col(lang_col)).alias("lang_sketch"))
         agged = df.groupBy(by).agg(*aggs) if by else df.agg(*aggs)
         row = agged.withColumn("batch_id", F.lit(str(batch_id)))
-        root = _layout.resolve(df.sparkSession, path)
         row.write.mode("append").parquet(f"{root}/rows")
 
 
@@ -1847,16 +1831,10 @@ def report_update_stream(
     report_update_state no-ops on an id already in the state, so
     at-least-once delivery yields EXACTLY-ONCE state. Returns the
     started StreamingQuery; default trigger availableNow."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: report_update_state(
-                batch, path, id_col, text_col, lang_col, str(bid), by
-            )
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: report_update_state(
+            b, path, id_col, text_col, lang_col, bid, by))
 
 
 # the metric/meta columns every report state row carries; anything else
@@ -1880,8 +1858,6 @@ def report_from_state(spark, path: str, version: int | None = None) -> DataFrame
     returning one report row per group, keyed by the group column's
     REAL name as written by report_update_state; states written before
     the name was preserved surface as ``__grp``) — never the corpus."""
-    from wrangler_spark.datapipe import _layout
-
     # mergeSchema: batches written with DIFFERENT group columns must
     # surface as multiple extra columns (and be rejected below), not be
     # hidden by the single-footer schema sample a plain read takes
@@ -2552,16 +2528,16 @@ def cms_update_state(
     union of all batches. Geometry is pinned in the state rows and
     checked on every fold (probing a different grid would silently
     misestimate — the bloom/minhash pinned-geometry discipline). A
-    non-empty ``batch_id`` already present makes the fold a NO-OP
-    (exactly-once under at-least-once replay)."""
+    non-empty ``batch_id`` already folded makes the fold a NO-OP
+    (exactly-once under at-least-once replay, through the ``_layout``
+    replay ledger)."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     _cms_geometry(depth, width)
     spark = df.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.fold_once(spark, path, batch_id) as root:
+        if root is None:
+            return
         try:
             rows = spark.read.parquet(f"{root}/rows")
             stored = rows.select("depth", "width").limit(1).collect()
@@ -2571,10 +2547,6 @@ def cms_update_state(
                     f"cms state at {path} was built depth="
                     f"{stored[0]['depth']} width={stored[0]['width']}, fold "
                     f"offered ({depth}, {width}) — grids are incompatible")
-            if batch_id and rows.filter(
-                F.col("batch_id") == str(batch_id)
-            ).limit(1).count():
-                return
         except AnalysisException as ex:
             if "PATH_NOT_FOUND" not in str(ex):
                 raise
@@ -2596,15 +2568,9 @@ def cms_update_stream(
     edge of the CMS batch/state/stream triangle (the hist_update_stream
     shape): micro-batch id = batch_id, so at-least-once foreachBatch
     replay yields exactly-once state."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: cms_update_state(
-                batch, path, col, depth, width, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: cms_update_state(b, path, col, depth, width, bid))
 
 
 def cms_from_state(spark, path: str, version: int | None = None):
@@ -2613,8 +2579,6 @@ def cms_from_state(spark, path: str, version: int | None = None):
     ``version`` pins an older committed snapshot (compaction cadence =
     snapshot cadence). Returns (sketch, depth, width)."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     try:
         rows = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
@@ -2734,11 +2698,10 @@ def distinct_update_state(
     :func:`distinct_from_state` reproduces the one-shot estimate over
     the union of all batches exactly. ``lgk`` is pinned in the rows
     and checked on every fold; a non-empty ``batch_id`` already
-    present makes the fold a NO-OP (exactly-once under replay);
-    check + append hold the writer lease."""
+    folded makes the fold a NO-OP (exactly-once under replay, through
+    the ``_layout`` replay ledger); check + append hold the writer
+    lease."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     spark = df.sparkSession
     batch = distinct_sketch(df, cols, by, lgk).select(
@@ -2748,8 +2711,9 @@ def distinct_update_state(
         F.lit(int(lgk)).alias("lgk"),
         F.lit(str(batch_id)).alias("batch_id"),
     )
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.fold_once(spark, path, batch_id) as root:
+        if root is None:
+            return
         try:
             rows = spark.read.parquet(f"{root}/rows")
             stored = rows.select("lgk").limit(1).collect()
@@ -2758,10 +2722,6 @@ def distinct_update_state(
                     f"distinct state at {path} was built lgk="
                     f"{stored[0]['lgk']}, fold offered {lgk} — registers "
                     "are incompatible")
-            if batch_id and rows.filter(
-                F.col("batch_id") == str(batch_id)
-            ).limit(1).count():
-                return
         except AnalysisException as ex:
             if "PATH_NOT_FOUND" not in str(ex):
                 raise
@@ -2776,8 +2736,6 @@ def distinct_from_state(
     (group, column, estimate). ``version`` pins an older committed
     snapshot (time travel, the resample/cms convention)."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     try:
         rows = spark.read.parquet(
@@ -2805,15 +2763,9 @@ def distinct_update_stream(
     edge of the distinct batch/state/stream triangle (the
     cms_update_stream shape): micro-batch id = batch_id, so
     at-least-once foreachBatch replay yields exactly-once state."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: distinct_update_state(
-                batch, path, cols, by, lgk, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: distinct_update_state(b, path, cols, by, lgk, bid))
 
 
 def constraints_update_state(
@@ -2827,26 +2779,13 @@ def constraints_update_state(
     history; O(batch) work, rules x batches state. Raw (viol, n)
     integers ride along so :func:`constraints_from_state` can rebuild
     the exact across-all-batches report by summation. A non-empty
-    ``batch_id`` already present makes the fold a NO-OP (the
-    exactly-once replay contract); check + append hold the writer
-    lease."""
-    from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
-
-    spark = df.sparkSession
+    ``batch_id`` already folded makes the fold a NO-OP (the
+    exactly-once replay contract, through the ``_layout`` replay
+    ledger); check + append hold the writer lease."""
     report = check_constraints(df, rules, include_counts=True)
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
-        try:
-            rows = spark.read.parquet(f"{root}/rows")
-            if batch_id and rows.filter(
-                F.col("batch_id") == str(batch_id)
-            ).limit(1).count():
-                return
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
+    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
+        if root is None:
+            return
         (
             report.withColumn("batch_id", F.lit(str(batch_id)))
             .write.mode("append")
@@ -2862,15 +2801,9 @@ def constraints_update_stream(
     report into persisted state — the live data-quality monitor (the
     report_update_stream posture): micro-batch id = batch_id, so
     at-least-once foreachBatch replay yields exactly-once state."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: constraints_update_state(
-                batch, path, rules, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: constraints_update_state(b, path, rules, bid))
 
 
 def constraints_history(spark, path: str, version: int | None = None) -> DataFrame:
@@ -2879,8 +2812,6 @@ def constraints_history(spark, path: str, version: int | None = None) -> DataFra
     :func:`~wrangler_spark.datapipe.events.rolling_stats` keyed on
     (rule, column) to alarm on drifting violation fractions.
     ``version`` pins an older committed snapshot."""
-    from wrangler_spark.datapipe import _layout
-
     return spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
 
 
@@ -2896,8 +2827,6 @@ def constraints_from_state(
     can't see) and are EXCLUDED here — read them from
     :func:`constraints_history`."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     try:
         rows = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")

@@ -46,6 +46,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wrangler_spark.datapipe import _layout
 from wrangler_spark.datapipe._local import local_table
 
 from wrangler_spark.datapipe._checkpoint import (
@@ -466,7 +467,6 @@ def active_users_from_state(
     if not ws or ws[0] < 1:
         raise ValueError(f"windows must be >= 1 days, got {windows}")
     _check_window_budget(ws, approx)
-    from wrangler_spark.datapipe import _layout
 
     from wrangler_spark.datapipe.maintenance import read_forgetting
 
@@ -620,8 +620,6 @@ def retention_write_state(
     snapshot build (``_layout``): a rebuild with different bucketing
     becomes visible only at its commit marker, never as new meta over
     old pairs."""
-    from wrangler_spark.datapipe import _layout
-
     spark = df.sparkSession
     vdir = _layout.begin_version(spark, path)
     (
@@ -650,7 +648,6 @@ def retention_update_state(
     never interleave with a compaction of the same state."""
     from pyspark.errors import AnalysisException
 
-    from wrangler_spark.datapipe import _layout
     from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
 
     spark = batch.sparkSession
@@ -678,8 +675,6 @@ def retention_init_state(
     pinning (period_days, calendar) — so a stream sink can fold
     micro-batches from nothing without knowing the user column's type
     up front (the pairs dataset materializes on the first append)."""
-    from wrangler_spark.datapipe import _layout
-
     vdir = _layout.begin_version(spark, path)
     local_table(spark,
         [(int(period_days), calendar or "", 2)],
@@ -729,14 +724,9 @@ def retention_update_stream(
         if "PATH_NOT_FOUND" not in str(ex):
             raise
         retention_init_state(spark, path, period_days, calendar)
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, _bid: retention_update_state(batch, path, user_col, ts_col)
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: retention_update_state(b, path, user_col, ts_col))
 
 
 def retention_grid_from_state(
@@ -756,8 +746,6 @@ def retention_grid_from_state(
     pre-forget snapshot also predates that version's tombstones — run
     ``vacuum_index`` after a forget if old snapshots must stop serving
     the forgotten ids."""
-    from wrangler_spark.datapipe import _layout
-
     from wrangler_spark.datapipe.maintenance import read_forgetting
 
     period_days, cal = _read_state_meta(spark, path, version)
@@ -846,8 +834,6 @@ def funnel_latencies(
 def _read_state_meta(spark, path: str, version: int | None = None) -> tuple[int, str | None]:
     """(period_days, calendar) from a state's meta table; v1 states
     (written before the calendar field) read as day-based."""
-    from wrangler_spark.datapipe import _layout
-
     row = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/meta").collect()[0]
     cal = row["calendar"] if "calendar" in row.__fields__ else ""
     return int(row["period_days"]), (cal or None)
@@ -872,8 +858,6 @@ def funnel_init_state(
     materializes on the first fold. An update against an existing state
     keeps ITS pinned definition (a fold with different steps would
     silently corrupt the chains — the retention meta contract)."""
-    from wrangler_spark.datapipe import _layout
-
     if len(steps) < 2:
         raise ValueError("funnel needs at least two steps")
     vdir = _layout.begin_version(spark, path)
@@ -882,12 +866,13 @@ def funnel_init_state(
           float(within_minutes) if within_minutes is not None else None, 1)],
         "steps array<string>, within_minutes double, state_version int",
     ).write.parquet(f"{vdir}/meta")
+    # the new version holds no slot rows: ids folded into an earlier
+    # definition must fold again
+    _layout.drop_ledger(spark, path)
     _layout.commit_version(spark, vdir)
 
 
 def _read_funnel_meta(spark, path: str, version: int | None = None) -> tuple[list[str], float | None]:
-    from wrangler_spark.datapipe import _layout
-
     row = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/meta").collect()[0]
     w = row["within_minutes"]
     return list(row["steps"]), (float(w) if w is not None else None)
@@ -966,32 +951,17 @@ def funnel_update_state(
     before a filled slot is ignored rather than re-chained — the same
     in-order discipline funnel_stream and sessionize_stream document.
 
-    Idempotence: a non-empty ``batch_id`` already present makes the
-    fold a NO-OP (the vocab_update_state contract; compaction preserves
-    ids as ledger rows), so stream replays never double-fold. The
-    check + append hold the ``_layout`` writer lease."""
-    from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
-
+    Idempotence: a non-empty ``batch_id`` already folded makes the
+    fold a NO-OP (the vocab_update_state contract: the ``_layout``
+    replay ledger, which runs no Spark job on a replay), so stream
+    replays never double-fold. Check + append hold the ``_layout``
+    writer lease."""
     spark = batch.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.fold_once(spark, path, batch_id) as root:
+        if root is None:
+            return
         steps, within = _read_funnel_meta(spark, path)
         k = len(steps)
-        if batch_id:
-            try:
-                seen = (
-                    spark.read.parquet(f"{root}/rows")
-                    .filter(F.col("batch_id") == str(batch_id))
-                    .limit(1)
-                    .count()
-                )
-                if seen:
-                    return
-            except AnalysisException as ex:
-                if "PATH_NOT_FOUND" not in str(ex):
-                    raise
         u, t = F.col(user_col), F.col(ts_col)
         per_user = (
             batch.filter(F.col(type_col).isin(steps) & u.isNotNull() & t.isNotNull())
@@ -1037,8 +1007,6 @@ def funnel_from_state(spark, path: str, version: int | None = None) -> DataFrame
     retention_grid_from_state posture). All-zero rows when nothing has
     folded yet."""
     steps, _ = _read_funnel_meta(spark, path, version)
-    from wrangler_spark.datapipe import _layout
-
     root = _layout.resolve(spark, path, version)
     steps_df = local_table(spark,
         [(i + 1, s) for i, s in enumerate(steps)], "step long, event_type string"
@@ -1100,16 +1068,10 @@ def funnel_update_stream(
                 "funnel_update_stream on a fresh path needs steps=[...] to pin"
             ) from ex
         funnel_init_state(spark, path, steps, within_minutes)
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, bid: funnel_update_state(
-                b, path, user_col, ts_col, type_col, str(bid)
-            )
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: funnel_update_state(
+            b, path, user_col, ts_col, type_col, bid))
 
 
 def resample(
@@ -1419,10 +1381,9 @@ def resample_update_state(
     state bounded by keys x buckets-touched x batches until
     compaction sum-merges it). The bucket grain is pinned in the state
     rows and checked on every fold; a non-empty ``batch_id`` already
-    present makes the fold a NO-OP (exactly-once under replay)."""
+    folded makes the fold a NO-OP (exactly-once under replay, through
+    the ``_layout`` replay ledger)."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     if every_minutes < 1:
         raise ValueError(f"every_minutes must be >= 1, got {every_minutes}")
@@ -1447,8 +1408,9 @@ def resample_update_state(
         )
     )
     spark = df.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.fold_once(spark, path, batch_id) as root:
+        if root is None:
+            return
         try:
             rows = spark.read.parquet(f"{root}/rows")
             stored = rows.select("step").limit(1).collect()
@@ -1457,10 +1419,6 @@ def resample_update_state(
                     f"resample state at {path} was built with a "
                     f"{stored[0]['step']}s bucket, fold offered {step}s — "
                     "grains are incompatible")
-            if batch_id and rows.filter(
-                F.col("batch_id") == str(batch_id)
-            ).limit(1).count():
-                return
         except AnalysisException as ex:
             if "PATH_NOT_FOUND" not in str(ex):
                 raise
@@ -1482,15 +1440,10 @@ def resample_update_stream(
     at-least-once replay folds exactly once. The live volume monitor:
     resample_from_state + rolling_stats off the state is the dashboard
     read, O(keys x buckets), never the event log."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, bid: resample_update_state(
-                b, path, key_col, ts_col, value_col, every_minutes, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: resample_update_state(
+            b, path, key_col, ts_col, value_col, every_minutes, bid))
 
 
 def resample_from_state(
@@ -1504,8 +1457,6 @@ def resample_from_state(
     grid-and-fill fold runs over the merged cells. ``version`` pins an
     older committed snapshot (compaction cadence = snapshot cadence)."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     if agg not in ("count", "sum", "min", "max", "avg"):
         raise ValueError(f"unknown agg {agg!r}")

@@ -186,8 +186,9 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
             df = df.groupBy("__w").agg(F.expr("bit_or(__bits)").alias("__bits"))
         elif set(df.columns) == _VOCAB_STATE_COLS:
             # sum-merge word counts (the read path's own merge), but
-            # PRESERVE the batch-id dedup ledger: vocab_update_state's
-            # exactly-once replay check keys on batch_id, so compaction
+            # PRESERVE the batch-id dedup ledger: the replay ledger's
+            # crash-window fallback and its legacy backfill
+            # (_layout.fold_once) read batch ids from the rows, so compaction
             # keeps one zero-count ledger row per original batch id
             # (word NULL — the update path can never produce a null
             # word, and the state readers filter them out). A replayed

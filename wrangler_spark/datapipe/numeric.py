@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wrangler_spark.datapipe import _layout
 from wrangler_spark.datapipe._local import local_table
 
 
@@ -392,17 +393,16 @@ def hist_update_state(
     All batches must agree on ``rel_err`` (it defines the bin space —
     mixing bases would merge incompatible bins; checked against the
     state's stored value, loudly). Idempotence: a non-empty
-    ``batch_id`` already present makes the fold a NO-OP (the
-    exactly-once replay contract). Check + append hold the writer
-    lease."""
+    ``batch_id`` already folded makes the fold a NO-OP (the
+    exactly-once replay contract, through the ``_layout`` replay
+    ledger). Check + append hold the writer lease."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     _hist_base(rel_err)  # validates rel_err before any write
     spark = df.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.fold_once(spark, path, batch_id) as root:
+        if root is None:
+            return
         try:
             rows = spark.read.parquet(f"{root}/rows")
             stored = rows.select("rel_err").limit(1).collect()
@@ -411,10 +411,6 @@ def hist_update_state(
                     f"state at {path} was built with rel_err="
                     f"{stored[0]['rel_err']}, fold offered {rel_err} — "
                     "bin spaces are incompatible; use the stored value")
-            if batch_id and rows.filter(
-                F.col("batch_id") == str(batch_id)
-            ).limit(1).count():
-                return
         except AnalysisException as ex:
             if "PATH_NOT_FOUND" not in str(ex):
                 raise
@@ -435,23 +431,15 @@ def hist_update_stream(
     edge of the quantile family's batch/state/stream triangle (the
     vocab_update_stream shape): micro-batch id = batch_id, so
     at-least-once foreachBatch replay yields exactly-once state."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: hist_update_state(
-                batch, path, col, rel_err, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: hist_update_state(b, path, col, rel_err, bid))
 
 
 def hist_from_state(spark, path: str, version: int | None = None) -> DataFrame:
     """The merged (bin, count) histogram from quantile state — one
     sum-merge over bins x batches rows. ``version`` pins an older
     committed snapshot (compaction cadence = snapshot cadence)."""
-    from wrangler_spark.datapipe import _layout
-
     return (
         spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
         # null bins would be a compaction batch-id ledger, not data
@@ -469,8 +457,6 @@ def quantiles_from_state(
     batches (bin counts merge by summation — no merge error), reading
     only the state rows."""
     from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
 
     try:
         rel_err = (

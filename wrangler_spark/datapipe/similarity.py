@@ -311,7 +311,10 @@ def kmeans_centroids(
     nearest-centroid assignment (narrow) + one hash aggregation computing
     the per-dimension mean (map-side partials; k x dim floats of state).
     At 100 TB this is the standard pattern: only the k x dim centroid
-    table ever leaves the executors.
+    table ever leaves the executors. EAGER: the call itself runs Spark
+    jobs (the init collect and every iteration's centroid collect), so a
+    lazy ``init`` frame executes even at ``iters=0``, and errors surface
+    at call time, not at the first action on the result.
 
     Determinism for cross-engine parity: init = first k vectors by id,
     assignment cosine rounded to 6dp with ties to the lower centroid id,

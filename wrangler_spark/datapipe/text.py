@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wrangler_spark.datapipe import _layout
 from wrangler_spark.datapipe._checkpoint import (
     eager_checkpoint,
     eager_checkpoint_observed,
@@ -1791,35 +1792,22 @@ def vocab_update_state(
     resolved version of the state (``_layout``), so they stay visible
     across compaction cadences.
 
-    Idempotence: a non-empty ``batch_id`` already present in the state
-    makes the fold a NO-OP — so a replayed micro-batch (the
-    vocab_update_stream crash-recovery path) never double-counts.
-    Word counts are not naturally replay-safe the way retention pairs
-    are, so the batch id is the dedup key; compaction sum-merges the
-    data rows but PRESERVES every batch id as a zero-count ledger row
-    (word NULL), so the replay check holds even when a compaction ran
-    between the crash and the sink restart. The check + append hold the
-    ``_layout`` writer lease, so the fold can never interleave with a
-    compaction either."""
-    from pyspark.errors import AnalysisException
-
-    from wrangler_spark.datapipe import _layout
-
-    with _layout.writer_lease(df.sparkSession, path):
-        root = _layout.resolve(df.sparkSession, path)
-        if batch_id:
-            try:
-                seen = (
-                    df.sparkSession.read.parquet(f"{root}/rows")
-                    .filter(F.col("batch_id") == str(batch_id))
-                    .limit(1)
-                    .count()
-                )
-                if seen:
-                    return
-            except AnalysisException as ex:
-                if "PATH_NOT_FOUND" not in str(ex):
-                    raise
+    Idempotence: a non-empty ``batch_id`` already folded makes the
+    fold a NO-OP — so a replayed micro-batch (the vocab_update_stream
+    crash-recovery path) never double-counts. Word counts are not
+    naturally replay-safe the way retention pairs are, so the batch id
+    is the dedup key, checked against the ``_layout`` replay ledger
+    (one marker file per folded id at ``<path>/_batches/``): a replay
+    is a file-existence test and runs no Spark job. The ledger lives
+    outside the version dirs, so it survives compaction; the rows keep
+    the ids too (compaction sum-merges the data rows but PRESERVES
+    every batch id as a zero-count ledger row, word NULL), which the
+    ledger falls back to when a fold died between its append and its
+    marker. Check + append + marker hold the ``_layout`` writer lease,
+    so the fold can never interleave with a compaction either."""
+    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
+        if root is None:
+            return
         norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
         (
             df.select(F.explode(F.split(norm, " ")).alias("word"))
@@ -1847,14 +1835,9 @@ def vocab_update_stream(
     yields EXACTLY-ONCE state (the retention sink's contract, realized
     here through the batch-id dedup instead of pair idempotence).
     Returns the started StreamingQuery; default trigger availableNow."""
-    writer = (
-        stream.writeStream.option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch, bid: vocab_update_state(batch, path, text_col, str(bid))
-        )
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-    )
-    return writer.start()
+    return _layout.fold_stream(
+        stream, checkpoint, trigger,
+        lambda b, bid: vocab_update_state(b, path, text_col, bid))
 
 
 def vocab_from_state(spark, path: str, version: int | None = None) -> DataFrame:
@@ -1865,8 +1848,6 @@ def vocab_from_state(spark, path: str, version: int | None = None) -> DataFrame:
     snapshot — appends land in the current version, so pinned ``v_N``
     reads the vocab as of ``v_{N+1}``'s creation (compaction cadence =
     snapshot cadence)."""
-    from wrangler_spark.datapipe import _layout
-
     return (
         spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
         # null words are compaction's batch-id ledger rows, not data
