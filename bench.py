@@ -249,6 +249,9 @@ def main() -> None:
                 "extra_wall_sec": extra_total,
                 "rows_out_extra": sum(rows_extra.values()),
                 "sf": sf,
+                # the parallelism the run really had, read from the session
+                "parallelism": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
                 "rows_out_total": total_rows,
                 # throughput over time actually spent in successful queries —
                 # a failed query's partial wall time must not deflate it

@@ -1,7 +1,8 @@
-"""Apply-level smoke tests for the datapipe directives no other test or
-driver query compiles: each recipe runs through ``Pipeline.compile`` on a
-tiny frame whose column names are mixed-case while the recipe spells them
-in upper case, so every ``:col`` argument goes through ``ctx.resolve``."""
+"""Apply-level smoke tests for the datapipe directives that no other test
+and no ``queries()`` entry compiles: each recipe runs through
+``Pipeline.compile`` on a tiny frame whose column names are mixed-case
+while the recipe spells them in upper case, so every ``:col`` argument
+goes through ``ctx.resolve``."""
 
 from __future__ import annotations
 

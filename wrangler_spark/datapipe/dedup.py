@@ -158,12 +158,6 @@ def with_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return staged.select("id", shingles_of_words(F.col("__w")).alias("shingles"))
 
 
-def word_shingles(c: Column, k: int = SHINGLE_WORDS) -> Column:
-    """Single-expression form (inline tokenization) — fine for small frames
-    and tests; prefer with_shingles() in pipelines (see shingles_of_words)."""
-    return shingles_of_words(F.split(normalize_text(c), " "), k)
-
-
 # SQL fragments instead of Column-API lambdas: building 32 HOF lambdas
 # through py4j costs ~0.9 s of driver time per plan; one parsed SQL string
 # per column is ~3× cheaper and yields the identical expression tree.

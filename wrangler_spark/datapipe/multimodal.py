@@ -508,18 +508,6 @@ def decode_video(df: DataFrame, payload_col: str = "payload", out_col: str = "vi
     return df.mapInPandas(run, out_schema)
 
 
-def frame_sample_plan(
-    df: DataFrame, payload_col: str = "payload", every_n: int = 30
-) -> DataFrame:
-    """Video frame-sampling *plan*: emits (payload, frame_index) rows for a
-    downstream decoder — demonstrates the explode-shaped row generation
-    without decoding (frame count approximated from payload size).
-    Prefer sample_frames, which reads the real container duration."""
-    approx_frames = F.greatest((F.length(F.col(payload_col)) / 1024).cast("int"), F.lit(1))
-    idx = F.explode(F.sequence(F.lit(0), approx_frames - 1, F.lit(every_n)))
-    return df.withColumn("frame_index", idx)
-
-
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("orig_width", T.IntegerType()),

@@ -1,8 +1,31 @@
 """Recipe-surface wrappers for the datapipe operators, so the
 training-data ops are usable as one-line directives alongside the
-reference-parity set."""
+reference-parity set.
+
+Each directive is one ``_forward`` entry in the table below: its
+registry name, the ``"module.function"`` (under ``wrangler_spark``) it
+forwards to, one slot per usage argument, and its docstring. A slot is
+the ``Arg`` of the usage grammar plus the conversion its recipe value
+gets: ``_col`` resolves a column name case-insensitively, ``_group``
+does the same into a one-column group-by list, ``_int``/``_float``
+cast a number, ``_text``/``_ident`` take the string, ``_bool`` the
+flag, and ``_list`` splits a comma list; an optional slot left at
+``None`` stays ``None``. The converted values go to the function
+positionally, in usage order. An entry whose call has another shape
+(keyword arguments, reordered or composed calls) gives ``call=``, which
+receives the function, the frame and the converted values. The target
+module is imported at ``apply`` time, never at registration: importing
+the directive registry loads no ``wrangler_spark.datapipe`` module. A
+hand-written ``Directive`` subclass is warranted only where the
+directive builds plan logic of its own instead of calling a library
+function; ``enforce-constraints``, which routes violating rows to the
+error channel, is the one such class here."""
 
 from __future__ import annotations
+
+import importlib
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -11,1511 +34,560 @@ from wrangler_spark.directive import Arg, Directive
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive
 
-
-@directive
-class DedupExact(Directive):
-    """dedup-exact :id :text — hash-groupBy exact dedup on normalized text;
-    result is (id, n_dups) per distinct content."""
-
-    name = "dedup-exact"
-    usage = [Arg("id", TokenType.COLUMN), Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import exact_dedup
-
-        return exact_dedup(df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]))
+_REQUIRED = object()
+_Convert = Callable[[CompileContext, DataFrame, Any], Any]
 
 
-@directive
-class DedupMinhash(Directive):
-    """dedup-minhash :id :text [threshold] — one-step MinHash-LSH near-dedup:
-    flags every doc that near-duplicates a lower-id doc → (id, is_dup)."""
+@dataclass(frozen=True)
+class _Slot:
+    """One usage argument and the conversion its bound value gets."""
 
-    name = "dedup-minhash"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("threshold", TokenType.NUMERIC, optional=True, default=0.5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import minhash_dedup
-
-        return minhash_dedup(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            float(self.args["threshold"]),
-        )
+    arg: Arg
+    convert: _Convert
 
 
-@directive
-class LangId(Directive):
-    """langid :text — stopword-density language heuristic → lang_pred."""
+def _slot(type_: TokenType, convert: _Convert) -> Callable[..., _Slot]:
+    """A slot constructor: ``make(name)`` is a required argument,
+    ``make(name, default)`` an optional one."""
 
-    name = "langid"
-    usage = [Arg("text", TokenType.COLUMN)]
+    def make(name: str, default: Any = _REQUIRED) -> _Slot:
+        if default is _REQUIRED:
+            arg = Arg(name, type_)
+        else:
+            arg = Arg(name, type_, optional=True, default=default)
+        return _Slot(arg, lambda ctx, df, v: None if v is None else convert(ctx, df, v))
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import langid
-
-        return langid(df, ctx.resolve(df, self.args["text"]))
+    return make
 
 
-@directive
-class QualityScore(Directive):
-    """quality-score :text — composite corpus-quality score → quality."""
+def _split(text: str) -> list[str]:
+    """A comma list: items stripped, empty items dropped."""
+    return [s.strip() for s in str(text).split(",") if s.strip()]
 
-    name = "quality-score"
-    usage = [Arg("text", TokenType.COLUMN)]
+
+_col = _slot(TokenType.COLUMN, lambda ctx, df, v: ctx.resolve(df, v))
+_group = _slot(TokenType.COLUMN, lambda ctx, df, v: [ctx.resolve(df, v)])
+_int = _slot(TokenType.NUMERIC, lambda ctx, df, v: int(v))
+_float = _slot(TokenType.NUMERIC, lambda ctx, df, v: float(v))
+_text = _slot(TokenType.TEXT, lambda ctx, df, v: str(v))
+_ident = _slot(TokenType.IDENTIFIER, lambda ctx, df, v: str(v))
+_bool = _slot(TokenType.BOOL, lambda ctx, df, v: bool(v))
+_list = _slot(TokenType.TEXT, lambda ctx, df, v: _split(v))
+
+
+def _target(path: str) -> Callable:
+    """The function at ``"module.func"`` under ``wrangler_spark``."""
+    module, _, func = path.rpartition(".")
+    return getattr(importlib.import_module("wrangler_spark." + module), func)
+
+
+def _forward(name: str, target: str, *slots: _Slot, doc: str,
+             call: Callable | None = None, cls: str | None = None) -> None:
+    """Build and register the ``Directive`` class of one table entry;
+    its class name is ``cls`` or the CamelCase of ``name``."""
 
     def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import quality_score
+        fn = _target(target)
+        values = [s.convert(ctx, df, self.args[s.arg.name]) for s in slots]
+        return call(fn, df, *values) if call else fn(df, *values)
 
-        return quality_score(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class TokenCount(Directive):
-    """token-count :text — whitespace + regex-subword token counts →
-    n_tokens_ws, n_tokens."""
-
-    name = "token-count"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import token_count
-
-        return token_count(df, ctx.resolve(df, self.args["text"]))
+    directive(type(cls or "".join(w.capitalize() for w in name.split("-")), (Directive,), {
+        "__doc__": doc, "__module__": __name__,
+        "name": name, "usage": [s.arg for s in slots], "apply": apply,
+    }))
 
 
-@directive
-class Fingerprint(Directive):
-    """fingerprint :text — sorted-distinct-token md5 fingerprint →
-    fingerprint."""
+_forward(
+    "dedup-exact", "datapipe.dedup.exact_dedup", _col("id"), _col("text"),
+    doc="""dedup-exact :id :text — hash-groupBy exact dedup on normalized text;
+    result is (id, n_dups) per distinct content.""")
 
-    name = "fingerprint"
-    usage = [Arg("text", TokenType.COLUMN)]
+_forward(
+    "dedup-minhash", "datapipe.dedup.minhash_dedup",
+    _col("id"), _col("text"), _float("threshold", 0.5),
+    doc="""dedup-minhash :id :text [threshold] — one-step MinHash-LSH near-dedup:
+    flags every doc that near-duplicates a lower-id doc → (id, is_dup).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import fingerprint
+_forward(
+    "langid", "datapipe.text.langid", _col("text"),
+    cls="LangId",
+    doc="""langid :text — stopword-density language heuristic → lang_pred.""")
 
-        return fingerprint(df, ctx.resolve(df, self.args["text"]))
+_forward(
+    "quality-score", "datapipe.text.quality_score", _col("text"),
+    doc="""quality-score :text — composite corpus-quality score → quality.""")
 
+_forward(
+    "token-count", "datapipe.text.token_count", _col("text"),
+    doc="""token-count :text — whitespace + regex-subword token counts →
+    n_tokens_ws, n_tokens.""")
 
-@directive
-class RepetitionStats(Directive):
-    """repetition-stats :text — within-document repetition ratios
-    (Gopher A1.1): dup_line_ratio, dup_line_char_ratio, dup_word_ratio."""
+_forward(
+    "fingerprint", "datapipe.text.fingerprint", _col("text"),
+    doc="""fingerprint :text — sorted-distinct-token md5 fingerprint →
+    fingerprint.""")
 
-    name = "repetition-stats"
-    usage = [Arg("text", TokenType.COLUMN)]
+_forward(
+    "repetition-stats", "datapipe.text.repetition_stats", _col("text"),
+    doc="""repetition-stats :text — within-document repetition ratios
+    (Gopher A1.1): dup_line_ratio, dup_line_char_ratio, dup_word_ratio.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import repetition_stats
-
-        return repetition_stats(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class GopherQuality(Directive):
-    """gopher-quality :text — Gopher/MassiveText quality-rule flags
+_forward(
+    "gopher-quality", "datapipe.text.gopher_quality", _col("text"),
+    doc="""gopher-quality :text — Gopher/MassiveText quality-rule flags
     (g_word_count, g_mean_word_len, g_symbol_ratio, g_bullet_ratio,
-    g_ellipsis_ratio, g_alpha_ratio, g_stopwords) + gopher_pass."""
+    g_ellipsis_ratio, g_alpha_ratio, g_stopwords) + gopher_pass.""")
 
-    name = "gopher-quality"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import gopher_quality
-
-        return gopher_quality(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class PiiRedact(Directive):
-    """pii-redact :text — scrub emails/IPs/SSNs/credit-cards/phones in
+_forward(
+    "pii-redact", "datapipe.curation.pii_redact", _col("text"),
+    doc="""pii-redact :text — scrub emails/IPs/SSNs/credit-cards/phones in
     place (sequential regexp_replace chain) and add per-category counts
-    n_pii_email/ip/ssn/cc/phone + n_pii."""
+    n_pii_email/ip/ssn/cc/phone + n_pii.""")
 
-    name = "pii-redact"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import pii_redact
-
-        return pii_redact(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class DedupParagraphs(Directive):
-    """dedup-paragraphs :id :text — C4-style cross-document paragraph
+_forward(
+    "dedup-paragraphs", "datapipe.curation.paragraph_dedup", _col("id"), _col("text"),
+    doc="""dedup-paragraphs :id :text — C4-style cross-document paragraph
     dedup: keep the globally-first occurrence of each normalized
-    newline-separated paragraph; returns (id, text, n_paras, n_dropped)."""
+    newline-separated paragraph; returns (id, text, n_paras, n_dropped).""")
 
-    name = "dedup-paragraphs"
-    usage = [Arg("id", TokenType.COLUMN), Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import paragraph_dedup
-
-        return paragraph_dedup(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class StripBoilerplate(Directive):
-    """strip-boilerplate :id :text [min_docs] — corpus-frequency line
+_forward(
+    "strip-boilerplate", "datapipe.curation.strip_boilerplate_lines",
+    _col("id"), _col("text"), _int("min_docs", 2),
+    doc="""strip-boilerplate :id :text [min_docs] — corpus-frequency line
     removal: a normalized line appearing in >= min_docs distinct docs is
     removed from EVERY doc (nav bars / cookie banners / footers survive
     nowhere, unlike dedup-paragraphs' keep-first contract); blank lines
     are structure and never removed. Returns (id, text, n_lines,
-    n_dropped)."""
+    n_dropped).""")
 
-    name = "strip-boilerplate"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("min_docs", TokenType.NUMERIC, optional=True, default=2),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import strip_boilerplate_lines
-
-        return strip_boilerplate_lines(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["min_docs"]),
-        )
-
-
-@directive
-class SourceFilter(Directive):
-    """source-filter :col 'a,b,c' [allow] — blocklist (default) or
+_forward(
+    "source-filter", "datapipe.curation.source_filter",
+    _col("col"), _list("list"), _ident("allow", "block"),
+    call=lambda f, df, col, items, allow: f(df, col, items, allow=allow == "allow"),
+    doc="""source-filter :col 'a,b,c' [allow] — blocklist (default) or
     allowlist filter on a source/URL column; URLs are reduced to their
-    host, adds the host column."""
+    host, adds the host column.""")
 
-    name = "source-filter"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("list", TokenType.TEXT),
-        Arg("allow", TokenType.IDENTIFIER, optional=True, default="block"),
-    ]
+_forward(
+    "sample-hash", "datapipe.curation.sample_hash", _col("key"), _float("rate"), _text("salt", ""),
+    call=lambda f, df, key, rate, salt: df.filter(f(df, key, rate, salt)),
+    doc="""sample-hash :key rate ['salt'] — deterministic md5-gated sampling:
+    keeps a stable, engine-portable ~rate fraction of rows keyed on :key.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import source_filter
+_forward(
+    "tokenize", "datapipe.text.tokenize", _col("text"),
+    doc="""tokenize :text — materialize the regex pre-tokenization as an
+    array<string> column (letter/digit/punctuation runs) → tokens.""")
 
-        items = [s.strip() for s in str(self.args["list"]).split(",") if s.strip()]
-        return source_filter(
-            df, ctx.resolve(df, self.args["col"]), items, allow=self.args["allow"] == "allow"
-        )
-
-
-@directive
-class SampleHash(Directive):
-    """sample-hash :key rate ['salt'] — deterministic md5-gated sampling:
-    keeps a stable, engine-portable ~rate fraction of rows keyed on :key."""
-
-    name = "sample-hash"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("rate", TokenType.NUMERIC),
-        Arg("salt", TokenType.TEXT, optional=True, default=""),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import sample_hash
-
-        key = ctx.resolve(df, self.args["key"])
-        return df.filter(sample_hash(df, key, float(self.args["rate"]), str(self.args["salt"])))
-
-
-@directive
-class Tokenize(Directive):
-    """tokenize :text — materialize the regex pre-tokenization as an
-    array<string> column (letter/digit/punctuation runs) → tokens."""
-
-    name = "tokenize"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import tokenize
-
-        return tokenize(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class Vocabulary(Directive):
-    """vocabulary :text k — corpus top-k tokens by term frequency →
+_forward(
+    "vocabulary", "datapipe.text.vocabulary", _col("text"), _int("k", 1000),
+    doc="""vocabulary :text k — corpus top-k tokens by term frequency →
     (token, tf, df, rank). NOTE: aggregates the whole frame (corpus-level,
-    not per-row)."""
+    not per-row).""")
 
-    name = "vocabulary"
-    usage = [Arg("text", TokenType.COLUMN), Arg("k", TokenType.NUMERIC, optional=True, default=1000)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import vocabulary
-
-        return vocabulary(df, ctx.resolve(df, self.args["text"]), int(self.args["k"]))
-
-
-@directive
-class UnigramLogprob(Directive):
-    """unigram-logprob :id :text [vocab_size] — CCNet-style corpus-internal
+_forward(
+    "unigram-logprob", "datapipe.text.unigram_logprob",
+    _col("id"), _col("text"), _int("vocab", 50000),
+    doc="""unigram-logprob :id :text [vocab_size] — CCNet-style corpus-internal
     unigram LM score: per-doc mean token surprisal -log2 p(token), add-one
-    smoothed over the top-vocab_size vocabulary → doc_lp."""
+    smoothed over the top-vocab_size vocabulary → doc_lp.""")
 
-    name = "unigram-logprob"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("vocab", TokenType.NUMERIC, optional=True, default=50_000),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import unigram_logprob
-
-        return unigram_logprob(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["vocab"]),
-        )
-
-
-@directive
-class DedupMinhashCluster(Directive):
-    """dedup-minhash-cluster :id :text [threshold] — transitive near-dedup
+_forward(
+    "dedup-minhash-cluster", "datapipe.dedup.minhash_components",
+    _col("id"), _col("text"), _float("threshold", 0.5),
+    doc="""dedup-minhash-cluster :id :text [threshold] — transitive near-dedup
     clustering: MinHash pairs closed via distributed connected components →
-    (id, component, is_dup) with one surviving representative per cluster."""
+    (id, component, is_dup) with one surviving representative per cluster.""")
 
-    name = "dedup-minhash-cluster"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("threshold", TokenType.NUMERIC, optional=True, default=0.5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import minhash_components
-
-        return minhash_components(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            float(self.args["threshold"]),
-        )
-
-
-@directive
-class DedupSubstring(Directive):
-    """dedup-substring :id :text [window] — strip token spans duplicated
+_forward(
+    "dedup-substring", "datapipe.curation.substring_dup_spans",
+    _col("id"), _col("text"), _int("window", 20),
+    doc="""dedup-substring :id :text [window] — strip token spans duplicated
     anywhere in the corpus (rolling-window exact substring dedup) →
-    (id, n_tokens, n_covered, dup_ratio, text_deduped)."""
+    (id, n_tokens, n_covered, dup_ratio, text_deduped).""")
 
-    name = "dedup-substring"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("window", TokenType.NUMERIC, optional=True, default=20),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import substring_dup_spans
-
-        return substring_dup_spans(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["window"]),
-        )
-
-
-@directive
-class PackSequences(Directive):
-    """pack-sequences :id :text [seq_len] — concat-then-chunk pretraining
+_forward(
+    "pack-sequences", "datapipe.curation.pack_sequences",
+    _col("id"), _col("text"), _int("seq_len", 2048),
+    doc="""pack-sequences :id :text [seq_len] — concat-then-chunk pretraining
     layout: token-stream position, sequence id/offset and span per doc via
-    a distributed prefix sum."""
+    a distributed prefix sum.""")
 
-    name = "pack-sequences"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("seq_len", TokenType.NUMERIC, optional=True, default=2048),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import pack_sequences
-
-        return pack_sequences(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["seq_len"]),
-        )
-
-
-@directive
-class C4Quality(Directive):
-    """c4-quality :text [min_words] [min_sentences] — the C4 cleaning
+_forward(
+    "c4-quality", "datapipe.text.c4_quality",
+    _col("text"), _int("min_words", 5), _int("min_sentences", 3),
+    doc="""c4-quality :text [min_words] [min_sentences] — the C4 cleaning
     rules (Raffel et al. 2020): line filter (terminal punctuation, min
     words, no 'javascript') + doc flags (lorem ipsum, brace, sentence
     count) → text_clean, n_lines, n_kept_lines, has_lorem, has_brace,
-    n_sentences, c4_pass."""
+    n_sentences, c4_pass.""")
 
-    name = "c4-quality"
-    usage = [
-        Arg("text", TokenType.COLUMN),
-        Arg("min_words", TokenType.NUMERIC, optional=True, default=5),
-        Arg("min_sentences", TokenType.NUMERIC, optional=True, default=3),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import c4_quality
-
-        return c4_quality(
-            df,
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["min_words"]),
-            int(self.args["min_sentences"]),
-        )
-
-
-@directive
-class LpBuckets(Directive):
-    """lp-buckets :lp_col [:by_col] — CCNet head/middle/tail bucketing on
+_forward(
+    "lp-buckets", "datapipe.text.perplexity_buckets", _col("lp"), _col("by", None),
+    doc="""lp-buckets :lp_col [:by_col] — CCNet head/middle/tail bucketing on
     an LM-score column (tertiles per :by_col group when given, else
-    global) → lp_bucket. Compose after unigram-logprob."""
+    global) → lp_bucket. Compose after unigram-logprob.""")
 
-    name = "lp-buckets"
-    usage = [
-        Arg("lp", TokenType.COLUMN),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import perplexity_buckets
-
-        by = self.args["by"]
-        return perplexity_buckets(
-            df,
-            ctx.resolve(df, self.args["lp"]),
-            by_col=ctx.resolve(df, by) if by else None,
-        )
-
-
-@directive
-class MixtureSample(Directive):
-    """mixture-sample :id :domain [temperature] — temperature-scaled
+_forward(
+    "mixture-sample", "datapipe.curation.mixture_sample",
+    _col("id"), _col("domain"), _float("temperature", 0.5),
+    doc="""mixture-sample :id :domain [temperature] — temperature-scaled
     domain rebalancing (rate (n_d/n_min)^(t-1), deterministic hash gate);
-    keeps rows, adds n_domain + sample_rate."""
+    keeps rows, adds n_domain + sample_rate.""")
 
-    name = "mixture-sample"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("domain", TokenType.COLUMN),
-        Arg("temperature", TokenType.NUMERIC, optional=True, default=0.5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import mixture_sample
-
-        return mixture_sample(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["domain"]),
-            float(self.args["temperature"]),
-        )
-
-
-@directive
-class UrlCanonicalize(Directive):
-    """url-canonicalize :url — canonical URL dedup key (lowercase host,
+_forward(
+    "url-canonicalize", "datapipe.curation.url_canonicalize", _col("url"),
+    call=lambda f, df, col: f(df, col, out_prefix=col),
+    doc="""url-canonicalize :url — canonical URL dedup key (lowercase host,
     strip www/fragment/tracking params, scheme-matched default-port
-    strip, sorted query) → url_canonical, url_host."""
+    strip, sorted query) → url_canonical, url_host.""")
 
-    name = "url-canonicalize"
-    usage = [Arg("url", TokenType.COLUMN)]
+_forward(
+    "script-ratios", "datapipe.text.script_ratios", _col("text"),
+    doc="""script-ratios :text — per-doc Unicode script composition
+    (script_latin/cyrillic/greek/arabic/cjk/digit/other fractions).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import url_canonicalize
+_forward(
+    "langid-multi", "datapipe.text.langid_multi", _col("text"),
+    cls="LangIdMulti",
+    doc="""langid-multi :text — multi-language stopword-profile LID
+    (en/es/fr/de/it/pt/nl/sv/pl/id argmax) → lang_pred, lang_score.""")
 
-        col = ctx.resolve(df, self.args["url"])
-        return url_canonicalize(df, col, out_prefix=col)
+_forward(
+    "dedup-simhash", "datapipe.dedup.simhash", _col("id"), _col("text"), _int("bits", 32),
+    doc="""dedup-simhash :id :text [bits] — per-doc SimHash signature over
+    word hashes → simhash (near-dups are small hamming distances).""")
 
-
-@directive
-class ScriptRatios(Directive):
-    """script-ratios :text — per-doc Unicode script composition
-    (script_latin/cyrillic/greek/arabic/cjk/digit/other fractions)."""
-
-    name = "script-ratios"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import script_ratios
-
-        return script_ratios(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class LangIdMulti(Directive):
-    """langid-multi :text — multi-language stopword-profile LID
-    (en/es/fr/de/it/pt/nl/sv/pl/id argmax) → lang_pred, lang_score."""
-
-    name = "langid-multi"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import langid_multi
-
-        return langid_multi(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class DedupSimhash(Directive):
-    """dedup-simhash :id :text [bits] — per-doc SimHash signature over
-    word hashes → simhash (near-dups are small hamming distances)."""
-
-    name = "dedup-simhash"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("bits", TokenType.NUMERIC, optional=True, default=32),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import simhash
-
-        return simhash(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            int(self.args["bits"]),
-        )
-
-
-@directive
-class DedupNgram(Directive):
-    """dedup-ngram :id :text [n] [threshold] [unit] — n-gram Jaccard
+_forward(
+    "dedup-ngram", "datapipe.dedup.ngram_jaccard_pairs",
+    _col("id"), _col("text"), _int("n", 3), _float("threshold", 0.5), _text("unit", "word"),
+    call=lambda f, df, id_, text, n, threshold, unit: f(df, id_, text, n, threshold, unit=unit),
+    doc="""dedup-ngram :id :text [n] [threshold] [unit] — n-gram Jaccard
     near-dup pairs (word grams by default; prefix-filtered inverted
-    index) → (id_a, id_b, jaccard)."""
+    index) → (id_a, id_b, jaccard).""")
 
-    name = "dedup-ngram"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("n", TokenType.NUMERIC, optional=True, default=3),
-        Arg("threshold", TokenType.NUMERIC, optional=True, default=0.5),
-        Arg("unit", TokenType.TEXT, optional=True, default="word"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import ngram_jaccard_pairs
-
-        return ngram_jaccard_pairs(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["n"]),
-            float(self.args["threshold"]),
-            unit=str(self.args["unit"]),
-        )
-
-
-@directive
-class DedupOverlap(Directive):
-    """dedup-overlap :id :text [n] [threshold] [unit] — overlap-coefficient
+_forward(
+    "dedup-overlap", "datapipe.dedup.overlap_pairs",
+    _col("id"), _col("text"), _int("n", 3), _float("threshold", 0.8), _text("unit", "word"),
+    call=lambda f, df, id_, text, n, threshold, unit: f(df, id_, text, n, threshold, unit=unit),
+    doc="""dedup-overlap :id :text [n] [threshold] [unit] — overlap-coefficient
     containment pairs (a short doc embedded in a longer one — the case
     Jaccard structurally misses) → (id_a, id_b, overlap_coef,
-    containment_a, containment_b)."""
+    containment_a, containment_b).""")
 
-    name = "dedup-overlap"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("n", TokenType.NUMERIC, optional=True, default=3),
-        Arg("threshold", TokenType.NUMERIC, optional=True, default=0.8),
-        Arg("unit", TokenType.TEXT, optional=True, default="word"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import overlap_pairs
-
-        return overlap_pairs(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["n"]),
-            float(self.args["threshold"]),
-            unit=str(self.args["unit"]),
-        )
-
-
-@directive
-class BigramLogprob(Directive):
-    """bigram-logprob :id :text [vocab_size] — interpolated bigram LM
+_forward(
+    "bigram-logprob", "datapipe.text.bigram_logprob",
+    _col("id"), _col("text"), _int("vocab", 50000),
+    doc="""bigram-logprob :id :text [vocab_size] — interpolated bigram LM
     score (λ·p_bi + (1−λ)·p_uni per token, doc mean) → doc_lp2; the
-    word-order-aware companion to unigram-logprob."""
+    word-order-aware companion to unigram-logprob.""")
 
-    name = "bigram-logprob"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("vocab", TokenType.NUMERIC, optional=True, default=50_000),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import bigram_logprob
-
-        return bigram_logprob(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["vocab"]),
-        )
-
-
-@directive
-class ChunkDocs(Directive):
-    """chunk-docs :id :text [chunk_words] [overlap] — overlapping word-
+_forward(
+    "chunk-docs", "datapipe.curation.chunk_documents",
+    _col("id"), _col("text"), _int("chunk_words", 256), _int("overlap", 32),
+    doc="""chunk-docs :id :text [chunk_words] [overlap] — overlapping word-
     window chunking (RAG indexing / context windows) → one row per chunk
-    (id, chunk_id, chunk_start, chunk_text, n_chunk_words)."""
+    (id, chunk_id, chunk_start, chunk_text, n_chunk_words).""")
 
-    name = "chunk-docs"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("chunk_words", TokenType.NUMERIC, optional=True, default=256),
-        Arg("overlap", TokenType.NUMERIC, optional=True, default=32),
-    ]
+_forward(
+    "winnow-fingerprints", "datapipe.text.winnow_fingerprints",
+    _col("id"), _col("text"), _int("k", 3), _int("w", 4),
+    doc="""winnow-fingerprints :id :text [k] [w] — SIGMOD'03 winnowing:
+    (id, pos, fp) selected-fingerprint rows (~2/(w+1) density).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import chunk_documents
+_forward(
+    "domain-cap", "datapipe.curation.cap_per_group",
+    _col("group"), _col("id"), _int("n"), _col("order_col", None),
+    doc="""domain-cap :group :id n [order_col] — keep at most n rows per group:
+    best-n by order_col (desc, ties → min id) or deterministic-random-n.""")
 
-        return chunk_documents(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["chunk_words"]),
-            int(self.args["overlap"]),
-        )
+_forward(
+    "shuffle-shards", "datapipe.curation.shuffle_shards",
+    _col("id"), _int("n_shards"), _text("seed", ""),
+    doc="""shuffle-shards :id n_shards ['seed'] — reproducible epoch shuffle:
+    adds (shard, sort_key).""")
 
+_forward(
+    "keyword-tag", "datapipe.curation.keyword_tag", _col("id"), _col("text"), _list("keywords"),
+    doc="""keyword-tag :id :text 'kw1,kw2 phrase,...' — dictionary tagging:
+    (id, keyword, n_hits) for whole-word/phrase matches.""")
 
-@directive
-class WinnowFingerprints(Directive):
-    """winnow-fingerprints :id :text [k] [w] — SIGMOD'03 winnowing:
-    (id, pos, fp) selected-fingerprint rows (~2/(w+1) density)."""
+_forward(
+    "emb-normalize", "datapipe.similarity.embedding_normalize", _col("vec"),
+    doc="""emb-normalize :vec — L2-normalize an embedding column in place.""")
 
-    name = "winnow-fingerprints"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=3),
-        Arg("w", TokenType.NUMERIC, optional=True, default=4),
-    ]
+_forward(
+    "emb-quantize", "datapipe.similarity.embedding_quantize", _col("vec"),
+    doc="""emb-quantize :vec — symmetric int8 quantization → (q, q_scale).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import winnow_fingerprints
+_forward(
+    "emb-project", "datapipe.similarity.embedding_project",
+    _col("vec"), _int("dim_in"), _int("dim_out", 16),
+    call=lambda f, df, vec, dim_in, dim_out: f(df, dim_in, dim_out, vec),
+    doc="""emb-project :vec dim_in [dim_out] — JL ±1 random projection.""")
 
-        return winnow_fingerprints(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            int(self.args["k"]), int(self.args["w"]),
-        )
+_forward(
+    "winnow-overlap", "datapipe.text.winnow_overlap",
+    _col("id"), _col("text"), _int("min_shared", 2),
+    call=lambda f, df, id_, text, min_shared: f(df, id_, text, min_shared=min_shared),
+    doc="""winnow-overlap :id :text [min_shared] — copied-passage pairs via
+    shared winnowing fingerprints → (id_a, id_b, shared_fps).""")
 
+_forward(
+    "corpus-report", "datapipe.curation.corpus_report",
+    _col("id"), _col("text"), _col("group", None),
+    call=lambda f, df, id_, text, group: (
+        _target("datapipe.curation.corpus_report_by")(df, group, id_, text)
+        if group else f(df, id_, text)),
+    doc="""corpus-report :id :text [group] — one-row (or per-group) corpus
+    health snapshot: docs, nulls, chars, words, exact-dup count, dup %.""")
 
-@directive
-class DomainCap(Directive):
-    """domain-cap :group :id n [order_col] — keep at most n rows per group:
-    best-n by order_col (desc, ties → min id) or deterministic-random-n."""
+_forward(
+    "dedup-template", "datapipe.dedup.template_dedup", _col("id"), _col("text"),
+    doc="""dedup-template :id :text — template-masked exact dedup: digits and
+    URLs masked before keying, templated variants collapse.""")
 
-    name = "domain-cap"
-    usage = [
-        Arg("group", TokenType.COLUMN),
-        Arg("id", TokenType.COLUMN),
-        Arg("n", TokenType.NUMERIC),
-        Arg("order_col", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import cap_per_group
-
-        order = self.args["order_col"]
-        return cap_per_group(
-            df, ctx.resolve(df, self.args["group"]), ctx.resolve(df, self.args["id"]),
-            int(self.args["n"]), ctx.resolve(df, order) if order else None,
-        )
-
-
-@directive
-class ShuffleShards(Directive):
-    """shuffle-shards :id n_shards ['seed'] — reproducible epoch shuffle:
-    adds (shard, sort_key)."""
-
-    name = "shuffle-shards"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("n_shards", TokenType.NUMERIC),
-        Arg("seed", TokenType.TEXT, optional=True, default=""),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import shuffle_shards
-
-        return shuffle_shards(
-            df, ctx.resolve(df, self.args["id"]), int(self.args["n_shards"]),
-            str(self.args["seed"]),
-        )
-
-
-@directive
-class KeywordTag(Directive):
-    """keyword-tag :id :text 'kw1,kw2 phrase,...' — dictionary tagging:
-    (id, keyword, n_hits) for whole-word/phrase matches."""
-
-    name = "keyword-tag"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("keywords", TokenType.TEXT),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import keyword_tag
-
-        kws = [k.strip() for k in str(self.args["keywords"]).split(",") if k.strip()]
-        return keyword_tag(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]), kws
-        )
-
-
-@directive
-class EmbNormalize(Directive):
-    """emb-normalize :vec — L2-normalize an embedding column in place."""
-
-    name = "emb-normalize"
-    usage = [Arg("vec", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.similarity import embedding_normalize
-
-        return embedding_normalize(df, ctx.resolve(df, self.args["vec"]))
-
-
-@directive
-class EmbQuantize(Directive):
-    """emb-quantize :vec — symmetric int8 quantization → (q, q_scale)."""
-
-    name = "emb-quantize"
-    usage = [Arg("vec", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.similarity import embedding_quantize
-
-        return embedding_quantize(df, ctx.resolve(df, self.args["vec"]))
-
-
-@directive
-class EmbProject(Directive):
-    """emb-project :vec dim_in [dim_out] — JL ±1 random projection."""
-
-    name = "emb-project"
-    usage = [
-        Arg("vec", TokenType.COLUMN),
-        Arg("dim_in", TokenType.NUMERIC),
-        Arg("dim_out", TokenType.NUMERIC, optional=True, default=16),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.similarity import embedding_project
-
-        return embedding_project(
-            df, int(self.args["dim_in"]), int(self.args["dim_out"]),
-            ctx.resolve(df, self.args["vec"]),
-        )
-
-
-@directive
-class WinnowOverlap(Directive):
-    """winnow-overlap :id :text [min_shared] — copied-passage pairs via
-    shared winnowing fingerprints → (id_a, id_b, shared_fps)."""
-
-    name = "winnow-overlap"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("min_shared", TokenType.NUMERIC, optional=True, default=2),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import winnow_overlap
-
-        return winnow_overlap(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            min_shared=int(self.args["min_shared"]),
-        )
-
-
-@directive
-class CorpusReport(Directive):
-    """corpus-report :id :text [group] — one-row (or per-group) corpus
-    health snapshot: docs, nulls, chars, words, exact-dup count, dup %."""
-
-    name = "corpus-report"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("group", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import corpus_report, corpus_report_by
-
-        if self.args["group"]:
-            return corpus_report_by(
-                df, ctx.resolve(df, self.args["group"]),
-                ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            )
-        return corpus_report(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class DedupTemplate(Directive):
-    """dedup-template :id :text — template-masked exact dedup: digits and
-    URLs masked before keying, templated variants collapse."""
-
-    name = "dedup-template"
-    usage = [Arg("id", TokenType.COLUMN), Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.dedup import template_dedup
-
-        return template_dedup(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class FlagOutliers(Directive):
-    """flag-outliers :col [method] [k] [:by] — z-score (default, k=3), IQR
+_forward(
+    "flag-outliers", "datapipe.numeric.flag_outliers",
+    _col("col"), _ident("method", "zscore"), _float("k", 3.0), _group("by", None),
+    call=lambda f, df, col, method, k, by: f(df, col, method, k, by=by),
+    doc="""flag-outliers :col [method] [k] [:by] — z-score (default, k=3), IQR
     (Tukey, pass k=1.5), or MAD (robust modified z-score, pass k=3.5)
     outlier flag → <col>_outlier; an optional :by column computes the
-    fences within each group."""
+    fences within each group.""")
 
-    name = "flag-outliers"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("method", TokenType.IDENTIFIER, optional=True, default="zscore"),
-        Arg("k", TokenType.NUMERIC, optional=True, default=3.0),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import flag_outliers
-
-        by = self.args["by"]
-        return flag_outliers(
-            df, ctx.resolve(df, self.args["col"]), str(self.args["method"]),
-            float(self.args["k"]),
-            by=[ctx.resolve(df, by)] if by else None,
-        )
-
-
-@directive
-class ScaleColumn(Directive):
-    """scale-column :col [method] [:by] — min-max (default) or z-score
+_forward(
+    "scale-column", "datapipe.numeric.scale_column",
+    _col("col"), _ident("method", "minmax"), _group("by", None),
+    call=lambda f, df, col, method, by: f(df, col, method, by=by),
+    doc="""scale-column :col [method] [:by] — min-max (default) or z-score
     feature scaling → <col>_scaled; an optional :by column scales within
-    each group (per-source normalization) instead of globally."""
+    each group (per-source normalization) instead of globally.""")
 
-    name = "scale-column"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("method", TokenType.IDENTIFIER, optional=True, default="minmax"),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
+_forward(
+    "winsorize", "datapipe.numeric.winsorize_column",
+    _col("col"), _float("lo", 0.01), _float("hi", 0.99), _group("by", None),
+    call=lambda f, df, col, lo, hi, by: f(df, col, lo, hi, by=by),
+    doc="""winsorize :col [lo] [hi] [:by] — clip to exact percentile bounds →
+    <col>_wins; an optional :by column clips within each group.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import scale_column
-
-        by = self.args["by"]
-        return scale_column(
-            df, ctx.resolve(df, self.args["col"]), str(self.args["method"]),
-            by=[ctx.resolve(df, by)] if by else None,
-        )
-
-
-@directive
-class Winsorize(Directive):
-    """winsorize :col [lo] [hi] [:by] — clip to exact percentile bounds →
-    <col>_wins; an optional :by column clips within each group."""
-
-    name = "winsorize"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("lo", TokenType.NUMERIC, optional=True, default=0.01),
-        Arg("hi", TokenType.NUMERIC, optional=True, default=0.99),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import winsorize_column
-
-        by = self.args["by"]
-        return winsorize_column(
-            df, ctx.resolve(df, self.args["col"]),
-            float(self.args["lo"]), float(self.args["hi"]),
-            by=[ctx.resolve(df, by)] if by else None,
-        )
-
-
-@directive
-class QuantileBins(Directive):
-    """quantile-bins :col [n] [:by] — equi-depth quantile bucket 1..n
+_forward(
+    "quantile-bins", "datapipe.numeric.quantile_bins",
+    _col("col"), _int("n", 10), _group("by", None),
+    call=lambda f, df, col, n, by: f(df, col, n, by=by),
+    doc="""quantile-bins :col [n] [:by] — equi-depth quantile bucket 1..n
     (deciles by default) → <col>_bin; an optional :by column bins within
-    each group (per-language deciles)."""
+    each group (per-language deciles).""")
 
-    name = "quantile-bins"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("n", TokenType.NUMERIC, optional=True, default=10),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
+_forward(
+    "char-entropy", "datapipe.text.char_entropy", _col("id"), _col("text"),
+    doc="""char-entropy :id :text — Shannon entropy (bits/char) of each
+    document's character distribution → char_entropy.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import quantile_bins
-
-        by = self.args["by"]
-        return quantile_bins(
-            df, ctx.resolve(df, self.args["col"]), int(self.args["n"]),
-            by=[ctx.resolve(df, by)] if by else None,
-        )
-
-
-@directive
-class CharEntropy(Directive):
-    """char-entropy :id :text — Shannon entropy (bits/char) of each
-    document's character distribution → char_entropy."""
-
-    name = "char-entropy"
-    usage = [Arg("id", TokenType.COLUMN), Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import char_entropy
-
-        return char_entropy(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class TopNgrams(Directive):
-    """top-ngrams :id :text [n] [k] — corpus heavy hitters: the k most
+_forward(
+    "top-ngrams", "datapipe.text.top_ngrams",
+    _col("id"), _col("text"), _int("n", 3), _int("k", 20),
+    doc="""top-ngrams :id :text [n] [k] — corpus heavy hitters: the k most
     frequent word n-grams with occurrence + document counts (boilerplate
-    discovery)."""
+    discovery).""")
 
-    name = "top-ngrams"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("n", TokenType.NUMERIC, optional=True, default=3),
-        Arg("k", TokenType.NUMERIC, optional=True, default=20),
-    ]
+_forward(
+    "readability", "datapipe.text.readability", _col("text"),
+    doc="""readability :text — Flesch reading-ease + FK grade columns.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import top_ngrams
+_forward(
+    "unicode-normalize", "datapipe.text.unicode_normalize", _col("col"), _ident("form", "NFC"),
+    doc="""unicode-normalize :col [form] — NFC (default) / NFKC / NFD / NFKD
+    canonicalization in place (the pre-dedup byte-canonical step).""")
 
-        return top_ngrams(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            int(self.args["n"]), int(self.args["k"]),
-        )
-
-
-@directive
-class Readability(Directive):
-    """readability :text — Flesch reading-ease + FK grade columns."""
-
-    name = "readability"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import readability
-
-        return readability(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class UnicodeNormalize(Directive):
-    """unicode-normalize :col [form] — NFC (default) / NFKC / NFD / NFKD
-    canonicalization in place (the pre-dedup byte-canonical step)."""
-
-    name = "unicode-normalize"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("form", TokenType.IDENTIFIER, optional=True, default="NFC"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import unicode_normalize
-
-        return unicode_normalize(df, ctx.resolve(df, self.args["col"]), str(self.args["form"]))
-
-
-@directive
-class KeepTopFrac(Directive):
-    """keep-top-frac :score frac [:by] — keep the top ``frac`` of rows
+_forward(
+    "keep-top-frac", "datapipe.curation.keep_top_frac",
+    _col("score"), _float("frac"), _group("by", None),
+    call=lambda f, df, score, frac, by: f(df, score, frac, by=by),
+    doc="""keep-top-frac :score frac [:by] — keep the top ``frac`` of rows
     by score (classifier-threshold pruning; ties at the boundary all
     kept); an optional :by column applies the fraction within each
-    group (top X% per language/source)."""
+    group (top X% per language/source).""")
 
-    name = "keep-top-frac"
-    usage = [
-        Arg("score", TokenType.COLUMN),
-        Arg("frac", TokenType.NUMERIC),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import keep_top_frac
-
-        by = self.args["by"]
-        return keep_top_frac(
-            df, ctx.resolve(df, self.args["score"]), float(self.args["frac"]),
-            by=[ctx.resolve(df, by)] if by else None,
-        )
-
-
-@directive
-class VocabCoverage(Directive):
-    """vocab-coverage :text [coverage] — corpus word table cut at the
+_forward(
+    "vocab-coverage", "datapipe.text.vocab_coverage", _col("text"), _float("coverage", 0.999),
+    doc="""vocab-coverage :text [coverage] — corpus word table cut at the
     cumulative-coverage frequency class (vocab sizing for LM/tokenizer
-    baselines) → (word, count, share)."""
-
-    name = "vocab-coverage"
-    usage = [
-        Arg("text", TokenType.COLUMN),
-        Arg("coverage", TokenType.NUMERIC, optional=True, default=0.999),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import vocab_coverage
-
-        return vocab_coverage(df, ctx.resolve(df, self.args["text"]), float(self.args["coverage"]))
+    baselines) → (word, count, share).""")
 
 
-@directive
-class ClusterTopics(Directive):
-    """cluster-topics :id :text [k] [label_k] [vec] — corpus
+def _cluster_topics(cluster_topics, df, id_col, text_col, k, label_k, vec_col):
+    if vec_col:
+        # user-supplied vectors: dim is UNKNOWN at plan time — pass
+        # dim=None so k-means takes the dim-agnostic exploded
+        # recentering (a hard-coded 64 here built 64-wide centroids
+        # for any other dimension, and the zip_with cosine over
+        # mismatched arrays nulled out: every doc tied to the lowest
+        # centroid id — silently garbage assignments)
+        embs = df.select(id_col, vec_col)
+        dim = None
+    else:
+        vec_col = "__hemb"
+        embs = _target("datapipe.text.hash_embedding")(
+            df, id_col, text_col, dim=64, out_col=vec_col
+        ).select(id_col, vec_col)
+        dim = 64
+    return cluster_topics(
+        df, embs, k, label_k,
+        doc_id_col=id_col, text_col=text_col,
+        vec_id_col=id_col, vec_col=vec_col, dim=dim,
+    )
+
+
+_forward(
+    "cluster-topics", "datapipe.curation.cluster_topics",
+    _col("id"), _col("text"), _int("k", 8), _int("label_k", 5), _col("vec", None),
+    call=_cluster_topics,
+    doc="""cluster-topics :id :text [k] [label_k] [vec] — corpus
     cartography: k-means clusters in embedding space + log-odds
     (Fightin' Words) labels per cluster → (cluster_id, term, tf, score,
     rank). With no vec column the doc's own lexical hash embedding is
     used (self-contained recipe form); point vec at a real embedding
-    column when one exists."""
+    column when one exists.""")
 
-    name = "cluster-topics"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=8),
-        Arg("label_k", TokenType.NUMERIC, optional=True, default=5),
-        Arg("vec", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import cluster_topics
-        from wrangler_spark.datapipe.text import hash_embedding
-
-        id_col = ctx.resolve(df, self.args["id"])
-        text_col = ctx.resolve(df, self.args["text"])
-        if self.args["vec"]:
-            # user-supplied vectors: dim is UNKNOWN at plan time — pass
-            # dim=None so k-means takes the dim-agnostic exploded
-            # recentering (a hard-coded 64 here built 64-wide centroids
-            # for any other dimension, and the zip_with cosine over
-            # mismatched arrays nulled out: every doc tied to the lowest
-            # centroid id — silently garbage assignments)
-            vec_col = ctx.resolve(df, self.args["vec"])
-            embs = df.select(id_col, vec_col)
-            dim = None
-        else:
-            vec_col = "__hemb"
-            embs = hash_embedding(df, id_col, text_col, dim=64, out_col=vec_col).select(
-                id_col, vec_col
-            )
-            dim = 64
-        return cluster_topics(
-            df, embs, int(self.args["k"]), int(self.args["label_k"]),
-            doc_id_col=id_col, text_col=text_col,
-            vec_id_col=id_col, vec_col=vec_col, dim=dim,
-        )
-
-
-@directive
-class SampleTokenBudget(Directive):
-    """sample-token-budget :id :text budget [by] ['seed'] — keep
+_forward(
+    "sample-token-budget", "datapipe.curation.sample_token_budget",
+    _col("id"), _col("text"), _int("budget"), _col("by", None), _text("seed", ""),
+    doc="""sample-token-budget :id :text budget [by] ['seed'] — keep
     documents in deterministic seeded-hash order until the running
     TOKEN total reaches the budget (per group with by) — mixture
     assembly in tokens, not documents; the straddling doc is kept.
-    Adds n_tokens."""
+    Adds n_tokens.""")
 
-    name = "sample-token-budget"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("budget", TokenType.NUMERIC),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-        Arg("seed", TokenType.TEXT, optional=True, default=""),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import sample_token_budget
-
-        return sample_token_budget(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["text"]),
-            int(self.args["budget"]),
-            by=ctx.resolve(df, self.args["by"]) if self.args["by"] else None,
-            seed=str(self.args["seed"]),
-        )
-
-
-@directive
-class NgramRepetition(Directive):
-    """ngram-repetition :id :text — Gopher n-gram repetition fractions
+_forward(
+    "ngram-repetition", "datapipe.text.ngram_repetition_stats", _col("id"), _col("text"),
+    doc="""ngram-repetition :id :text — Gopher n-gram repetition fractions
     (top_{2,3,4}gram_char_frac + dup_{5..10}gram_char_frac) appended per
-    document; filter on them with the published caps downstream."""
+    document; filter on them with the published caps downstream.""")
 
-    name = "ngram-repetition"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import ngram_repetition_stats
-
-        return ngram_repetition_stats(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class GroupTopTerms(Directive):
-    """top-terms :text :by [k] [weight] — top-k terms per group
+_forward(
+    "top-terms", "datapipe.text.group_top_terms",
+    _col("text"), _col("by"), _int("k", 10), _text("weight", "tf"),
+    cls="GroupTopTerms",
+    doc="""top-terms :text :by [k] [weight] — top-k terms per group
     (cluster/source labeling) → (by, term, tf, rank). weight 'tf'
     (default, raw frequency), 'logodds' (Monroe et al. log-odds vs rest
     of corpus — distinguishing terms, stopword-proof), or 'tfidf';
-    weighted modes add a score column and rank by it."""
+    weighted modes add a score column and rank by it.""")
 
-    name = "top-terms"
-    usage = [
-        Arg("text", TokenType.COLUMN),
-        Arg("by", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=10),
-        Arg("weight", TokenType.TEXT, optional=True, default="tf"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import group_top_terms
-
-        return group_top_terms(
-            df, ctx.resolve(df, self.args["text"]),
-            ctx.resolve(df, self.args["by"]), int(self.args["k"]),
-            weight=str(self.args["weight"]),
-        )
-
-
-@directive
-class RepetitionFilter(Directive):
-    """repetition-filter :id :text — the Gopher repetitious-text caps
+_forward(
+    "repetition-filter", "datapipe.text.repetition_filter", _col("id"), _col("text"),
+    doc="""repetition-filter :id :text — the Gopher repetitious-text caps
     applied to both signal families (line ratios + n-gram char
-    fractions) → repetition_pass boolean (true = keep)."""
+    fractions) → repetition_pass boolean (true = keep).""")
 
-    name = "repetition-filter"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import repetition_filter
-
-        return repetition_filter(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"])
-        )
-
-
-@directive
-class OovRate(Directive):
-    """oov-rate :id :text [coverage] — per-document out-of-vocabulary
+_forward(
+    "oov-rate", "datapipe.text.oov_rate", _col("id"), _col("text"), _float("coverage", 0.999),
+    call=lambda f, df, id_, text, coverage: f(
+        df, id_, text, _target("datapipe.text.vocab_coverage")(df, text, coverage)),
+    doc="""oov-rate :id :text [coverage] — per-document out-of-vocabulary
     token fraction against the corpus's own vocab-coverage vocabulary at
-    ``coverage`` (zero-token docs NULL)."""
+    ``coverage`` (zero-token docs NULL).""")
 
-    name = "oov-rate"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("coverage", TokenType.NUMERIC, optional=True, default=0.999),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import oov_rate, vocab_coverage
-
-        text_col = ctx.resolve(df, self.args["text"])
-        vocab = vocab_coverage(df, text_col, float(self.args["coverage"]))
-        return oov_rate(df, ctx.resolve(df, self.args["id"]), text_col, vocab)
-
-
-@directive
-class HtmlToText(Directive):
-    """html-to-text :col [out] — strip HTML to visible text (drops
+_forward(
+    "html-to-text", "datapipe.text.html_to_text", _col("col"), _ident("out", "text"),
+    doc="""html-to-text :col [out] — strip HTML to visible text (drops
     script/style subtrees, decodes entities, keeps block-level line
     breaks); accepts string or binary (WARC payload) columns. Writes
-    ``out`` (default ``text``)."""
+    ``out`` (default ``text``).""")
 
-    name = "html-to-text"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("out", TokenType.IDENTIFIER, optional=True, default="text"),
-    ]
+_forward(
+    "compression-ratio", "datapipe.text.compression_ratio", _col("col"),
+    doc="""compression-ratio :col — zlib compressed/raw byte ratio →
+    compress_ratio (low = repetitive boilerplate, ~1 = gibberish).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import html_to_text
-
-        return html_to_text(df, ctx.resolve(df, self.args["col"]), str(self.args["out"]))
-
-
-@directive
-class CompressionRatio(Directive):
-    """compression-ratio :col — zlib compressed/raw byte ratio →
-    compress_ratio (low = repetitive boilerplate, ~1 = gibberish)."""
-
-    name = "compression-ratio"
-    usage = [Arg("col", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import compression_ratio
-
-        return compression_ratio(df, ctx.resolve(df, self.args["col"]))
-
-
-@directive
-class HashEmbedding(Directive):
-    """hash-embedding :id :text [dim] — model-free dense text embedding
+_forward(
+    "hash-embedding", "datapipe.text.hash_embedding", _col("id"), _col("text"), _int("dim", 64),
+    doc="""hash-embedding :id :text [dim] — model-free dense text embedding
     (sign-hash feature hashing, L2-normalized) → embedding column; feeds
     the whole vector stack (ANN, SemDeDup, outlier flags) from raw
-    text."""
+    text.""")
 
-    name = "hash-embedding"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("text", TokenType.COLUMN),
-        Arg("dim", TokenType.NUMERIC, optional=True, default=64),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import hash_embedding
-
-        return hash_embedding(
-            df, ctx.resolve(df, self.args["id"]), ctx.resolve(df, self.args["text"]),
-            int(self.args["dim"]),
-        )
-
-
-@directive
-class EmbOutliers(Directive):
-    """emb-outliers :id :vec [n_clusters] [q] — per-cluster
+_forward(
+    "emb-outliers", "datapipe.similarity.embedding_outliers",
+    _col("id"), _col("vec"), _int("n_clusters", 8), _float("q", 0.05),
+    call=lambda f, df, id_, vec, n, q: f(df, n, q, id_col=id_, vec_col=vec),
+    doc="""emb-outliers :id :vec [n_clusters] [q] — per-cluster
     distance-to-centroid outlier flag (off-manifold noise) →
-    (vec_id, centroid_id, cos, is_outlier)."""
+    (vec_id, centroid_id, cos, is_outlier).""")
 
-    name = "emb-outliers"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("vec", TokenType.COLUMN),
-        Arg("n_clusters", TokenType.NUMERIC, optional=True, default=8),
-        Arg("q", TokenType.NUMERIC, optional=True, default=0.05),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.similarity import embedding_outliers
-
-        return embedding_outliers(
-            df, int(self.args["n_clusters"]), float(self.args["q"]),
-            id_col=ctx.resolve(df, self.args["id"]),
-            vec_col=ctx.resolve(df, self.args["vec"]),
-        )
-
-
-@directive
-class Funnel(Directive):
-    """funnel :user :ts :type 'step1,step2,...' [within_minutes]
+_forward(
+    "funnel", "datapipe.events.funnel_steps",
+    _col("user"), _col("ts"), _col("type"), _list("steps"), _float("within_minutes", None),
+    _text("anchor", "first"),
+    doc="""funnel :user :ts :type 'step1,step2,...' [within_minutes]
     ['first'|'any'] — ordered event funnel: per-step users reached +
-    conversion from step 1 (anchor='any' = exact windowed count)."""
+    conversion from step 1 (anchor='any' = exact windowed count).""")
 
-    name = "funnel"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("steps", TokenType.TEXT),
-        Arg("within_minutes", TokenType.NUMERIC, optional=True),
-        Arg("anchor", TokenType.TEXT, optional=True, default="first"),
-    ]
+_forward(
+    "retention-cohorts", "datapipe.events.retention_cohorts",
+    _col("user"), _col("ts"), _int("period_days", 7), _int("max_periods", 8),
+    doc="""retention-cohorts :user :ts [period_days] [max_periods] — cohort
+    retention grid: (cohort_start, period_offset, active_users, retention).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import funnel_steps
-
-        steps = [s.strip() for s in str(self.args["steps"]).split(",") if s.strip()]
-        within = self.args.value("within_minutes")
-        return funnel_steps(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            steps,
-            None if within is None else float(within),
-            anchor=str(self.args["anchor"]),
-        )
-
-
-@directive
-class RetentionCohorts(Directive):
-    """retention-cohorts :user :ts [period_days] [max_periods] — cohort
-    retention grid: (cohort_start, period_offset, active_users, retention)."""
-
-    name = "retention-cohorts"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("period_days", TokenType.NUMERIC, optional=True, default=7),
-        Arg("max_periods", TokenType.NUMERIC, optional=True, default=8),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import retention_cohorts
-
-        return retention_cohorts(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            int(self.args["period_days"]),
-            int(self.args["max_periods"]),
-        )
-
-
-@directive
-class ActiveUsers(Directive):
-    """active-users :user :ts — rolling DAU/WAU/MAU: one row per calendar
+_forward(
+    "active-users", "datapipe.events.active_users", _col("user"), _col("ts"),
+    doc="""active-users :user :ts — rolling DAU/WAU/MAU: one row per calendar
     day with au_1d / au_7d / au_30d distinct-user counts (dense grid,
-    zeros included)."""
+    zeros included).""")
 
-    name = "active-users"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-    ]
+_forward(
+    "event-transitions", "datapipe.events.event_transitions",
+    _col("user"), _col("ts"), _col("type"), _col("tie", None),
+    doc="""event-transitions :user :ts :type [:tie] — first-order Markov
+    matrix: (from_type, to_type, n, prob) over per-user event streams.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import active_users
+_forward(
+    "event-paths", "datapipe.events.event_paths_topk",
+    _col("user"), _col("ts"), _col("type"), _int("k", 10), _int("max_len", 5), _col("tie", None),
+    doc="""event-paths :user :ts :type [k] [max_len] [:tie] — top-k most
+    common user journeys (first max_len event types per user).""")
 
-        return active_users(
-            df, ctx.resolve(df, self.args["user"]), ctx.resolve(df, self.args["ts"])
-        )
-
-
-@directive
-class EventTransitions(Directive):
-    """event-transitions :user :ts :type [:tie] — first-order Markov
-    matrix: (from_type, to_type, n, prob) over per-user event streams."""
-
-    name = "event-transitions"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("tie", TokenType.COLUMN, optional=True),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import event_transitions
-
-        tie = self.args.value("tie")
-        return event_transitions(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            None if tie is None else ctx.resolve(df, tie),
-        )
-
-
-@directive
-class EventPaths(Directive):
-    """event-paths :user :ts :type [k] [max_len] [:tie] — top-k most
-    common user journeys (first max_len event types per user)."""
-
-    name = "event-paths"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=10),
-        Arg("max_len", TokenType.NUMERIC, optional=True, default=5),
-        Arg("tie", TokenType.COLUMN, optional=True),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import event_paths_topk
-
-        tie = self.args.value("tie")
-        return event_paths_topk(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            int(self.args["k"]),
-            int(self.args["max_len"]),
-            None if tie is None else ctx.resolve(df, tie),
-        )
-
-
-@directive
-class FunnelLatency(Directive):
-    """funnel-latency :user :ts :type 'step1,step2,...' [within_minutes]
+_forward(
+    "funnel-latency", "datapipe.events.funnel_latencies",
+    _col("user"), _col("ts"), _col("type"), _list("steps"), _float("within_minutes", None),
+    doc="""funnel-latency :user :ts :type 'step1,step2,...' [within_minutes]
     — per-step conversion timing: (step, event_type, users, avg_sec,
-    p50_sec) for steps 2..k of the greedy funnel."""
+    p50_sec) for steps 2..k of the greedy funnel.""")
 
-    name = "funnel-latency"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("steps", TokenType.TEXT),
-        Arg("within_minutes", TokenType.NUMERIC, optional=True),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import funnel_latencies
-
-        steps = [s.strip() for s in str(self.args["steps"]).split(",") if s.strip()]
-        within = self.args.value("within_minutes")
-        return funnel_latencies(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            steps,
-            None if within is None else float(within),
-        )
-
-
-@directive
-class PageRank(Directive):
-    """page-rank :src :dst [weight] [damping] [iters] — rank nodes of the
+_forward(
+    "page-rank", "datapipe.graph.graph_pagerank",
+    _col("src"), _col("dst"), _col("weight", None), _float("damping", 0.85), _int("iters", 5),
+    doc="""page-rank :src :dst [weight] [damping] [iters] — rank nodes of the
     edge list held in the current frame (crawl-frontier prioritization:
     rank domains/URLs by random-surfer visit probability, then feed the
     ranking into crawl budgets and mixture weights). Yields one row per
-    node: (node, pagerank), pagerank rounded to 6dp."""
+    node: (node, pagerank), pagerank rounded to 6dp.""")
 
-    name = "page-rank"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-        Arg("weight", TokenType.COLUMN, optional=True, default=None),
-        Arg("damping", TokenType.NUMERIC, optional=True, default=0.85),
-        Arg("iters", TokenType.NUMERIC, optional=True, default=5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_pagerank
-
-        return graph_pagerank(
-            df,
-            ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-            weight_col=(
-                ctx.resolve(df, self.args["weight"]) if self.args["weight"] else None
-            ),
-            damping=float(self.args["damping"]),
-            iters=int(self.args["iters"]),
-        )
-
-
-@directive
-class LabelPropagation(Directive):
-    """label-propagation :src :dst [weight] [iters] — community detection
+_forward(
+    "label-propagation", "datapipe.graph.graph_label_propagation",
+    _col("src"), _col("dst"), _col("weight", None), _int("iters", 5),
+    doc="""label-propagation :src :dst [weight] [iters] — community detection
     over the edge list held in the current frame (deterministic
     synchronous LPA, undirected): label near-dup pair lists or
     co-occurrence graphs into communities. Yields one row per node:
-    (node, community)."""
+    (node, community).""")
 
-    name = "label-propagation"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-        Arg("weight", TokenType.COLUMN, optional=True, default=None),
-        Arg("iters", TokenType.NUMERIC, optional=True, default=5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_label_propagation
-
-        return graph_label_propagation(
-            df,
-            ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-            weight_col=(
-                ctx.resolve(df, self.args["weight"]) if self.args["weight"] else None
-            ),
-            iters=int(self.args["iters"]),
-        )
-
-
-@directive
-class QuantilesSketched(Directive):
-    """quantiles-sketched :col [probs] [rel_err] — mergeable log-bin
+_forward(
+    "quantiles-sketched", "datapipe.numeric.quantiles_sketched",
+    _col("col"), _list("probs", "0.5,0.9,0.99"), _float("rel_err", 0.05),
+    call=lambda f, df, col, probs, rel_err: f(df, col, tuple(map(float, probs)), rel_err),
+    doc="""quantiles-sketched :col [probs] [rel_err] — mergeable log-bin
     quantile sketch over a non-negative numeric column: (prob, value)
     rows within rel_err of the exact nearest-rank quantiles,
     deterministic across partitionings. probs is a comma list, default
-    '0.5,0.9,0.99'."""
+    '0.5,0.9,0.99'.""")
 
-    name = "quantiles-sketched"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("probs", TokenType.TEXT, optional=True, default="0.5,0.9,0.99"),
-        Arg("rel_err", TokenType.NUMERIC, optional=True, default=0.05),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import quantiles_sketched
-
-        probs = tuple(
-            float(p) for p in str(self.args["probs"]).split(",") if p.strip()
-        )
-        return quantiles_sketched(
-            df, ctx.resolve(df, self.args["col"]), probs,
-            float(self.args["rel_err"]),
-        )
-
-
-@directive
-class KeySkew(Directive):
-    """key-skew :col [k] — top-k hottest keys with corpus share: the
+_forward(
+    "key-skew", "datapipe.curation.key_skew", _col("col"), _int("k", 20),
+    doc="""key-skew :col [k] — top-k hottest keys with corpus share: the
     pre-flight for every join/groupBy key (a 5% key is a 5 TB reducer
-    partition at 100 TB — salt it or bump the AQE skew threshold)."""
-
-    name = "key-skew"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=20),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import key_skew
-
-        return key_skew(df, ctx.resolve(df, self.args["col"]), int(self.args["k"]))
+    partition at 100 TB — salt it or bump the AQE skew threshold).""")
 
 
 def _parse_dq_rules(spec: str, who: str) -> list[dict]:
@@ -1556,9 +628,10 @@ def _parse_dq_rules(spec: str, who: str) -> list[dict]:
     return rules
 
 
-@directive
-class CheckConstraints(Directive):
-    """check-constraints 'rules' — Deequ-posture declarative quality
+_forward(
+    "check-constraints", "datapipe.curation.check_constraints", _text("rules"),
+    call=lambda f, df, rules: f(df, _parse_dq_rules(rules, "check-constraints")),
+    doc="""check-constraints 'rules' — Deequ-posture declarative quality
     gate: grade a semicolon-separated rule list in ONE aggregation pass
     and return the (rule, column, metric, value, threshold, passed)
     report. Rule forms: ``not_null:col`` · ``unique:col`` ·
@@ -1566,16 +639,7 @@ class CheckConstraints(Directive):
     ``matches:col:regex`` (regex may contain colons) ·
     ``in_set:col:a|b|c`` · ``min_rows:n``. Thresholds default to 0.0
     violations; per-rule thresholds use the library call
-    (curation.check_constraints)."""
-
-    name = "check-constraints"
-    usage = [Arg("rules", TokenType.TEXT)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import check_constraints
-
-        return check_constraints(
-            df, _parse_dq_rules(self.args["rules"], self.name))
+    (curation.check_constraints).""")
 
 
 @directive
@@ -1625,941 +689,298 @@ class EnforceConstraints(Directive):
         return df
 
 
-@directive
-class Resample(Directive):
-    """resample :key :ts [value] [every_minutes] [agg] [fill] — per-key
+_forward(
+    "resample", "datapipe.events.resample",
+    _col("key"), _col("ts"), _col("value", None), _int("every", 60), _text("agg", "count"),
+    _text("fill", "zero"),
+    doc="""resample :key :ts [value] [every_minutes] [agg] [fill] — per-key
     time-series resampling with gap-fill: dense (key, bucket, bucket_ts,
     value) grid at a fixed grain; agg = count|sum|min|max|avg, fill =
     zero|none|ffill. The grid a moving average or anomaly rule is
-    silently wrong without."""
+    silently wrong without.""")
 
-    name = "resample"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN, optional=True, default=None),
-        Arg("every", TokenType.NUMERIC, optional=True, default=60),
-        Arg("agg", TokenType.TEXT, optional=True, default="count"),
-        Arg("fill", TokenType.TEXT, optional=True, default="zero"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import resample
-
-        return resample(
-            df,
-            ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["value"]) if self.args["value"] else None,
-            every_minutes=int(self.args["every"]),
-            agg=str(self.args["agg"]),
-            fill=str(self.args["fill"]),
-        )
-
-
-@directive
-class RollingStats(Directive):
-    """rolling-stats :key :bucket :value [window] — trailing-window
+_forward(
+    "rolling-stats", "datapipe.events.rolling_stats",
+    _col("key"), _col("bucket"), _col("value"), _int("window", 7),
+    doc="""rolling-stats :key :bucket :value [window] — trailing-window
     mean/std + anomaly z-score over a per-key bucketed series (feed it
     the resample grid): the volume monitor that flags a bucket leaving
     its key's own recent band. Exact integer micro-unit window sums —
-    deterministic across partitionings and engines."""
+    deterministic across partitionings and engines.""")
 
-    name = "rolling-stats"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("bucket", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN),
-        Arg("window", TokenType.NUMERIC, optional=True, default=7),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import rolling_stats
-
-        return rolling_stats(
-            df,
-            ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["bucket"]),
-            ctx.resolve(df, self.args["value"]),
-            window=int(self.args["window"]),
-        )
-
-
-@directive
-class ExtractLinks(Directive):
-    """extract-links :id :html [base] [hosts] — (src, url) outlink
+_forward(
+    "extract-links", "datapipe.text.extract_links",
+    _col("id"), _col("html"), _col("base", None), _bool("hosts", False),
+    doc="""extract-links :id :html [base] [hosts] — (src, url) outlink
     edges from an HTML column (scan-side JVM regex over href
     attributes); base names the page-URL column for relative-link
     resolution, hosts=true reduces to the deduped cross-host edge list
-    graph_pagerank consumes (crawl-frontier ranking)."""
+    graph_pagerank consumes (crawl-frontier ranking).""")
 
-    name = "extract-links"
-    usage = [
-        Arg("id", TokenType.COLUMN),
-        Arg("html", TokenType.COLUMN),
-        Arg("base", TokenType.COLUMN, optional=True, default=None),
-        Arg("hosts", TokenType.BOOL, optional=True, default=False),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import extract_links
-
-        return extract_links(
-            df,
-            ctx.resolve(df, self.args["id"]),
-            ctx.resolve(df, self.args["html"]),
-            base_col=(
-                ctx.resolve(df, self.args["base"]) if self.args["base"] else None
-            ),
-            hosts=bool(self.args["hosts"]),
-        )
-
-
-@directive
-class ProfileTable(Directive):
-    """profile [cols] [exact] — per-column profile in one aggregation
+_forward(
+    "profile", "datapipe.curation.profile_table", _list("cols", ""), _bool("exact", False),
+    cls="ProfileTable",
+    doc="""profile [cols] [exact] — per-column profile in one aggregation
     pass (column, dtype, n_rows, n_null, null_frac, n_distinct, min,
     max): the Deequ discovery step that feeds suggest_constraints ->
     check-constraints. cols is a comma list (default: all); exact=true
-    swaps HLL distincts for true count_distinct."""
-
-    name = "profile"
-    usage = [
-        Arg("cols", TokenType.TEXT, optional=True, default=""),
-        Arg("exact", TokenType.BOOL, optional=True, default=False),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import profile_table
-
-        cols = [c.strip() for c in str(self.args["cols"]).split(",") if c.strip()]
-        return profile_table(df, cols or None, exact=bool(self.args["exact"]))
+    swaps HLL distincts for true count_distinct.""")
 
 
-@directive
-class ImputeColumn(Directive):
-    """impute :col [strategy] [by] — fill a numeric column's NULLs from
+def _impute(impute_column, df, col, strategy, by):
+    try:
+        strategy = float(strategy)  # a numeric strategy is the fill constant
+    except ValueError:
+        pass
+    return impute_column(df, col, strategy, by=by or None)
+
+
+_forward(
+    "impute", "datapipe.numeric.impute_column",
+    _col("col"), _text("strategy", "mean"), _list("by", ""),
+    cls="ImputeColumn",
+    call=_impute,
+    doc="""impute :col [strategy] [by] — fill a numeric column's NULLs from
     the data: mean | median | mode | a numeric constant, optionally per
     group (comma list). Mean uses the micro-unit integer contract;
     median has the exact/approx knob in the library call; mode breaks
-    ties deterministically (count desc, value asc)."""
+    ties deterministically (count desc, value asc).""")
 
-    name = "impute"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("strategy", TokenType.TEXT, optional=True, default="mean"),
-        Arg("by", TokenType.TEXT, optional=True, default=""),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import impute_column
-
-        strat = str(self.args["strategy"])
-        try:
-            strat = float(strat)
-        except ValueError:
-            pass
-        by = [b.strip() for b in str(self.args["by"]).split(",") if b.strip()]
-        return impute_column(
-            df, ctx.resolve(df, self.args["col"]), strat, by=by or None)
-
-
-@directive
-class Cusum(Directive):
-    """cusum :key :bucket :value [k] [h] — two-sided CUSUM change-point
+_forward(
+    "cusum", "datapipe.events.cusum",
+    _col("key"), _col("bucket"), _col("value"), _float("k", 0.5), _float("h", 5.0),
+    doc="""cusum :key :bucket :value [k] [h] — two-sided CUSUM change-point
     detection over a per-key bucketed series (feed the resample grid):
     the small-persistent-shift alarm a 3-sigma band never trips. k =
     half the shift worth detecting (sigmas), h = decision interval
-    (published defaults 0.5 / 5)."""
+    (published defaults 0.5 / 5).""")
 
-    name = "cusum"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("bucket", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=0.5),
-        Arg("h", TokenType.NUMERIC, optional=True, default=5.0),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import cusum
-
-        return cusum(
-            df,
-            ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["bucket"]),
-            ctx.resolve(df, self.args["value"]),
-            k=float(self.args["k"]), h=float(self.args["h"]),
-        )
-
-
-@directive
-class Survival(Directive):
-    """survival :user :ts [period_days] [horizon_periods] [by] —
+_forward(
+    "survival", "datapipe.events.survival",
+    _col("user"), _col("ts"), _int("period_days", 7), _int("horizon", 1), _col("by", None),
+    call=lambda f, df, user, ts, period_days, horizon, by: (
+        _target("datapipe.events.survival_by")(df, user, ts, by, period_days, horizon)
+        if by else f(df, user, ts, period_days, horizon)),
+    doc="""survival :user :ts [period_days] [horizon_periods] [by] —
     Kaplan-Meier churn curve over user lifetimes with right-censoring
     near the observation end; by groups curves by the user's FIRST
-    event value (entry-channel attribution)."""
+    event value (entry-channel attribution).""")
 
-    name = "survival"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("period_days", TokenType.NUMERIC, optional=True, default=7),
-        Arg("horizon", TokenType.NUMERIC, optional=True, default=1),
-        Arg("by", TokenType.COLUMN, optional=True, default=None),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import survival, survival_by
-
-        u = ctx.resolve(df, self.args["user"])
-        t = ctx.resolve(df, self.args["ts"])
-        pd_, hz = int(self.args["period_days"]), int(self.args["horizon"])
-        if self.args["by"]:
-            return survival_by(
-                df, u, t, ctx.resolve(df, self.args["by"]), pd_, hz)
-        return survival(df, u, t, pd_, hz)
-
-
-@directive
-class Seasonality(Directive):
-    """seasonality :key :ts — hour-of-week load profile per key
+_forward(
+    "seasonality", "datapipe.events.seasonality", _col("key"), _col("ts"),
+    doc="""seasonality :key :ts — hour-of-week load profile per key
     (key, dow, hour, n, share): the capacity/anomaly baseline, pure
-    integer epoch arithmetic."""
+    integer epoch arithmetic.""")
 
-    name = "seasonality"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import seasonality
-
-        return seasonality(
-            df, ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["ts"]))
-
-
-@directive
-class FunnelBy(Directive):
-    """funnel-by :user :ts :type 'step1,step2,...' :arm [within_minutes]
+_forward(
+    "funnel-by", "datapipe.events.funnel_steps_by",
+    _col("user"), _col("ts"), _col("type"), _list("steps"), _col("arm"),
+    _float("within_minutes", None),
+    doc="""funnel-by :user :ts :type 'step1,step2,...' :arm [within_minutes]
     — per-arm funnel: the greedy chain with users attributed to their
     anchor event's arm value; conversion against each arm's own step-1
-    count (the A/B comparison readout)."""
+    count (the A/B comparison readout).""")
 
-    name = "funnel-by"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("steps", TokenType.TEXT),
-        Arg("arm", TokenType.COLUMN),
-        Arg("within_minutes", TokenType.NUMERIC, optional=True),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import funnel_steps_by
-
-        steps = [s.strip() for s in str(self.args["steps"]).split(",") if s.strip()]
-        within = self.args.value("within_minutes")
-        return funnel_steps_by(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            steps,
-            ctx.resolve(df, self.args["arm"]),
-            None if within is None else float(within),
-        )
-
-
-@directive
-class FunnelAb(Directive):
-    """funnel-ab :user :ts :type 'step1,step2,...' :arm 'a' 'b'
+_forward(
+    "funnel-ab", "datapipe.events.funnel_steps_by",
+    _col("user"), _col("ts"), _col("type"), _list("steps"), _col("arm"), _text("a"), _text("b"),
+    _float("within_minutes", None),
+    call=lambda f, df, user, ts, type_, steps, arm, a, b, within: _target(
+        "datapipe.events.funnel_ab_test")(f(df, user, ts, type_, steps, arm, within), arm, a, b),
+    doc="""funnel-ab :user :ts :type 'step1,step2,...' :arm 'a' 'b'
     [within_minutes] — the per-step conversion A/B readout: grouped
     funnel then two-proportion z + Wilson/Newcombe intervals between
-    arms a and b."""
+    arms a and b.""")
 
-    name = "funnel-ab"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("type", TokenType.COLUMN),
-        Arg("steps", TokenType.TEXT),
-        Arg("arm", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-        Arg("within_minutes", TokenType.NUMERIC, optional=True),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import funnel_ab_test, funnel_steps_by
-
-        steps = [s.strip() for s in str(self.args["steps"]).split(",") if s.strip()]
-        within = self.args.value("within_minutes")
-        arm = ctx.resolve(df, self.args["arm"])
-        grouped = funnel_steps_by(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["type"]),
-            steps,
-            arm,
-            None if within is None else float(within),
-        )
-        return funnel_ab_test(
-            grouped, arm, str(self.args["a"]), str(self.args["b"]))
-
-
-@directive
-class RetentionAb(Directive):
-    """retention-ab :user :ts :arm 'a' 'b' [period_days] [max_periods]
+_forward(
+    "retention-ab", "datapipe.events.retention_cohorts_by",
+    _col("user"), _col("ts"), _col("arm"), _text("a"), _text("b"), _int("period_days", 7),
+    _int("max_periods", 8),
+    call=lambda f, df, user, ts, arm, a, b, days, periods: _target(
+        "datapipe.events.retention_ab_test")(f(df, user, ts, arm, days, periods), arm, a, b),
+    doc="""retention-ab :user :ts :arm 'a' 'b' [period_days] [max_periods]
     — the per-offset stickiness A/B readout: grouped retention grid
-    then two-proportion z + Wilson/Newcombe intervals between arms."""
+    then two-proportion z + Wilson/Newcombe intervals between arms.""")
 
-    name = "retention-ab"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("arm", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-        Arg("period_days", TokenType.NUMERIC, optional=True, default=7),
-        Arg("max_periods", TokenType.NUMERIC, optional=True, default=8),
-    ]
+_forward(
+    "retention-by", "datapipe.events.retention_cohorts_by",
+    _col("user"), _col("ts"), _col("arm"), _int("period_days", 7), _int("max_periods", 8),
+    doc="""retention-by :user :ts :arm [period_days] [max_periods] —
+    per-arm cohort retention grid (first-event arm attribution).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import (
-            retention_ab_test,
-            retention_cohorts_by,
-        )
-
-        arm = ctx.resolve(df, self.args["arm"])
-        grid = retention_cohorts_by(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            arm,
-            int(self.args["period_days"]),
-            int(self.args["max_periods"]),
-        )
-        return retention_ab_test(
-            grid, arm, str(self.args["a"]), str(self.args["b"]))
-
-
-@directive
-class RetentionBy(Directive):
-    """retention-by :user :ts :arm [period_days] [max_periods] —
-    per-arm cohort retention grid (first-event arm attribution)."""
-
-    name = "retention-by"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("arm", TokenType.COLUMN),
-        Arg("period_days", TokenType.NUMERIC, optional=True, default=7),
-        Arg("max_periods", TokenType.NUMERIC, optional=True, default=8),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import retention_cohorts_by
-
-        return retention_cohorts_by(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["arm"]),
-            int(self.args["period_days"]),
-            int(self.args["max_periods"]),
-        )
-
-
-@directive
-class SessionStats(Directive):
-    """session-stats :user :ts [gap_minutes] — one-row engagement
+_forward(
+    "session-stats", "streaming.sessions.session_stats",
+    _col("user"), _col("ts"), _float("gap", 30.0),
+    doc="""session-stats :user :ts [gap_minutes] — one-row engagement
     scorecard (sessions, users, avg events, avg/median duration,
-    bounce rate)."""
+    bounce rate).""")
 
-    name = "session-stats"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("gap", TokenType.NUMERIC, optional=True, default=30.0),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.streaming.sessions import session_stats
-
-        return session_stats(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            float(self.args["gap"]),
-        )
-
-
-@directive
-class DistinctSketch(Directive):
-    """distinct-sketch :col [arm] [lgk] — mergeable HLL distinct-count
+_forward(
+    "distinct-sketch", "datapipe.curation.distinct_sketch",
+    _col("col"), _col("arm", None), _int("lgk", 12),
+    call=lambda f, df, col, arm, lgk: f(df, [col], arm, lgk).drop("sketch"),
+    doc="""distinct-sketch :col [arm] [lgk] — mergeable HLL distinct-count
     estimate per column (grouped when arm given); the bounded-state
-    count_distinct for key universes that don't fit anywhere."""
+    count_distinct for key universes that don't fit anywhere.""")
 
-    name = "distinct-sketch"
-    usage = [
-        Arg("col", TokenType.COLUMN),
-        Arg("arm", TokenType.COLUMN, optional=True, default=None),
-        Arg("lgk", TokenType.NUMERIC, optional=True, default=12),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.curation import distinct_sketch
-
-        by = self.args.value("arm")
-        return distinct_sketch(
-            df,
-            [ctx.resolve(df, self.args["col"])],
-            by=ctx.resolve(df, by) if by else None,
-            lgk=int(self.args["lgk"]),
-        ).drop("sketch")
-
-
-@directive
-class SessionStatsBy(Directive):
-    """session-stats-by :user :ts :arm [gap_minutes] — per-group
+_forward(
+    "session-stats-by", "streaming.sessions.session_stats_by",
+    _col("user"), _col("ts"), _col("arm"), _float("gap", 30.0),
+    doc="""session-stats-by :user :ts :arm [gap_minutes] — per-group
     engagement scorecard (the A/B family's engagement leg; users
-    attributed to the arm on their first event)."""
+    attributed to the arm on their first event).""")
 
-    name = "session-stats-by"
-    usage = [
-        Arg("user", TokenType.COLUMN),
-        Arg("ts", TokenType.COLUMN),
-        Arg("arm", TokenType.COLUMN),
-        Arg("gap", TokenType.NUMERIC, optional=True, default=30.0),
-    ]
+_forward(
+    "graph-triangles", "datapipe.graph.graph_triangles", _col("src"), _col("dst"),
+    doc="""graph-triangles :src :dst — per-node degree, triangle count, and
+    local clustering coefficient over the undirected simple graph.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.streaming.sessions import session_stats_by
-
-        return session_stats_by(
-            df,
-            ctx.resolve(df, self.args["user"]),
-            ctx.resolve(df, self.args["ts"]),
-            ctx.resolve(df, self.args["arm"]),
-            float(self.args["gap"]),
-        )
-
-
-@directive
-class GraphTriangles(Directive):
-    """graph-triangles :src :dst — per-node degree, triangle count, and
-    local clustering coefficient over the undirected simple graph."""
-
-    name = "graph-triangles"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_triangles
-
-        return graph_triangles(
-            df, ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-        )
-
-
-@directive
-class GraphKhop(Directive):
-    """graph-khop :src :dst 'seed1,seed2' [k] [directed] — nodes within
+_forward(
+    "graph-khop", "datapipe.graph.graph_khop",
+    _col("src"), _col("dst"), _list("seeds"), _int("k", 3), _bool("directed", False),
+    doc="""graph-khop :src :dst 'seed1,seed2' [k] [directed] — nodes within
     k hops of the seed set with min hop distance (quarantine list /
-    crawl whitelist)."""
+    crawl whitelist).""")
 
-    name = "graph-khop"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-        Arg("seeds", TokenType.TEXT),
-        Arg("k", TokenType.NUMERIC, optional=True, default=3),
-        Arg("directed", TokenType.BOOL, optional=True, default=False),
-    ]
+_forward(
+    "calibration-bins", "datapipe.numeric.calibration_bins",
+    _col("score"), _col("label"), _int("bins", 10),
+    doc="""calibration-bins :score :label [bins] — reliability-diagram bins
+    for a probabilistic classifier (per-bin n / mean_score / frac_pos).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_khop
-
-        seeds = [s.strip() for s in str(self.args["seeds"]).split(",") if s.strip()]
-        return graph_khop(
-            df, ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-            seeds, k=int(self.args["k"]),
-            directed=bool(self.args["directed"]),
-        )
-
-
-@directive
-class CalibrationBins(Directive):
-    """calibration-bins :score :label [bins] — reliability-diagram bins
-    for a probabilistic classifier (per-bin n / mean_score / frac_pos)."""
-
-    name = "calibration-bins"
-    usage = [
-        Arg("score", TokenType.COLUMN),
-        Arg("label", TokenType.COLUMN),
-        Arg("bins", TokenType.NUMERIC, optional=True, default=10),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import calibration_bins
-
-        return calibration_bins(
-            df, ctx.resolve(df, self.args["score"]),
-            ctx.resolve(df, self.args["label"]),
-            bins=int(self.args["bins"]),
-        )
-
-
-@directive
-class EwmaChart(Directive):
-    """ewma-chart :key :bucket :value [alpha] [L] — EWMA control chart
+_forward(
+    "ewma-chart", "datapipe.events.ewma",
+    _col("key"), _col("bucket"), _col("value"), _float("alpha", 0.3), _float("L", 3.0),
+    doc="""ewma-chart :key :bucket :value [alpha] [L] — EWMA control chart
     over a per-key bucketed series (feed the resample grid): the
     medium-drift alarm between rolling-stats' spike band and cusum's
-    persistent-shift walk."""
+    persistent-shift walk.""")
 
-    name = "ewma-chart"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("bucket", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN),
-        Arg("alpha", TokenType.NUMERIC, optional=True, default=0.3),
-        Arg("L", TokenType.NUMERIC, optional=True, default=3.0),
-    ]
+_forward(
+    "code-signals", "datapipe.text.code_signals", _col("text"),
+    doc="""code-signals :text — code-vs-prose routing signals + is_code
+    verdict (indent/terminator/keyword/symbol thresholds, scan-side).""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import ewma
+_forward(
+    "graph-hits", "datapipe.graph.graph_hits",
+    _col("src"), _col("dst"), _col("weight", None), _int("iters", 5),
+    doc="""graph-hits :src :dst [weight] [iters] — HITS hubs/authorities
+    over a directed edge list (Kleinberg 1999; L1-normalized).""")
 
-        return ewma(
-            df,
-            ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["bucket"]),
-            ctx.resolve(df, self.args["value"]),
-            alpha=float(self.args["alpha"]), L=float(self.args["L"]),
-        )
-
-
-@directive
-class CodeSignals(Directive):
-    """code-signals :text — code-vs-prose routing signals + is_code
-    verdict (indent/terminator/keyword/symbol thresholds, scan-side)."""
-
-    name = "code-signals"
-    usage = [Arg("text", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import code_signals
-
-        return code_signals(df, ctx.resolve(df, self.args["text"]))
-
-
-@directive
-class GraphHits(Directive):
-    """graph-hits :src :dst [weight] [iters] — HITS hubs/authorities
-    over a directed edge list (Kleinberg 1999; L1-normalized)."""
-
-    name = "graph-hits"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-        Arg("weight", TokenType.COLUMN, optional=True, default=None),
-        Arg("iters", TokenType.NUMERIC, optional=True, default=5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_hits
-
-        wcol = self.args.value("weight")
-        return graph_hits(
-            df, ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-            weight_col=ctx.resolve(df, wcol) if wcol else None,
-            iters=int(self.args["iters"]),
-        )
-
-
-@directive
-class GraphSummary(Directive):
-    """graph-summary :src :dst — one-row structural scorecard of a
+_forward(
+    "graph-summary", "datapipe.graph.graph_summary", _col("src"), _col("dst"),
+    doc="""graph-summary :src :dst — one-row structural scorecard of a
     directed edge list (nodes/edges/self-loops/degree/density/
-    reciprocity) — the pre-flight before anything iterative."""
-
-    name = "graph-summary"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_summary
-
-        return graph_summary(
-            df, ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]),
-        )
+    reciprocity) — the pre-flight before anything iterative.""")
 
 
-@directive
-class SrmCheck(Directive):
-    """srm-check :unit :arm ['arm:w,arm:w'] [alpha] — sample-ratio-
+def _srm_ratios(spec: str) -> dict[str, float]:
+    """'arm:w,arm:w' → {arm: w}; unlike a comma list (``_split``), an
+    empty item is an error, not skipped."""
+    ratios = {}
+    for part in spec.split(","):
+        k, _, w = part.strip().rpartition(":")
+        ratios[k.strip()] = float(w)
+    return ratios
+
+
+_forward(
+    "srm-check", "datapipe.events.srm_check",
+    _col("unit"), _col("arm"), _text("ratios", None), _text("alpha", "0.001"),
+    call=lambda f, df, unit, arm, ratios, alpha: f(
+        df, unit, arm, _srm_ratios(ratios) if ratios else None, alpha),
+    doc="""srm-check :unit :arm ['arm:w,arm:w'] [alpha] — sample-ratio-
     mismatch gate (Pearson chi-square on distinct units per arm vs the
     planned split; default equal). The experiment-health check every
-    A/B readout presumes."""
+    A/B readout presumes.""")
 
-    name = "srm-check"
-    usage = [
-        Arg("unit", TokenType.COLUMN),
-        Arg("arm", TokenType.COLUMN),
-        Arg("ratios", TokenType.TEXT, optional=True),
-        Arg("alpha", TokenType.TEXT, optional=True, default="0.001"),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import srm_check
-
-        spec = self.args.value("ratios")
-        ratios = None
-        if spec:
-            ratios = {}
-            for part in str(spec).split(","):
-                k, _, w = part.strip().rpartition(":")
-                ratios[k.strip()] = float(w)
-        return srm_check(
-            df, ctx.resolve(df, self.args["unit"]),
-            ctx.resolve(df, self.args["arm"]),
-            ratios=ratios, alpha=str(self.args["alpha"]),
-        )
-
-
-@directive
-class CupedAb(Directive):
-    """cuped-ab :arm :metric :covariate 'a' 'b' — CUPED variance-
+_forward(
+    "cuped-ab", "datapipe.events.cuped_ab_test",
+    _col("arm"), _col("metric"), _col("covariate"), _text("a"), _text("b"),
+    doc="""cuped-ab :arm :metric :covariate 'a' 'b' — CUPED variance-
     reduced two-arm z-test on a per-unit frame (Deng et al., WSDM
-    2013): theta fit pooled, both raw and adjusted readouts."""
+    2013): theta fit pooled, both raw and adjusted readouts.""")
 
-    name = "cuped-ab"
-    usage = [
-        Arg("arm", TokenType.COLUMN),
-        Arg("metric", TokenType.COLUMN),
-        Arg("covariate", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import cuped_ab_test
-
-        return cuped_ab_test(
-            df, ctx.resolve(df, self.args["arm"]),
-            ctx.resolve(df, self.args["metric"]),
-            ctx.resolve(df, self.args["covariate"]),
-            str(self.args["a"]), str(self.args["b"]),
-        )
-
-
-@directive
-class Chi2Independence(Directive):
-    """chi2-independence :a :b — Pearson chi-square test of
+_forward(
+    "chi2-independence", "datapipe.numeric.chi_square_independence", _col("a"), _col("b"),
+    doc="""chi2-independence :a :b — Pearson chi-square test of
     independence + Cramér's V between two categorical columns (the
-    feature-selection / leakage screen)."""
+    feature-selection / leakage screen).""")
 
-    name = "chi2-independence"
-    usage = [
-        Arg("a", TokenType.COLUMN),
-        Arg("b", TokenType.COLUMN),
-    ]
+_forward(
+    "cohens-kappa", "datapipe.numeric.cohens_kappa", _col("a"), _col("b"),
+    doc="""cohens-kappa :a :b — inter-rater agreement beyond chance between
+    two label columns (Cohen 1960), with the Landis-Koch band.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import chi_square_independence
-
-        return chi_square_independence(
-            df, ctx.resolve(df, self.args["a"]),
-            ctx.resolve(df, self.args["b"]),
-        )
-
-
-@directive
-class CohensKappa(Directive):
-    """cohens-kappa :a :b — inter-rater agreement beyond chance between
-    two label columns (Cohen 1960), with the Landis-Koch band."""
-
-    name = "cohens-kappa"
-    usage = [
-        Arg("a", TokenType.COLUMN),
-        Arg("b", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import cohens_kappa
-
-        return cohens_kappa(
-            df, ctx.resolve(df, self.args["a"]),
-            ctx.resolve(df, self.args["b"]),
-        )
-
-
-@directive
-class AcfChart(Directive):
-    """acf :key :bucket :value [max_lag] — sample autocorrelation per
+_forward(
+    "acf", "datapipe.events.acf", _col("key"), _col("bucket"), _col("value"), _int("max_lag", 24),
+    cls="AcfChart",
+    doc="""acf :key :bucket :value [max_lag] — sample autocorrelation per
     key over a bucketed series (feed the resample grid): the memory/
-    period detector that picks rolling windows and seasonal periods."""
+    period detector that picks rolling windows and seasonal periods.""")
 
-    name = "acf"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("bucket", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN),
-        Arg("max_lag", TokenType.NUMERIC, optional=True, default=24),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import acf
-
-        return acf(
-            df, ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["bucket"]),
-            ctx.resolve(df, self.args["value"]),
-            max_lag=int(self.args["max_lag"]),
-        )
-
-
-@directive
-class HoltForecast(Directive):
-    """holt-forecast :key :bucket :value [alpha] [beta] [horizon] —
+_forward(
+    "holt-forecast", "datapipe.events.holt_forecast",
+    _col("key"), _col("bucket"), _col("value"), _float("alpha", 0.3), _float("beta", 0.1),
+    _int("horizon", 6),
+    doc="""holt-forecast :key :bucket :value [alpha] [beta] [horizon] —
     Holt linear-trend double exponential smoothing + h-step forecast
-    per key (capacity planning off the resample grid)."""
+    per key (capacity planning off the resample grid).""")
 
-    name = "holt-forecast"
-    usage = [
-        Arg("key", TokenType.COLUMN),
-        Arg("bucket", TokenType.COLUMN),
-        Arg("value", TokenType.COLUMN),
-        Arg("alpha", TokenType.NUMERIC, optional=True, default=0.3),
-        Arg("beta", TokenType.NUMERIC, optional=True, default=0.1),
-        Arg("horizon", TokenType.NUMERIC, optional=True, default=6),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import holt_forecast
-
-        return holt_forecast(
-            df, ctx.resolve(df, self.args["key"]),
-            ctx.resolve(df, self.args["bucket"]),
-            ctx.resolve(df, self.args["value"]),
-            alpha=float(self.args["alpha"]),
-            beta=float(self.args["beta"]),
-            horizon=int(self.args["horizon"]),
-        )
-
-
-@directive
-class MannWhitney(Directive):
-    """mann-whitney :value :group 'a' 'b' — exact tie-corrected
+_forward(
+    "mann-whitney", "datapipe.numeric.mann_whitney_u",
+    _col("value"), _col("group"), _text("a"), _text("b"),
+    doc="""mann-whitney :value :group 'a' 'b' — exact tie-corrected
     Mann-Whitney U rank-sum test between two groups, computed off the
-    value histogram (never a corpus rank window)."""
+    value histogram (never a corpus rank window).""")
 
-    name = "mann-whitney"
-    usage = [
-        Arg("value", TokenType.COLUMN),
-        Arg("group", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-    ]
+_forward(
+    "benford-check", "datapipe.numeric.benford_deviation", _col("col"),
+    doc="""benford-check :col — first-significant-digit Benford screen
+    with chi-square, Nigrini MAD, and conformity band.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import mann_whitney_u
-
-        return mann_whitney_u(
-            df, ctx.resolve(df, self.args["value"]),
-            ctx.resolve(df, self.args["group"]),
-            str(self.args["a"]), str(self.args["b"]),
-        )
-
-
-@directive
-class BenfordCheck(Directive):
-    """benford-check :col — first-significant-digit Benford screen
-    with chi-square, Nigrini MAD, and conformity band."""
-
-    name = "benford-check"
-    usage = [Arg("col", TokenType.COLUMN)]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import benford_deviation
-
-        return benford_deviation(df, ctx.resolve(df, self.args["col"]))
-
-
-@directive
-class GraphSssp(Directive):
-    """graph-sssp :src :dst 'seed1,seed2' [weight] [max_rounds] —
+_forward(
+    "graph-sssp", "datapipe.graph.graph_sssp",
+    _col("src"), _col("dst"), _list("seeds"), _col("weight", None), _int("max_rounds", 10),
+    doc="""graph-sssp :src :dst 'seed1,seed2' [weight] [max_rounds] —
     weighted multi-seed shortest paths (bounded Bellman-Ford, exact
-    micro-integer distances) over a directed edge list."""
+    micro-integer distances) over a directed edge list.""")
 
-    name = "graph-sssp"
-    usage = [
-        Arg("src", TokenType.COLUMN),
-        Arg("dst", TokenType.COLUMN),
-        Arg("seeds", TokenType.TEXT),
-        Arg("weight", TokenType.COLUMN, optional=True),
-        Arg("max_rounds", TokenType.NUMERIC, optional=True, default=10),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.graph import graph_sssp
-
-        wcol = self.args.value("weight")
-        seeds = [s.strip() for s in str(self.args["seeds"]).split(",")
-                 if s.strip()]
-        return graph_sssp(
-            df, ctx.resolve(df, self.args["src"]),
-            ctx.resolve(df, self.args["dst"]), seeds,
-            weight_col=ctx.resolve(df, wcol) if wcol else None,
-            max_rounds=int(self.args["max_rounds"]),
-        )
-
-
-@directive
-class WelchTTest(Directive):
-    """welch-t :value :group 'a' 'b' — Welch unequal-variance t-test
+_forward(
+    "welch-t", "datapipe.numeric.welch_t_test",
+    _col("value"), _col("group"), _text("a"), _text("b"),
+    cls="WelchTTest",
+    doc="""welch-t :value :group 'a' 'b' — Welch unequal-variance t-test
     between two groups (means, variances, Welch-Satterthwaite df,
-    Cohen's d)."""
+    Cohen's d).""")
 
-    name = "welch-t"
-    usage = [
-        Arg("value", TokenType.COLUMN),
-        Arg("group", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-    ]
+_forward(
+    "kruskal-wallis", "datapipe.numeric.kruskal_wallis",
+    _col("value"), _col("group"), _list("groups"),
+    doc="""kruskal-wallis :value :group 'a,b,c' — tie-corrected k-group
+    rank test (does ANY group differ), off the value histogram.""")
 
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import welch_t_test
+_forward(
+    "ratio-ab", "datapipe.events.ratio_ab_test",
+    _col("arm"), _col("num"), _col("den"), _text("a"), _text("b"),
+    doc="""ratio-ab :arm :num :den 'a' 'b' — delta-method A/B test for a
+    ratio metric on a per-unit frame (Deng, Knoblich & Lu, KDD 2018).""")
 
-        return welch_t_test(
-            df, ctx.resolve(df, self.args["value"]),
-            ctx.resolve(df, self.args["group"]),
-            str(self.args["a"]), str(self.args["b"]),
-        )
+_forward(
+    "msprt-ab", "datapipe.events.msprt_ab_test",
+    _col("arm"), _col("metric"), _text("a"), _text("b"), _float("tau", 1.0),
+    doc="""msprt-ab :arm :metric 'a' 'b' [tau] — always-valid sequential
+    A/B p-value (mixture SPRT; safe under continuous monitoring).""")
 
+_forward(
+    "textrank", "datapipe.text.textrank_keywords",
+    _col("text"), _int("k", 20), _int("min_count", 5),
+    cls="TextrankKeywords",
+    doc="""textrank :text [k] [min_count] — corpus keywords by PageRank
+    over the word co-occurrence graph (TextRank at corpus scale).""")
 
-@directive
-class KruskalWallis(Directive):
-    """kruskal-wallis :value :group 'a,b,c' — tie-corrected k-group
-    rank test (does ANY group differ), off the value histogram."""
-
-    name = "kruskal-wallis"
-    usage = [
-        Arg("value", TokenType.COLUMN),
-        Arg("group", TokenType.COLUMN),
-        Arg("groups", TokenType.TEXT),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import kruskal_wallis
-
-        groups = [s.strip() for s in str(self.args["groups"]).split(",")
-                  if s.strip()]
-        return kruskal_wallis(
-            df, ctx.resolve(df, self.args["value"]),
-            ctx.resolve(df, self.args["group"]), groups,
-        )
-
-
-@directive
-class RatioAb(Directive):
-    """ratio-ab :arm :num :den 'a' 'b' — delta-method A/B test for a
-    ratio metric on a per-unit frame (Deng, Knoblich & Lu, KDD 2018)."""
-
-    name = "ratio-ab"
-    usage = [
-        Arg("arm", TokenType.COLUMN),
-        Arg("num", TokenType.COLUMN),
-        Arg("den", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import ratio_ab_test
-
-        return ratio_ab_test(
-            df, ctx.resolve(df, self.args["arm"]),
-            ctx.resolve(df, self.args["num"]),
-            ctx.resolve(df, self.args["den"]),
-            str(self.args["a"]), str(self.args["b"]),
-        )
-
-
-@directive
-class MsprtAb(Directive):
-    """msprt-ab :arm :metric 'a' 'b' [tau] — always-valid sequential
-    A/B p-value (mixture SPRT; safe under continuous monitoring)."""
-
-    name = "msprt-ab"
-    usage = [
-        Arg("arm", TokenType.COLUMN),
-        Arg("metric", TokenType.COLUMN),
-        Arg("a", TokenType.TEXT),
-        Arg("b", TokenType.TEXT),
-        Arg("tau", TokenType.NUMERIC, optional=True, default=1.0),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.events import msprt_ab_test
-
-        return msprt_ab_test(
-            df, ctx.resolve(df, self.args["arm"]),
-            ctx.resolve(df, self.args["metric"]),
-            str(self.args["a"]), str(self.args["b"]),
-            tau=float(self.args["tau"]),
-        )
-
-
-@directive
-class TextrankKeywords(Directive):
-    """textrank :text [k] [min_count] — corpus keywords by PageRank
-    over the word co-occurrence graph (TextRank at corpus scale)."""
-
-    name = "textrank"
-    usage = [
-        Arg("text", TokenType.COLUMN),
-        Arg("k", TokenType.NUMERIC, optional=True, default=20),
-        Arg("min_count", TokenType.NUMERIC, optional=True, default=5),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.text import textrank_keywords
-
-        return textrank_keywords(
-            df, ctx.resolve(df, self.args["text"]),
-            k=int(self.args["k"]), min_count=int(self.args["min_count"]),
-        )
-
-
-@directive
-class SpearmanCorr(Directive):
-    """spearman :a :b — Spearman rank correlation (Pearson over exact
-    midranks; outlier-immune monotonic association)."""
-
-    name = "spearman"
-    usage = [
-        Arg("a", TokenType.COLUMN),
-        Arg("b", TokenType.COLUMN),
-    ]
-
-    def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from wrangler_spark.datapipe.numeric import spearman_corr
-
-        return spearman_corr(
-            df, ctx.resolve(df, self.args["a"]),
-            ctx.resolve(df, self.args["b"]),
-        )
+_forward(
+    "spearman", "datapipe.numeric.spearman_corr", _col("a"), _col("b"),
+    cls="SpearmanCorr",
+    doc="""spearman :a :b — Spearman rank correlation (Pearson over exact
+    midranks; outlier-immune monotonic association).""")

@@ -332,12 +332,6 @@ def encode_datum(value: Any, schema: Any, names: dict) -> bytes:
     raise ValueError(f"unsupported avro type {t!r}")
 
 
-def encode_binary_stream(records: list, schema: Any, names: dict) -> bytes:
-    """Concatenated schema-less binary datums — the payload shape
-    ``decode_binary_stream`` reads (BinaryAvroDecoder messages)."""
-    return b"".join(encode_datum(r, schema, names) for r in records)
-
-
 # fixed sync marker so identical inputs produce identical OCF bytes —
 # a deterministic-output requirement, not a spec one (the spec only
 # needs the marker to be consistent within one file)

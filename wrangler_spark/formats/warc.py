@@ -22,7 +22,6 @@ batching, schema) lives in ``wrangler_spark.sources.read_warc``.
 
 from __future__ import annotations
 
-import gzip
 import zlib
 from collections.abc import Iterator
 
@@ -32,16 +31,6 @@ GZIP_MAGIC = b"\x1f\x8b"
 # yielded per chunk — both bound the transient memory of the member walk
 _FEED = 1 << 20
 _MAX_CHUNK = 1 << 20
-
-
-def maybe_gunzip(data: bytes) -> bytes:
-    """Decompress iff the buffer is gzip (multi-member safe). Whole-buffer
-    helper for SMALL payloads (fixtures, single records) — the record
-    iterator uses :func:`_gunzip_members` instead, which never
-    materializes the full decompressed archive."""
-    if data[:2] == GZIP_MAGIC:
-        return gzip.decompress(data)
-    return data
 
 
 GZIP_MEMBER_MAGIC = b"\x1f\x8b\x08"  # magic + DEFLATE method byte

@@ -17,13 +17,6 @@ _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _CELL_RE = re.compile(r"([A-Z]+)(\d+)")
 
 
-def col_letter_to_index(letters: str) -> int:
-    n = 0
-    for ch in letters:
-        n = n * 26 + (ord(ch) - ord("A") + 1)
-    return n - 1
-
-
 def sheet_exists(payload: bytes, sheet: str | int = 0) -> bool:
     """Cheap readability probe: open the zip, resolve the sheet from
     workbook.xml, and XML-parse the worksheet entry — but skip the

@@ -7,8 +7,6 @@ Parity: the service's samplers (``wrangler-core/.../sampling/Bernoulli.java``,
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,26 +41,7 @@ def stratified(df: DataFrame, col: str, fractions: dict, seed: int = 1) -> DataF
     return df.sampleBy(col, fractions, seed)
 
 
-def estimate_fraction(df: DataFrame, target_rows: int) -> float:
-    """Helper: fraction that yields ≈target_rows (clamped to [0, 1])."""
-    total = df.count()
-    if total == 0:
-        return 1.0
-    return min(1.0, max(1e-9, target_rows / total * 1.1))
-
-
 def split(df: DataFrame, weights: list[float], seed: int = 1) -> list[DataFrame]:
     """Random disjoint splits (train/validation/test)."""
     s = sum(weights)
     return df.randomSplit([w / s for w in weights], seed=seed)
-
-
-def sample_histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
-    """Equi-width histogram of a numeric column — one aggregation job."""
-    stats = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    lo, hi = stats["lo"], stats["hi"]
-    if lo is None or hi is None or math.isclose(float(lo), float(hi)):
-        return df.groupBy(F.lit(0).alias("bin")).count()
-    width = (float(hi) - float(lo)) / bins
-    b = F.least(((F.col(col) - lo) / width).cast("int"), F.lit(bins - 1)).alias("bin")
-    return df.select(b).groupBy("bin").count().orderBy("bin")
