@@ -3583,18 +3583,52 @@ def test_embedding_auto_planes_empty_corpus_guard(spark, tmp_path_factory):
 def test_report_state_mixed_group_columns_raise(spark, tmp_path_factory):
     """A report state whose batches disagree on the group column is
     rejected loudly — grouping by an arbitrary one would silently
-    bucket the other batches under null."""
+    bucket the other batches under null. The fold refuses the second
+    group column; a state mixed before the fold checked it (its rows
+    appended directly here) is still refused by the reader."""
     from wrangler_spark.datapipe import curation
 
-    path = str(tmp_path_factory.mktemp("rep_mixed")) + "/st"
+    root = str(tmp_path_factory.mktemp("rep_mixed"))
+    path, other = root + "/st", root + "/other"
     df = spark.createDataFrame(
         [(1, "hello world", "a", "x"), (2, "more text", "b", "y")],
         ["doc_id", "text", "source", "lang"],
     )
     curation.report_update_state(df, path, by="source", batch_id="b0")
-    curation.report_update_state(df, path, by="lang", batch_id="b1")
+    with pytest.raises(ValueError, match="incompatible"):
+        curation.report_update_state(df, path, by="lang", batch_id="b1")
+    assert curation.report_from_state(spark, path).count() == 2
+    curation.report_update_state(df, other, by="lang", batch_id="b1")
+    spark.read.parquet(other + "/rows").write.mode("append").parquet(path + "/rows")
     with pytest.raises(ValueError, match="mixed group columns"):
         curation.report_from_state(spark, path).collect()
+
+
+@pytest.mark.parametrize("first, second", [
+    ({"lang_col": "lang"}, {}),
+    ({"by": "source"}, {}),
+], ids=["lang_col", "by"])
+def test_report_state_refuses_a_different_shape(spark, tmp_path_factory, first, second):
+    """The report state's pinned geometry is its column set: a batch
+    folded with or without a language sketch, or with or without a
+    group column, unlike the stored rows, is refused — it would
+    otherwise under-count distinct_langs or land under a null group.
+    The refused batch id folds later with the matching shape."""
+    from wrangler_spark.datapipe import curation
+
+    path = str(tmp_path_factory.mktemp("rep_shape")) + "/st"
+    df = spark.createDataFrame(
+        [(1, "hello world", "a", "x"), (2, "more text", "b", "y"),
+         (3, "other text", "a", "z")],
+        ["doc_id", "text", "source", "lang"],
+    )
+    curation.report_update_state(df.filter("doc_id < 3"), path, batch_id="b0", **first)
+    before = sorted(map(tuple, curation.report_from_state(spark, path).collect()))
+    with pytest.raises(ValueError, match="report state at .* incompatible"):
+        curation.report_update_state(df, path, batch_id="b1", **second)
+    assert sorted(map(tuple, curation.report_from_state(spark, path).collect())) == before
+    curation.report_update_state(df.filter("doc_id = 3"), path, batch_id="b1", **first)
+    assert sum(r["n_docs"] for r in curation.report_from_state(spark, path).collect()) == 3
 
 
 def test_group_top_terms_weighting_modes(spark):

@@ -79,8 +79,9 @@ lease. The protocol, per fold of id K:
 Crash windows: before ``.pending`` nothing happened; between
 ``.pending`` and the append's commit the rows lack the id and the
 replay folds; between the append's commit and ``<K>`` the rows hold the
-id (compaction preserves ids, as zero-count ledger rows for vocab and
-funnel state) and the replay only writes ``<K>``; after ``<K>`` the
+id (compaction preserves ids: it rewrites the unmerged families' rows
+and keeps one null-key ledger row per id in a merged family's, see
+``_state``) and the replay only writes ``<K>``; after ``<K>`` the
 replay is a file test. A state written before the ledger existed
 (``rows`` but no ``_batches/``) is backfilled once: the distinct
 non-empty ids of its rows are collected in one job and their markers

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from wrangler_spark.datapipe import _layout
+from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._local import local_table
 
 from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
@@ -1775,7 +1775,9 @@ def report_update_state(
     regardless). This is the materialize-once posture
     (retention_write_state, bloom_write_index) applied to the health
     metrics a 100 TB dashboard polls: per-batch cost stays flat as the
-    corpus grows. All batches must agree on lang_col/by presence.
+    corpus grows. All batches must agree on lang_col/by presence: the
+    state's column set is its pinned geometry (``_state``), and a fold
+    whose columns differ from the stored rows' is refused.
 
     ``by`` keeps one state row per GROUP per batch (source/shard) —
     the corpus_report_by counterpart; dup estimates then stay
@@ -1796,24 +1798,20 @@ def report_update_state(
             f"by={by!r} collides with a report state column; rename the "
             "group column before folding it into state"
         )
-    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
-        if root is None:
-            return
-        key = F.md5(normalize_text(F.col(text_col)))
-        words = F.size(F.split(normalize_text(F.col(text_col)), " "))
-        aggs = [
-            F.count("*").cast("long").alias("n_docs"),
-            F.count(F.when(F.col(text_col).isNull(), 1)).cast("long").alias("n_null_text"),
-            F.coalesce(F.sum(F.length(F.col(text_col))), F.lit(0)).cast("long").alias("n_chars"),
-            F.coalesce(F.sum(words), F.lit(0)).cast("long").alias("n_words"),
-            F.count(text_col).cast("long").alias("n_with_text"),
-            F.hll_sketch_agg(key).alias("content_sketch"),
-        ]
-        if lang_col:
-            aggs.append(F.hll_sketch_agg(F.col(lang_col)).alias("lang_sketch"))
-        agged = df.groupBy(by).agg(*aggs) if by else df.agg(*aggs)
-        row = agged.withColumn("batch_id", F.lit(str(batch_id)))
-        row.write.mode("append").parquet(f"{root}/rows")
+    key = F.md5(normalize_text(F.col(text_col)))
+    words = F.size(F.split(normalize_text(F.col(text_col)), " "))
+    aggs = [
+        F.count("*").cast("long").alias("n_docs"),
+        F.count(F.when(F.col(text_col).isNull(), 1)).cast("long").alias("n_null_text"),
+        F.coalesce(F.sum(F.length(F.col(text_col))), F.lit(0)).cast("long").alias("n_chars"),
+        F.coalesce(F.sum(words), F.lit(0)).cast("long").alias("n_words"),
+        F.count(text_col).cast("long").alias("n_with_text"),
+        F.hll_sketch_agg(key).alias("content_sketch"),
+    ]
+    if lang_col:
+        aggs.append(F.hll_sketch_agg(F.col(lang_col)).alias("lang_sketch"))
+    agged = df.groupBy(by).agg(*aggs) if by else df.agg(*aggs)
+    _state.fold(df.sparkSession, path, batch_id, _state.REPORT, agged)
 
 
 def report_update_stream(
@@ -1857,13 +1855,12 @@ def report_from_state(spark, path: str, version: int | None = None) -> DataFrame
     per ingested batch (or per group per batch for a grouped state,
     returning one report row per group, keyed by the group column's
     REAL name as written by report_update_state; states written before
-    the name was preserved surface as ``__grp``) — never the corpus."""
-    # mergeSchema: batches written with DIFFERENT group columns must
-    # surface as multiple extra columns (and be rejected below), not be
-    # hidden by the single-footer schema sample a plain read takes
-    rows = spark.read.option("mergeSchema", "true").parquet(
-        f"{_layout.resolve(spark, path, version)}/rows"
-    )
+    the name was preserved surface as ``__grp``) — never the corpus.
+    A path never folded raises ``ValueError`` (the state is empty)."""
+    # the report family reads every footer's columns: a state whose
+    # batches were folded with DIFFERENT group columns before the fold
+    # checked them surfaces as multiple extra columns, rejected below
+    rows, _ = _state.rows(spark, path, _state.REPORT, version)
     extra = [c for c in rows.columns if c not in _REPORT_STATE_COLS]
     if len(extra) > 1:
         # a state whose batches were written with DIFFERENT group
@@ -2531,33 +2528,10 @@ def cms_update_state(
     non-empty ``batch_id`` already folded makes the fold a NO-OP
     (exactly-once under at-least-once replay, through the ``_layout``
     replay ledger)."""
-    from pyspark.errors import AnalysisException
-
     _cms_geometry(depth, width)
-    spark = df.sparkSession
-    with _layout.fold_once(spark, path, batch_id) as root:
-        if root is None:
-            return
-        try:
-            rows = spark.read.parquet(f"{root}/rows")
-            stored = rows.select("depth", "width").limit(1).collect()
-            if stored and (stored[0]["depth"] != int(depth)
-                           or stored[0]["width"] != int(width)):
-                raise ValueError(
-                    f"cms state at {path} was built depth="
-                    f"{stored[0]['depth']} width={stored[0]['width']}, fold "
-                    f"offered ({depth}, {width}) — grids are incompatible")
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-        (
-            cms_sketch(df, col, depth, width)
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .withColumn("depth", F.lit(int(depth)))
-            .withColumn("width", F.lit(int(width)))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
-        )
+    _state.fold(df.sparkSession, path, batch_id, _state.CMS,
+                cms_sketch(df, col, depth, width),
+                {"depth": int(depth), "width": int(width)})
 
 
 def cms_update_stream(
@@ -2578,23 +2552,8 @@ def cms_from_state(spark, path: str, version: int | None = None):
     its pinned (depth, width): one sum-merge over the state rows.
     ``version`` pins an older committed snapshot (compaction cadence =
     snapshot cadence). Returns (sketch, depth, width)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-        geo = rows.select("depth", "width").limit(1).collect()
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        geo = []
-    if not geo:
-        raise ValueError(f"cms state at {path} is empty")
-    sketch = (
-        rows.filter(F.col("slot").isNotNull())
-        .groupBy("d", "slot")
-        .agg(F.sum("count").cast("long").alias("count"))
-    )
-    return sketch, int(geo[0]["depth"]), int(geo[0]["width"])
+    rows, geo = _state.rows(spark, path, _state.CMS, version, with_pins=True)
+    return _state.merge(rows, _state.CMS), int(geo["depth"]), int(geo["width"])
 
 
 def distinct_sketch(
@@ -2701,31 +2660,15 @@ def distinct_update_state(
     folded makes the fold a NO-OP (exactly-once under replay, through
     the ``_layout`` replay ledger); check + append hold the writer
     lease."""
-    from pyspark.errors import AnalysisException
-
-    spark = df.sparkSession
     batch = distinct_sketch(df, cols, by, lgk).select(
         (F.col(by).cast("string") if by else F.lit(None).cast("string"))
         .alias("g"),
         "column", "sketch",
+        # this family's rows carry lgk before batch_id
         F.lit(int(lgk)).alias("lgk"),
-        F.lit(str(batch_id)).alias("batch_id"),
     )
-    with _layout.fold_once(spark, path, batch_id) as root:
-        if root is None:
-            return
-        try:
-            rows = spark.read.parquet(f"{root}/rows")
-            stored = rows.select("lgk").limit(1).collect()
-            if stored and stored[0]["lgk"] != int(lgk):
-                raise ValueError(
-                    f"distinct state at {path} was built lgk="
-                    f"{stored[0]['lgk']}, fold offered {lgk} — registers "
-                    "are incompatible")
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-        batch.write.mode("append").parquet(f"{root}/rows")
+    _state.fold(df.sparkSession, path, batch_id, _state.DISTINCT, batch,
+                {"lgk": int(lgk)})
 
 
 def distinct_from_state(
@@ -2735,15 +2678,7 @@ def distinct_from_state(
     one hll_union_agg per (group, column) over the state rows —
     (group, column, estimate). ``version`` pins an older committed
     snapshot (time travel, the resample/cms convention)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(
-            f"{_layout.resolve(spark, path, version)}/rows")
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        raise ValueError(f"distinct state at {path} is empty") from ex
+    rows, _ = _state.rows(spark, path, _state.DISTINCT, version)
     return (
         rows.groupBy("g", "column")
         .agg(F.hll_union_agg("sketch").alias("__u"))
@@ -2783,14 +2718,7 @@ def constraints_update_state(
     exactly-once replay contract, through the ``_layout`` replay
     ledger); check + append hold the writer lease."""
     report = check_constraints(df, rules, include_counts=True)
-    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
-        if root is None:
-            return
-        (
-            report.withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
-        )
+    _state.fold(df.sparkSession, path, batch_id, _state.CONSTRAINTS, report)
 
 
 def constraints_update_stream(
@@ -2812,7 +2740,7 @@ def constraints_history(spark, path: str, version: int | None = None) -> DataFra
     :func:`~wrangler_spark.datapipe.events.rolling_stats` keyed on
     (rule, column) to alarm on drifting violation fractions.
     ``version`` pins an older committed snapshot."""
-    return spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
+    return _state.rows(spark, path, _state.CONSTRAINTS, version)[0]
 
 
 def constraints_from_state(
@@ -2826,17 +2754,7 @@ def constraints_from_state(
     don't sum: the same key in two batches is one duplicate the sums
     can't see) and are EXCLUDED here — read them from
     :func:`constraints_history`."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-        has = rows.limit(1).count()
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        has = 0
-    if not has:
-        raise ValueError(f"constraints state at {path} is empty")
+    rows, _ = _state.rows(spark, path, _state.CONSTRAINTS, version)
     agg = (
         rows.filter(F.col("rule") != "unique")
         .groupBy("rule", "column", "metric", "threshold")

@@ -46,7 +46,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wrangler_spark.datapipe import _layout
+from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._local import local_table
 
 from wrangler_spark.datapipe._checkpoint import (
@@ -646,8 +646,6 @@ def retention_update_state(
     never reads the directory it is writing. The whole fold (anti-join
     read + append) runs under the ``_layout`` writer lease, so it can
     never interleave with a compaction of the same state."""
-    from pyspark.errors import AnalysisException
-
     from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
 
     spark = batch.sparkSession
@@ -655,14 +653,11 @@ def retention_update_state(
         root = _layout.resolve(spark, path)
         period_days, cal = _read_state_meta(spark, path)
         fresh = _activity_pairs(batch, user_col, ts_col, period_days, cal)
-        try:
-            stored = spark.read.parquet(f"{root}/pairs").select("__u", "__b")
-            fresh = fresh.join(stored, ["__u", "__b"], "left_anti")
-        except AnalysisException as ex:
-            # a meta-only state (retention_init_state / first stream batch)
-            # has no pairs dataset yet — everything in the batch is fresh
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
+        # a meta-only state (retention_init_state / first stream batch)
+        # has no pairs dataset yet — everything in the batch is fresh
+        stored = _state.read_dataset(spark, root, "pairs")
+        if stored is not None:
+            fresh = fresh.join(stored.select("__u", "__b"), ["__u", "__b"], "left_anti")
         fresh = eager_checkpoint(fresh)
         fresh.write.mode("append").partitionBy("__b").parquet(f"{root}/pairs")
         release(fresh)
@@ -675,12 +670,8 @@ def retention_init_state(
     pinning (period_days, calendar) — so a stream sink can fold
     micro-batches from nothing without knowing the user column's type
     up front (the pairs dataset materializes on the first append)."""
-    vdir = _layout.begin_version(spark, path)
-    local_table(spark,
-        [(int(period_days), calendar or "", 2)],
-        "period_days int, calendar string, state_version int",
-    ).write.parquet(f"{vdir}/meta")
-    _layout.commit_version(spark, vdir)
+    _state.init_meta(spark, path, (int(period_days), calendar or "", 2),
+                     "period_days int, calendar string, state_version int")
 
 
 def retention_update_stream(
@@ -715,14 +706,8 @@ def retention_update_stream(
     concurrently — they read a committed snapshot root; only
     compact_index/vacuum must not race the running sink (single-writer
     contract)."""
-    from pyspark.errors import AnalysisException
-
     spark = stream.sparkSession
-    try:
-        _read_state_meta(spark, path)
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
+    if not _state.has_meta(spark, path):
         retention_init_state(spark, path, period_days, calendar)
     return _layout.fold_stream(
         stream, checkpoint, trigger,
@@ -834,7 +819,7 @@ def funnel_latencies(
 def _read_state_meta(spark, path: str, version: int | None = None) -> tuple[int, str | None]:
     """(period_days, calendar) from a state's meta table; v1 states
     (written before the calendar field) read as day-based."""
-    row = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/meta").collect()[0]
+    row = _state.read_meta(spark, path, version)
     cal = row["calendar"] if "calendar" in row.__fields__ else ""
     return int(row["period_days"]), (cal or None)
 
@@ -860,20 +845,15 @@ def funnel_init_state(
     silently corrupt the chains — the retention meta contract)."""
     if len(steps) < 2:
         raise ValueError("funnel needs at least two steps")
-    vdir = _layout.begin_version(spark, path)
-    local_table(spark,
-        [(list(map(str, steps)),
-          float(within_minutes) if within_minutes is not None else None, 1)],
-        "steps array<string>, within_minutes double, state_version int",
-    ).write.parquet(f"{vdir}/meta")
-    # the new version holds no slot rows: ids folded into an earlier
-    # definition must fold again
-    _layout.drop_ledger(spark, path)
-    _layout.commit_version(spark, vdir)
+    _state.init_meta(
+        spark, path,
+        (list(map(str, steps)),
+         float(within_minutes) if within_minutes is not None else None, 1),
+        "steps array<string>, within_minutes double, state_version int")
 
 
 def _read_funnel_meta(spark, path: str, version: int | None = None) -> tuple[list[str], float | None]:
-    row = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/meta").collect()[0]
+    row = _state.read_meta(spark, path, version)
     w = row["within_minutes"]
     return list(row["steps"]), (float(w) if w is not None else None)
 
@@ -896,16 +876,7 @@ def _funnel_slots_current(spark, root: str) -> DataFrame | None:
         if "PATH_NOT_FOUND" not in str(ex):
             raise
         return None
-    return (
-        rows.filter(F.col("__u").isNotNull())
-        .groupBy("__u")
-        .agg(
-            F.max_by(
-                "__slots",
-                F.size(F.filter("__slots", lambda x: x.isNotNull())),
-            ).alias("__slots")
-        )
-    )
+    return _state.merge(rows, _state.FUNNEL)
 
 
 def _funnel_fold(steps: list[str], within_minutes: float | None):
@@ -957,9 +928,8 @@ def funnel_update_state(
     replays never double-fold. Check + append hold the ``_layout``
     writer lease."""
     spark = batch.sparkSession
-    with _layout.fold_once(spark, path, batch_id) as root:
-        if root is None:
-            return
+
+    def changed_chains(root):
         steps, within = _read_funnel_meta(spark, path)
         k = len(steps)
         u, t = F.col(user_col), F.col(ts_col)
@@ -990,12 +960,12 @@ def funnel_update_state(
             F.aggregate("__evs", init, _funnel_fold(steps, within)).alias("__slots"),
         )
         filled = lambda c: F.size(F.filter(c, lambda x: x.isNotNull()))  # noqa: E731
-        (
+        return (
             folded.filter(filled(F.col("__slots")) > filled(F.col("__init")))
-            .select("__u", "__slots", F.lit(str(batch_id)).alias("batch_id"))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
+            .select("__u", "__slots")
         )
+
+    _state.fold(spark, path, batch_id, _state.FUNNEL, changed_chains)
 
 
 def funnel_from_state(spark, path: str, version: int | None = None) -> DataFrame:
@@ -1055,18 +1025,11 @@ def funnel_update_stream(
     existing state keeps ITS pinned definition. Structured Streaming's
     at-least-once foreachBatch + the batch-id NO-OP = exactly-once
     folds under replay. Default trigger availableNow (drain-and-stop)."""
-    from pyspark.errors import AnalysisException
-
     spark = stream.sparkSession
-    try:
-        _read_funnel_meta(spark, path)
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
+    if not _state.has_meta(spark, path):
         if steps is None:
             raise ValueError(
-                "funnel_update_stream on a fresh path needs steps=[...] to pin"
-            ) from ex
+                "funnel_update_stream on a fresh path needs steps=[...] to pin")
         funnel_init_state(spark, path, steps, within_minutes)
     return _layout.fold_stream(
         stream, checkpoint, trigger,
@@ -1383,8 +1346,6 @@ def resample_update_state(
     rows and checked on every fold; a non-empty ``batch_id`` already
     folded makes the fold a NO-OP (exactly-once under replay, through
     the ``_layout`` replay ledger)."""
-    from pyspark.errors import AnalysisException
-
     if every_minutes < 1:
         raise ValueError(f"every_minutes must be >= 1, got {every_minutes}")
     step = int(every_minutes) * 60
@@ -1407,27 +1368,8 @@ def resample_update_state(
             F.max("__v").alias("mx"),
         )
     )
-    spark = df.sparkSession
-    with _layout.fold_once(spark, path, batch_id) as root:
-        if root is None:
-            return
-        try:
-            rows = spark.read.parquet(f"{root}/rows")
-            stored = rows.select("step").limit(1).collect()
-            if stored and stored[0]["step"] != step:
-                raise ValueError(
-                    f"resample state at {path} was built with a "
-                    f"{stored[0]['step']}s bucket, fold offered {step}s — "
-                    "grains are incompatible")
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-        (
-            cells.withColumn("batch_id", F.lit(str(batch_id)))
-            .withColumn("step", F.lit(step))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
-        )
+    _state.fold(df.sparkSession, path, batch_id, _state.RESAMPLE, cells,
+                {"step": step})
 
 
 def resample_update_stream(
@@ -1456,31 +1398,11 @@ def resample_from_state(
     sum/min/max-merge first (exact), then the same per-key scan-side
     grid-and-fill fold runs over the merged cells. ``version`` pins an
     older committed snapshot (compaction cadence = snapshot cadence)."""
-    from pyspark.errors import AnalysisException
-
     if agg not in ("count", "sum", "min", "max", "avg"):
         raise ValueError(f"unknown agg {agg!r}")
-    try:
-        rows = spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-        stored = rows.select("step").limit(1).collect()
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        stored = []
-    if not stored:
-        raise ValueError(f"resample state at {path} is empty")
-    step = stored[0]["step"]
-    merged = (
-        rows.filter(F.col("bucket").isNotNull())
-        .groupBy("key", "bucket")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("msum").alias("msum"),
-            F.sum("nv").cast("long").alias("nv"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-    )
+    rows, pins = _state.rows(spark, path, _state.RESAMPLE, version, with_pins=True)
+    step = pins["step"]
+    merged = _state.merge(rows, _state.RESAMPLE)
     if agg == "count":
         val = merged.withColumn("__v", F.col("n").cast("double"))
     elif agg == "sum":

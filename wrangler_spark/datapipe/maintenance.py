@@ -14,11 +14,17 @@ listing pays per-file metadata).
 
 :func:`compact_index` closes the loop: rewrite each dataset to
 O(partitions) files, preserving layout, partitioning, and meta —
-probe results are bit-identical before/after (for the Bloom ``words``
-dataset the rewrite also bit_or-merges duplicate word rows, which is
-exactly the merge the probe performs at load time, so it is a pure
-pre-computation). Run it on the same cadence you'd run any compaction —
-after N appends, or when file counts degrade probe latency.
+probe results are bit-identical before/after. Two kinds of dataset are
+also ROW-merged, each by exactly the merge its read performs, so the
+merge is a pure pre-computation: the Bloom ``words`` dataset
+(bit_or of duplicate word rows), and the ``rows`` dataset of every
+state family with a merge key in ``_state.FAMILIES`` — today vocab,
+quantile, cms, resample and funnel (sum / min / max / most-filled
+chain per key, batch ids kept as ledger rows). The sketch families
+(report, distinct) and constraints have no merge key: their files are
+rewritten, their rows kept. Run it on the same cadence you'd run any
+compaction — after N appends, or when file counts degrade probe
+latency.
 
 Compaction is PROBE-SAFE: it writes a whole new VERSION of the
 artifact (``_layout``'s snapshot protocol — all datasets plus a
@@ -37,17 +43,14 @@ from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe._local import local_table
 
-from wrangler_spark.datapipe import _layout
+from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._layout import vacuum as vacuum_index  # noqa: F401  (public re-export)
 from wrangler_spark.datapipe._layout import snapshots  # noqa: F401  (public re-export: time-travel listing)
 
-# datasets that get a semantics-preserving ROW merge during compaction,
-# not just a file rewrite: the Bloom sparse bitmap OR-merges duplicate
-# word rows, the vocabulary state sum-merges word counts — in both
-# cases the read path's own load-time merge, precomputed
+# the Bloom sparse bitmap's dataset: compaction OR-merges duplicate
+# word rows (the probe's own load-time merge, precomputed); the state
+# families' row merges come from their _state table entries
 _BLOOM_WORDS_COLS = {"__w", "__bits"}
-_VOCAB_STATE_COLS = {"word", "count", "batch_id"}
-_FUNNEL_STATE_COLS = {"__u", "__slots", "batch_id"}
 
 # key columns tombstones can address, per dataset schema: the user key
 # of the retention/funnel state families and the vector id of the
@@ -101,10 +104,14 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     changes file layout only. The Bloom ``words`` dataset additionally
     bit_or-merges duplicate word rows (exact for a Bloom filter: the
     probe's own load-time merge, precomputed), so a thousand-batch log
-    collapses back to ≤ bits/64 rows; vocabulary state rows sum-merge
-    the same way, with every original batch id preserved as a
-    zero-count ledger row so the state family's exactly-once replay
-    check survives compaction.
+    collapses back to ≤ bits/64 rows. A state family's ``rows``
+    dataset is matched to its ``_state.FAMILIES`` entry by its column
+    set; when the entry has a merge key (vocab, quantile, cms,
+    resample, funnel) the rows merge by the entry's rules — the
+    family's read merge, precomputed — with every original batch id
+    preserved as a null-key ledger row carrying the pin values, so the
+    exactly-once replay check and the pin check survive compaction.
+    Report, distinct and constraints rows are rewritten unmerged.
 
     Safety: the compacted artifact is a whole NEW VERSION
     (``<path>/v_NNNNNN``, see ``_layout``) — the live version is never
@@ -120,8 +127,6 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     rebuild of the same artifact fails loudly with
     ``ConcurrentWriterError`` instead of landing an append invisibly
     in a superseded version."""
-    from pyspark.errors import AnalysisException
-
     fs, _, jvm = _hadoop(spark, path)
     src_root = _layout.resolve(spark, path)
     _, src, _ = _hadoop(spark, src_root)
@@ -131,15 +136,8 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     # erasure point of the right-to-be-forgotten flow. Forget lists are
     # request-sized by contract, so collecting them for the array scrub
     # is bounded work.
-    try:
-        forget = {
-            r["__forget"]
-            for r in spark.read.parquet(f"{src_root}/tombstones").collect()
-        }
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        forget = set()
+    tomb = _state.read_dataset(spark, src_root, "tombstones")
+    forget = {r["__forget"] for r in tomb.collect()} if tomb is not None else set()
     forget_arr = F.array(*[F.lit(v) for v in sorted(forget)]) if forget else None
     vdir = _layout.begin_version(spark, path)
     stats: dict[str, dict[str, int]] = {}
@@ -182,69 +180,15 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
                         lambda x: ~F.array_contains(forget_arr, x.cast("string")),
                     ),
                 ).filter(F.size("__olds") > 0)
+        fam = _state.family_of(df.columns) if name == "rows" else None
         if set(df.columns) == _BLOOM_WORDS_COLS:
             df = df.groupBy("__w").agg(F.expr("bit_or(__bits)").alias("__bits"))
-        elif set(df.columns) == _VOCAB_STATE_COLS:
-            # sum-merge word counts (the read path's own merge), but
-            # PRESERVE the batch-id dedup ledger: the replay ledger's
-            # crash-window fallback and its legacy backfill
-            # (_layout.fold_once) read batch ids from the rows, so compaction
-            # keeps one zero-count ledger row per original batch id
-            # (word NULL — the update path can never produce a null
-            # word, and the state readers filter them out). A replayed
-            # micro-batch therefore stays a NO-OP even when a compaction
-            # ran inside the crash window, before the sink restarted.
-            ledger = (
-                df.filter(
-                    (F.col("batch_id") != "") & (F.col("batch_id") != "compacted")
-                )
-                .select("batch_id")
-                .distinct()
-                .select(
-                    F.lit(None).cast("string").alias("word"),
-                    F.lit(0).cast("long").alias("count"),
-                    "batch_id",
-                )
-            )
-            df = (
-                df.filter(F.col("word").isNotNull())
-                .groupBy("word")
-                .agg(
-                    F.sum("count").cast("long").alias("count"),
-                    F.lit("compacted").alias("batch_id"),
-                )
-                .unionByName(ledger)
-            )
-        elif set(df.columns) == _FUNNEL_STATE_COLS:
-            # funnel slot chains merge by most-filled-row-wins (fills are
-            # monotone — the read path's own max_by, precomputed); batch
-            # ids survive as null-user ledger rows, as for vocab state
-            ledger = (
-                df.filter(
-                    (F.col("batch_id") != "") & (F.col("batch_id") != "compacted")
-                )
-                .select("batch_id")
-                .distinct()
-                .select(
-                    # __u's type follows the caller's user column — null
-                    # ledger rows must keep it, not assume string
-                    F.lit(None).cast(df.schema["__u"].dataType).alias("__u"),
-                    F.lit(None).cast("array<long>").alias("__slots"),
-                    "batch_id",
-                )
-            )
-            df = (
-                df.filter(F.col("__u").isNotNull())
-                .groupBy("__u")
-                .agg(
-                    F.max_by(
-                        "__slots",
-                        F.size(F.filter("__slots", lambda x: x.isNotNull())),
-                    ).alias("__slots"),
-                    F.lit("compacted").alias("batch_id"),
-                )
-                .unionByName(ledger)
-            )
+        elif fam is not None:
+            # the state family's read merge, precomputed; every original
+            # batch id survives as a null-key ledger row, so the replay
+            # ledger's row probe and legacy backfill (_layout.fold_once)
+            # still see it
+            df = _state.merge(df, fam, compact=True)
         # size-based file target (~128 MB each): a compaction that
         # coalesced a 100 TB vectors dataset to one file would be its
         # own scale bug. With partition cols, hash-repartitioning ON
@@ -333,7 +277,7 @@ def forget_ids(spark: SparkSession, path: str, values, key: str) -> None:
                     "are shared across keys — rebuild the index without the "
                     "forgotten documents instead"
                 )
-            if cols == _VOCAB_STATE_COLS:
+            if _state.family_of(cols) is _state.VOCAB:
                 raise ValueError(
                     "cannot forget ids from vocabulary state: word counts "
                     "cannot be attributed back to documents — rebuild from "
@@ -359,15 +303,11 @@ def read_forgetting(spark: SparkSession, root: str, dataset: str, key: str) -> "
     path of every forget-aware probe (retention grid, active users,
     funnel state, IVF query). No tombstones → the plain read, zero
     added plan."""
-    from pyspark.errors import AnalysisException
-
     df = spark.read.parquet(f"{root}/{dataset}")
-    try:
-        tomb = spark.read.parquet(f"{root}/tombstones").select("__forget").distinct()
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
+    tomb = _state.read_dataset(spark, root, "tombstones")
+    if tomb is None:
         return df
+    tomb = tomb.select("__forget").distinct()
     return df.join(
         F.broadcast(tomb), df[key].cast("string") == tomb["__forget"], "left_anti"
     )

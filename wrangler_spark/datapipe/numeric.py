@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wrangler_spark.datapipe import _layout
+from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._local import local_table
 
 
@@ -396,31 +396,12 @@ def hist_update_state(
     ``batch_id`` already folded makes the fold a NO-OP (the
     exactly-once replay contract, through the ``_layout`` replay
     ledger). Check + append hold the writer lease."""
-    from pyspark.errors import AnalysisException
-
     _hist_base(rel_err)  # validates rel_err before any write
-    spark = df.sparkSession
-    with _layout.fold_once(spark, path, batch_id) as root:
-        if root is None:
-            return
-        try:
-            rows = spark.read.parquet(f"{root}/rows")
-            stored = rows.select("rel_err").limit(1).collect()
-            if stored and abs(stored[0]["rel_err"] - float(rel_err)) > 1e-12:
-                raise ValueError(
-                    f"state at {path} was built with rel_err="
-                    f"{stored[0]['rel_err']}, fold offered {rel_err} — "
-                    "bin spaces are incompatible; use the stored value")
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-        (
-            log_histogram(df, col, rel_err)
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .withColumn("rel_err", F.lit(float(rel_err)))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
-        )
+    # built inside the fold: log_histogram's sign check is a Spark job,
+    # which a replay must not run
+    _state.fold(df.sparkSession, path, batch_id, _state.HIST,
+                lambda _: log_histogram(df, col, rel_err),
+                {"rel_err": float(rel_err)})
 
 
 def hist_update_stream(
@@ -439,14 +420,9 @@ def hist_update_stream(
 def hist_from_state(spark, path: str, version: int | None = None) -> DataFrame:
     """The merged (bin, count) histogram from quantile state — one
     sum-merge over bins x batches rows. ``version`` pins an older
-    committed snapshot (compaction cadence = snapshot cadence)."""
-    return (
-        spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-        # null bins would be a compaction batch-id ledger, not data
-        .filter(F.col("bin").isNotNull())
-        .groupBy("bin")
-        .agg(F.sum("count").cast("long").alias("count"))
-    )
+    committed snapshot (compaction cadence = snapshot cadence). A path
+    never folded raises ``ValueError`` (the state is empty)."""
+    return _state.merge(_state.rows(spark, path, _state.HIST, version)[0], _state.HIST)
 
 
 def quantiles_from_state(
@@ -456,22 +432,9 @@ def quantiles_from_state(
     one-shot :func:`quantiles_sketched` on the union of all ingested
     batches (bin counts merge by summation — no merge error), reading
     only the state rows."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rel_err = (
-            spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-            .select("rel_err").limit(1).collect()
-        )
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        rel_err = []
-    if not rel_err:
-        raise ValueError(f"quantile state at {path} is empty")
+    rows, pins = _state.rows(spark, path, _state.HIST, version, with_pins=True)
     return quantiles_from_histogram(
-        hist_from_state(spark, path, version), probs, rel_err[0]["rel_err"]
-    )
+        _state.merge(rows, _state.HIST), probs, pins["rel_err"])
 
 
 def quantiles_sketched_by(

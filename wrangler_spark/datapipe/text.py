@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from wrangler_spark.datapipe import _layout
+from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._checkpoint import (
     eager_checkpoint,
     eager_checkpoint_observed,
@@ -1805,19 +1805,14 @@ def vocab_update_state(
     ledger falls back to when a fold died between its append and its
     marker. Check + append + marker hold the ``_layout`` writer lease,
     so the fold can never interleave with a compaction either."""
-    with _layout.fold_once(df.sparkSession, path, batch_id) as root:
-        if root is None:
-            return
-        norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-        (
-            df.select(F.explode(F.split(norm, " ")).alias("word"))
-            .filter(F.col("word") != "")
-            .groupBy("word")
-            .agg(F.count("*").cast("long").alias("count"))
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("append")
-            .parquet(f"{root}/rows")
-        )
+    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    counts = (
+        df.select(F.explode(F.split(norm, " ")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count("*").cast("long").alias("count"))
+    )
+    _state.fold(df.sparkSession, path, batch_id, _state.VOCAB, counts)
 
 
 def vocab_update_stream(
@@ -1847,14 +1842,9 @@ def vocab_from_state(spark, path: str, version: int | None = None) -> DataFrame:
     vocab_coverage_from_state. ``version`` pins an older committed
     snapshot — appends land in the current version, so pinned ``v_N``
     reads the vocab as of ``v_{N+1}``'s creation (compaction cadence =
-    snapshot cadence)."""
-    return (
-        spark.read.parquet(f"{_layout.resolve(spark, path, version)}/rows")
-        # null words are compaction's batch-id ledger rows, not data
-        .filter(F.col("word").isNotNull())
-        .groupBy("word")
-        .agg(F.sum("count").cast("long").alias("count"))
-    )
+    snapshot cadence). A path never folded raises ``ValueError`` (the
+    state is empty)."""
+    return _state.merge(_state.rows(spark, path, _state.VOCAB, version)[0], _state.VOCAB)
 
 
 def vocab_coverage_from_state(spark, path: str, coverage: float = 0.999) -> DataFrame:
