@@ -376,18 +376,28 @@ def _ledger_key(batch_id: str) -> str:
     return hashlib.sha256(str(batch_id).encode("utf-8")).hexdigest()
 
 
-def _rows_hold(spark: SparkSession, root: str, batch_id: str) -> bool:
-    """The Spark probe the ledger replaces: does ``<root>/rows`` hold a
-    row of ``batch_id``? False when no fold has appended yet."""
+def read_dataset(spark: SparkSession, root: str, name: str = "rows",
+                 merge_schema: bool = False):
+    """``<root>/<name>``, or None when nothing has been written to it
+    yet. ``merge_schema`` reads every footer's columns instead of one
+    footer's sample."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     try:
-        rows = spark.read.parquet(f"{root}/rows")
+        return reader.parquet(f"{root}/{name}")
     except AnalysisException as ex:
         if "PATH_NOT_FOUND" not in str(ex):
             raise
-        return False
-    return bool(rows.filter(F.col("batch_id") == batch_id).limit(1).count())
+        return None
+
+
+def _rows_hold(spark: SparkSession, root: str, batch_id: str) -> bool:
+    """The Spark probe the ledger replaces: does ``<root>/rows`` hold a
+    row of ``batch_id``? False when no fold has appended yet."""
+    rows = read_dataset(spark, root)
+    return rows is not None and bool(
+        rows.filter(F.col("batch_id") == batch_id).limit(1).count())
 
 
 def _backfill_ledger(spark: SparkSession, path: str, root: str) -> None:

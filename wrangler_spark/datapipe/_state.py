@@ -61,7 +61,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,26 +115,12 @@ def family_of(columns) -> Family | None:
     return next((f for f in FAMILIES if f.key and f.columns == cols), None)
 
 
-def read_dataset(spark: SparkSession, root: str, name: str = "rows",
-                 merge_schema: bool = False) -> DataFrame | None:
-    """``<root>/<name>``, or None when nothing has been appended to it
-    yet. ``merge_schema`` reads every footer's columns instead of one
-    footer's sample."""
-    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
-    try:
-        return reader.parquet(f"{root}/{name}")
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        return None
-
-
 def _check(spark, root, path, fam: Family, pins: dict, columns) -> None:
     """Refuse a fold whose pinned geometry differs from the stored rows':
     the pin values, or for a shape-pinned family the column set. A fresh
     state accepts any geometry. One footer's schema is enough: every
     batch appended through this check shares it."""
-    stored = read_dataset(spark, root)
+    stored = _layout.read_dataset(spark, root)
     if stored is None:
         return
     if fam.shape and set(stored.columns) != set(columns):
@@ -191,7 +176,7 @@ def rows(spark: SparkSession, path: str, fam: Family, version: int | None = None
     disagree on the column set (folded before the fold checked it)
     shows it to the reader."""
     empty = ValueError(f"{fam.name} state at {path} is empty")
-    df = read_dataset(spark, _layout.resolve(spark, path, version), merge_schema=fam.shape)
+    df = _layout.read_dataset(spark, _layout.resolve(spark, path, version), merge_schema=fam.shape)
     if df is None:
         raise empty
     if not with_pins:

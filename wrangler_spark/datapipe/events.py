@@ -655,7 +655,7 @@ def retention_update_state(
         fresh = _activity_pairs(batch, user_col, ts_col, period_days, cal)
         # a meta-only state (retention_init_state / first stream batch)
         # has no pairs dataset yet — everything in the batch is fresh
-        stored = _state.read_dataset(spark, root, "pairs")
+        stored = _layout.read_dataset(spark, root, "pairs")
         if stored is not None:
             fresh = fresh.join(stored.select("__u", "__b"), ["__u", "__b"], "left_anti")
         fresh = eager_checkpoint(fresh)

@@ -136,7 +136,7 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     # erasure point of the right-to-be-forgotten flow. Forget lists are
     # request-sized by contract, so collecting them for the array scrub
     # is bounded work.
-    tomb = _state.read_dataset(spark, src_root, "tombstones")
+    tomb = _layout.read_dataset(spark, src_root, "tombstones")
     forget = {r["__forget"] for r in tomb.collect()} if tomb is not None else set()
     forget_arr = F.array(*[F.lit(v) for v in sorted(forget)]) if forget else None
     vdir = _layout.begin_version(spark, path)
@@ -304,7 +304,7 @@ def read_forgetting(spark: SparkSession, root: str, dataset: str, key: str) -> "
     funnel state, IVF query). No tombstones → the plain read, zero
     added plan."""
     df = spark.read.parquet(f"{root}/{dataset}")
-    tomb = _state.read_dataset(spark, root, "tombstones")
+    tomb = _layout.read_dataset(spark, root, "tombstones")
     if tomb is None:
         return df
     tomb = tomb.select("__forget").distinct()
