@@ -45,3 +45,29 @@ def test_bundled_loader_shapes():
     assert len(icd9) >= 30 and len(icd10) >= 30
     assert all("|" not in v for v in icd9.values())
     assert load_bundled_catalog("not-a-catalog") is None
+
+
+def test_dict_lookup_sides_are_local_tables(spark):
+    """A {key: value} lookup side keeps the schema and rows the plain
+    ``createDataFrame(list, names)`` inference gave (str -> string,
+    int -> long, float -> double, None kept) and plans as a LocalTableScan."""
+    from wrangler_spark.datapipe._local import local_table
+    from wrangler_spark.directives import lookups
+
+    df = local_table(spark, [(1, "a"), (2, "b"), (3, "zz")], "id long, code string")
+    for name, mapping in (("lk_str", {"a": "alpha", "b": None}),
+                          ("lk_int", {"a": 1, "b": 20}),
+                          ("lk_float", {"a": 1.5, "b": None})):
+        register_lookup(name, mapping)
+        try:
+            want = spark.createDataFrame([(k, v) for k, v in mapping.items()], ["key", "value"])
+            for recipe, out_col in ((f"catalog-lookup {name} :code", f"code_{name}_description"),
+                                    (f"table-lookup :code '{name}'", "code_value")):
+                out = Pipeline.compile(recipe).apply(df)
+                assert out.schema[out_col].dataType == want.schema["value"].dataType
+                got = {r["id"]: r[out_col] for r in out.collect()}
+                assert got == {1: mapping["a"], 2: mapping["b"], 3: None}
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        finally:
+            lookups._CATALOGS.pop(name, None)

@@ -1,0 +1,69 @@
+"""What one recipe pass costs beyond the recipe's own work: the parse
+sample is taken once per input frame, and an empty error channel is a
+LocalTableScan, not a parallelized Python RDD."""
+
+from pyspark.sql.types import StructType
+
+from wrangler_spark import Pipeline
+from wrangler_spark.datapipe._local import local_table
+from wrangler_spark.streaming import transform_stream
+
+_ERRORS_DDL = "record string, directive string, message string"
+_RECIPE = "parse-as-csv :body ',' false\ndrop :body\nuppercase :body_1"
+
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn`` launched, by the scheduler's job-id counter."""
+    dag = spark._jsparkSession.sparkContext().dagScheduler()
+    lo = int(dag.nextJobId())
+    fn()
+    return int(dag.nextJobId()) - lo
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _bodies(spark, path):
+    spark.createDataFrame([("a,1,x",), ("b,2",), (None,), ("c,3,z,w",)], "body string") \
+        .write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_second_transform_of_a_frame_runs_no_sample_job(spark, tmp_path):
+    df = _bodies(spark, str(tmp_path / "bodies"))
+    p = Pipeline.compile(_RECIPE)
+    results = []
+    assert _jobs(spark, lambda: results.append(p.transform(df))) >= 1
+    assert _jobs(spark, lambda: results.append(p.transform(df))) == 0
+    assert results[0].df.schema == results[1].df.schema
+    assert results[1].df.columns == ["body_1", "body_2", "body_3", "body_4"]
+    # a new frame object over the same rows samples again
+    assert _jobs(spark, lambda: p.transform(df.select("body"))) >= 1
+
+
+def test_stream_sample_frame_compiles_and_is_reused(spark, tmp_path):
+    path = str(tmp_path / "bodies")
+    static = _bodies(spark, path)
+    stream = spark.readStream.schema(static.schema).parquet(path)
+    p = Pipeline.compile(_RECIPE)
+    first = transform_stream(p, stream, sample_df=static)
+    assert first.df.isStreaming
+    assert _jobs(spark, lambda: transform_stream(p, stream, sample_df=static)) == 0
+    assert first.df.columns == ["body_1", "body_2", "body_3", "body_4"]
+
+
+def test_empty_error_channel_is_an_empty_local_table_scan(spark):
+    df = spark.range(3).selectExpr("cast(id as string) AS s")
+    errors = Pipeline.compile("uppercase :s").transform(df).errors()
+    assert errors.schema == spark.createDataFrame([], _ERRORS_DDL).schema
+    assert errors.collect() == []
+    assert _executed(errors).startswith("LocalTableScan <empty>")
+
+
+def test_local_table_empty_rows_keep_the_schema(spark):
+    ddl = "a string, b long NOT NULL, c array<double>"
+    t = local_table(spark, [], ddl)
+    assert t.schema == StructType.fromDDL(ddl)
+    assert t.collect() == []
+    assert _executed(t).startswith("LocalTableScan <empty>")

@@ -20,26 +20,46 @@ carries the Python longs/doubles/strings/nested lists directly, no
 string round-trip (verified for long, int, double incl. None, string,
 array<double>, array<array<double>> cells).
 
-Empty row lists keep the plain path (the Arrow conversion of a
-zero-row object frame falls back anyway); they occur only on cold
-error/maintenance paths.
+An empty table is ``empty_table``: the schema's zero-row frame under
+a ``where(false)``, which the optimizer prunes to ``LocalTableScan
+<empty>`` with the schema's names, types and nullability kept. It is
+what ``PipelineResult.errors()`` returns for a recipe with no fallible
+directive, so counting an empty error channel runs no Python worker.
+
+A list of column names instead of a schema lets Arrow infer the types
+from the values (str → string, int → long, float → double, ``None``
+cells kept as nulls of the column's type), as the plain
+``createDataFrame(rows, names)`` inference does.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def empty_table(spark, schema) -> DataFrame:
+    """The zero-row frame of ``schema`` (DDL string or StructType), planned
+    as ``LocalTableScan <empty>``: the optimizer replaces a filter on a
+    literal false by an empty LocalRelation, so no parallelized Python RDD
+    is ever scanned."""
+    return spark.createDataFrame([], schema).where(F.lit(False))
 
 
 def local_table(spark, rows, schema) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for driver-literal,
     parameter-bounded row lists, materialized as a LocalRelation
-    (LocalTableScan) instead of a parallelized Python RDD."""
+    (LocalTableScan) instead of a parallelized Python RDD. ``schema`` is
+    a DDL string, a StructType, or a list of column names whose types
+    Arrow infers from the values."""
     rows = list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return empty_table(spark, schema)
     import pandas as pd
 
+    if isinstance(schema, list):
+        return spark.createDataFrame(pd.DataFrame(rows, columns=schema, dtype=object))
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields], dtype=object)
     return spark.createDataFrame(pdf, schema=st)

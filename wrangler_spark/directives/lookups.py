@@ -90,9 +90,9 @@ class CatalogLookup(Directive):
         out_col = f"{col}_{catalog}_description"
         spark = df.sparkSession
         if isinstance(table, dict):
-            lookup_df = spark.createDataFrame(
-                [(k, v) for k, v in table.items()], ["__key", "__value"]
-            )
+            from wrangler_spark.datapipe._local import local_table
+
+            lookup_df = local_table(spark, table.items(), ["__key", "__value"])
         else:
             lookup_df = table.toDF("__key", "__value")
         joined = df.join(
@@ -124,8 +124,9 @@ class TableLookup(Directive):
                     f"lookup table '{tname}' not registered and not in the Spark catalog: {e}"
                 )
         if isinstance(table, dict):
-            spark = df.sparkSession
-            table = spark.createDataFrame([(k, v) for k, v in table.items()], ["key", "value"])
+            from wrangler_spark.datapipe._local import local_table
+
+            table = local_table(df.sparkSession, table.items(), ["key", "value"])
         key_col = table.columns[0]
         renamed = table.select(
             F.col(key_col).alias("__key"),

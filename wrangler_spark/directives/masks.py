@@ -10,10 +10,26 @@ mask-shuffle (``transformation/MaskShuffle.java:80``) replaces consonants/
 vowels/digits with a java.util.Random(seed=0) draw from the same class —
 we replicate Java's LCG exactly in an Arrow-batched pandas UDF for value
 parity with the reference.
+
+Every value restarts the generator at seed 0, so the k-th class character
+of any string takes the k-th ``next(31)`` draw, whatever its class, as
+long as no ``nextInt(bound)`` before it made a rejection draw. At import
+the module walks Random(0) up to ``_DRAW_CAP`` draws and stops at the
+first draw any of the bounds 20, 6 and 10 would reject; ``_PREFIX`` is the
+length of that rejection-free prefix (4,096, the cap, for seed 0). Three
+draw tables, ``alphabet[r_k % bound]`` for each class, then replace the
+LCG: a value is one table lookup per character. The UDF ``pd.factorize``s
+each Arrow batch and walks each distinct non-null value once, scattering
+the results back in row order (nulls stay null), so a low-cardinality
+column costs a handful of walks per batch. A value longer than
+``_PREFIX`` falls back to ``_mask_shuffle_value``, the reference walk.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -144,9 +160,59 @@ def _mask_shuffle_value(s: str) -> str:
     return "".join(out)
 
 
+def _draw_tables(cap: int) -> tuple[int, dict[str, str]]:
+    """(prefix length, alphabet -> k-th draw's character) over the
+    rejection-free prefix of Random(0), at most ``cap`` draws long."""
+    rng = _JavaRandom(0)
+    bounds = (len(_CONS), len(_VOWEL), len(_DIGIT))
+    draws = []
+    while len(draws) < cap:
+        bits = rng._next(31)
+        # next_int's rejection test: this draw would be thrown away
+        if any(bits - bits % b + (b - 1) >= (1 << 31) for b in bounds):
+            break
+        draws.append(bits)
+    return len(draws), {a: "".join(a[r % len(a)] for r in draws) for a in (_CONS, _VOWEL, _DIGIT)}
+
+
+_DRAW_CAP = 4096
+_PREFIX, _TABLES = _draw_tables(_DRAW_CAP)
+
+
+@functools.cache
+def _char_table(ch: str) -> str | None:
+    """The draw table ``ch`` takes its replacement from (None: kept), by
+    the walk's own lower()/substring class test and upper-casing."""
+    ln = ch.lower()
+    alphabet = next((a for a in (_CONS, _VOWEL, _DIGIT) if ln in a), None)
+    if alphabet is None:
+        return None
+    table = _TABLES[alphabet]
+    return table.upper() if ln != ch else table
+
+
+def _mask_shuffle_table(s: str) -> str:
+    """``_mask_shuffle_value(s)`` by draw-table lookup."""
+    if len(s) > _PREFIX:
+        return _mask_shuffle_value(s)
+    out = []
+    k = 0
+    for ch in s:
+        table = _char_table(ch)
+        if table is None:
+            out.append(ch)
+        else:
+            out.append(table[k])
+            k += 1
+    return "".join(out)
+
+
 @pandas_udf(StringType())
 def _mask_shuffle_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: None if v is None else _mask_shuffle_value(str(v)))
+    codes, uniques = pd.factorize(s)
+    # one extra None slot: factorize codes a null as -1, which indexes it
+    masked = np.array([_mask_shuffle_table(str(v)) for v in uniques] + [None], dtype=object)
+    return pd.Series(masked[codes], index=s.index)
 
 
 @directive

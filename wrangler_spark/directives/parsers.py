@@ -3,9 +3,12 @@
 
 Ragged-row resolution: the reference appends however many fields each row
 yields (``CsvParser.java:173-182``). A Spark plan needs one static schema,
-so parse directives do a bounded compile-time sample (≤100 rows, one tiny
-job) to fix output arity / JSON schema — the same answer the reference's
-interactive ``/schema`` endpoint computes from its workspace sample.
+so parse directives do a bounded compile-time sample (≤100 rows) to fix
+output arity / JSON schema — the same answer the reference's interactive
+``/schema`` endpoint computes from its workspace sample. The sample is
+taken once per input frame: ``_sample_values`` keeps it per sampling-frame
+object (weakly, so it goes with the frame), and every later transform of
+the same frame reuses it, with no Spark job and the same width.
 """
 
 from __future__ import annotations
@@ -13,6 +16,7 @@ from __future__ import annotations
 import csv as _csv
 import io
 import re
+import weakref
 
 import pandas as pd
 
@@ -30,9 +34,18 @@ from wrangler_spark.registry import directive, registry
 _SAMPLE_N = 100
 
 
+# sampling frame -> (col, n) -> sample; DataFrames hash by identity
+_SAMPLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _sample_values(df: DataFrame, col: str, n: int = _SAMPLE_N) -> list[str]:
-    rows = df.select(col).filter(F.col(col).isNotNull()).limit(n).collect()
-    return [r[0] for r in rows if r[0] is not None]
+    """Up to ``n`` non-null values of ``col``, collected on the first call
+    for this frame object and reused after (callers must not mutate it)."""
+    per_frame = _SAMPLES.setdefault(df, {})
+    if (col, n) not in per_frame:
+        rows = df.select(col).filter(F.col(col).isNotNull()).limit(n).collect()
+        per_frame[(col, n)] = [r[0] for r in rows if r[0] is not None]
+    return per_frame[(col, n)]
 
 
 # --- type inference for header detection (parity: dq/TypeInference.java) ---

@@ -38,8 +38,10 @@ class PipelineResult:
     def errors(self) -> DataFrame:
         e = self.ctx.errors_df()
         if e is None:
-            spark = self.df.sparkSession
-            return spark.createDataFrame([], "record string, directive string, message string")
+            # imported here: importing the package must not load datapipe
+            from wrangler_spark.datapipe._local import empty_table
+
+            return empty_table(self.df.sparkSession, "record string, directive string, message string")
         return e
 
     def check(self) -> None:
