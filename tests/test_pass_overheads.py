@@ -67,3 +67,57 @@ def test_local_table_empty_rows_keep_the_schema(spark):
     assert t.schema == StructType.fromDDL(ddl)
     assert t.collect() == []
     assert _executed(t).startswith("LocalTableScan <empty>")
+
+
+def _payloads(spark, path, payloads):
+    spark.createDataFrame([(p,) for p in payloads], "body binary").write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _second_transform_is_free(spark, df, recipe):
+    """The first transform samples; a second of the same frame launches no
+    job and compiles the same schema; a new frame object samples again."""
+    p = Pipeline.compile(recipe)
+    results = []
+    assert _jobs(spark, lambda: results.append(p.transform(df))) >= 1
+    assert _jobs(spark, lambda: results.append(p.transform(df))) == 0
+    assert results[0].df.schema == results[1].df.schema
+    assert _jobs(spark, lambda: p.transform(df.select("*"))) >= 1
+    return results[1].df
+
+
+def test_parse_as_excel_samples_once_per_frame(spark, tmp_path):
+    from wrangler_spark.formats.xlsx import write_xlsx
+
+    book = write_xlsx([["id", "name"], [1, "a"], [2, "b"]])
+    df = _payloads(spark, str(tmp_path / "xlsx"), [book, None, book])
+    out = _second_transform_is_free(spark, df, "parse-as-excel :body '0' true")
+    assert out.columns == ["fwd", "bkd", "id", "name"]
+
+
+def test_parse_as_avro_file_samples_once_per_frame(spark, tmp_path):
+    from wrangler_spark.formats.avro_ocf import write_ocf
+
+    schema = {"type": "record", "name": "R", "fields": [{"name": "k", "type": "long"}]}
+    df = _payloads(spark, str(tmp_path / "avro"), [write_ocf(schema, [{"k": 1}, {"k": 2}])])
+    out = _second_transform_is_free(spark, df, "parse-as-avro-file :body")
+    assert out.columns == ["k"]
+
+
+def test_split_to_columns_samples_once_per_frame(spark, tmp_path):
+    df = _bodies(spark, str(tmp_path / "bodies"))
+    out = _second_transform_is_free(spark, df, "split-to-columns :body ','")
+    assert out.columns[-4:] == ["body_1", "body_2", "body_3", "body_4"]
+
+
+def test_parse_as_json_fallback_schema_is_kept_with_its_sample(spark, tmp_path):
+    path = str(tmp_path / "json")
+    spark.createDataFrame([('{"a":1}',), ('{"a":"x"}',)], "body string").write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    p = Pipeline.compile("parse-as-json :body")
+    results = []
+    # the sample job, then Spark's inference over the conflicting shapes
+    assert _jobs(spark, lambda: results.append(p.transform(df))) >= 2
+    assert _jobs(spark, lambda: results.append(p.transform(df))) == 0
+    assert results[0].df.schema == results[1].df.schema
+    assert dict(results[1].df.dtypes) == {"body_a": "string"}

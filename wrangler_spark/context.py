@@ -9,13 +9,19 @@ behavior that must become *compile-time* facts on Spark:
   directives split matching rows out as a lazy DataFrame instead of
   catching per-row exceptions;
 - deferred ``fail`` assertions;
-- transient variables (documented compat subset, see aggregates module).
+- transient variables (documented compat subset, see aggregates module);
+- compile-time samples: what a directive reads from its input at compile
+  time to fix its output schema (parse arity, JSON schema, a workbook's
+  columns) is taken once per sampling-frame object and kept with it
+  (weakly, so it goes with the frame), so every later transform of the
+  same frame reuses it, with no Spark job and the same width.
 """
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +29,9 @@ from pyspark.sql import functions as F
 from wrangler_spark.errors import DirectiveApplyError
 
 ERROR_SCHEMA_COLS = ("record", "directive", "message")
+
+# sampling frame -> key -> compile-time fact; DataFrames hash by identity
+_FRAME_FACTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 @dataclass
@@ -65,6 +74,26 @@ class CompileContext:
                 )
             return self.sample_df
         return df
+
+    def frame_fact(self, df, key: tuple, compute: Callable[[DataFrame], Any]) -> Any:
+        """``compute(frame)`` over ``df``'s sampling frame, run on the first
+        call for this frame object and ``key`` and reused after (callers
+        must not mutate it)."""
+        frame = self.sampling_frame(df)
+        facts = _FRAME_FACTS.setdefault(frame, {})
+        if key not in facts:
+            facts[key] = compute(frame)
+        return facts[key]
+
+    def sample_values(self, df, col: str, n: int = 100) -> list:
+        """Up to ``n`` non-null values of ``col`` from ``df``'s sampling
+        frame, collected once per frame object."""
+
+        def collect(frame):
+            rows = frame.select(col).filter(F.col(col).isNotNull()).limit(n).collect()
+            return [r[0] for r in rows if r[0] is not None]
+
+        return self.frame_fact(df, ("values", col, n), collect)
 
     # --- column resolution ---------------------------------------------
 

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -124,7 +123,7 @@ def apply_bpe(
     a dict hit, not a merge loop. Null/empty text → empty array. The
     merge table travels in the closure (serialized once per task, the
     broadcast-variable contract for compile-time constants)."""
-    from pyspark.sql.functions import pandas_udf
+    from wrangler_spark.udfs import value_udf
 
     ranks = {tuple(p): i for i, p in enumerate(merges)}
     # closure-level: survives across batches within a task; per-batch
@@ -132,22 +131,17 @@ def apply_bpe(
     # rate the docstring promises would never materialize
     cache: dict[str, list[str]] = {}
 
-    @pandas_udf("array<string>")
-    def _bpe(col: pd.Series) -> pd.Series:
-        def enc(text):
-            if not text:
-                return []
-            out = []
-            for w in text.lower().split():
-                hit = cache.get(w)
-                if hit is None:
-                    hit = cache[w] = _encode_word(w, ranks)
-                out.extend(hit)
-            return out
+    def enc(text):
+        out = []
+        for w in text.lower().split():
+            hit = cache.get(w)
+            if hit is None:
+                hit = cache[w] = _encode_word(w, ranks)
+            out.extend(hit)
+        return out
 
-        return col.map(enc)
-
-    return df.withColumn(out_col, _bpe(F.col(text_col)))
+    tokens = value_udf(enc, "array<string>")(F.col(text_col))
+    return df.withColumn(out_col, F.coalesce(tokens, F.array().cast("array<string>")))
 
 
 def bpe_token_count(

@@ -12,6 +12,12 @@ with a full PIL/opencv/librosa-backed callable (pixel decode, resampling,
 row is kept. `fake_features` provides a deterministic byte-level feature
 extractor so feature pipelines stay runnable without any media library.
 
+Every op that appends one struct column per payload (features, image,
+pixels, audio, video, resize) goes through one mapInPandas helper,
+`_with_mapped`: `wrangler_spark.udfs.map_values` calls the decoder once
+per distinct non-null payload of a batch, so decoders carry no null
+guard of their own, and a null payload gives a null struct.
+
 At 100 TB: payloads should be read with `spark.read.format("binaryFile")`
 or from parquet with a binary column; keep
 `spark.sql.files.maxPartitionBytes` at 128–256 MB so a partition of
@@ -34,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from wrangler_spark.udfs import map_values
 
 # Registered real decoders (host app can plug in PIL/librosa/etc.)
 _DECODERS: dict[str, Callable[[bytes], Any]] = {}
@@ -320,12 +328,10 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_feature_row(b: bytes | None) -> tuple | None:
+def _fake_feature_row(b: bytes) -> tuple:
     """Deterministic byte-level features — the stand-in for a real
     image/audio feature extractor (embedding, spectrogram stats, ...).
     md5 (not sha1) so the DuckDB oracle can mirror the digest."""
-    if b is None:
-        return None
     counts = [0] * 16
     for x in b[:4096]:
         counts[x >> 4] += 1
@@ -335,20 +341,29 @@ def _fake_feature_row(b: bytes | None) -> tuple | None:
     return (len(b), zlib.crc32(b) & 0xFFFFFFFF, hashlib.md5(b).hexdigest()[:12], q)
 
 
+def _with_mapped(
+    df: DataFrame, payload_col: str, out_col: str, out_type: T.DataType, fn: Callable[[Any], Any],
+) -> DataFrame:
+    """``df`` plus ``out_col``: ``fn`` of each distinct non-null payload of
+    an Arrow batch (``map_values``); a null payload, or a None from ``fn``,
+    is a null struct and the row is kept. mapInPandas rather than a
+    struct-typed pandas_udf, which cannot return a null struct."""
+    out_schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, out_type)])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf[out_col] = map_values(fn, pdf[payload_col])
+            yield pdf
+
+    return df.mapInPandas(run, out_schema)
+
+
 def extract_features(
     df: DataFrame, payload_col: str = "payload", out_col: str = "features"
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     mapInPandas — the real plumbing any decoder plugs into."""
-    in_schema = df.schema
-    out_schema = T.StructType(list(in_schema.fields) + [T.StructField(out_col, FEATURE_SCHEMA)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(_fake_feature_row)
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, FEATURE_SCHEMA, _fake_feature_row)
 
 
 def decode_image(df: DataFrame, payload_col: str = "payload", out_col: str = "image") -> DataFrame:
@@ -357,28 +372,14 @@ def decode_image(df: DataFrame, payload_col: str = "payload", out_col: str = "im
     for pixel work and JPEG), else the stdlib PNG/GIF header decoder;
     undecodable payloads get a null struct, the row is kept."""
     dec = _DECODERS.get("image", default_image_decoder)
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(
-                out_col,
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("mode", T.StringType()),
-                    ]
-                ),
-            )
+    out_type = T.StructType(
+        [
+            T.StructField("width", T.IntegerType()),
+            T.StructField("height", T.IntegerType()),
+            T.StructField("mode", T.StringType()),
         ]
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(lambda b: None if b is None else dec(b))
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, out_type, dec)
 
 
 def decode_image_pixels(
@@ -395,26 +396,15 @@ def decode_image_pixels(
     row is kept. Arrow-streaming batches; the raster never leaves the
     task — only the bounded stat struct returns."""
     dec = _DECODERS.get("image_pixels", default_pixel_decoder)
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(
-                out_col,
-                T.StructType([
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("mode", T.StringType()),
-                    T.StructField("n_pixels", T.LongType()),
-                    T.StructField(
-                        "channel_means", T.ArrayType(T.DoubleType())),
-                ]),
-            )
-        ]
-    )
+    out_type = T.StructType([
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("mode", T.StringType()),
+        T.StructField("n_pixels", T.LongType()),
+        T.StructField("channel_means", T.ArrayType(T.DoubleType())),
+    ])
 
     def stats(b):
-        if b is None:
-            return None
         got = dec(bytes(b))
         if got is None:
             return None
@@ -426,12 +416,7 @@ def decode_image_pixels(
             means.append(round(sum(ch) / len(ch), 6) if ch else None)
         return (w, h, mode, w * h, means)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(stats)
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, out_type, stats)
 
 
 def decode_audio(df: DataFrame, payload_col: str = "payload", out_col: str = "audio") -> DataFrame:
@@ -441,27 +426,17 @@ def decode_audio(df: DataFrame, payload_col: str = "payload", out_col: str = "au
     container decoder; undecodable payloads get a null struct, the row is
     kept. Same mapInPandas Arrow-streaming shape as decode_image."""
     dec = _DECODERS.get("audio", default_audio_decoder)
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(
-                out_col,
-                T.StructType(
-                    [
-                        T.StructField("channels", T.IntegerType()),
-                        T.StructField("sample_rate", T.IntegerType()),
-                        T.StructField("n_frames", T.LongType()),
-                        T.StructField("sample_width", T.IntegerType()),
-                        T.StructField("duration_sec", T.DoubleType()),
-                    ]
-                ),
-            )
+    out_type = T.StructType(
+        [
+            T.StructField("channels", T.IntegerType()),
+            T.StructField("sample_rate", T.IntegerType()),
+            T.StructField("n_frames", T.LongType()),
+            T.StructField("sample_width", T.IntegerType()),
+            T.StructField("duration_sec", T.DoubleType()),
         ]
     )
 
-    def to_row(b: bytes | None):
-        if b is None:
-            return None
+    def to_row(b: bytes):
         meta = dec(b)
         if meta is None:
             return None
@@ -469,12 +444,7 @@ def decode_audio(df: DataFrame, payload_col: str = "payload", out_col: str = "au
         dur = round(n_frames / rate, 6) if rate else None
         return (ch, rate, n_frames, width, dur)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(to_row)
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, out_type, to_row)
 
 
 def decode_video(df: DataFrame, payload_col: str = "payload", out_col: str = "video") -> DataFrame:
@@ -484,28 +454,14 @@ def decode_video(df: DataFrame, payload_col: str = "payload", out_col: str = "vi
     undecodable payloads get a null struct, the row is kept. Same
     mapInPandas Arrow-streaming shape as decode_image/decode_audio."""
     dec = _DECODERS.get("video", default_video_decoder)
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(
-                out_col,
-                T.StructType(
-                    [
-                        T.StructField("duration_sec", T.DoubleType()),
-                        T.StructField("n_tracks", T.IntegerType()),
-                        T.StructField("brand", T.StringType()),
-                    ]
-                ),
-            )
+    out_type = T.StructType(
+        [
+            T.StructField("duration_sec", T.DoubleType()),
+            T.StructField("n_tracks", T.IntegerType()),
+            T.StructField("brand", T.StringType()),
         ]
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(lambda b: None if b is None else dec(b))
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, out_type, dec)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -540,8 +496,6 @@ def resize_image(
     payloads yield a null struct; rows are kept either way."""
     tw, th = int(width), int(height)
     fn = _DECODERS.get("image_resize")
-    in_schema = df.schema
-    out_schema = T.StructType(list(in_schema.fields) + [T.StructField(out_col, RESIZE_SCHEMA)])
 
     def fit(ow: int, oh: int) -> tuple[int, int]:
         if not keep_aspect:
@@ -550,8 +504,6 @@ def resize_image(
         return max(int(ow * scale), 1), max(int(oh * scale), 1)
 
     def to_row(b):
-        if b is None:
-            return None
         meta = default_image_decoder(bytes(b))
         if meta is None:
             return None
@@ -565,12 +517,7 @@ def resize_image(
                 return None
         return (ow, oh, w, h, mode, data)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = pdf[payload_col].map(to_row)
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)
+    return _with_mapped(df, payload_col, out_col, RESIZE_SCHEMA, to_row)
 
 
 def sample_frames(

@@ -1372,18 +1372,12 @@ def unicode_normalize(
     cross-checked against DuckDB's nfc_normalize in the oracle."""
     import unicodedata
 
-    import pandas  # noqa: F401 — resolves the UDF's postponed type hints
-
-    from pyspark.sql.functions import pandas_udf
+    from wrangler_spark.udfs import value_udf
 
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
 
-    def _norm(s):
-        return s.map(lambda t: unicodedata.normalize(form, t) if t is not None else None)
-
-    _norm.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
-    norm_udf = pandas_udf(_norm, "string")
+    norm_udf = value_udf(lambda t: unicodedata.normalize(form, t), "string")
     return df.withColumn(out_col or col, norm_udf(F.col(col)))
 
 
@@ -1403,23 +1397,15 @@ def compression_ratio(
     Scan-side, zero shuffle."""
     import zlib
 
-    import pandas  # noqa: F401 — resolves the UDF's postponed type hints
+    from wrangler_spark.udfs import value_udf
 
-    from pyspark.sql.functions import pandas_udf
+    def ratio(t):
+        raw = t.encode("utf-8")
+        if not raw:
+            return 1.0
+        return round(len(zlib.compress(raw, level)) / len(raw), 6)
 
-    def _ratio(s):
-        def one(t):
-            if t is None:
-                return None
-            raw = t.encode("utf-8")
-            if not raw:
-                return 1.0
-            return round(len(zlib.compress(raw, level)) / len(raw), 6)
-
-        return s.map(one)
-
-    _ratio.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
-    return df.withColumn(out_col, pandas_udf(_ratio, "double")(F.col(col)))
+    return df.withColumn(out_col, value_udf(ratio, "double")(F.col(col)))
 
 
 def hash_embedding(
@@ -1499,9 +1485,7 @@ def html_to_text(
     import re as _re
     from html.parser import HTMLParser
 
-    import pandas  # noqa: F401 — resolves the UDF's postponed type hints
-
-    from pyspark.sql.functions import pandas_udf
+    from wrangler_spark.udfs import value_udf
 
     _BLOCK = {
         "p", "div", "br", "li", "ul", "ol", "tr", "table", "h1", "h2",
@@ -1534,9 +1518,7 @@ def html_to_text(
 
     ws = _re.compile(r"[ \t\f\v\xa0]+")
 
-    def _one(raw) -> str | None:
-        if raw is None:
-            return None
+    def _one(raw) -> str:
         if isinstance(raw, (bytes, bytearray)):
             raw = bytes(raw).decode("utf-8", "replace")
         p = _Extract()
@@ -1554,12 +1536,7 @@ def html_to_text(
             return " ".join(lines)
         return "\n".join(lines)
 
-    def _extract(s):
-        return s.map(_one)
-
-    _extract.__annotations__ = {"s": pandas.Series, "return": pandas.Series}
-    udf = pandas_udf(_extract, "string")
-    return df.withColumn(out_col, udf(F.col(col)))  # _one decodes binary itself
+    return df.withColumn(out_col, value_udf(_one, "string")(F.col(col)))  # _one decodes binary itself
 
 
 def vocab_coverage(

@@ -9,6 +9,7 @@ clear DirectiveApplyError instead of silently degrading.
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Iterator
 
@@ -25,6 +26,7 @@ from wrangler_spark.directive import Arg, Directive
 from wrangler_spark.errors import DirectiveApplyError
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive, registry
+from wrangler_spark.udfs import value_udf
 
 
 @directive
@@ -41,16 +43,11 @@ class Stemming(Directive):
 
         col = ctx.resolve(df, self.args["column"])
 
-        @pandas_udf(T.ArrayType(StringType()))
-        def stem_tokens(s: pd.Series) -> pd.Series:
-            def run(v):
-                if v is None:
-                    return None
-                toks = v if isinstance(v, (list, tuple)) else str(v).split()
-                return [porter_stem(t) for t in toks]
+        def stem(v):
+            toks = v if isinstance(v, (list, tuple)) else str(v).split()
+            return [porter_stem(t) for t in toks]
 
-            return s.map(run)
-
+        stem_tokens = value_udf(stem, T.ArrayType(StringType()))
         dt = dict(df.dtypes)[col]
         src = F.col(col) if dt.startswith("array") else F.col(col).cast("string")
         return df.withColumn(f"{col}_porter", stem_tokens(src))
@@ -76,8 +73,6 @@ class ParseAsExcel(Directive):
     ]
 
     def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
-        from pyspark.sql.types import BooleanType
-
         from wrangler_spark.formats.xlsx import read_sheet, sheet_exists
 
         col = ctx.resolve(df, self.args["column"])
@@ -92,13 +87,13 @@ class ParseAsExcel(Directive):
         # loss. Only when NO sampled payload has the sheet do we compile
         # the cell-less schema (every payload routes to the error channel
         # below — ParseExcelTest.testNoSheetName's contract).
-        cand = ctx.sampling_frame(df).select(col).filter(F.col(col).isNotNull()).limit(50).collect()
+        cand = ctx.sample_values(df, col, 50)
         if not cand:
             raise DirectiveApplyError(f"no non-null payload in '{col}' to size the Excel schema")
         sample_rows: list[dict] = []
-        for row in cand:
+        for payload in cand:
             try:
-                sample_rows = read_sheet(bytes(row[0]), sheet)
+                sample_rows = read_sheet(bytes(payload), sheet)
                 break
             except Exception:  # noqa: BLE001 — unreadable/missing sheet: try next payload
                 continue
@@ -108,15 +103,13 @@ class ParseAsExcel(Directive):
         else:
             names = letters
 
-        @pandas_udf(BooleanType())
-        def readable(s: pd.Series) -> pd.Series:
-            # sheet_exists is the light probe (zip directory + workbook.xml
-            # only), so routing doesn't fully parse every payload a second
-            # time before the real parse in run()
-            return s.map(lambda p: p is not None and sheet_exists(bytes(p), sheet))
-
+        # sheet_exists is the light probe (zip directory + workbook.xml
+        # only), so routing doesn't fully parse every payload a second time
+        # before the real parse in run(); a null payload is unreadable
+        readable = value_udf(lambda p: sheet_exists(bytes(p), sheet), BooleanType())
         clean = ctx.route_errors(
-            df, ~readable(F.col(col)), self.name, f"sheet '{sheet}' not found or unreadable workbook"
+            df, F.col(col).isNull() | ~readable(F.col(col)), self.name,
+            f"sheet '{sheet}' not found or unreadable workbook",
         )
 
         out_schema = T.StructType(
@@ -177,10 +170,10 @@ class ParseAsAvroFile(Directive):
         from wrangler_spark.formats.avro_ocf import read_ocf
 
         col = ctx.resolve(df, self.args["column"])
-        first = ctx.sampling_frame(df).select(col).filter(F.col(col).isNotNull()).limit(1).collect()
+        first = ctx.sample_values(df, col, 1)
         if not first:
             raise DirectiveApplyError(f"no non-null payload in '{col}' to read the Avro schema")
-        schema, _ = read_ocf(bytes(first[0][0]))
+        schema, _ = read_ocf(bytes(first[0]))
         if schema.get("type") != "record":
             raise DirectiveApplyError("parse-as-avro-file expects a record-typed OCF")
         fields = [(f["name"], _avro_field_type(f["type"])) for f in schema["fields"]]
@@ -407,6 +400,29 @@ def _hl7_field(fv: str):
     return reps if len(reps) > 1 else reps[0]
 
 
+def _hl7_to_json(v: str) -> str:
+    segments: dict[str, list] = {}
+    for seg in v.replace("\n", "\r").split("\r"):
+        seg = seg.strip()
+        if not seg:
+            continue
+        fields = seg.split("|")
+        name = fields[0]
+        rec: dict[str, object] = {}
+        if name == "MSH" and len(fields) > 1:
+            rec["1"] = "|"
+            rec["2"] = fields[1]  # encoding chars: raw by definition
+            body = list(enumerate(fields[2:], start=3))
+        else:
+            body = list(enumerate(fields[1:], start=1))
+        for i, fv in body:
+            if fv == "":
+                continue
+            rec[str(i)] = _hl7_field(fv)
+        segments.setdefault(name, []).append(rec)
+    return json.dumps(segments)
+
+
 @directive
 class ParseAsHl7(Directive):
     """parse-as-hl7 :col [depth] — HL7 v2 pipe-delimited parse; adds
@@ -429,34 +445,7 @@ class ParseAsHl7(Directive):
     def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
         col = ctx.resolve(df, self.args["column"])
 
-        @pandas_udf(StringType())
-        def hl7_to_json(s: pd.Series) -> pd.Series:
-            def parse(v):
-                if v is None:
-                    return None
-                segments: dict[str, list] = {}
-                for seg in str(v).replace("\n", "\r").split("\r"):
-                    seg = seg.strip()
-                    if not seg:
-                        continue
-                    fields = seg.split("|")
-                    name = fields[0]
-                    rec: dict[str, object] = {}
-                    if name == "MSH" and len(fields) > 1:
-                        rec["1"] = "|"
-                        rec["2"] = fields[1]  # encoding chars: raw by definition
-                        body = list(enumerate(fields[2:], start=3))
-                    else:
-                        body = list(enumerate(fields[1:], start=1))
-                    for i, fv in body:
-                        if fv == "":
-                            continue
-                        rec[str(i)] = _hl7_field(fv)
-                    segments.setdefault(name, []).append(rec)
-                return json.dumps(segments)
-
-            return s.map(parse)
-
+        hl7_to_json = value_udf(_hl7_to_json, StringType())
         return df.withColumn(f"{col}_hl7", hl7_to_json(F.col(col).cast("string")))
 
 
@@ -553,6 +542,14 @@ def register_standard(name: str, schema: dict) -> None:
     _STANDARDS[name.lower()] = schema
 
 
+@functools.cache
+def _validator(schema_json: str):
+    """The draft-7 validator of a schema, built once per Python worker."""
+    import jsonschema
+
+    return jsonschema.Draft7Validator(json.loads(schema_json))
+
+
 @directive
 class ValidateStandard(Directive):
     """validate-standard :col <standard> — JSON-schema conformance; rows
@@ -572,26 +569,18 @@ class ValidateStandard(Directive):
             )
         schema_json = json.dumps(schema)
 
-        @pandas_udf(BooleanType())
-        def invalid(s: pd.Series) -> pd.Series:
-            import jsonschema
+        def is_invalid(v):
+            validator = _validator(schema_json)
+            try:
+                doc = json.loads(v) if isinstance(v, str) else v
+                return not validator.is_valid(doc)
+            except Exception:
+                return True
 
-            sch = json.loads(schema_json)
-            validator = jsonschema.Draft7Validator(sch)
-
-            def bad(v):
-                if v is None:
-                    return True
-                try:
-                    doc = json.loads(v) if isinstance(v, str) else v
-                    return not validator.is_valid(doc)
-                except Exception:
-                    return True
-
-            return s.map(bad)
-
+        # a null document is invalid
+        invalid = value_udf(is_invalid, BooleanType())
         return ctx.route_errors(
-            df, invalid(F.col(col)), self.name, f"failed {std} schema validation"
+            df, F.col(col).isNull() | invalid(F.col(col)), self.name, f"failed {std} schema validation"
         )
 
 

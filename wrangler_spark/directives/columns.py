@@ -154,7 +154,7 @@ class SplitToColumns(Directive):
         col = ctx.resolve(df, self.args["column"])
         regex = self.args["regex"]
         parts = F.split(F.col(col), regex, -1)
-        n = _sample_max_parts(ctx.sampling_frame(df), F.split(F.col(col), regex, -1))
+        n = ctx.frame_fact(df, ("split-parts", col, regex), lambda frame: _sample_max_parts(frame, parts))
         out = df.withColumn("__parts", parts)
         out = out.withColumns({f"{col}_{i + 1}": F.get("__parts", i) for i in range(n)})
         return out.drop("__parts")
@@ -162,7 +162,8 @@ class SplitToColumns(Directive):
 
 def _sample_max_parts(df: DataFrame, parts_col, sample: int = 100) -> int:
     """Compile-time bounded sample to fix the output arity of a split parse
-    (mirrors the service's sample-driven schema inference)."""
+    (mirrors the service's sample-driven schema inference); nulls are in
+    the sample, and an all-null sample gives one column."""
     rows = df.select(F.size(parts_col).alias("n")).limit(sample).agg(F.max("n")).collect()
     n = rows[0][0] if rows and rows[0][0] is not None else 1
     return max(int(n), 1)

@@ -6,11 +6,8 @@ from __future__ import annotations
 
 import base64
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from wrangler_spark.context import CompileContext
@@ -18,24 +15,18 @@ from wrangler_spark.directive import Arg, Directive
 from wrangler_spark.errors import DirectiveApplyError
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive
+from wrangler_spark.udfs import value_udf
 
 
-@pandas_udf(StringType())
-def _b32_encode(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: None if v is None else base64.b32encode(str(v).encode()).decode())
+def _b32_decode_value(v: str) -> str | None:
+    try:
+        return base64.b32decode(v).decode(errors="replace")
+    except Exception:
+        return None
 
 
-@pandas_udf(StringType())
-def _b32_decode(s: pd.Series) -> pd.Series:
-    def dec(v):
-        if v is None:
-            return None
-        try:
-            return base64.b32decode(str(v)).decode(errors="replace")
-        except Exception:
-            return None
-
-    return s.map(dec)
+_b32_encode = value_udf(lambda v: base64.b32encode(v.encode()).decode(), StringType())
+_b32_decode = value_udf(_b32_decode_value, StringType())
 
 
 @directive
@@ -117,20 +108,14 @@ def _hashlib_hex_udf(algo: str):
         bits = _KECCAK_BITS[algo]
 
         def one(v):
-            return None if v is None else keccak_digest(str(v).encode("utf-8"), bits).hex()
+            return keccak_digest(v.encode("utf-8"), bits).hex()
     else:
         name, kwargs = _HASHLIB_ALGOS[algo]
 
         def one(v):
-            if v is None:
-                return None
-            return hashlib.new(name, str(v).encode("utf-8"), **kwargs).hexdigest()
+            return hashlib.new(name, v.encode("utf-8"), **kwargs).hexdigest()
 
-    @pandas_udf(StringType())
-    def digest(s: pd.Series) -> pd.Series:
-        return s.map(one)
-
-    return digest
+    return value_udf(one, StringType())
 
 
 @directive

@@ -18,29 +18,27 @@ the module walks Random(0) up to ``_DRAW_CAP`` draws and stops at the
 first draw any of the bounds 20, 6 and 10 would reject; ``_PREFIX`` is the
 length of that rejection-free prefix (4,096, the cap, for seed 0). Three
 draw tables, ``alphabet[r_k % bound]`` for each class, then replace the
-LCG: a value is one table lookup per character. The UDF ``pd.factorize``s
-each Arrow batch and walks each distinct non-null value once, scattering
-the results back in row order (nulls stay null), so a low-cardinality
-column costs a handful of walks per batch. A value longer than
-``_PREFIX`` falls back to ``_mask_shuffle_value``, the reference walk.
+LCG: a value is one table lookup per character. The UDF is
+``wrangler_spark.udfs.value_udf`` over that lookup, so each distinct
+non-null value of an Arrow batch is walked once and the results are
+scattered back in row order (nulls stay null): a low-cardinality column
+costs a handful of walks per batch. A value longer than ``_PREFIX``
+falls back to ``_mask_shuffle_value``, the reference walk.
 """
 
 from __future__ import annotations
 
 import functools
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from wrangler_spark.context import CompileContext
 from wrangler_spark.directive import Arg, Directive
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive
+from wrangler_spark.udfs import value_udf
 
 
 @directive
@@ -207,12 +205,7 @@ def _mask_shuffle_table(s: str) -> str:
     return "".join(out)
 
 
-@pandas_udf(StringType())
-def _mask_shuffle_udf(s: pd.Series) -> pd.Series:
-    codes, uniques = pd.factorize(s)
-    # one extra None slot: factorize codes a null as -1, which indexes it
-    masked = np.array([_mask_shuffle_table(str(v)) for v in uniques] + [None], dtype=object)
-    return pd.Series(masked[codes], index=s.index)
+_mask_shuffle_udf = value_udf(_mask_shuffle_table, StringType())
 
 
 @directive

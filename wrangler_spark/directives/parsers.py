@@ -5,10 +5,10 @@ Ragged-row resolution: the reference appends however many fields each row
 yields (``CsvParser.java:173-182``). A Spark plan needs one static schema,
 so parse directives do a bounded compile-time sample (≤100 rows) to fix
 output arity / JSON schema — the same answer the reference's interactive
-``/schema`` endpoint computes from its workspace sample. The sample is
-taken once per input frame: ``_sample_values`` keeps it per sampling-frame
-object (weakly, so it goes with the frame), and every later transform of
-the same frame reuses it, with no Spark job and the same width.
+``/schema`` endpoint computes from its workspace sample. The sample, and
+parse-as-json's schema resolved from it, are taken once per input frame
+(``CompileContext.sample_values`` / ``frame_fact``): every later transform
+of the same frame reuses them, with no Spark job and the same width.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from __future__ import annotations
 import csv as _csv
 import io
 import re
-import weakref
 
 import pandas as pd
 
@@ -30,23 +29,7 @@ from wrangler_spark.directive import Arg, Directive
 from wrangler_spark.errors import DirectiveApplyError
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive, registry
-
-_SAMPLE_N = 100
-
-
-# sampling frame -> (col, n) -> sample; DataFrames hash by identity
-_SAMPLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _sample_values(df: DataFrame, col: str, n: int = _SAMPLE_N) -> list[str]:
-    """Up to ``n`` non-null values of ``col``, collected on the first call
-    for this frame object and reused after (callers must not mutate it)."""
-    per_frame = _SAMPLES.setdefault(df, {})
-    if (col, n) not in per_frame:
-        rows = df.select(col).filter(F.col(col).isNotNull()).limit(n).collect()
-        per_frame[(col, n)] = [r[0] for r in rows if r[0] is not None]
-    return per_frame[(col, n)]
-
+from wrangler_spark.udfs import value_udf
 
 # --- type inference for header detection (parity: dq/TypeInference.java) ---
 
@@ -103,7 +86,7 @@ class ParseAsCsv(Directive):
         delim = self.args["delimiter"].encode().decode("unicode_escape")
         has_header = bool(self.args["header"])
 
-        sample = _sample_values(ctx.sampling_frame(df), col)
+        sample = ctx.sample_values(df, col)
         parsed = []
         for line in sample:
             try:
@@ -158,14 +141,19 @@ class ParseAsJson(Directive):
         depth = int(self.args["depth"])
         spark = df.sparkSession
 
-        sample = _sample_values(ctx.sampling_frame(df), col)
+        sample = ctx.sample_values(df, col)
         if not sample:
             raise DirectiveApplyError(f"no non-null sample values in '{col}' to infer JSON schema")
-        schema = _infer_json_schema(sample)
-        if schema is None:
-            # conflicting/unusual shapes — fall back to Spark's inference
-            # (one extra small job)
-            schema = spark.read.json(spark.sparkContext.parallelize(sample, 1)).schema
+
+        def resolve(_frame) -> T.StructType:
+            schema = _infer_json_schema(sample)
+            if schema is None:
+                # conflicting/unusual shapes — fall back to Spark's
+                # inference (one extra small job, once per frame)
+                schema = spark.read.json(spark.sparkContext.parallelize(sample, 1)).schema
+            return schema
+
+        schema = ctx.frame_fact(df, ("json-schema", col), resolve)
         # spark.read.json flattens a top-level array into its elements, so
         # detect array-ness from the raw text
         top_level_array = all(s.lstrip().startswith("[") for s in sample if s.strip())
@@ -374,26 +362,16 @@ def _jsonpath_eval(doc, path: str):
 
 
 def _jsonpath_udf(path: str):
-    import pandas as pd  # noqa: F811
-    globals()["pd"] = pd
-    from pyspark.sql.functions import pandas_udf
+    import json as _json
 
-    @pandas_udf(T.StringType())
-    def call(s: "pd.Series") -> "pd.Series":
-        import json as _json
+    def one(v):
+        try:
+            doc = _json.loads(v)
+        except Exception:
+            return None
+        return _json.dumps(_jsonpath_eval(doc, path))
 
-        def one(v):
-            if v is None:
-                return None
-            try:
-                doc = _json.loads(v)
-            except Exception:
-                return None
-            return _json.dumps(_jsonpath_eval(doc, path))
-
-        return s.map(one)
-
-    return call
+    return value_udf(one, T.StringType())
 
 
 @directive
@@ -642,10 +620,6 @@ class ParseXmlToJson(Directive):
         import json as _json
         import xml.etree.ElementTree as ET
 
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
         def elem_to_obj(e):
             children = list(e)
             obj = {}
@@ -669,38 +643,29 @@ class ParseXmlToJson(Directive):
                     obj[ch.tag] = val
             return obj
 
-        # no annotations: `from __future__ import annotations` turns them
-        # into strings pandas_udf can't resolve for locally-defined fns
-        @pandas_udf(T.StringType())
-        def xml2json(s):
-            def conv(v):
-                if v is None:
-                    return None
-                text = str(v)
-                try:
-                    root = ET.fromstring(text)
-                except Exception:
-                    # lenient path (org.json.XML parity): strip prolog/PIs and
-                    # wrap in a synthetic root to survive trailing content
-                    import re as _re
+        def xml2json(text):
+            try:
+                root = ET.fromstring(text)
+            except Exception:
+                # lenient path (org.json.XML parity): strip prolog/PIs and
+                # wrap in a synthetic root to survive trailing content
+                import re as _re
 
-                    body = _re.sub(r"<\?.*?\?>", "", text, flags=_re.S)
-                    body = _re.sub(r"<!DOCTYPE[^>]*>", "", body)
-                    try:
-                        wrapper = ET.fromstring(f"<__doc__>{body}</__doc__>")
-                    except Exception:
-                        return None
-                    children = list(wrapper)
-                    root = children[0] if len(children) == 1 else wrapper
+                body = _re.sub(r"<\?.*?\?>", "", text, flags=_re.S)
+                body = _re.sub(r"<!DOCTYPE[^>]*>", "", body)
                 try:
-                    return _json.dumps({root.tag: elem_to_obj(root)})
+                    wrapper = ET.fromstring(f"<__doc__>{body}</__doc__>")
                 except Exception:
                     return None
-
-            return s.map(conv)
+                children = list(wrapper)
+                root = children[0] if len(children) == 1 else wrapper
+            try:
+                return _json.dumps({root.tag: elem_to_obj(root)})
+            except Exception:
+                return None
 
         col = ctx.resolve(df, self.args["column"])
-        tmp = df.withColumn(col, xml2json(F.col(col).cast("string")))
+        tmp = df.withColumn(col, value_udf(xml2json, T.StringType())(F.col(col).cast("string")))
         parser = ParseAsJson.__new__(ParseAsJson)
         from wrangler_spark.directive import Arguments
 

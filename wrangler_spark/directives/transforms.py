@@ -10,6 +10,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from wrangler_spark.context import CompileContext
 from wrangler_spark.directive import Arg, Directive
@@ -17,6 +18,7 @@ from wrangler_spark.directives.columns import parse_sed
 from wrangler_spark.errors import DirectiveApplyError
 from wrangler_spark.parser.tokens import TokenType
 from wrangler_spark.registry import directive
+from wrangler_spark.udfs import value_udf
 
 
 def _string_inplace(name_: str, fn, ref: str):
@@ -435,18 +437,7 @@ def _py_lcs_substring(s1: str, s2: str) -> int:
 
 
 def _pair_udf(fn):
-    import pandas as pd  # noqa: F811 — resolved via module global below for type hints
-    globals()["pd"] = pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def call(a: "pd.Series", b: "pd.Series") -> "pd.Series":
-        return pd.Series(
-            [None if x is None or y is None else float(fn(x, y)) for x, y in zip(a, b)]
-        )
-
-    return call
+    return value_udf(lambda x, y: float(fn(x, y)), DoubleType())
 
 
 def _text_distance_expr(method: str, c1, c2, similarity: bool):
