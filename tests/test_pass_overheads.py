@@ -1,6 +1,7 @@
-"""What one recipe pass costs beyond the recipe's own work: the parse
-sample is taken once per input frame, and an empty error channel is a
-LocalTableScan, not a parallelized Python RDD."""
+"""What one recipe pass costs beyond the recipe's own work: a compile-time
+sample (parse-as-csv/-json/-excel/-avro-file, split-to-columns, and
+parse-as-json's fallback schema) is taken once per input frame, and an
+empty error channel is a LocalTableScan, not a parallelized Python RDD."""
 
 from pyspark.sql.types import StructType
 
