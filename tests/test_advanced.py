@@ -74,6 +74,13 @@ def test_stemming_directive(spark):
     assert out["text_porter"] == ["run", "quickli", "to", "the", "store"]
 
 
+def test_stemming_array_column_stems_each_token(spark):
+    # Arrow hands the UDF an array column's values as numpy arrays
+    df = spark.createDataFrame([(["running", "cats"],), (None,)], "t array<string>")
+    out = Pipeline.compile("stemming :t").apply(df).collect()
+    assert [r["t_porter"] for r in out] == [["run", "cat"], None]
+
+
 @pytest.fixture(scope="module")
 def xlsx_df(spark):
     payload = _payload(XLSX, _titanic_xlsx)

@@ -153,3 +153,115 @@ def test_workspace_store_service_lifecycle(spark, tmp_path):
     small.add("trim :name")
     store.save(small)
     assert len(store.load("lim").execute().values) == len(small.execute().values)
+
+
+# --- design round-trips over the held sample and the applied prefix -------
+
+_BODIES = [f"{i},name{i},{i * 7 % 50},{'' if i % 5 == 0 else 'x' + str(i)}" for i in range(40)]
+_STEPS = [
+    "parse-as-csv :body ',' false",
+    "drop :body",
+    "set-type :body_3 int",
+    "set-column :total exp:{ body_3 * 2 + 1 }",
+    "filter-row exp:{ body_3 > 45 } true",
+    "uppercase :body_2",
+    "fill-null-or-empty :body_4 'NA'",
+    "mask-number :body_1 'x#'",
+]
+
+
+def _body_source(spark, tmp_path, partitions=1):
+    path = str(tmp_path / "bodies")
+    spark.createDataFrame([(b,) for b in _BODIES], "body string").coalesce(1) \
+        .write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    return df.repartition(partitions) if partitions > 1 else df
+
+
+def _same_response(a, b):
+    assert (a.headers, a.types, a.directives, a.error_count) == (b.headers, b.types, b.directives, b.error_count)
+    assert a.values == b.values
+
+
+def test_workspace_executes_the_same_rows_over_a_multi_partition_source(spark, tmp_path):
+    from wrangler_spark.interactive import Workspace
+
+    ws = Workspace("parts", _body_source(spark, tmp_path, partitions=4), limit=25)
+    first = ws.add(*_STEPS[:3])
+    assert len(first.values) == 25
+    a, b = ws.execute(), ws.execute()
+    assert a.values == b.values == first.values
+
+
+def test_workspace_add_runs_no_spark_job_after_the_first_call(spark, jobs, tmp_path):
+    from wrangler_spark.interactive import Workspace
+
+    ws = Workspace("nojobs", _body_source(spark, tmp_path), limit=30)
+    ws.add(_STEPS[0])
+    for step in _STEPS[1:]:
+        assert jobs(lambda: ws.add(step)) == 0, step
+    assert jobs(ws.schema) == 0
+    assert jobs(ws.undo) == 0
+    assert jobs(ws.execute) == 0
+    assert jobs(lambda: ws.add("send-to-error exp:{ total > 80 } 'big'")) == 0
+
+
+def test_incremental_workspace_equals_a_fresh_execute(spark, tmp_path):
+    """After every add and after an undo, the workspace's response (prefix
+    reuse, ctx forks) is the response of executing the whole recipe anew
+    over the same sample, error counts included."""
+    from wrangler_spark.interactive import Workspace
+
+    source = _body_source(spark, tmp_path)
+    steps = _STEPS[:4] + ["send-to-error exp:{ total > 80 } 'big'"] + _STEPS[4:] + [
+        "send-to-error-and-continue exp:{ body_4 == 'NA' } 'empty'"]
+    ws = Workspace("inc", source, limit=30)
+    for step in steps:
+        got = ws.add(step)
+        _same_response(got, execute(ws.directives, source, limit=30))
+    assert got.error_count > 0
+    assert ws.undo(2) == steps[-2:]
+    _same_response(ws.execute(), execute(steps[:-2], source, limit=30))
+    _same_response(ws.add(steps[-1]), execute(steps[:-2] + steps[-1:], source, limit=30))
+
+
+def test_checkpointing_directive_ends_the_reusable_prefix(spark, tmp_path):
+    """dedup-minhash pins a localCheckpoint in its apply, which the
+    round-trip's checkpoint_scope releases: the next add must apply it
+    again, not read the released blocks, and nothing stays pinned."""
+    from wrangler_spark.datapipe import live_count, persistent_rdd_ids
+    from wrangler_spark.interactive import Workspace
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over the lazy dog number {i % 3}") for i in range(12)],
+        "id long, text string",
+    )
+    ws = Workspace("ckpt", docs, limit=12)
+    pinned, held = live_count(), persistent_rdd_ids(spark)
+    first = ws.add("dedup-minhash :id :text")
+    resp = ws.add("set-column :k exp:{ id + 1 }")
+    assert resp.headers == first.headers + ["k"]
+    assert [r["k"] for r in resp.values] == [r["id"] + 1 for r in first.values]
+    assert [r["is_dup"] for r in resp.values] == [r["is_dup"] for r in first.values]
+    assert ws.execute().values == resp.values
+    assert live_count() == pinned and persistent_rdd_ids(spark) == held
+
+
+def test_workspace_over_a_column_the_driver_cannot_collect(spark):
+    from wrangler_spark.interactive import Workspace
+
+    df = spark.sql("SELECT id, make_ym_interval(1, CAST(id AS INT)) AS span FROM range(3)")
+    ws = Workspace("ym", df)
+    assert [r["id"] for r in ws.add("drop :span").values] == [0, 1, 2]
+
+
+def test_workspace_save_load_keeps_row_order(spark, tmp_path):
+    from wrangler_spark.interactive import Workspace
+
+    ws = Workspace("order", _body_source(spark, tmp_path, partitions=4), limit=40)
+    ws.add(*_STEPS[:3])
+    root = str(tmp_path / "ws")
+    ws.save(root)
+    back = Workspace.load(spark, root, "order")
+    assert back.directives == ws.directives
+    assert back.execute().values == ws.execute().values

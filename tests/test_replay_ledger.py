@@ -158,31 +158,22 @@ def test_empty_batch_id_never_dedups(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "_batches"))
 
 
-def _jobs(spark, fn):
-    """Spark jobs ``fn`` launched: the scheduler's job-id counter around
-    the call (the counter ``perfbench/spans.py`` reads)."""
-    dag = spark._jsparkSession.sparkContext().dagScheduler()
-    lo = int(dag.nextJobId())
-    fn()
-    return int(dag.nextJobId()) - lo
-
-
-def test_ledger_hit_runs_no_spark_job(spark, tmp_path):
+def test_ledger_hit_runs_no_spark_job(spark, jobs, tmp_path):
     path = str(tmp_path / "st")
     b0, b1, b2 = _docs(spark, 0, 40), _docs(spark, 40, 90), _docs(spark, 90, 130)
     text.vocab_update_state(b0, path, "text", batch_id="b0")
     text.vocab_update_state(b1, path, "text", batch_id="b1")
-    assert _jobs(spark, lambda: text.vocab_update_state(b0, path, "text", batch_id="b0")) == 0
+    assert jobs(lambda: text.vocab_update_state(b0, path, "text", batch_id="b0")) == 0
     # a new fold runs only its append: the parent's probe (the rows scan
     # the ledger replaced) cost at least two jobs on top of it
-    probe = _jobs(spark, lambda: _layout._rows_hold(spark, _layout.resolve(spark, path), "b2"))
-    fold = _jobs(spark, lambda: text.vocab_update_state(b2, path, "text", batch_id="b2"))
-    bare = _jobs(spark, lambda: text.vocab_update_state(b2, str(tmp_path / "bare"), "text"))
+    probe = jobs(lambda: _layout._rows_hold(spark, _layout.resolve(spark, path), "b2"))
+    fold = jobs(lambda: text.vocab_update_state(b2, path, "text", batch_id="b2"))
+    bare = jobs(lambda: text.vocab_update_state(b2, str(tmp_path / "bare"), "text"))
     assert probe >= 2
     assert fold == bare
     # the ledger survives compaction: still no job on a replay after it
     compact_index(spark, path)
-    assert _jobs(spark, lambda: text.vocab_update_state(b1, path, "text", batch_id="b1")) == 0
+    assert jobs(lambda: text.vocab_update_state(b1, path, "text", batch_id="b1")) == 0
     assert dict(_vocab_read(spark, path))["common"] == 130
 
 

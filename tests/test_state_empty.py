@@ -21,15 +21,8 @@ READERS = {
 }
 
 
-def _jobs(spark, fn):
-    dag = spark._jsparkSession.sparkContext().dagScheduler()
-    lo = int(dag.nextJobId())
-    fn()
-    return int(dag.nextJobId()) - lo
-
-
 @pytest.mark.parametrize("reader", list(READERS))
-def test_never_folded_state_is_empty(spark, tmp_path, reader):
+def test_never_folded_state_is_empty(spark, jobs, tmp_path, reader):
     read, family = READERS[reader]
     path = str(tmp_path / "never")
 
@@ -37,4 +30,4 @@ def test_never_folded_state_is_empty(spark, tmp_path, reader):
         with pytest.raises(ValueError, match=f"^{family} state at {re.escape(path)} is empty$"):
             read(spark, path)
 
-    assert _jobs(spark, call) == 0
+    assert jobs(call) == 0

@@ -20,7 +20,7 @@ behavior that must become *compile-time* facts on Spark:
 from __future__ import annotations
 
 import weakref
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
@@ -60,6 +60,18 @@ class CompileContext:
     # static frame used for compile-time schema sampling when the input is a
     # streaming DataFrame (parse-as-csv arity, parse-as-json schema, ...)
     sample_df: Any = None
+
+    def fork(self) -> "CompileContext":
+        """A copy whose error frames, fail checks, variables and
+        observations can grow without touching this one (the frames and
+        columns in them are shared; they are immutable)."""
+        return replace(
+            self,
+            error_frames=list(self.error_frames),
+            fail_checks=list(self.fail_checks),
+            variables=dict(self.variables),
+            observations=dict(self.observations),
+        )
 
     def sampling_frame(self, df):
         """The frame parse directives may run their bounded compile-time

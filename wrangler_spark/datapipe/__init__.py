@@ -22,4 +22,5 @@ from wrangler_spark.datapipe._checkpoint import (  # noqa: F401
     persistent_rdd_ids,
     release,
     release_all,
+    scope_count,
 )

@@ -180,6 +180,14 @@ def checkpoint_scope():
                 pass
 
 
+def scope_count() -> int:
+    """Number of checkpoints THIS THREAD has registered inside its
+    innermost open :func:`checkpoint_scope` (0 outside any scope) — the
+    ones that scope will release on exit."""
+    scopes = getattr(_TLS, "scopes", ())
+    return len(scopes[-1]) if scopes else 0
+
+
 def live_count() -> int:
     """Number of currently-registered (un-released) checkpoints."""
     with _LOCK:

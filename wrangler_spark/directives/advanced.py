@@ -44,7 +44,8 @@ class Stemming(Directive):
         col = ctx.resolve(df, self.args["column"])
 
         def stem(v):
-            toks = v if isinstance(v, (list, tuple)) else str(v).split()
+            # an array column arrives as a numpy array, not a list
+            toks = v.split() if isinstance(v, str) else v
             return [porter_stem(t) for t in toks]
 
         stem_tokens = value_udf(stem, T.ArrayType(StringType()))

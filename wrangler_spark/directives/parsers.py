@@ -138,44 +138,50 @@ class ParseAsJson(Directive):
 
     def apply(self, ctx: CompileContext, df: DataFrame) -> DataFrame:
         col = ctx.resolve(df, self.args["column"])
-        depth = int(self.args["depth"])
-        spark = df.sparkSession
+        return _parse_json(ctx, df, col, int(self.args["depth"]), ctx.sample_values(df, col), df, "json-schema")
 
-        sample = ctx.sample_values(df, col)
-        if not sample:
-            raise DirectiveApplyError(f"no non-null sample values in '{col}' to infer JSON schema")
 
-        def resolve(_frame) -> T.StructType:
-            schema = _infer_json_schema(sample)
-            if schema is None:
-                # conflicting/unusual shapes — fall back to Spark's
-                # inference (one extra small job, once per frame)
-                schema = spark.read.json(spark.sparkContext.parallelize(sample, 1)).schema
-            return schema
+def _parse_json(ctx: CompileContext, df: DataFrame, col: str, depth: int, sample: list[str],
+                facts_of: DataFrame, key: str) -> DataFrame:
+    """parse-as-json of ``df``'s JSON text column ``col``. The schema is
+    inferred from ``sample`` once per ``facts_of`` frame under ``key``:
+    the directive's own input, which parse-xml-to-json's ``df`` (built
+    anew on every transform) is not."""
+    spark = df.sparkSession
+    if not sample:
+        raise DirectiveApplyError(f"no non-null sample values in '{col}' to infer JSON schema")
 
-        schema = ctx.frame_fact(df, ("json-schema", col), resolve)
-        # spark.read.json flattens a top-level array into its elements, so
-        # detect array-ness from the raw text
-        top_level_array = all(s.lstrip().startswith("[") for s in sample if s.strip())
+    def resolve(_frame) -> T.StructType:
+        schema = _infer_json_schema(sample)
+        if schema is None:
+            # conflicting/unusual shapes — fall back to Spark's
+            # inference (one extra small job, once per frame)
+            schema = spark.read.json(spark.sparkContext.parallelize(sample, 1)).schema
+        return schema
 
-        out = df
-        if top_level_array:
-            elem_schema = T.ArrayType(schema)
-            parsed = F.from_json(F.col(col), elem_schema)
-            out = out.withColumn("__json", F.explode_outer(parsed)).drop(col)
-            base = F.col("__json")
-        else:
-            # pinned for the same reason as parse-as-csv: a later filter on
-            # a parsed field would otherwise inline the whole from_json
-            # into its pushed-down predicate (double parse per row)
-            parsed = _pin_expensive(F.from_json(F.col(col), schema))
-            out = out.withColumn("__json", parsed).drop(col)
-            base = F.col("__json")
+    schema = ctx.frame_fact(facts_of, (key, col), resolve)
+    # spark.read.json flattens a top-level array into its elements, so
+    # detect array-ness from the raw text
+    top_level_array = all(s.lstrip().startswith("[") for s in sample if s.strip())
 
-        cols: list[tuple[str, Column]] = []
-        _flatten_struct(base, schema, col, 1, depth, cols)
-        out = out.withColumns(dict(cols))
-        return out.drop("__json")
+    out = df
+    if top_level_array:
+        elem_schema = T.ArrayType(schema)
+        parsed = F.from_json(F.col(col), elem_schema)
+        out = out.withColumn("__json", F.explode_outer(parsed)).drop(col)
+        base = F.col("__json")
+    else:
+        # pinned for the same reason as parse-as-csv: a later filter on
+        # a parsed field would otherwise inline the whole from_json
+        # into its pushed-down predicate (double parse per row)
+        parsed = _pin_expensive(F.from_json(F.col(col), schema))
+        out = out.withColumn("__json", parsed).drop(col)
+        base = F.col("__json")
+
+    cols: list[tuple[str, Column]] = []
+    _flatten_struct(base, schema, col, 1, depth, cols)
+    out = out.withColumns(dict(cols))
+    return out.drop("__json")
 
 
 def _infer_json_schema(sample: list[str]) -> T.StructType | None:
@@ -665,13 +671,15 @@ class ParseXmlToJson(Directive):
                 return None
 
         col = ctx.resolve(df, self.args["column"])
-        tmp = df.withColumn(col, value_udf(xml2json, T.StringType())(F.col(col).cast("string")))
-        parser = ParseAsJson.__new__(ParseAsJson)
-        from wrangler_spark.directive import Arguments
+        as_json = value_udf(xml2json, T.StringType())(F.col(col).cast("string")).alias(col)
 
-        parser.args = Arguments({"column": col, "depth": self.args["depth"]})
-        parser.call = self.call
-        return parser.apply(ctx, tmp)
+        def collect(frame):
+            rows = frame.select(as_json).filter(F.col(col).isNotNull()).limit(100).collect()
+            return [r[0] for r in rows]
+
+        sample = ctx.frame_fact(df, ("xml-json-values", col), collect)
+        return _parse_json(ctx, df.withColumn(col, as_json), col, int(self.args["depth"]), sample, df,
+                           "xml-json-schema")
 
 
 registry.alias("parse-as-xml", "parse-xml-to-json")

@@ -2,6 +2,29 @@
 service execute/summary/schema endpoints (``wrangler-service/.../directive/
 DirectivesHandler.java:555-595``, ``AbstractDirectiveHandler.java:103-211``)
 as plain functions: same compiler, applied to a sample, no HTTP.
+
+A :class:`Workspace` round-trip (add, undo, execute, schema) runs no
+Spark job on a plain recipe (a summary runs one):
+
+- **The sample is collected once**, when the workspace is built, and held
+  as a driver-local table (``datapipe._local.local_table``, planned as a
+  ``LocalTableScan``). Every call reads the same rows and passes this
+  frame object itself, so a collect over it runs driver-side, and the
+  per-frame compile-time samples (parse-as-csv's arity, parse-as-json's
+  schema) are taken on the first call only. ``plan()`` and
+  ``estimate()`` still audit the lazy ``df.limit(limit)`` over the real
+  source scan, whose pushdowns a local table would hide.
+- **The applied prefix is kept**: one ``(frame, CompileContext)`` entry
+  per applied directive line. ``add`` applies only its new lines on top
+  of the last entry, each with a fork of the entry's context (error
+  frames, fail checks, variables, observations); ``undo`` pops entries;
+  ``load`` starts empty and the next call rebuilds it.
+- **A checkpoint ends the reusable prefix.** Every round-trip runs in
+  ``checkpoint_scope``, which releases on exit the localCheckpoints the
+  call pinned; a frame built over one cannot be read again. A line
+  whose apply registers a checkpoint in the call's scope
+  (``scope_count`` moves) is therefore not kept, nor is any line after
+  it: they are applied again on every call.
 """
 
 from __future__ import annotations
@@ -12,10 +35,16 @@ import shutil
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from wrangler_spark.pipeline import Pipeline
+from wrangler_spark.context import CompileContext
+from wrangler_spark.pipeline import Pipeline, PipelineResult
 from wrangler_spark.statistics import basic_statistics
+
+# one entry per applied directive line: the frame after it and its context
+Prefix = list[tuple[DataFrame, CompileContext]]
 
 
 @dataclass
@@ -31,16 +60,46 @@ class ExecutionResponse:
     summary: dict[str, dict[str, float]] = field(default_factory=dict)
 
 
+def _apply(recipe, df: DataFrame, limit: int | None, prefix: Prefix | None) -> tuple[PipelineResult, list[str]]:
+    """``recipe`` over the sample (``df.limit(limit)``, or ``df`` itself
+    when ``limit`` is None) and the names of its directives. With a
+    ``prefix`` (``recipe`` is then a list of lines, the first
+    ``len(prefix)`` of them already applied), only the lines past it are
+    applied, and their entries are appended up to the first line that
+    pins a checkpoint."""
+    from wrangler_spark.datapipe import scope_count
+
+    sample = df if limit is None else df.limit(limit)
+    if prefix is None:
+        pipeline = Pipeline.compile(recipe)
+        return pipeline.transform(sample), [d.name for d in pipeline.directives]
+    frame, ctx = prefix[-1] if prefix else (sample, CompileContext())
+    keep = True
+    for line in recipe[len(prefix):]:
+        ctx = ctx.fork()
+        pinned = scope_count()
+        frame = Pipeline.compile(line).transform(frame, ctx).df
+        keep = keep and scope_count() == pinned
+        if keep:
+            prefix.append((frame, ctx))
+    names = [d.name for line in recipe for d in Pipeline.compile(line).directives]
+    return PipelineResult(frame, ctx), names
+
+
 def execute(
     recipe: str | list[str],
     df: DataFrame,
-    limit: int = 100,
+    limit: int | None = 100,
     with_summary: bool = False,
+    prefix: Prefix | None = None,
 ) -> ExecutionResponse:
     """Run a recipe over a bounded sample and return values + inferred
     schema (the workspace 'execute' round-trip). The sample bound is
     applied BEFORE the recipe, like the service truncating the workspace
-    sample to ``sampling.limit``."""
+    sample to ``sampling.limit``; ``limit=None`` takes ``df`` itself as
+    the sample. ``prefix`` is a workspace's applied prefix over that
+    sample (see the module docstring): the call reads it and appends
+    the entries it applies."""
     from wrangler_spark.datapipe import checkpoint_scope
 
     # every value leaving this function is plain Python (rows, types,
@@ -49,28 +108,38 @@ def execute(
     # session runs storage-flat instead of accumulating dead blocks per
     # execute round-trip (the r7-measured session leak)
     with checkpoint_scope():
-        sample = df.limit(limit)
-        pipeline = Pipeline.compile(recipe)
-        result = pipeline.transform(sample)
+        result, names = _apply(recipe, df, limit, prefix)
         out = result.df
-        rows = [r.asDict(recursive=True) for r in out.collect()]
-        types = dict(out.dtypes)
         resp = ExecutionResponse(
-            values=rows,
-            types=types,
+            values=[r.asDict(recursive=True) for r in out.collect()],
+            types=dict(out.dtypes),
             headers=out.columns,
-            directives=[d.name for d in pipeline.directives],
-            error_count=result.errors().count() if result.ctx.error_frames else 0,
+            directives=names,
+            # collected frame by frame: over a driver-local sample each
+            # collect runs driver-side, where errors().count() (an
+            # aggregate over a union) runs two jobs
+            error_count=sum(len(e.df.select(F.lit(1)).collect()) for e in result.ctx.error_frames),
         )
         if with_summary:
-            resp.summary = basic_statistics(out)
+            # the sample is small: one partition needs no shuffle, so the
+            # summary is one job
+            resp.summary = basic_statistics(out.coalesce(1))
     return resp
 
 
-def schema(recipe: str | list[str], df: DataFrame, limit: int = 100) -> list[tuple[str, str]]:
-    """The /schema endpoint: output schema of the recipe on this input."""
-    out = Pipeline.compile(recipe).transform(df.limit(limit)).df
-    return [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
+def schema(
+    recipe: str | list[str],
+    df: DataFrame,
+    limit: int | None = 100,
+    prefix: Prefix | None = None,
+) -> list[tuple[str, str]]:
+    """The /schema endpoint: output schema of the recipe on this input
+    (``limit`` and ``prefix`` as for :func:`execute`)."""
+    from wrangler_spark.datapipe import checkpoint_scope
+
+    with checkpoint_scope():
+        result, _ = _apply(recipe, df, limit, prefix)
+        return [(f.name, f.dataType.simpleString()) for f in result.df.schema.fields]
 
 
 class Workspace:
@@ -82,15 +151,33 @@ class Workspace:
     export the final recipe for the production pipeline."""
 
     def __init__(self, name: str, df: DataFrame, limit: int = 100):
+        from wrangler_spark.datapipe._local import local_table
+
         self.name = name
-        self._sample = df.limit(limit)
+        self._source = df.limit(limit)
+        try:
+            self._sample = local_table(df.sparkSession, self._source.collect(), df.schema)
+        except PySparkNotImplementedError:
+            # a column type PySpark cannot bring to the driver (year-month
+            # and calendar intervals): the sample stays the lazy limit
+            self._sample = self._source
+        self._prefix: Prefix = []
         self.directives: list[str] = []
+
+    def _round_trip(self, call, directives: list[str], **kw):
+        """``call`` (:func:`execute` or :func:`schema`) of ``directives``
+        over the held sample and prefix; the extended prefix is kept only
+        when the call succeeds."""
+        prefix = self._prefix[:]
+        out = call(directives, self._sample, limit=None, prefix=prefix, **kw)
+        self._prefix = prefix
+        return out
 
     def add(self, *directive_lines: str) -> "ExecutionResponse":
         """Append directive(s); compile-check them against the sample
         before accepting (a bad directive is rejected atomically)."""
         candidate = self.directives + [ln for ln in directive_lines if ln.strip()]
-        resp = execute(candidate, self._sample, limit=2**31 - 1)
+        resp = self._round_trip(execute, candidate)
         self.directives = candidate
         return resp
 
@@ -100,13 +187,14 @@ class Workspace:
             return []
         dropped = self.directives[-n:]
         self.directives = self.directives[:-n]
+        del self._prefix[len(self.directives):]
         return dropped
 
     def execute(self, with_summary: bool = False) -> "ExecutionResponse":
-        return execute(self.directives, self._sample, limit=2**31 - 1, with_summary=with_summary)
+        return self._round_trip(execute, self.directives, with_summary=with_summary)
 
     def schema(self) -> list[tuple[str, str]]:
-        return schema(self.directives, self._sample)
+        return self._round_trip(schema, self.directives)
 
     def recipe(self) -> str:
         """The accumulated recipe text — what ships to the pipeline."""
@@ -121,7 +209,7 @@ class Workspace:
         Lazy — nothing executes."""
         from wrangler_spark.plans import audit
 
-        return audit(Pipeline.compile(self.recipe()).apply(self._sample))
+        return audit(Pipeline.compile(self.recipe()).apply(self._source))
 
     def estimate(self):
         """Catalyst's size/row estimate for the accumulated recipe
@@ -131,7 +219,7 @@ class Workspace:
         before anything runs. Lazy — nothing executes."""
         from wrangler_spark.plans import estimate
 
-        return estimate(Pipeline.compile(self.recipe()).apply(self._sample))
+        return estimate(Pipeline.compile(self.recipe()).apply(self._source))
 
     # --- persistence (the reference's wrangler-storage role: named
     # workspaces survive the session; here JSON + parquet on a local or
@@ -144,7 +232,8 @@ class Workspace:
         production input). Returns the workspace directory."""
         wdir = os.path.join(root, self.name)
         os.makedirs(wdir, exist_ok=True)
-        self._sample.write.mode("overwrite").parquet(os.path.join(wdir, "sample.parquet"))
+        # one file, so a reload reads the rows back in the held order
+        self._sample.coalesce(1).write.mode("overwrite").parquet(os.path.join(wdir, "sample.parquet"))
         meta = {"name": self.name, "directives": self.directives, "version": 1}
         with open(os.path.join(wdir, "workspace.json"), "w", encoding="utf-8") as f:
             json.dump(meta, f, indent=2)

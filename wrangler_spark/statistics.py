@@ -1,15 +1,15 @@
 """Column statistics — parity with the service's summary endpoint
 (``wrangler-core/.../statistics/BasicStatistics.java:40-83``): per-column
 null/empty/non-null fractions plus regex-typed fractions, computed as ONE
-aggregation job over the frame (map-side partial agg; no per-column scans).
+aggregation over the frame unpivoted to one row per (column index, value):
+the same ten averages whatever the frame's width, grouped by the column's
+index (so a name holding any character is its own key).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_SEP = "||"
 
 # type-detection regexes, mirroring the reference's ColumnTypeDetector set
 _TYPE_RES = {
@@ -24,36 +24,38 @@ _TYPE_RES = {
 }
 
 
+def _col(name: str):
+    """A column by its exact name (dots and backticks taken literally)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def basic_statistics(df: DataFrame) -> dict[str, dict[str, float]]:
     """{column: {'general.null': f, 'general.empty': f, 'general.non-null': f,
     'types.<t>': f, ...}} — fractions in [0,1] like the reference's
-    summary() response."""
-    aggs = []
-    for c in df.columns:
-        sc = F.col(c).cast("string")
-        aggs.append(F.avg(F.col(c).isNull().cast("double")).alias(f"{c}{_SEP}null"))
-        aggs.append(
-            F.avg((F.col(c).isNotNull() & (F.trim(sc) == "")).cast("double")).alias(
-                f"{c}{_SEP}empty"
-            )
-        )
-        for tname, pat in _TYPE_RES.items():
-            aggs.append(
-                F.avg(F.coalesce(sc.rlike(pat), F.lit(False)).cast("double")).alias(
-                    f"{c}{_SEP}t_{tname}"
-                )
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
+    summary() response; a type appears only when some value has it. Every
+    column is keyed, a zero-row frame's too (null and empty 0.0,
+    non-null 1.0)."""
+    cols = df.columns
+    if not cols:
+        return {}
+    cells = F.inline(F.array(*[
+        F.struct(F.lit(i).alias("i"), _col(c).isNull().alias("n"), _col(c).cast("string").alias("s"))
+        for i, c in enumerate(cols)
+    ]))
+    s = F.col("s")
+    aggs = [
+        F.avg(F.col("n").cast("double")).alias("null"),
+        F.avg((~F.col("n") & (F.trim(s) == "")).cast("double")).alias("empty"),
+        *(F.avg(F.coalesce(s.rlike(pat), F.lit(False)).cast("double")).alias(t)
+          for t, pat in _TYPE_RES.items()),
+    ]
+    found = {r["i"]: r for r in df.select(cells).groupBy("i").agg(*aggs).collect()}
     out: dict[str, dict[str, float]] = {}
-    for key, val in row.items():
-        col, stat = key.split(_SEP, 1)
-        d = out.setdefault(col, {})
-        if stat == "null":
-            d["general.null"] = val or 0.0
-        elif stat == "empty":
-            d["general.empty"] = val or 0.0
-        elif val and val > 0:
-            d[f"types.{stat[2:]}"] = val
-    for d in out.values():
-        d["general.non-null"] = 1.0 - d.get("general.null", 0.0)
+    for i, c in enumerate(cols):
+        r = found.get(i)
+        d = out[c] = {"general.null": r["null"] if r else 0.0, "general.empty": r["empty"] if r else 0.0}
+        for t in _TYPE_RES:
+            if r and r[t]:
+                d[f"types.{t}"] = r[t]
+        d["general.non-null"] = 1.0 - d["general.null"]
     return out
