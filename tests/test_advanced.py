@@ -76,9 +76,14 @@ def test_stemming_directive(spark):
 
 def test_stemming_array_column_stems_each_token(spark):
     # Arrow hands the UDF an array column's values as numpy arrays
-    df = spark.createDataFrame([(["running", "cats"],), (None,)], "t array<string>")
+    df = spark.createDataFrame([(["running", "cats"],), (["jumping", None],), (None,)], "t array<string>")
     out = Pipeline.compile("stemming :t").apply(df).collect()
-    assert [r["t_porter"] for r in out] == [["run", "cat"], None]
+    assert [r["t_porter"] for r in out] == [["run", "cat"], ["jump", None], None]
+
+
+def test_stemming_non_string_array_stems_the_tokens_as_strings(spark):
+    df = spark.createDataFrame([([12, None],)], "t array<int>")
+    assert Pipeline.compile("stemming :t").apply(df).first()["t_porter"] == ["12", None]
 
 
 @pytest.fixture(scope="module")

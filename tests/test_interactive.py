@@ -1,5 +1,9 @@
 """Interactive layer + user-defined directive (UDD) registration."""
 
+import os
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from wrangler_spark import Pipeline, directive
@@ -247,12 +251,72 @@ def test_checkpointing_directive_ends_the_reusable_prefix(spark, tmp_path):
     assert live_count() == pinned and persistent_rdd_ids(spark) == held
 
 
+@pytest.fixture
+def off_utc_driver():
+    """The driver process's local zone set off UTC (the session's zone
+    stays UTC): PySpark collects a timestamp as a naive datetime in that
+    zone, so a sample that took a trip through Python values would come
+    back shifted by the offset."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def test_workspace_sample_keeps_every_column_type(spark, jobs, off_utc_driver):
+    from wrangler_spark.interactive import Workspace
+
+    source = spark.sql("""
+        SELECT id,
+               timestamp_seconds(id * 3456000 + 3600) AS ts,
+               CAST(timestamp_seconds(id * 3456000 + 3600) AS TIMESTAMP_NTZ) AS ntz,
+               to_date(timestamp_seconds(id * 3456000)) AS d,
+               CAST(id / 7 AS DECIMAL(20, 6)) AS dec,
+               CAST(CAST(id AS STRING) AS BINARY) AS bin,
+               named_struct('a', id, 'b', IF(id % 2 = 0, NULL, 'x')) AS st,
+               map('k', id) AS m,
+               array(id, NULL) AS arr
+        FROM range(6)""")
+    ws = Workspace("types", source, limit=4)
+    steps = ["set-column :n exp:{ id + 1 }", "rename :dec amount", "drop :bin"]
+    for k, step in enumerate(steps, 1):
+        if k == 1:
+            got = ws.add(step)
+        else:
+            assert jobs(lambda: ws.add(step)) == 0, step
+            got = ws.execute()
+        _same_response(got, execute(steps[:k], source, limit=4))
+    assert got.values[1]["ts"].hour == 20  # 01:00 UTC, collected in New York time
+
+
 def test_workspace_over_a_column_the_driver_cannot_collect(spark):
     from wrangler_spark.interactive import Workspace
 
     df = spark.sql("SELECT id, make_ym_interval(1, CAST(id AS INT)) AS span FROM range(3)")
     ws = Workspace("ym", df)
     assert [r["id"] for r in ws.add("drop :span").values] == [0, 1, 2]
+
+
+def test_a_stale_prefix_is_cut_to_the_matching_lines(spark):
+    """A prefix handed to execute only serves the lines it was built from:
+    a changed recipe, string or list, or another sample, is applied anew."""
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "s string, n int")
+    prefix = []
+    assert [r["s"] for r in execute("uppercase :s", df, limit=None, prefix=prefix).values] == ["A", "B"]
+    resp = execute("set-column :n exp:{ n * 10 }", df, limit=None, prefix=prefix)
+    assert [(r["s"], r["n"]) for r in resp.values] == [("a", 10), ("b", 20)]
+    resp = execute(["set-column :n exp:{ n * 10 }", "uppercase :s"], df, limit=None, prefix=prefix)
+    assert [(r["s"], r["n"]) for r in resp.values] == [("A", 10), ("B", 20)]
+    assert len(prefix) == 2
+    other = spark.createDataFrame([("c", 3)], "s string, n int")
+    resp = execute(["set-column :n exp:{ n * 10 }"], other, limit=None, prefix=prefix)
+    assert [(r["s"], r["n"]) for r in resp.values] == [("c", 30)]
+    assert len(prefix) == 1
 
 
 def test_workspace_save_load_keeps_row_order(spark, tmp_path):

@@ -30,6 +30,13 @@ A list of column names instead of a schema lets Arrow infer the types
 from the values (str → string, int → long, float → double, ``None``
 cells kept as nulls of the column's type), as the plain
 ``createDataFrame(rows, names)`` inference does.
+
+``local_copy`` is the same LocalRelation for the rows of an existing
+frame: they are collected on the JVM and never become Python values, so
+every column type is kept exactly. A trip through Python would not: a
+timestamp collects as a naive datetime in the driver's local zone, which
+the Arrow path then reads in the session zone (UTC), shifting it by the
+host's offset; interval columns do not collect to Python at all.
 """
 
 from __future__ import annotations
@@ -63,3 +70,12 @@ def local_table(spark, rows, schema) -> DataFrame:
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields], dtype=object)
     return spark.createDataFrame(pdf, schema=st)
+
+
+def local_copy(df: DataFrame) -> DataFrame:
+    """``df``'s rows, collected once (one job) into a LocalRelation with
+    ``df``'s schema. Bound ``df`` first (``limit``): every row is held on
+    the driver."""
+    jdf = df._jdf
+    return DataFrame(df.sparkSession._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()),
+                     df.sparkSession)

@@ -44,13 +44,14 @@ class Stemming(Directive):
         col = ctx.resolve(df, self.args["column"])
 
         def stem(v):
-            # an array column arrives as a numpy array, not a list
+            # an array column arrives as a numpy array, not a list; a null
+            # token stays null in its place
             toks = v.split() if isinstance(v, str) else v
-            return [porter_stem(t) for t in toks]
+            return [None if t is None else porter_stem(t) for t in toks]
 
         stem_tokens = value_udf(stem, T.ArrayType(StringType()))
         dt = dict(df.dtypes)[col]
-        src = F.col(col) if dt.startswith("array") else F.col(col).cast("string")
+        src = F.col(col).cast("array<string>" if dt.startswith("array") else "string")
         return df.withColumn(f"{col}_porter", stem_tokens(src))
 
 

@@ -7,18 +7,23 @@ A :class:`Workspace` round-trip (add, undo, execute, schema) runs no
 Spark job on a plain recipe (a summary runs one):
 
 - **The sample is collected once**, when the workspace is built, and held
-  as a driver-local table (``datapipe._local.local_table``, planned as a
-  ``LocalTableScan``). Every call reads the same rows and passes this
-  frame object itself, so a collect over it runs driver-side, and the
-  per-frame compile-time samples (parse-as-csv's arity, parse-as-json's
-  schema) are taken on the first call only. ``plan()`` and
-  ``estimate()`` still audit the lazy ``df.limit(limit)`` over the real
-  source scan, whose pushdowns a local table would hide.
-- **The applied prefix is kept**: one ``(frame, CompileContext)`` entry
-  per applied directive line. ``add`` applies only its new lines on top
-  of the last entry, each with a fork of the entry's context (error
-  frames, fail checks, variables, observations); ``undo`` pops entries;
-  ``load`` starts empty and the next call rebuilds it.
+  as a driver-local table (``datapipe._local.local_copy``, planned as a
+  ``LocalTableScan``; the rows are copied on the JVM, so every column
+  type keeps its exact values). Every call reads the same rows and
+  passes this frame object itself, so a collect over it runs
+  driver-side, and the per-frame compile-time samples (parse-as-csv's
+  arity, parse-as-json's schema) are taken on the first call only.
+  ``plan()`` and ``estimate()`` still audit the lazy ``df.limit(limit)``
+  over the real source scan, whose pushdowns a local table would hide.
+- **The applied prefix is kept**: one ``(line, input frame, output
+  frame, CompileContext)`` entry per applied directive line. A call
+  reuses the entries that match its recipe line for line over the same
+  sample and drops the rest, then applies the remaining lines, each
+  with a fork of the previous entry's context (error frames, fail
+  checks, variables, observations). So ``add`` applies only its new
+  lines, and after ``undo`` or ``load`` the next call cuts or rebuilds
+  the prefix. A stateless :func:`execute` runs the same loop on an empty
+  prefix of its own.
 - **A checkpoint ends the reusable prefix.** Every round-trip runs in
   ``checkpoint_scope``, which releases on exit the localCheckpoints the
   call pinned; a frame built over one cannot be read again. A line
@@ -35,7 +40,6 @@ import shutil
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,8 +47,9 @@ from wrangler_spark.context import CompileContext
 from wrangler_spark.pipeline import Pipeline, PipelineResult
 from wrangler_spark.statistics import basic_statistics
 
-# one entry per applied directive line: the frame after it and its context
-Prefix = list[tuple[DataFrame, CompileContext]]
+# one entry per applied directive line: the line, the frame it was
+# applied to, the frame after it and its context
+Prefix = list[tuple[str, DataFrame, DataFrame, CompileContext]]
 
 
 @dataclass
@@ -61,28 +66,31 @@ class ExecutionResponse:
 
 
 def _apply(recipe, df: DataFrame, limit: int | None, prefix: Prefix | None) -> tuple[PipelineResult, list[str]]:
-    """``recipe`` over the sample (``df.limit(limit)``, or ``df`` itself
-    when ``limit`` is None) and the names of its directives. With a
-    ``prefix`` (``recipe`` is then a list of lines, the first
-    ``len(prefix)`` of them already applied), only the lines past it are
-    applied, and their entries are appended up to the first line that
-    pins a checkpoint."""
+    """``recipe`` (a string, or a list of directive lines) over the sample
+    (``df.limit(limit)``, or ``df`` itself when ``limit`` is None) and the
+    names of its directives. ``prefix`` is cut to the entries that match
+    the recipe's first lines over this sample; the lines past them are
+    applied, and their entries appended up to the first line that pins a
+    checkpoint."""
     from wrangler_spark.datapipe import scope_count
 
-    sample = df if limit is None else df.limit(limit)
-    if prefix is None:
-        pipeline = Pipeline.compile(recipe)
-        return pipeline.transform(sample), [d.name for d in pipeline.directives]
-    frame, ctx = prefix[-1] if prefix else (sample, CompileContext())
+    lines = [recipe] if isinstance(recipe, str) else list(recipe)
+    prefix = [] if prefix is None else prefix
+    frame, ctx, n = df if limit is None else df.limit(limit), CompileContext(), 0
+    for line, src, out, out_ctx in prefix:
+        if n == len(lines) or line != lines[n] or src is not frame:
+            break
+        frame, ctx, n = out, out_ctx, n + 1
+    del prefix[n:]
     keep = True
-    for line in recipe[len(prefix):]:
-        ctx = ctx.fork()
+    for line in lines[n:]:
+        src, ctx = frame, ctx.fork()
         pinned = scope_count()
         frame = Pipeline.compile(line).transform(frame, ctx).df
         keep = keep and scope_count() == pinned
         if keep:
-            prefix.append((frame, ctx))
-    names = [d.name for line in recipe for d in Pipeline.compile(line).directives]
+            prefix.append((line, src, frame, ctx))
+    names = [d.name for line in lines for d in Pipeline.compile(line).directives]
     return PipelineResult(frame, ctx), names
 
 
@@ -97,9 +105,9 @@ def execute(
     schema (the workspace 'execute' round-trip). The sample bound is
     applied BEFORE the recipe, like the service truncating the workspace
     sample to ``sampling.limit``; ``limit=None`` takes ``df`` itself as
-    the sample. ``prefix`` is a workspace's applied prefix over that
-    sample (see the module docstring): the call reads it and appends
-    the entries it applies."""
+    the sample. ``prefix`` is a workspace's applied prefix (see the
+    module docstring), which the call cuts and extends in place; without
+    one the call starts from an empty prefix of its own."""
     from wrangler_spark.datapipe import checkpoint_scope
 
     # every value leaving this function is plain Python (rows, types,
@@ -151,33 +159,19 @@ class Workspace:
     export the final recipe for the production pipeline."""
 
     def __init__(self, name: str, df: DataFrame, limit: int = 100):
-        from wrangler_spark.datapipe._local import local_table
+        from wrangler_spark.datapipe._local import local_copy
 
         self.name = name
         self._source = df.limit(limit)
-        try:
-            self._sample = local_table(df.sparkSession, self._source.collect(), df.schema)
-        except PySparkNotImplementedError:
-            # a column type PySpark cannot bring to the driver (year-month
-            # and calendar intervals): the sample stays the lazy limit
-            self._sample = self._source
+        self._sample = local_copy(self._source)
         self._prefix: Prefix = []
         self.directives: list[str] = []
-
-    def _round_trip(self, call, directives: list[str], **kw):
-        """``call`` (:func:`execute` or :func:`schema`) of ``directives``
-        over the held sample and prefix; the extended prefix is kept only
-        when the call succeeds."""
-        prefix = self._prefix[:]
-        out = call(directives, self._sample, limit=None, prefix=prefix, **kw)
-        self._prefix = prefix
-        return out
 
     def add(self, *directive_lines: str) -> "ExecutionResponse":
         """Append directive(s); compile-check them against the sample
         before accepting (a bad directive is rejected atomically)."""
         candidate = self.directives + [ln for ln in directive_lines if ln.strip()]
-        resp = self._round_trip(execute, candidate)
+        resp = execute(candidate, self._sample, limit=None, prefix=self._prefix)
         self.directives = candidate
         return resp
 
@@ -187,14 +181,14 @@ class Workspace:
             return []
         dropped = self.directives[-n:]
         self.directives = self.directives[:-n]
-        del self._prefix[len(self.directives):]
         return dropped
 
     def execute(self, with_summary: bool = False) -> "ExecutionResponse":
-        return self._round_trip(execute, self.directives, with_summary=with_summary)
+        return execute(self.directives, self._sample, limit=None, with_summary=with_summary,
+                       prefix=self._prefix)
 
     def schema(self) -> list[tuple[str, str]]:
-        return self._round_trip(schema, self.directives)
+        return schema(self.directives, self._sample, limit=None, prefix=self._prefix)
 
     def recipe(self) -> str:
         """The accumulated recipe text — what ships to the pipeline."""
