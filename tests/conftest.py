@@ -1,3 +1,6 @@
+import os
+import time
+
 import pytest
 
 from wrangler_spark.session import get_spark
@@ -22,3 +25,20 @@ def jobs(spark):
         return int(dag.nextJobId()) - lo
 
     return count
+
+
+@pytest.fixture
+def off_utc_driver():
+    """The driver process's local zone set off UTC (the session's zone
+    stays UTC): PySpark collects a timestamp as a naive datetime in that
+    zone, so a sample that took a trip through Python values would come
+    back shifted by the offset."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()

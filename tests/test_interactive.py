@@ -1,9 +1,5 @@
 """Interactive layer + user-defined directive (UDD) registration."""
 
-import os
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from wrangler_spark import Pipeline, directive
@@ -210,6 +206,56 @@ def test_workspace_add_runs_no_spark_job_after_the_first_call(spark, jobs, tmp_p
     assert jobs(lambda: ws.add("send-to-error exp:{ total > 80 } 'big'")) == 0
 
 
+def test_workspace_summary_runs_no_spark_job(spark, jobs, tmp_path):
+    """The summary's flag projection folds into the held local table:
+    counted on the driver, equal to a stateless execute's summary."""
+    from wrangler_spark.interactive import Workspace
+
+    source = _body_source(spark, tmp_path)
+    ws = Workspace("summary", source, limit=30)
+    for step in _STEPS:
+        ws.add(step)
+    got = []
+    assert jobs(lambda: got.append(ws.execute(with_summary=True))) == 0
+    fresh = execute(_STEPS, source, limit=30, with_summary=True)
+    _same_response(got[0], fresh)
+    assert got[0].summary == fresh.summary
+    assert got[0].summary["total"]["types.integer"] == 1.0
+
+
+def test_summary_over_a_frame_that_does_not_fold(spark, jobs, tmp_path):
+    """Over a parquet scan, or past mask-shuffle's pandas UDF, the flag
+    projection runs as a Spark job; its counts equal those over a local
+    copy of the same rows, where it folds into the local table."""
+    from wrangler_spark.datapipe._local import local_copy
+    from wrangler_spark.statistics import basic_statistics
+
+    source = _body_source(spark, tmp_path)
+    shuffled = Pipeline.compile("\n".join(_STEPS[:3] + ["mask-shuffle :body_2"])) \
+        .transform(local_copy(source.limit(30))).df
+    for frame in (source, shuffled):
+        got = []
+        assert jobs(lambda: got.append(basic_statistics(frame))) >= 1
+        copy = local_copy(frame)
+        assert jobs(lambda: got.append(basic_statistics(copy))) == 0
+        assert got[0] == got[1]
+
+
+def test_stateless_execute_holds_its_sample(spark, jobs, tmp_path):
+    """A stateless execute copies ``df.limit(limit)`` into a local table
+    (one job) and runs the recipe, its compile-time samples and its
+    summary over that copy; a stateless schema stays on the lazy limit,
+    where a recipe with no compile-time sample reads no rows."""
+    source = _body_source(spark, tmp_path)
+    first = execute(_STEPS, source, limit=30, with_summary=True)
+    for _ in range(3):
+        got = []
+        assert jobs(lambda: got.append(execute(_STEPS, source, limit=30, with_summary=True))) == 1
+        _same_response(got[0], first)
+        assert got[0].summary == first.summary
+    assert jobs(lambda: schema("uppercase :body", source, limit=30)) == 0
+
+
 def test_incremental_workspace_equals_a_fresh_execute(spark, tmp_path):
     """After every add and after an undo, the workspace's response (prefix
     reuse, ctx forks) is the response of executing the whole recipe anew
@@ -249,23 +295,6 @@ def test_checkpointing_directive_ends_the_reusable_prefix(spark, tmp_path):
     assert [r["is_dup"] for r in resp.values] == [r["is_dup"] for r in first.values]
     assert ws.execute().values == resp.values
     assert live_count() == pinned and persistent_rdd_ids(spark) == held
-
-
-@pytest.fixture
-def off_utc_driver():
-    """The driver process's local zone set off UTC (the session's zone
-    stays UTC): PySpark collects a timestamp as a naive datetime in that
-    zone, so a sample that took a trip through Python values would come
-    back shifted by the offset."""
-    old = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"
-    time.tzset()
-    yield
-    if old is None:
-        del os.environ["TZ"]
-    else:
-        os.environ["TZ"] = old
-    time.tzset()
 
 
 def test_workspace_sample_keeps_every_column_type(spark, jobs, off_utc_driver):

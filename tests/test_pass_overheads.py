@@ -63,6 +63,22 @@ def test_local_table_empty_rows_keep_the_schema(spark):
     assert _executed(t).startswith("LocalTableScan <empty>")
 
 
+def test_local_table_reads_naive_datetimes_in_the_driver_zone(spark, off_utc_driver):
+    """collect -> local_table -> collect gives the same rows off UTC: a
+    naive timestamp (a column, an array element, a struct field, a map
+    value) is driver-local time, a timestamp_ntz is wall-clock time."""
+    df = spark.sql("""
+        SELECT timestamp_seconds(3600) AS ts,
+               CAST(timestamp_seconds(3600) AS TIMESTAMP_NTZ) AS ntz,
+               array(timestamp_seconds(7200), NULL) AS arr,
+               named_struct('t', timestamp_seconds(3600), 'n', 1) AS st,
+               map('k', timestamp_seconds(3600)) AS m""")
+    rows = df.collect()
+    assert rows[0].ts.hour == 20  # 01:00 UTC, collected in New York time
+    assert local_table(spark, rows, df.schema).collect() == rows
+    assert local_table(spark, [(r.ts,) for r in rows], ["ts"]).collect() == [(r.ts,) for r in rows]
+
+
 def _payloads(spark, path, payloads):
     spark.createDataFrame([(p,) for p in payloads], "body binary").write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

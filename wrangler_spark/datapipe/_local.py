@@ -31,19 +31,28 @@ from the values (str → string, int → long, float → double, ``None``
 cells kept as nulls of the column's type), as the plain
 ``createDataFrame(rows, names)`` inference does.
 
+A naive ``datetime`` cell means the driver's local time, as it does in
+``createDataFrame(rows, schema)`` and as PySpark's ``collect`` hands
+timestamps out; the Arrow path alone would read it in the session zone
+(UTC) and shift it by the host's offset. So ``local_table`` makes naive
+datetimes aware in the driver's zone first, wherever a (session-zone)
+timestamp sits in the schema: a column, an array element, a struct
+field or a map value. ``timestamp_ntz`` cells are wall-clock values and
+are passed as they are.
+
 ``local_copy`` is the same LocalRelation for the rows of an existing
 frame: they are collected on the JVM and never become Python values, so
-every column type is kept exactly. A trip through Python would not: a
-timestamp collects as a naive datetime in the driver's local zone, which
-the Arrow path then reads in the session zone (UTC), shifting it by the
-host's offset; interval columns do not collect to Python at all.
+every column type is kept exactly (interval columns do not collect to
+Python at all).
 """
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
 
 
 def empty_table(spark, schema) -> DataFrame:
@@ -52,6 +61,42 @@ def empty_table(spark, schema) -> DataFrame:
     literal false by an empty LocalRelation, so no parallelized Python RDD
     is ever scanned."""
     return spark.createDataFrame([], schema).where(F.lit(False))
+
+
+def _local_time(v):
+    """A naive datetime read in the driver's local zone (made aware)."""
+    return v.astimezone() if isinstance(v, datetime) and v.tzinfo is None else v
+
+
+def _local_times(dt):
+    """The function that applies :func:`_local_time` to every timestamp in
+    a non-null cell of type ``dt``, or None when ``dt`` holds none."""
+    if isinstance(dt, TimestampType):
+        return _local_time
+    if isinstance(dt, ArrayType):
+        f = _local_times(dt.elementType)
+        return f and (lambda v: [None if x is None else f(x) for x in v])
+    if isinstance(dt, MapType):
+        f = _local_times(dt.valueType)
+        return f and (lambda v: {k: None if x is None else f(x) for k, x in v.items()})
+    if isinstance(dt, StructType):
+        return _row_local_times(dt.fields)
+    return None
+
+
+def _row_local_times(fields):
+    """:func:`_local_times` for a struct (a row) of ``fields``: a tuple in
+    field order, from a tuple or a dict by field name."""
+    fs = [_local_times(f.dataType) for f in fields]
+    if not any(fs):
+        return None
+    names = [f.name for f in fields]
+
+    def convert(v):
+        vals = [v.get(n) for n in names] if isinstance(v, dict) else v
+        return tuple(x if f is None or x is None else f(x) for f, x in zip(fs, vals))
+
+    return convert
 
 
 def local_table(spark, rows, schema) -> DataFrame:
@@ -66,8 +111,13 @@ def local_table(spark, rows, schema) -> DataFrame:
     import pandas as pd
 
     if isinstance(schema, list):
+        # inferred like createDataFrame(rows, names): a datetime is a timestamp
+        rows = [tuple(_local_time(v) for v in r) for r in rows]
         return spark.createDataFrame(pd.DataFrame(rows, columns=schema, dtype=object))
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    convert = _row_local_times(st.fields)
+    if convert:
+        rows = [convert(r) for r in rows]
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields], dtype=object)
     return spark.createDataFrame(pdf, schema=st)
 

@@ -4,7 +4,9 @@ DirectivesHandler.java:555-595``, ``AbstractDirectiveHandler.java:103-211``)
 as plain functions: same compiler, applied to a sample, no HTTP.
 
 A :class:`Workspace` round-trip (add, undo, execute, schema) runs no
-Spark job on a plain recipe (a summary runs one):
+Spark job on a plain recipe, nor does its summary
+(``statistics.basic_statistics``: one projection over the held sample,
+which the optimizer folds into the local table, counted on the driver):
 
 - **The sample is collected once**, when the workspace is built, and held
   as a driver-local table (``datapipe._local.local_copy``, planned as a
@@ -22,8 +24,11 @@ Spark job on a plain recipe (a summary runs one):
   with a fork of the previous entry's context (error frames, fail
   checks, variables, observations). So ``add`` applies only its new
   lines, and after ``undo`` or ``load`` the next call cuts or rebuilds
-  the prefix. A stateless :func:`execute` runs the same loop on an empty
-  prefix of its own.
+  the prefix. A stateless :func:`execute` copies its sample the same
+  way (``local_copy(df.limit(limit))``: one job per call) and runs the
+  same loop on an empty prefix of its own; a stateless :func:`schema`
+  reads the lazy ``df.limit(limit)``, where a recipe with no
+  compile-time sample runs no job at all.
 - **A checkpoint ends the reusable prefix.** Every round-trip runs in
   ``checkpoint_scope``, which releases on exit the localCheckpoints the
   call pinned; a frame built over one cannot be read again. A line
@@ -65,18 +70,17 @@ class ExecutionResponse:
     summary: dict[str, dict[str, float]] = field(default_factory=dict)
 
 
-def _apply(recipe, df: DataFrame, limit: int | None, prefix: Prefix | None) -> tuple[PipelineResult, list[str]]:
-    """``recipe`` (a string, or a list of directive lines) over the sample
-    (``df.limit(limit)``, or ``df`` itself when ``limit`` is None) and the
-    names of its directives. ``prefix`` is cut to the entries that match
-    the recipe's first lines over this sample; the lines past them are
-    applied, and their entries appended up to the first line that pins a
-    checkpoint."""
+def _apply(recipe, sample: DataFrame, prefix: Prefix | None) -> tuple[PipelineResult, list[str]]:
+    """``recipe`` (a string, or a list of directive lines) over ``sample``
+    and the names of its directives. ``prefix`` is cut to the entries
+    that match the recipe's first lines over this sample; the lines past
+    them are applied, and their entries appended up to the first line
+    that pins a checkpoint."""
     from wrangler_spark.datapipe import scope_count
 
     lines = [recipe] if isinstance(recipe, str) else list(recipe)
     prefix = [] if prefix is None else prefix
-    frame, ctx, n = df if limit is None else df.limit(limit), CompileContext(), 0
+    frame, ctx, n = sample, CompileContext(), 0
     for line, src, out, out_ctx in prefix:
         if n == len(lines) or line != lines[n] or src is not frame:
             break
@@ -104,11 +108,13 @@ def execute(
     """Run a recipe over a bounded sample and return values + inferred
     schema (the workspace 'execute' round-trip). The sample bound is
     applied BEFORE the recipe, like the service truncating the workspace
-    sample to ``sampling.limit``; ``limit=None`` takes ``df`` itself as
-    the sample. ``prefix`` is a workspace's applied prefix (see the
-    module docstring), which the call cuts and extends in place; without
-    one the call starts from an empty prefix of its own."""
+    sample to ``sampling.limit``, and the bounded rows are copied into a
+    driver-local table; ``limit=None`` takes ``df`` itself as the sample.
+    ``prefix`` is a workspace's applied prefix (see the module
+    docstring), which the call cuts and extends in place; without one
+    the call starts from an empty prefix of its own."""
     from wrangler_spark.datapipe import checkpoint_scope
+    from wrangler_spark.datapipe._local import local_copy
 
     # every value leaving this function is plain Python (rows, types,
     # counts), so the scope releases any localCheckpoint an operator
@@ -116,7 +122,7 @@ def execute(
     # session runs storage-flat instead of accumulating dead blocks per
     # execute round-trip (the r7-measured session leak)
     with checkpoint_scope():
-        result, names = _apply(recipe, df, limit, prefix)
+        result, names = _apply(recipe, df if limit is None else local_copy(df.limit(limit)), prefix)
         out = result.df
         resp = ExecutionResponse(
             values=[r.asDict(recursive=True) for r in out.collect()],
@@ -129,9 +135,7 @@ def execute(
             error_count=sum(len(e.df.select(F.lit(1)).collect()) for e in result.ctx.error_frames),
         )
         if with_summary:
-            # the sample is small: one partition needs no shuffle, so the
-            # summary is one job
-            resp.summary = basic_statistics(out.coalesce(1))
+            resp.summary = basic_statistics(out)
     return resp
 
 
@@ -142,11 +146,13 @@ def schema(
     prefix: Prefix | None = None,
 ) -> list[tuple[str, str]]:
     """The /schema endpoint: output schema of the recipe on this input
-    (``limit`` and ``prefix`` as for :func:`execute`)."""
+    (``limit`` and ``prefix`` as for :func:`execute`, but the bounded
+    sample stays the lazy ``df.limit(limit)``: a schema reads no rows
+    unless a directive samples at compile time)."""
     from wrangler_spark.datapipe import checkpoint_scope
 
     with checkpoint_scope():
-        result, _ = _apply(recipe, df, limit, prefix)
+        result, _ = _apply(recipe, df if limit is None else df.limit(limit), prefix)
         return [(f.name, f.dataType.simpleString()) for f in result.df.schema.fields]
 
 
