@@ -44,7 +44,8 @@ def basic_statistics(df: DataFrame) -> dict[str, dict[str, float]]:
     'types.<t>': f, ...}} — fractions in [0,1] like the reference's
     summary() response; a type appears only when some value has it. Every
     column is keyed, a zero-row frame's too (null and empty 0.0,
-    non-null 1.0). ``df`` must be bounded: its flags are collected."""
+    non-null 1.0). Bound ``df`` first (a design sample, or ``limit``):
+    every row's flags are collected to the driver."""
     cols = df.columns
     if not cols:
         return {}
@@ -52,13 +53,8 @@ def basic_statistics(df: DataFrame) -> dict[str, dict[str, float]]:
     rows = [r[0] for r in df.selectExpr(f"transform(array({cells}), s -> {_FLAGS})").collect()]
     n = len(rows)
     out: dict[str, dict[str, float]] = {}
-    for i, c in enumerate(cols):
-        counts = [0] * (2 + len(_TYPE_RES))
-        for r in rows:
-            bits = r[i]
-            for b in range(len(counts)):
-                counts[b] += bits >> b & 1
-        null, empty, *types = (k / n if n else 0.0 for k in counts)
+    for c, masks in zip(cols, zip(*rows) if rows else [()] * len(cols)):
+        null, empty, *types = (sum(m >> b & 1 for m in masks) / max(n, 1) for b in range(2 + len(_TYPE_RES)))
         d = out[c] = {"general.null": null, "general.empty": empty}
         for t, f in zip(_TYPE_RES, types):
             if f:
