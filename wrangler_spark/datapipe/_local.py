@@ -70,7 +70,8 @@ def _local_time(v):
 
 def _local_times(dt):
     """The function that applies :func:`_local_time` to every timestamp in
-    a non-null cell of type ``dt``, or None when ``dt`` holds none."""
+    a non-null cell of type ``dt`` (a struct, or a row, as a tuple in
+    field order), or None when ``dt`` holds none."""
     if isinstance(dt, TimestampType):
         return _local_time
     if isinstance(dt, ArrayType):
@@ -80,23 +81,10 @@ def _local_times(dt):
         f = _local_times(dt.valueType)
         return f and (lambda v: {k: None if x is None else f(x) for k, x in v.items()})
     if isinstance(dt, StructType):
-        return _row_local_times(dt.fields)
+        fs = [_local_times(f.dataType) for f in dt.fields]
+        if any(fs):
+            return lambda v: tuple(x if f is None or x is None else f(x) for f, x in zip(fs, v))
     return None
-
-
-def _row_local_times(fields):
-    """:func:`_local_times` for a struct (a row) of ``fields``: a tuple in
-    field order, from a tuple or a dict by field name."""
-    fs = [_local_times(f.dataType) for f in fields]
-    if not any(fs):
-        return None
-    names = [f.name for f in fields]
-
-    def convert(v):
-        vals = [v.get(n) for n in names] if isinstance(v, dict) else v
-        return tuple(x if f is None or x is None else f(x) for f, x in zip(fs, vals))
-
-    return convert
 
 
 def local_table(spark, rows, schema) -> DataFrame:
@@ -115,7 +103,7 @@ def local_table(spark, rows, schema) -> DataFrame:
         rows = [tuple(_local_time(v) for v in r) for r in rows]
         return spark.createDataFrame(pd.DataFrame(rows, columns=schema, dtype=object))
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    convert = _row_local_times(st.fields)
+    convert = _local_times(st)
     if convert:
         rows = [convert(r) for r in rows]
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields], dtype=object)
