@@ -203,24 +203,8 @@ def test_workspace_add_runs_no_spark_job_after_the_first_call(spark, jobs, tmp_p
     assert jobs(ws.schema) == 0
     assert jobs(ws.undo) == 0
     assert jobs(ws.execute) == 0
+    assert jobs(lambda: ws.execute(with_summary=True)) == 0
     assert jobs(lambda: ws.add("send-to-error exp:{ total > 80 } 'big'")) == 0
-
-
-def test_workspace_summary_runs_no_spark_job(spark, jobs, tmp_path):
-    """The summary's flag projection folds into the held local table:
-    counted on the driver, equal to a stateless execute's summary."""
-    from wrangler_spark.interactive import Workspace
-
-    source = _body_source(spark, tmp_path)
-    ws = Workspace("summary", source, limit=30)
-    for step in _STEPS:
-        ws.add(step)
-    got = []
-    assert jobs(lambda: got.append(ws.execute(with_summary=True))) == 0
-    fresh = execute(_STEPS, source, limit=30, with_summary=True)
-    _same_response(got[0], fresh)
-    assert got[0].summary == fresh.summary
-    assert got[0].summary["total"]["types.integer"] == 1.0
 
 
 def test_summary_over_a_frame_that_does_not_fold(spark, jobs, tmp_path):
@@ -270,6 +254,7 @@ def test_incremental_workspace_equals_a_fresh_execute(spark, tmp_path):
         got = ws.add(step)
         _same_response(got, execute(ws.directives, source, limit=30))
     assert got.error_count > 0
+    assert ws.execute(with_summary=True).summary == execute(steps, source, limit=30, with_summary=True).summary
     assert ws.undo(2) == steps[-2:]
     _same_response(ws.execute(), execute(steps[:-2], source, limit=30))
     _same_response(ws.add(steps[-1]), execute(steps[:-2] + steps[-1:], source, limit=30))

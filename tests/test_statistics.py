@@ -95,3 +95,13 @@ def test_basic_statistics_zero_rows_of_every_column_type(spark):
     got = basic_statistics(_typed_frame(spark).where("false"))
     assert got == {c: {"general.null": 0.0, "general.empty": 0.0, "general.non-null": 1.0}
                    for c in TYPED_GOLDEN}
+
+
+def test_basic_statistics_under_verbatim_string_literals(spark):
+    # the type patterns reach RLIKE with their backslashes whichever way
+    # the SQL parser reads string literals
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        assert basic_statistics(spark.createDataFrame(_ROWS, _DDL)) == GOLDEN
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")

@@ -34,10 +34,17 @@ _TYPE_RES = {
     "url": r"^(https?|ftp)://[^\s/$.?#].[^\s]*$",
 }
 
-# bit 0: null, bit 1: empty, bit 2 + k: the k-th _TYPE_RES pattern
-_FLAGS = "IF(s IS NULL, 1, IF(trim(s) = '', 2, 0) | {})".format(" | ".join(
-    "IF(s RLIKE '{}', {}, 0)".format(pat.replace("\\", "\\\\").replace("'", "\\'"), 4 << k)
-    for k, pat in enumerate(_TYPE_RES.values())))
+def _flags(verbatim: bool) -> str:
+    """The SQL lambda body of one cell's bitmask: bit 0 null, bit 1
+    empty, bit 2 + k the k-th ``_TYPE_RES`` pattern. ``verbatim``: the
+    parser takes string literals as written
+    (``spark.sql.parser.escapedStringLiterals``), so a backslash is not
+    doubled."""
+    def lit(pat):
+        return pat if verbatim else pat.replace("\\", "\\\\")
+
+    return "IF(s IS NULL, 1, IF(trim(s) = '', 2, 0) | {})".format(" | ".join(
+        f"IF(s RLIKE '{lit(pat)}', {4 << k}, 0)" for k, pat in enumerate(_TYPE_RES.values())))
 
 
 def basic_statistics(df: DataFrame) -> dict[str, dict[str, float]]:
@@ -51,7 +58,8 @@ def basic_statistics(df: DataFrame) -> dict[str, dict[str, float]]:
     if not cols:
         return {}
     cells = ", ".join("CAST(`{}` AS STRING)".format(c.replace("`", "``")) for c in cols)
-    rows = [r[0] for r in df.selectExpr(f"transform(array({cells}), s -> {_FLAGS})").collect()]
+    verbatim = df.sparkSession.conf.get("spark.sql.parser.escapedStringLiterals") == "true"
+    rows = [r[0] for r in df.selectExpr(f"transform(array({cells}), s -> {_flags(verbatim)})").collect()]
     n = max(len(rows), 1)
     out: dict[str, dict[str, float]] = {}
     for c, masks in zip(cols, zip(*rows) if rows else [()] * len(cols)):
