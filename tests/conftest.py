@@ -31,8 +31,8 @@ def jobs(spark):
 def off_utc_driver():
     """The driver process's local zone set off UTC (the session's zone
     stays UTC): PySpark collects a timestamp as a naive datetime in that
-    zone, so a sample that took a trip through Python values would come
-    back shifted by the offset."""
+    zone, so a frame rebuilt from collected values must read them in
+    that zone, or they come back shifted by the offset."""
     old = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
