@@ -1937,73 +1937,32 @@ _R13_WINDOW = [
     "sessionize",
     "json_parse",
     "table_lookup",
-    # r13 NEW: the binary-format parser gates + the no-query §2 tail —
-    # every CREATED-this-round oracled query enters the window (the
-    # standing audit rule), closing VERDICT r12 "Next round" #1/#2:
-    # these §2.1/§2.4/§2.8 directives had never had a driver grade
-    "parse_avro_binary",
-    "parse_avro_json",
-    "parse_avro_file",
-    "parse_protobuf",
+    # r13 NEW: the binary-format parser gates (every CREATED-that-round
+    # oracled query entered the window); parse_hl7 and parse_excel stay
+    # for their per-value UDF change below
     "parse_hl7",
     "parse_excel",
-    "parse_natural_date",
-    "transient_variables",
-    "fail_precondition",
     # r13: the never-driver-graded backlog (VERDICT r12 "Next round"
-    # #3) — all 13 oracled queries that had rotated through parity but
-    # never sat inside a driver window; after this round every
-    # registered oracled query has been driver-graded at least once
+    # #3); these three stay because their code path changed again
+    # below (the connected-components fingerprint and the classifier
+    # loop)
     "dedup_cluster_weights",
     "sample_soft_dedup",
-    "events_funnel_latency",
-    "events_pagerank_seeded",
-    "events_retention_ab",
-    "events_survival_by",
-    "num_quantiles_by",
     "text_clf_calibration_summary",
-    "pii_redact_luhn",
-    "ext_salted_join",
-    # r12 holdovers whose grades were first earned last round (the
-    # retention convention). Vacated for the 30 additions above, all
-    # green r12 and unchanged: dedup_minhash_cc + entity_match_against
-    # (long-green families, cc/blocked-linkage machinery still
-    # parity-covered), text_code_signals, events_key_skew_summary,
-    # num_quantiles_state, events_hits, events_ewma, events_holt,
-    # ann_pq_topk, text_clf_calibration, events_khop, text_rep_filter,
-    # events_sssp, events_retention_forget, events_communities,
-    # sample_token_budget_by, num_benford, events_resample, events_acf,
-    # events_rolling, num_mannwhitney, text_group_terms_weighted —
-    # every one stays green in tools/oracle_parity.py
-    "dq_suggest",
-    # r13 session 1: dq_suggest_shapes vacated (r12-green, unchanged;
-    # the suggest loop stays graded via the in-window dq_suggest) for
-    # the winnow fingerprint-sample budget — created this round, so it
-    # enters the window per the standing audit rule
-    "text_winnow_budget",
-    "dq_constraints_state",
-    "dedup_overlap_budget",
-    "dedup_ngram_budget",
-    "events_funnel_ab",
-    "text_langid_kappa",
-    "emb_drift",
-    # r13 session 1: entity_match_against and events_session_stats_by
-    # vacated (green r8+/r12, unchanged; blocked linkage and the
-    # scorecard stay parity-covered) for the two ops created this
-    # session — first-/last-touch attribution and the exact midrank
-    # column transform (spearman's rank machinery as a feature op)
-    "events_attribution",
-    "num_rank_transform",
     # the state-family table (datapipe/_state.py) changed the fold, read
     # and compaction path of every persisted state, so the state queries
-    # re-enter (audit rule; dq_constraints_state is already above).
-    # Vacated for them: dq_profile_diff, num_chi2_indep, dedup_triangles
-    # and dedup_khop (green r12-r14, unchanged; all four stay green in
-    # tools/oracle_parity.py)
+    # re-enter (audit rule). Vacated for them: dq_profile_diff,
+    # num_chi2_indep, dedup_triangles and dedup_khop (green r12-r14,
+    # unchanged; all four stay green in tools/oracle_parity.py)
+    "dq_constraints_state",
     "text_vocab_state",
     "num_quantiles_state",
     "events_funnel_state",
     "events_retention_forget",
+    # r13: two ops created that round — first-/last-touch attribution
+    # and the exact midrank column transform
+    "events_attribution",
+    "num_rank_transform",
     # mask-shuffle's draw-table UDF and the catalog-/table-lookup dict
     # sides (now LocalRelations) changed their code paths, so their
     # queries re-enter (audit rule; cleanse_recipe and table_lookup are
@@ -2019,7 +1978,7 @@ _R13_WINDOW = [
     # are already in). Vacated for them: events_srm, num_welch,
     # num_kruskal, events_ratio_ab, events_cuped, num_msprt, num_spearman
     # and text_textrank (r13's ADVICE-fix entries, green r12-r14, code
-    # paths unchanged; all eight stay green in tools/oracle_parity.py)
+    # paths unchanged then)
     "text_nfc",
     "text_compress_ratio",
     "text_bpe_count",
@@ -2028,6 +1987,49 @@ _R13_WINDOW = [
     "validate_standard",
     "json_path",
     "multimodal_features",
+    # the statistics ops moved onto one integer-exact moments helper
+    # (datapipe/_moments.py): five decimal-sum ops keep their plans,
+    # spearman's rank sums, the four series ops and impute's mean now
+    # sum in decimal(38,0) instead of long, and the rank tests share one
+    # t^3 - t term; the
+    # classifier's two gradient-descent loops became one, the
+    # connected-components and SSSP rounds read their scalars through
+    # eager_checkpoint_observed, and minhash/embedding components share
+    # one join-back — so every query on those paths re-enters (audit
+    # rule). dedup_embedding and dedup_cross_embedding stay out: dedup
+    # now calls similarity's _cosine, the same body its own copy had,
+    # and their plans and rows are unchanged. Vacated for them, all green r13-r14 (dq_suggest r12-r14,
+    # events_funnel_ab r11-r14) with code paths unchanged: the r13
+    # parser gates parse_avro_binary, parse_avro_json, parse_avro_file,
+    # parse_protobuf, parse_natural_date, transient_variables and
+    # fail_precondition; the r13 backlog events_funnel_latency,
+    # events_pagerank_seeded, events_retention_ab, events_survival_by,
+    # num_quantiles_by, pii_redact_luhn and ext_salted_join; and the
+    # r12/r13 holdovers dq_suggest, text_winnow_budget,
+    # dedup_overlap_budget, dedup_ngram_budget, events_funnel_ab,
+    # text_langid_kappa and emb_drift — every one stays green in
+    # tools/oracle_parity.py
+    "num_welch",
+    "num_msprt",
+    "events_ratio_ab",
+    "events_cuped",
+    "num_corr_matrix",
+    "num_spearman",
+    "num_mannwhitney",
+    "num_kruskal",
+    "num_impute",
+    "events_rolling",
+    "events_cusum",
+    "events_ewma",
+    "events_acf",
+    "text_clf_score",
+    "text_clf_calibration",
+    "dedup_minhash_cc",
+    "dedup_embedding_cc",
+    "dedup_cluster_hist",
+    "dedup_survivors",
+    "split_by_cluster",
+    "events_sssp",
 ]
 
 

@@ -1099,6 +1099,71 @@ def mixture_sample(
     return joined.filter((F.col("sample_rate") >= 1.0) | (prefix < thr))
 
 
+def _sigmoid_micro(m: Column) -> Column:
+    """round(1/(1+exp(−m/1e6)), 6): the classifier's probability of a
+    micro-unit margin."""
+    return F.round(
+        F.lit(1.0) / (F.lit(1.0) + F.exp(-m.cast("double") / F.lit(1e6))), 6)
+
+
+def _train_weights(
+    feats: DataFrame, n_docs: int, B: int, iters: int, lr: float,
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """The classifier's full-batch gradient descent over checkpointed
+    (__id, b, __y) presence features: returns the weight table as a
+    local relation and its sorted (b, w) rows (row 0 is the bias b = −1).
+
+    r13 batch 16: w0 = ALL buckets {-1} ∪ [0, B) at weight 0 as a
+    LOCAL relation, replacing a full feats scan + distinct +
+    checkpoint job. Provably score-identical: every feats bucket is
+    pmod-bounded inside the range, so the margins join matches the
+    same rows; a bucket absent from feats gets no gradient row and
+    stays exactly 0 through every update (0 − round(lr·0/N) = 0),
+    and a zero weight contributes 0 to any future margin — the old
+    present-buckets-only table dropped the same rows at the join
+    instead. Only the returned table's row set widens (zero rows for
+    never-seen buckets), which no score can observe.
+
+    r14: the weight table is PARAMETER-sized (B+1 rows) — hold it as a
+    driver literal and run each iteration as ONE collect job instead
+    of eager_checkpoint + a broadcast-build job per iteration (the
+    pq_train(iters=0) local-codebook precedent). Every arithmetic step
+    stays in Spark expressions (the update select below), so the
+    collected longs are the bit-identical checkpoint rows; the next
+    iteration's broadcast(w) is a jobless LocalTableScan read."""
+    spark = feats.sparkSession
+    w_rows = [(b, 0) for b in range(-1, B)]
+    w = local_table(spark, w_rows, schema="b long, w long")
+    for _ in range(int(iters)):
+        margins = (
+            feats.join(F.broadcast(w), "b")
+            .groupBy("__id", "__y")
+            .agg(F.sum("w").alias("__m"))
+        )
+        p = _sigmoid_micro(F.col("__m"))
+        err = margins.select(
+            "__id",
+            F.round((p - F.col("__y").cast("double")) * F.lit(1e6)).cast("long").alias("__e"),
+        )
+        grad = (
+            feats.join(err, "__id")
+            .groupBy("b")
+            .agg(F.sum("__e").alias("__g"))
+        )
+        upd = w.join(grad, "b", "left").select(
+            "b",
+            (
+                F.col("w")
+                - F.round(
+                    F.lit(float(lr)) * F.coalesce(F.col("__g"), F.lit(0)).cast("double") / F.lit(float(n_docs))
+                ).cast("long")
+            ).alias("w"),
+        )
+        w_rows = sorted((r["b"], r["w"]) for r in upd.collect())
+        w = local_table(spark, w_rows, schema="b long, w long")
+    return w, w_rows
+
+
 def train_quality_classifier(
     pos: DataFrame,
     neg: DataFrame,
@@ -1173,54 +1238,7 @@ def train_quality_classifier(
         # the checkpoint's own job instead of a second docs.count() pass
         F.count(F.when(F.col("b") == -1, 1)).alias("nd"),
     )
-    n_docs = got["nd"]
-    # r13 batch 16: w0 = ALL buckets {-1} ∪ [0, B) at weight 0 as a
-    # LOCAL relation, replacing a full feats scan + distinct +
-    # checkpoint job. Provably score-identical: every feats bucket is
-    # pmod-bounded inside the range, so the margins join matches the
-    # same rows; a bucket absent from feats gets no gradient row and
-    # stays exactly 0 through every update (0 − round(lr·0/N) = 0),
-    # and a zero weight contributes 0 to any future margin — the old
-    # present-buckets-only table dropped the same rows at the join
-    # instead. Only the returned table's row set widens (zero rows for
-    # never-seen buckets), which no score can observe.
-    # r14: the weight table is PARAMETER-sized (B+1 rows) — hold it as a
-    # driver literal and run each iteration as ONE collect job instead
-    # of eager_checkpoint + a broadcast-build job per iteration (the
-    # pq_train(iters=0) local-codebook precedent). Every arithmetic step
-    # stays in Spark expressions (the update select below), so the
-    # collected longs are the bit-identical checkpoint rows; the next
-    # iteration's broadcast(w) is a jobless LocalTableScan read.
-    spark = pos.sparkSession
-    w_rows = [(b, 0) for b in range(-1, B)]
-    w = local_table(spark, w_rows, schema="b long, w long")
-    for _ in range(int(iters)):
-        margins = (
-            feats.join(F.broadcast(w), "b")
-            .groupBy("__id", "__y")
-            .agg(F.sum("w").alias("__m"))
-        )
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m").cast("double") / F.lit(1e6))), 6)
-        err = margins.select(
-            "__id",
-            F.round((p - F.col("__y").cast("double")) * F.lit(1e6)).cast("long").alias("__e"),
-        )
-        grad = (
-            feats.join(err, "__id")
-            .groupBy("b")
-            .agg(F.sum("__e").alias("__g"))
-        )
-        upd = w.join(grad, "b", "left").select(
-            "b",
-            (
-                F.col("w")
-                - F.round(
-                    F.lit(float(lr)) * F.coalesce(F.col("__g"), F.lit(0)).cast("double") / F.lit(float(n_docs))
-                ).cast("long")
-            ).alias("w"),
-        )
-        w_rows = sorted((r["b"], r["w"]) for r in upd.collect())
-        w = local_table(spark, w_rows, schema="b long, w long")
+    w, _ = _train_weights(feats, got["nd"], B, iters, lr)
     # the features fed their last gradient above; the returned weight
     # table is a local relation — nothing left checkpointed here
     release(feats)
@@ -1250,10 +1268,7 @@ def quality_classifier_score(
         .groupBy("__id")
         .agg(F.sum("w").alias("__m"))
     )
-    score = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m").cast("double") / F.lit(1e6))), 6
-    )
-    scored = margins.select("__id", score.alias(out_col))
+    scored = margins.select("__id", _sigmoid_micro(F.col("__m")).alias(out_col))
     return df.join(scored, F.col(id_col) == F.col("__id"), "left").drop("__id")
 
 
@@ -1321,42 +1336,7 @@ def train_and_score_quality_classifier(
         F.count(F.when(F.col("b") == -1, 1)).alias("nd"),
     )
     n_docs = got["nd"]
-    # r13 batch 16: literal zero-weight table over ALL buckets — see
-    # train_quality_classifier for the score-identity argument; this
-    # removes the w0 feats-scan + distinct + checkpoint job.
-    # r14 driver-literal weight state — see train_quality_classifier:
-    # one collect job per iteration, arithmetic all in Spark
-    # expressions, broadcast(w) a jobless LocalTableScan read.
-    spark = df.sparkSession
-    w_rows = [(b, 0) for b in range(-1, B)]
-    w = local_table(spark, w_rows, schema="b long, w long")
-    for _ in range(int(iters)):
-        margins = (
-            feats.join(F.broadcast(w), "b")
-            .groupBy("__id", "__y")
-            .agg(F.sum("w").alias("__m"))
-        )
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m").cast("double") / F.lit(1e6))), 6)
-        err = margins.select(
-            "__id",
-            F.round((p - F.col("__y").cast("double")) * F.lit(1e6)).cast("long").alias("__e"),
-        )
-        grad = (
-            feats.join(err, "__id")
-            .groupBy("b")
-            .agg(F.sum("__e").alias("__g"))
-        )
-        upd = w.join(grad, "b", "left").select(
-            "b",
-            (
-                F.col("w")
-                - F.round(
-                    F.lit(float(lr)) * F.coalesce(F.col("__g"), F.lit(0)).cast("double") / F.lit(float(n_docs))
-                ).cast("long")
-            ).alias("w"),
-        )
-        w_rows = sorted((r["b"], r["w"]) for r in upd.collect())
-        w = local_table(spark, w_rows, schema="b long, w long")
+    w, w_rows = _train_weights(feats, n_docs, B, iters, lr)
     # r14 scoring pass: the checkpointed features ALREADY carry one bias
     # row per feature-bearing doc, so score directly off them — no
     # union with a df-derived bias stream, which broke the checkpoint's
@@ -1373,15 +1353,11 @@ def train_and_score_quality_classifier(
         .groupBy("__id")
         .agg(F.sum("w").alias("__m"))
     )
-    score = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m").cast("double") / F.lit(1e6))), 6
-    )
-    scored = eager_checkpoint(margins.select("__id", score.alias(out_col)))
+    scored = eager_checkpoint(
+        margins.select("__id", _sigmoid_micro(F.col("__m")).alias(out_col)))
     release(feats)
     bias_w = int(w_rows[0][1])  # sorted, so row 0 is b = -1
-    bias_score = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.lit(bias_w).cast("double") / F.lit(1e6))), 6
-    )
+    bias_score = _sigmoid_micro(F.lit(bias_w))
     # the checkpoint erases size stats (an RDD scan estimates at
     # defaultSizeInBytes), so auto-broadcast can never fire on the
     # score join the way it did on the lazy separate-path plan.

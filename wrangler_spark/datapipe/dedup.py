@@ -21,7 +21,12 @@ from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe._local import local_table
 
-from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
+from wrangler_spark.datapipe._checkpoint import (
+    eager_checkpoint,
+    eager_checkpoint_observed,
+    release,
+)
+from wrangler_spark.datapipe.similarity import _cosine
 from wrangler_spark.datapipe.constants import (
     HYPERPLANES,
     LSH_BANDS,
@@ -566,8 +571,6 @@ def ngram_jaccard_pairs(
     # 8 B/hash + row overhead bounds the frame's real size, gating the
     # broadcast hints below (the SMJ-everywhere alternative re-exchanges
     # the candidate stream once per verify join)
-    from wrangler_spark.datapipe._checkpoint import eager_checkpoint_observed
-
     per_doc, got = eager_checkpoint_observed(
         per_doc,
         F.count(F.lit(1)).alias("n"),
@@ -790,8 +793,6 @@ def overlap_pairs(
     # r14: size scalars ride the checkpoint job and gate the broadcast
     # hints below (see ngram_jaccard_pairs — a checkpointed frame has no
     # stats, so auto-broadcast can never fire on these joins)
-    from wrangler_spark.datapipe._checkpoint import eager_checkpoint_observed
-
     per_doc, got = eager_checkpoint_observed(
         per_doc,
         F.count(F.lit(1)).alias("n"),
@@ -1062,17 +1063,6 @@ def embedding_dup_pairs(
     )
 
 
-def _cosine(a: Column, b: Column, n: int | None = None) -> Column:
-    # the guarded unrolled/fold split lives in similarity (shared
-    # contract: identical IEEE order, length-guarded per row)
-    from wrangler_spark.datapipe.similarity import _dot_n, _sumsq_n
-
-    dot = _dot_n(a, b, n)
-    na = F.sqrt(_sumsq_n(a, n))
-    nb = F.sqrt(_sumsq_n(b, n))
-    return dot / (na * nb)
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1178,23 +1168,17 @@ def _connected_components_sized(
         # accumulator-race caveat documented at minhash's checkpoint
         # doesn't apply. decimal sum: a long sum of 64-bit hashes
         # overflows under ANSI.
-        from pyspark.sql import Observation
-
-        obs = Observation()
         prev_edges = edges
-        edges = eager_checkpoint(
-            small.observe(
-                obs,
-                F.count(F.lit(1)).alias("c"),
-                F.coalesce(F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)).alias("h"),
-            )
+        edges, got = eager_checkpoint_observed(
+            small,
+            F.count(F.lit(1)).alias("c"),
+            F.coalesce(F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)).alias("h"),
         )
         # the eager checkpoint above has fully materialized this round's
         # edges, so the superseded round's blocks are dead — release them
         # now instead of leaking one checkpoint per round (the r7-measured
         # session-lifetime storage leak)
         release(prev_edges)
-        got = obs.get
         fp = (got["c"], got["h"])
         if fp == prev_fp:
             # at the large/small-star fixpoint the edge set is a union of
@@ -1234,24 +1218,7 @@ def minhash_components(
     (rare) pair edges only; the final left join back to the corpus is on
     the corpus' own id key."""
     pairs = minhash_lsh_pairs(df, id_col, text_col, threshold, max_bucket_size)
-    cc, n_edges = _connected_components_sized(pairs, "id_a", "id_b")
-    cc = cc.withColumnRenamed("id", "__cc_id")
-    # r14: the components frame holds ≤ 2·n_edges narrow rows; when that
-    # fits, broadcast it so the CORPUS side of the join-back never
-    # exchanges (the checkpoint-derived frame has no stats, so
-    # auto-broadcast could not fire — _gated_broadcast)
-    out = (
-        df.select(F.col(id_col))
-        .join(
-            _gated_broadcast(cc, 96 * n_edges),
-            F.col(id_col) == F.col("__cc_id"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            (F.coalesce(F.col("component"), F.col(id_col)) != F.col(id_col)).alias("is_dup"),
-        )
-    )
-    return out
+    return _components_of(df, id_col, pairs)
 
 
 def embedding_components(
@@ -1266,8 +1233,21 @@ def embedding_components(
     cos(a,c) below threshold) land in ONE cluster with one surviving
     representative — what pair flags alone cannot express."""
     pairs = embedding_dup_pairs(df, id_col, vec_col, threshold)
+    return _components_of(df, id_col, pairs)
+
+
+def _components_of(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """(id, component, is_dup) for every row of ``df``: the pair graph
+    closed with connected_components and joined back to the corpus —
+    an id in no pair is its own component.
+
+    r14: the components frame holds ≤ 2·n_edges narrow rows; when that
+    fits, broadcast it so the CORPUS side of the join-back never
+    exchanges (the checkpoint-derived frame has no stats, so
+    auto-broadcast could not fire — _gated_broadcast)."""
     cc, n_edges = _connected_components_sized(pairs, "id_a", "id_b")
     cc = cc.withColumnRenamed("id", "__cc_id")
+    component = F.coalesce(F.col("component"), F.col(id_col))
     return (
         df.select(F.col(id_col))
         .join(
@@ -1275,8 +1255,8 @@ def embedding_components(
             F.col(id_col) == F.col("__cc_id"), "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            (F.coalesce(F.col("component"), F.col(id_col)) != F.col(id_col)).alias("is_dup"),
+            component.alias("component"),
+            (component != F.col(id_col)).alias("is_dup"),
         )
     )
 

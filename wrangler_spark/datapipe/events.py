@@ -48,6 +48,10 @@ from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._local import local_table
+from wrangler_spark.datapipe._moments import (
+    DEC, mean, micro, moments, pop_var, product, sample_cov, sample_var,
+    spread,
+)
 
 from wrangler_spark.datapipe._checkpoint import (
     eager_checkpoint,
@@ -1256,12 +1260,12 @@ def rolling_stats(
     zscore = (value - mean) / std — the monitoring rule that pages when
     an ingestion source's hourly volume leaves its own recent band.
 
-    Determinism contract (cross-engine): values integerize to
-    micro-units; window sums of micro and micro² are EXACT integer
-    arithmetic (micro² sums in decimal(38,0) — a window of a billion
-    1e6-magnitude values stays within 38 digits), so
-    var = (n·SS - S²) / n² is one double division off identical
-    integers; mean/std/zscore round 6dp terminally. std of a constant
+    Determinism contract (cross-engine, ``datapipe/_moments.py``):
+    values integerize to micro-units; window sums of micro and micro²
+    both run in decimal(38,0), so var = (n·SS - S²) / n² is one double
+    division off identical integers, and a window past the helper's
+    magnitude bound gives NULL (non-ANSI) or raises (ANSI), never a
+    wrapped sum; mean/std/zscore round 6dp terminally. std of a constant
     window is 0 and its zscore NULL.
 
     Scale shape: ONE hash aggregate on key collects the key's sorted
@@ -1281,7 +1285,7 @@ def rolling_stats(
         .groupBy(k.alias("__k"))
         .agg(F.sort_array(F.collect_list(F.struct(
             b.cast("long").alias("b"),
-            F.round(v.cast("double") * F.lit(1e6)).cast("long").alias("mv"),
+            micro(v).alias("mv"),
             v.cast("double").alias("v"),
         ))).alias("__cells"))
     )
@@ -1290,38 +1294,29 @@ def rolling_stats(
     arr = F.col("__cells")
     w = F.lit(int(window))
 
-    def stats(c, i):
+    def window_row(c, i):
         # 1-based slice over the trailing window ending at index i
         start = F.greatest(F.lit(1), i + 2 - w)
         win = F.slice(arr, start, F.least(w, i + 1))
         n = F.size(win).cast("long")
-        s = F.aggregate(
-            win, F.lit(0).cast("long"), lambda acc, x: acc + x["mv"])
+        zero = F.lit(0).cast(DEC)
+        s = F.aggregate(win, zero, lambda acc, x: acc + x["mv"].cast(DEC))
         ss = F.aggregate(
-            win, F.lit(0).cast("decimal(38,0)"),
-            lambda acc, x: acc
-            + (x["mv"].cast("decimal(19,0)") * x["mv"].cast("decimal(19,0)"))
-            .cast("decimal(38,0)"))
-        mean = F.round(s / (n * F.lit(1e6)), 6)
+            win, zero, lambda acc, x: acc + product(x["mv"], x["mv"]))
+        mu = F.round(mean(n, s), 6)
         # n·SS - S² >= 0 exactly (integer arithmetic); one double division
-        var = (
-            (n.cast("decimal(38,0)") * ss
-             - (s.cast("decimal(38,0)") * s.cast("decimal(38,0)")))
-            .cast("double")
-            / (n * n).cast("double") / F.lit(1e12)
-        )
-        std = F.round(F.sqrt(F.greatest(var, F.lit(0.0))), 6)
-        z = F.when(std > 0, F.round((c["v"] - mean) / std, 6))
+        std = F.round(F.sqrt(F.greatest(pop_var(n, s, ss), F.lit(0.0))), 6)
+        z = F.when(std > 0, F.round((c["v"] - mu) / std, 6))
         return F.struct(
             c["b"].alias("bucket"), c["v"].alias("value"),
-            mean.alias("roll_mean"), std.alias("roll_std"),
+            mu.alias("roll_mean"), std.alias("roll_std"),
             z.alias("zscore"),
         )
 
     return (
         cells.select(
             F.col("__k").alias(key_col),
-            F.explode(F.transform(arr, stats)).alias("__s"),
+            F.explode(F.transform(arr, window_row)).alias("__s"),
         )
         .select(key_col, "__s.bucket", "__s.value", "__s.roll_mean",
                 "__s.roll_std", "__s.zscore")
@@ -1496,6 +1491,7 @@ def cusum(
         raise ValueError(f"need k >= 0 and h > 0, got k={k}, h={h}")
     kk, hh = float(k), float(h)
     key, b, v = F.col(key_col), F.col(bucket_col), F.col(value_col)
+    mv = micro(v)
     per_key = (
         df.filter(key.isNotNull() & b.isNotNull() & v.isNotNull())
         .groupBy(key.alias("__k"))
@@ -1504,30 +1500,15 @@ def cusum(
                 b.cast("long").alias("b"),
                 v.cast("double").alias("v"),
             ))).alias("__cells"),
-            F.count("*").cast("long").alias("__n"),
-            F.sum(F.round(v.cast("double") * F.lit(1e6)).cast("long"))
-            .alias("__s"),
-            F.sum(
-                (F.round(v.cast("double") * F.lit(1e6)).cast("long")
-                 .cast("decimal(19,0)")
-                 * F.round(v.cast("double") * F.lit(1e6)).cast("long")
-                 .cast("decimal(19,0)")).cast("decimal(38,0)")
-            ).alias("__ss"),
+            *moments(None, "__n", __s=mv, __ss=(mv, mv)),
         )
     )
     per_key = _guard_cells(per_key, F.col("__n"), max_cells, "cusum")
-    n = F.col("__n")
-    mean = F.round(F.col("__s") / (n * F.lit(1e6)), 6)
-    var = (
-        (n.cast("decimal(38,0)") * F.col("__ss")
-         - (F.col("__s").cast("decimal(38,0)")
-            * F.col("__s").cast("decimal(38,0)")))
-        .cast("double")
-        / (n * n).cast("double") / F.lit(1e12)
-    )
-    std = F.round(F.sqrt(F.greatest(var, F.lit(0.0))), 6)
+    n, sm, ss = F.col("__n"), F.col("__s"), F.col("__ss")
+    mu = F.round(mean(n, sm), 6)
+    std = F.round(F.sqrt(F.greatest(pop_var(n, sm, ss), F.lit(0.0))), 6)
     staged = per_key.select(
-        "__k", "__cells", mean.alias("__mu"), std.alias("__sd"))
+        "__k", "__cells", mu.alias("__mu"), std.alias("__sd"))
 
     def step(acc, c):
         # try_divide: a constant key (sd 0) must survive ANSI sessions —
@@ -1603,6 +1584,7 @@ def ewma(
         raise ValueError(f"L must be > 0, got {L}")
     aa, ll = float(alpha), float(L)
     key, b, v = F.col(key_col), F.col(bucket_col), F.col(value_col)
+    mv = micro(v)
     per_key = (
         df.filter(key.isNotNull() & b.isNotNull() & v.isNotNull())
         .groupBy(key.alias("__k"))
@@ -1611,30 +1593,15 @@ def ewma(
                 b.cast("long").alias("b"),
                 v.cast("double").alias("v"),
             ))).alias("__cells"),
-            F.count("*").cast("long").alias("__n"),
-            F.sum(F.round(v.cast("double") * F.lit(1e6)).cast("long"))
-            .alias("__s"),
-            F.sum(
-                (F.round(v.cast("double") * F.lit(1e6)).cast("long")
-                 .cast("decimal(19,0)")
-                 * F.round(v.cast("double") * F.lit(1e6)).cast("long")
-                 .cast("decimal(19,0)")).cast("decimal(38,0)")
-            ).alias("__ss"),
+            *moments(None, "__n", __s=mv, __ss=(mv, mv)),
         )
     )
     per_key = _guard_cells(per_key, F.col("__n"), max_cells, "ewma")
-    n = F.col("__n")
-    mean = F.round(F.col("__s") / (n * F.lit(1e6)), 6)
-    var = (
-        (n.cast("decimal(38,0)") * F.col("__ss")
-         - (F.col("__s").cast("decimal(38,0)")
-            * F.col("__s").cast("decimal(38,0)")))
-        .cast("double")
-        / (n * n).cast("double") / F.lit(1e12)
-    )
-    std = F.round(F.sqrt(F.greatest(var, F.lit(0.0))), 6)
+    n, sm, ss = F.col("__n"), F.col("__s"), F.col("__ss")
+    mu = F.round(mean(n, sm), 6)
+    std = F.round(F.sqrt(F.greatest(pop_var(n, sm, ss), F.lit(0.0))), 6)
     staged = per_key.select(
-        "__k", "__cells", mean.alias("__mu"), std.alias("__sd"))
+        "__k", "__cells", mu.alias("__mu"), std.alias("__sd"))
 
     def step(acc, c):
         e = F.lit(aa) * c["v"] + F.lit(1.0 - aa) * acc["e"]
@@ -2422,7 +2389,7 @@ def user_period_metrics(
     to doubles once, so the CUPED moments downstream see deterministic
     inputs."""
     u, t = F.col(user_col), F.col(ts_col)
-    mv = F.round(F.col(value_col).cast("double") * F.lit(1e6)).cast("long")
+    mv = micro(F.col(value_col))
     split = F.to_timestamp(F.lit(split_ts))
     pre = F.sum(F.when(t.cast("timestamp") < split, mv).otherwise(F.lit(0)))
     post = F.sum(F.when(t.cast("timestamp") >= split, mv).otherwise(F.lit(0)))
@@ -2471,58 +2438,36 @@ def cuped_ab_test(
     a 1-row result."""
     a, b = str(arm_a), str(arm_b)
     arm = F.col(arm_col).cast("string")
-    y = F.round(F.col(metric_col).cast("double") * F.lit(1e6)).cast("long")
-    x = (F.round(F.col(covariate_col).cast("double") * F.lit(1e6))
-         .cast("long"))
-    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-
-    def arm_moments(tag: str, cond) -> list:
-        w = lambda c: F.when(cond, c)  # noqa: E731
-        return [
-            F.count(w(F.lit(1))).cast("long").alias(f"n_{tag}"),
-            F.sum(w(y).cast("decimal(38,0)")).alias(f"sy_{tag}"),
-            F.sum(w(x).cast("decimal(38,0)")).alias(f"sx_{tag}"),
-            F.sum(w((dec(x) * dec(y)).cast("decimal(38,0)")))
-            .alias(f"sxy_{tag}"),
-            F.sum(w((dec(x) * dec(x)).cast("decimal(38,0)")))
-            .alias(f"sxx_{tag}"),
-            F.sum(w((dec(y) * dec(y)).cast("decimal(38,0)")))
-            .alias(f"syy_{tag}"),
-        ]
-
+    y = micro(F.col(metric_col))
+    x = micro(F.col(covariate_col))
     base = df.filter(
         arm.isin(a, b)
         & F.col(metric_col).isNotNull() & F.col(covariate_col).isNotNull()
     )
-    m = base.agg(*arm_moments("a", arm == a), *arm_moments("b", arm == b))
+    m = base.agg(
+        *moments(arm == a, "n_a", sy_a=y, sx_a=x, sxy_a=(x, y),
+                 sxx_a=(x, x), syy_a=(y, y)),
+        *moments(arm == b, "n_b", sy_b=y, sx_b=x, sxy_b=(x, y),
+                 sxx_b=(x, x), syy_b=(y, y)))
 
-    D = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     n_a, n_b = F.col("n_a"), F.col("n_b")
     n = n_a + n_b
-    sy = D(F.col("sy_a") + F.col("sy_b"))
-    sx = D(F.col("sx_a") + F.col("sx_b"))
-    sxy = D(F.col("sxy_a") + F.col("sxy_b"))
-    sxx = D(F.col("sxx_a") + F.col("sxx_b"))
+    sy, sx = F.col("sy_a") + F.col("sy_b"), F.col("sx_a") + F.col("sx_b")
+    sxy, sxx = F.col("sxy_a") + F.col("sxy_b"), F.col("sxx_a") + F.col("sxx_b")
     # pooled theta: the micro^2 factors cancel in the ratio
-    covp = (D(n) * sxy - sx * sy).cast("double")
-    varp = (D(n) * sxx - sx * sx).cast("double")
+    covp = spread(n, sx, sy, sxy)
+    varp = spread(n, sx, sx, sxx)
     theta = F.when(varp > 0, covp / varp)
-    mean_x = sx.cast("double") / (n.cast("double") * F.lit(1e6))
+    mean_x = mean(n, sx)
 
-    def arm_stats(tag: str):
+    def adjusted(tag: str):
         nn = F.col(f"n_{tag}")
-        syt, sxt = D(F.col(f"sy_{tag}")), D(F.col(f"sx_{tag}"))
-        sxyt = D(F.col(f"sxy_{tag}"))
-        sxxt = D(F.col(f"sxx_{tag}"))
-        syyt = D(F.col(f"syy_{tag}"))
-        mean_y = syt.cast("double") / (nn.cast("double") * F.lit(1e6))
-        mean_xa = sxt.cast("double") / (nn.cast("double") * F.lit(1e6))
-        # n <= 1 -> NULL denominator -> NULL variance in BOTH engines
-        denom = F.when(
-            nn > 1, (nn * (nn - 1)).cast("double") * F.lit(1e12))
-        var_y = (D(nn) * syyt - syt * syt).cast("double") / denom
-        var_x = (D(nn) * sxxt - sxt * sxt).cast("double") / denom
-        cov = (D(nn) * sxyt - sxt * syt).cast("double") / denom
+        syt, sxt = F.col(f"sy_{tag}"), F.col(f"sx_{tag}")
+        mean_y = mean(nn, syt)
+        mean_xa = mean(nn, sxt)
+        var_y = sample_var(nn, syt, F.col(f"syy_{tag}"))
+        var_x = sample_var(nn, sxt, F.col(f"sxx_{tag}"))
+        cov = sample_cov(nn, sxt, syt, F.col(f"sxy_{tag}"))
         mean_adj = F.when(
             theta.isNotNull(), mean_y - theta * (mean_xa - mean_x)
         ).otherwise(mean_y)
@@ -2532,8 +2477,8 @@ def cuped_ab_test(
         ).otherwise(var_y)
         return mean_y, mean_adj, var_y, var_adj
 
-    mya, maa, vya, vaa = arm_stats("a")
-    myb, mab, vyb, vab = arm_stats("b")
+    mya, maa, vya, vaa = adjusted("a")
+    myb, mab, vyb, vab = adjusted("b")
     se = F.sqrt(vya / n_a + vyb / n_b)
     se_adj = F.sqrt(
         F.greatest(vaa, F.lit(0.0)) / n_a
@@ -2580,8 +2525,8 @@ def acf(
     acf.
 
     Determinism: EVERY per-lag sum is an exact integer — the
-    cross-products accumulate micro^2 units in decimal(38,0) inside
-    the fold, the head/tail sums are micro longs — so no double is
+    cross-products (micro^2 units) and the head/tail micro sums all
+    accumulate in decimal(38,0) inside the fold — so no double is
     ever summed in engine order; the handful of double ops after are
     one fixed order shared with the oracle (whose integer sums a
     plain self-join can reproduce, any order). Scale shape: one hash
@@ -2592,7 +2537,7 @@ def acf(
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     key, b, v = F.col(key_col), F.col(bucket_col), F.col(value_col)
-    mv = F.round(v.cast("double") * F.lit(1e6)).cast("long")
+    mv = micro(v)
     per_key = (
         df.filter(key.isNotNull() & b.isNotNull() & v.isNotNull())
         .groupBy(key.alias("__k"))
@@ -2600,10 +2545,7 @@ def acf(
             F.sort_array(F.collect_list(F.struct(
                 b.cast("long").alias("b"), mv.alias("m"),
             ))).alias("__cells"),
-            F.count("*").cast("long").alias("__n"),
-            F.sum(mv).alias("__s"),
-            F.sum((mv.cast("decimal(19,0)") * mv.cast("decimal(19,0)"))
-                  .cast("decimal(38,0)")).alias("__ss"),
+            *moments(None, "__n", __s=mv, __ss=(mv, mv)),
         )
     )
     per_key = _guard_cells(per_key, F.col("__n"), max_cells, "acf")
@@ -2637,11 +2579,11 @@ def acf(
         "__k", "__cells", "__n", "__s", "__ss", consec.alias("__dense"),
     )
 
-    dec0 = F.lit(0).cast("decimal(38,0)")
+    dec0 = F.lit(0).cast(DEC)
     init = F.struct(
         dec0.alias("s2"),
-        F.lit(0).cast("long").alias("aa"),
-        F.lit(0).cast("long").alias("bb"),
+        dec0.alias("aa"),
+        dec0.alias("bb"),
         F.lit(0).cast("long").alias("np"),
     )
 
@@ -2655,10 +2597,9 @@ def acf(
             x = F.element_at(c, i)["m"]
             y = F.element_at(c, i + lag)["m"]
             return F.struct(
-                (acc["s2"] + (x.cast("decimal(19,0)") * y.cast("decimal(19,0)"))
-                 .cast("decimal(38,0)")).cast("decimal(38,0)").alias("s2"),
-                (acc["aa"] + x).cast("long").alias("aa"),
-                (acc["bb"] + y).cast("long").alias("bb"),
+                (acc["s2"] + product(x, y)).alias("s2"),
+                (acc["aa"] + x.cast(DEC)).alias("aa"),
+                (acc["bb"] + y.cast(DEC)).alias("bb"),
                 (acc["np"] + F.lit(1)).cast("long").alias("np"),
             )
 
@@ -2672,15 +2613,12 @@ def acf(
             p = F.element_at(m, cell["b"] + lag.cast("long"))
             hit = p.isNotNull()
             return F.struct(
-                (acc["s2"] + F.when(
-                    hit,
-                    (cell["m"].cast("decimal(19,0)") * p.cast("decimal(19,0)"))
-                    .cast("decimal(38,0)"),
-                ).otherwise(dec0)).cast("decimal(38,0)").alias("s2"),
-                (acc["aa"] + F.when(hit, cell["m"]).otherwise(F.lit(0)))
-                .cast("long").alias("aa"),
-                (acc["bb"] + F.when(hit, p).otherwise(F.lit(0)))
-                .cast("long").alias("bb"),
+                (acc["s2"] + F.when(hit, product(cell["m"], p))
+                 .otherwise(dec0)).alias("s2"),
+                (acc["aa"] + F.when(hit, cell["m"].cast(DEC))
+                 .otherwise(dec0)).alias("aa"),
+                (acc["bb"] + F.when(hit, p.cast(DEC))
+                 .otherwise(dec0)).alias("bb"),
                 (acc["np"] + F.when(hit, F.lit(1)).otherwise(F.lit(0)))
                 .cast("long").alias("np"),
             )
@@ -2707,7 +2645,7 @@ def acf(
         .filter(F.col("__f.np") > 0)
     )
     n = F.col("__n").cast("double")
-    mu = F.col("__s").cast("double") / (n * F.lit(1e6))
+    mu = mean(F.col("__n"), F.col("__s"))
     den = F.col("__ss").cast("double") / F.lit(1e12) - n * mu * mu
     num = (
         F.col("__f.s2").cast("double") / F.lit(1e12)
@@ -2869,54 +2807,37 @@ def ratio_ab_test(
     zero denominator sum or degenerate variance yields NULL z."""
     a, b = str(arm_a), str(arm_b)
     arm = F.col(arm_col).cast("string")
-    x = F.round(F.col(num_col).cast("double") * F.lit(1e6)).cast("long")
-    y = F.round(F.col(den_col).cast("double") * F.lit(1e6)).cast("long")
-    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-
-    def moments(tag: str, cond) -> list:
-        w = lambda c: F.when(cond, c)  # noqa: E731
-        return [
-            F.count(w(F.lit(1))).cast("long").alias(f"n_{tag}"),
-            F.sum(w(x).cast("decimal(38,0)")).alias(f"sx_{tag}"),
-            F.sum(w(y).cast("decimal(38,0)")).alias(f"sy_{tag}"),
-            F.sum(w((dec(x) * dec(x)).cast("decimal(38,0)")))
-            .alias(f"sxx_{tag}"),
-            F.sum(w((dec(y) * dec(y)).cast("decimal(38,0)")))
-            .alias(f"syy_{tag}"),
-            F.sum(w((dec(x) * dec(y)).cast("decimal(38,0)")))
-            .alias(f"sxy_{tag}"),
-        ]
-
+    x = micro(F.col(num_col))
+    y = micro(F.col(den_col))
     base = df.filter(
         arm.isin(a, b) & F.col(num_col).isNotNull()
         & F.col(den_col).isNotNull())
-    m = base.agg(*moments("a", arm == a), *moments("b", arm == b))
-    D = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    m = base.agg(
+        *moments(arm == a, "n_a", sx_a=x, sy_a=y, sxx_a=(x, x),
+                 syy_a=(y, y), sxy_a=(x, y)),
+        *moments(arm == b, "n_b", sx_b=x, sy_b=y, sxx_b=(x, x),
+                 syy_b=(y, y), sxy_b=(x, y)))
 
-    def arm_stats(tag: str):
+    def delta(tag: str):
         nn = F.col(f"n_{tag}")
-        sx, sy = D(F.col(f"sx_{tag}")), D(F.col(f"sy_{tag}"))
-        sxx, syy = D(F.col(f"sxx_{tag}")), D(F.col(f"syy_{tag}"))
-        sxy = D(F.col(f"sxy_{tag}"))
+        sx, sy = F.col(f"sx_{tag}"), F.col(f"sy_{tag}")
         nd = nn.cast("double")
         r = F.when(sy.cast("double") != 0,
                    sx.cast("double") / sy.cast("double"))
-        my = sy.cast("double") / (nd * F.lit(1e6))
-        # n <= 1 -> NULL denominator -> NULL variance in BOTH engines
-        den = F.when(nn > 1, (nn * (nn - 1)).cast("double") * F.lit(1e12))
-        vx = (D(nn) * sxx - sx * sx).cast("double") / den
-        vy = (D(nn) * syy - sy * sy).cast("double") / den
-        cov = (D(nn) * sxy - sx * sy).cast("double") / den
+        my = mean(nn, sy)
+        vx = sample_var(nn, sx, F.col(f"sxx_{tag}"))
+        vy = sample_var(nn, sy, F.col(f"syy_{tag}"))
+        cov = sample_cov(nn, sx, sy, F.col(f"sxy_{tag}"))
         var_r = F.when(
             r.isNotNull() & (my != 0),
             (vx + r * r * vy - F.lit(2.0) * r * cov)
             / (nd * my * my))
         return nn, r, var_r
 
-    na, ra, va = arm_stats("a")
-    nb, rb, vb = arm_stats("b")
+    na, ra, va = delta("a")
+    nb, rb, vb = delta("b")
     # var_r is already the variance OF THE RATIO ESTIMATE (the /n
-    # lives inside arm_stats), so the arm variances combine directly
+    # lives inside delta), so the arm variances combine directly
     se = F.when(
         va.isNotNull() & vb.isNotNull(),
         F.sqrt(F.greatest(va + vb, F.lit(0.0))))
@@ -2964,34 +2885,15 @@ def msprt_ab_test(
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
     a, b = str(arm_a), str(arm_b)
     g = F.col(arm_col).cast("string")
-    mv = F.round(F.col(metric_col).cast("double") * F.lit(1e6)).cast("long")
-    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-
-    def moments(tag: str, cond) -> list:
-        w = lambda c: F.when(cond, c)  # noqa: E731
-        return [
-            F.count(w(F.lit(1))).cast("long").alias(f"n_{tag}"),
-            F.sum(w(mv).cast("decimal(38,0)")).alias(f"s_{tag}"),
-            F.sum(w((dec(mv) * dec(mv)).cast("decimal(38,0)")))
-            .alias(f"ss_{tag}"),
-        ]
-
+    mv = micro(F.col(metric_col))
     base = df.filter(g.isin(a, b) & F.col(metric_col).isNotNull())
-    m = base.agg(*moments("a", g == a), *moments("b", g == b))
-    D = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-
-    def stats(tag: str):
-        nn = F.col(f"n_{tag}")
-        s, ss = D(F.col(f"s_{tag}")), D(F.col(f"ss_{tag}"))
-        mean = s.cast("double") / (nn.cast("double") * F.lit(1e6))
-        # n <= 1 -> NULL denominator -> NULL variance in BOTH engines
-        # (0/0 is NULL in non-ANSI Spark but NaN in DuckDB)
-        den = F.when(nn > 1, (nn * (nn - 1)).cast("double") * F.lit(1e12))
-        var = (D(nn) * ss - s * s).cast("double") / den
-        return nn, mean, var
-
-    na, ma, va = stats("a")
-    nb, mb, vb = stats("b")
+    m = base.agg(
+        *moments(g == a, "n_a", s_a=mv, ss_a=(mv, mv)),
+        *moments(g == b, "n_b", s_b=mv, ss_b=(mv, mv)))
+    na, nb = F.col("n_a"), F.col("n_b")
+    ma, mb = mean(na, F.col("s_a")), mean(nb, F.col("s_b"))
+    va = sample_var(na, F.col("s_a"), F.col("ss_a"))
+    vb = sample_var(nb, F.col("s_b"), F.col("ss_b"))
     v = va / na.cast("double") + vb / nb.cast("double")
     d = ma - mb
     t2 = float(tau) * float(tau)

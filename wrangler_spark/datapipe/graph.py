@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe._local import local_table
 
-from pyspark.sql import Observation
-
 from ._checkpoint import eager_checkpoint, eager_checkpoint_observed, release
 
 __all__ = [
@@ -786,8 +784,9 @@ def graph_sssp(
         # (a node has at most one `dist` row, so min(__old) is either
         # that distance or NULL for a newly-reached node), and
         # "improved" = new-node-or-smaller-min, counted as a metric —
-        # no second join + limit(1).count() job per round. comb's
-        # ROWS are unchanged: min(__dm) over the identical union.
+        # no second join + limit(1).count() job per round. The rows are
+        # min(__dm) over the identical union; the checkpoint keeps the
+        # tag column too, and every reader of `dist` selects past it.
         agg = (
             dist.select("__n", "__dm", F.col("__dm").alias("__old"))
             .unionByName(cand.select(
@@ -795,18 +794,15 @@ def graph_sssp(
             .groupBy("__n").agg(F.min("__dm").alias("__dm"),
                                 F.min("__old").alias("__old"))
         )
-        obs = Observation()
-        comb = eager_checkpoint(
-            agg.observe(
-                obs,
-                F.count(F.when(F.col("__old").isNull()
-                               | (F.col("__dm") < F.col("__old")), 1))
-                .alias("imp"),
-            ).select("__n", "__dm")
+        prev = dist
+        dist, got = eager_checkpoint_observed(
+            agg,
+            F.count(F.when(F.col("__old").isNull()
+                           | (F.col("__dm") < F.col("__old")), 1))
+            .alias("imp"),
         )
-        release(dist)
-        dist = comb
-        if obs.get["imp"] == 0:
+        release(prev)
+        if got["imp"] == 0:
             break
     release(e)
     return dist.select(

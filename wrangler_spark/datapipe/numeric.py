@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe import _layout, _state
 from wrangler_spark.datapipe._local import local_table
+from wrangler_spark.datapipe._moments import (
+    DEC, mean, micro, moments, sample_var, spread,
+)
 
 
 def _pctl(col: str, p: float, exact: bool, accuracy: int):
@@ -603,11 +606,8 @@ def impute_column(
         return df.withColumn(
             out, F.coalesce(c, F.lit(float(strategy))).cast("double"))
     if strategy == "mean":
-        fill = F.round(
-            F.sum(F.round(c.cast("double") * F.lit(1e6)).cast("long"))
-            / (F.count(c) * F.lit(1e6)),
-            6,
-        ).alias("__fill")
+        s = F.sum(micro(c).cast(DEC))
+        fill = F.round(mean(F.count(c), s), 6).alias("__fill")
         stats = (df.groupBy(*by) if by else df).agg(fill)
     elif strategy == "median":
         v = c.cast("double")
@@ -664,11 +664,8 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     order. O(k²) aggregate expressions for k columns, still one scan —
     keep the list to the dozens, not thousands.
 
-    Magnitude bound: every moment accumulates in decimal(38,0) (the
-    plain sums too — an int64 sum wraps at ~9.2e18 micro-units, i.e.
-    billions of rows of million-scale values), and the final n·Sxx −
-    Sx² terms must themselves fit 38 digits: |Sx| (the column's total
-    micro-unit mass) must stay below ~1e19. Past that, ANSI errors
+    Magnitude bound: the ``datapipe/_moments.py`` one — |Sx| (the
+    column's total micro-unit mass) below ~1e19. Past it, ANSI errors
     and non-ANSI nulls the pair — never a silently wrong corr."""
     if len(cols) < 2:
         raise ValueError("corr_matrix needs at least two columns")
@@ -678,16 +675,13 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     # below would otherwise each re-evaluate round(cast·1e6) — measured
     # meaningful at 6 decimal sums per pair)
     staged = df.select(*[
-        F.round(F.col(c).cast("double") * F.lit(1e6)).cast("long")
-        .alias(f"__c{j}")
-        for j, c in enumerate(cols)
+        micro(F.col(c)).alias(f"__c{j}") for j, c in enumerate(cols)
     ])
     midx = {c: f"__c{j}" for j, c in enumerate(cols)}
     pairs = [
         (a, b) for i, a in enumerate(cols) for b in cols[i + 1:]
     ]
     k = len(cols)
-    dec = lambda x: x.cast("decimal(19,0)")  # noqa: E731
     # r13 (guide §1.2 per-task work): decimal(38,0) aggregation buffers
     # are BigDecimal-backed (no compact-long fast path above precision
     # 18), and the k(k−1)/2 · 6 pairwise-deletion moments made them the
@@ -712,17 +706,13 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     # shared moments — the documented trade: that path pays ~40% of
     # one extra pass, while the dominant null-free shape saves a full
     # scan + a scheduled job.
-    shared_aggs = [F.count("*").cast("long").alias("__nall")]
+    sums = {}
     for j in range(k):
         cj = F.col(f"__c{j}")
-        shared_aggs += [
-            F.sum(cj.cast("decimal(38,0)")).cast("decimal(38,0)").alias(f"__s{j}"),
-            F.sum((dec(cj) * dec(cj)).cast("decimal(38,0)")).alias(f"__q{j}"),
-        ]
+        sums[f"__s{j}"], sums[f"__q{j}"] = cj, (cj, cj)
     for i, (a, b) in enumerate(pairs):
-        ca, cb = F.col(midx[a]), F.col(midx[b])
-        shared_aggs.append(
-            F.sum((dec(ca) * dec(cb)).cast("decimal(38,0)")).alias(f"__x{i}"))
+        sums[f"__x{i}"] = (F.col(midx[a]), F.col(midx[b]))
+    shared_aggs = moments(None, "__nall", **sums)
     probe = staged.agg(
         *[F.sum(F.when(F.col(f"__c{j}").isNull(), 1).otherwise(0))
           .cast("long").alias(f"__nl{j}") for j in range(k)],
@@ -736,7 +726,7 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
             n for j in range(k) for n in (f"__s{j}", f"__q{j}")
         ] + [f"__x{i}" for i in range(len(pairs))]
         ddl = ", ".join(
-            f"{n} {'long' if n == '__nall' else 'decimal(38,0)'}"
+            f"{n} {'long' if n == '__nall' else DEC}"
             for n in names
         )
         one = local_table(
@@ -748,19 +738,9 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
             both = ca.isNotNull() & cb.isNotNull()
             ma = F.when(both, ca)
             mb = F.when(both, cb)
-            # plain sums accumulate as decimal(38,0) too (NOT long): at
-            # ~1e12 micro-units x billions of rows an int64 sum wraps
-            # silently (non-ANSI) or errors (ANSI); decimal(38,0) holds
-            # ~1e38, so Sx is safe to ~1e26 rows at 1e12 micro-units and
-            # the n·Sxx / Sx² terms to ~1e19-row pairs — document bound
-            aggs += [
-                F.count(F.when(both, F.lit(1))).cast("long").alias(f"__n{i}"),
-                F.sum(ma.cast("decimal(38,0)")).cast("decimal(38,0)").alias(f"__sa{i}"),
-                F.sum(mb.cast("decimal(38,0)")).cast("decimal(38,0)").alias(f"__sb{i}"),
-                F.sum((dec(ma) * dec(ma)).cast("decimal(38,0)")).alias(f"__saa{i}"),
-                F.sum((dec(mb) * dec(mb)).cast("decimal(38,0)")).alias(f"__sbb{i}"),
-                F.sum((dec(ma) * dec(mb)).cast("decimal(38,0)")).alias(f"__sab{i}"),
-            ]
+            aggs += moments(both, f"__n{i}") + moments(None, **{
+                f"__sa{i}": ma, f"__sb{i}": mb, f"__saa{i}": (ma, ma),
+                f"__sbb{i}": (mb, mb), f"__sab{i}": (ma, mb)})
         one = staged.agg(*aggs)
     jdx = {c: j for j, c in enumerate(cols)}
     rows = []
@@ -774,10 +754,9 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
             nn = F.col(f"__n{i}")
             sa, sb = F.col(f"__sa{i}"), F.col(f"__sb{i}")
             saa, sbb, sab = F.col(f"__saa{i}"), F.col(f"__sbb{i}"), F.col(f"__sab{i}")
-        n = nn.cast("decimal(38,0)")
-        cov = (n * sab - sa * sb).cast("double")
-        va = (n * saa - sa * sa).cast("double")
-        vb = (n * sbb - sb * sb).cast("double")
+        cov = spread(nn, sa, sb, sab)
+        va = spread(nn, sa, sa, saa)
+        vb = spread(nn, sb, sb, sbb)
         corr = F.when(
             (va > 0) & (vb > 0),
             F.round(cov / F.sqrt(va * vb), 6),
@@ -1119,6 +1098,13 @@ def cohens_kappa(
     )
 
 
+def _tie_term(t):
+    """t³ − t, exact in decimal(38,0): one tie group's term in the rank
+    tests' tie correction (t up to n, so t³ needs the 38 digits)."""
+    t13 = t.cast("decimal(13,0)")
+    return (t13 * t13 * t13).cast(DEC) - t.cast(DEC)
+
+
 def mann_whitney_u(
     df: DataFrame,
     value_col: str,
@@ -1151,7 +1137,7 @@ def mann_whitney_u(
     sort — never appears."""
     g = F.col(group_col).cast("string")
     v = F.col(value_col)
-    mv = F.round(v.cast("double") * F.lit(1e6)).cast("long")
+    mv = micro(v)
     a, b = str(group_a), str(group_b)
     hist = (
         df.filter(g.isin(a, b) & v.isNotNull())
@@ -1170,30 +1156,24 @@ def mann_whitney_u(
             f"{max_cells}) — bin the column or use quantile tests")
     if k == 0:
         raise ValueError("mann_whitney_u: no rows in either group")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = hist.agg(
         F.sort_array(F.collect_list(
             F.struct(F.col("__v"), F.col("na"), F.col("nb")))).alias("__c"),
         F.sum("na").cast("long").alias("n_a"),
         F.sum("nb").cast("long").alias("n_b"),
         # tie sum T = sum(t^3 - t) over per-value tie counts t = na+nb:
-        # order-free exact integer aggregate (t up to n -> t^3 needs
-        # decimal(38,0))
-        F.sum(
-            dec((F.col("na") + F.col("nb")).cast("decimal(13,0)")
-                * (F.col("na") + F.col("nb")).cast("decimal(13,0)")
-                * (F.col("na") + F.col("nb")).cast("decimal(13,0)"))
-            - dec(F.col("na") + F.col("nb"))
-        ).cast("decimal(38,0)").alias("__t"),
+        # an order-free exact integer aggregate
+        F.sum(_tie_term(F.col("na") + F.col("nb")))
+        .cast(DEC).alias("__t"),
     )
 
     def step(acc, c):
         # 2U gains 2 * na_v * (count of b strictly below) + na_v * nb_v
         return F.struct(
             (acc["u2"]
-             + dec(F.lit(2)) * dec(c["na"]) * dec(acc["cb"])
-             + dec(c["na"]) * dec(c["nb"]))
-            .cast("decimal(38,0)").alias("u2"),
+             + F.lit(2).cast(DEC) * c["na"].cast(DEC) * acc["cb"].cast(DEC)
+             + c["na"].cast(DEC) * c["nb"].cast(DEC))
+            .cast(DEC).alias("u2"),
             (acc["cb"] + c["nb"]).cast("long").alias("cb"),
         )
 
@@ -1352,35 +1332,15 @@ def welch_t_test(
     Sample variances (n-1); a zero-variance pair yields NULL t."""
     a, b = str(group_a), str(group_b)
     g = F.col(group_col).cast("string")
-    mv = F.round(F.col(value_col).cast("double") * F.lit(1e6)).cast("long")
-    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-
-    def moments(tag: str, cond) -> list:
-        w = lambda c: F.when(cond, c)  # noqa: E731
-        return [
-            F.count(w(F.lit(1))).cast("long").alias(f"n_{tag}"),
-            F.sum(w(mv).cast("decimal(38,0)")).alias(f"s_{tag}"),
-            F.sum(w((dec(mv) * dec(mv)).cast("decimal(38,0)")))
-            .alias(f"ss_{tag}"),
-        ]
-
+    mv = micro(F.col(value_col))
     base = df.filter(g.isin(a, b) & F.col(value_col).isNotNull())
-    m = base.agg(*moments("a", g == a), *moments("b", g == b))
-    D = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-
-    def stats(tag: str):
-        nn = F.col(f"n_{tag}")
-        s, ss = D(F.col(f"s_{tag}")), D(F.col(f"ss_{tag}"))
-        mean = s.cast("double") / (nn.cast("double") * F.lit(1e6))
-        # n <= 1 -> NULL denominator -> NULL variance in BOTH engines
-        # (an unguarded 0/0 is NULL in non-ANSI Spark but NaN in
-        # DuckDB, so op and oracle would diverge on degenerate input)
-        den = F.when(nn > 1, (nn * (nn - 1)).cast("double") * F.lit(1e12))
-        var = (D(nn) * ss - s * s).cast("double") / den
-        return nn, mean, var
-
-    na, ma, va = stats("a")
-    nb, mb, vb = stats("b")
+    m = base.agg(
+        *moments(g == a, "n_a", s_a=mv, ss_a=(mv, mv)),
+        *moments(g == b, "n_b", s_b=mv, ss_b=(mv, mv)))
+    na, nb = F.col("n_a"), F.col("n_b")
+    ma, mb = mean(na, F.col("s_a")), mean(nb, F.col("s_b"))
+    va = sample_var(na, F.col("s_a"), F.col("ss_a"))
+    vb = sample_var(nb, F.col("s_b"), F.col("ss_b"))
     qa = va / na.cast("double")
     qb = vb / nb.cast("double")
     se = F.sqrt(qa + qb)
@@ -1445,7 +1405,7 @@ def kruskal_wallis(
     if len(set(gl)) != len(gl):
         raise ValueError("kruskal_wallis: duplicate group labels")
     g = F.col(group_col).cast("string")
-    mv = F.round(F.col(value_col).cast("double") * F.lit(1e6)).cast("long")
+    mv = micro(F.col(value_col))
     hist = (
         df.filter(g.isin(*gl) & F.col(value_col).isNotNull())
         .groupBy(mv.alias("__v"))
@@ -1464,7 +1424,6 @@ def kruskal_wallis(
             f"{max_cells}) — bin the column or use quantile tests")
     if kcells == 0:
         raise ValueError("kruskal_wallis: no rows in any group")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     t_v = sum((F.col(f"n{i}") for i in range(1, len(gl))),
               F.col("n0"))
     agg = hist.agg(
@@ -1472,18 +1431,15 @@ def kruskal_wallis(
             "__v", *[f"n{i}" for i in range(len(gl))]))).alias("__c"),
         *[F.sum(f"n{i}").cast("long").alias(f"N{i}")
           for i in range(len(gl))],
-        F.sum(
-            dec(t_v.cast("decimal(13,0)") * t_v.cast("decimal(13,0)")
-                * t_v.cast("decimal(13,0)")) - dec(t_v)
-        ).cast("decimal(38,0)").alias("__t"),
+        F.sum(_tie_term(t_v)).cast(DEC).alias("__t"),
     )
 
     def step(acc, c):
         tv = sum((c[f"n{i}"] for i in range(1, len(gl))), c["n0"])
         w = F.lit(2) * acc["cum"] + tv + F.lit(1)
         fields = [
-            (acc[f"r{i}"] + dec(c[f"n{i}"]) * dec(w))
-            .cast("decimal(38,0)").alias(f"r{i}")
+            (acc[f"r{i}"] + c[f"n{i}"].cast(DEC) * w.cast(DEC))
+            .cast(DEC).alias(f"r{i}")
             for i in range(len(gl))
         ]
         return F.struct(
@@ -1515,8 +1471,7 @@ def kruskal_wallis(
         - F.lit(3.0) * (nd + F.lit(1.0))
     tie = (F.lit(1.0)
            - F.col("__t").cast("double")
-           / (dec(n.cast("decimal(13,0)") * n.cast("decimal(13,0)")
-                  * n.cast("decimal(13,0)")) - dec(n)).cast("double"))
+           / _tie_term(n).cast("double"))
     hc = F.when(tie > 0, h / tie)
     dof = len(gl) - 1
     from wrangler_spark.datapipe.events import chi2_critical
@@ -1559,7 +1514,7 @@ def rank_transform(
     from wrangler_spark.datapipe._checkpoint import eager_checkpoint_count
 
     out_col = out_col or f"{value_col}_rank"
-    mv = F.round(F.col(value_col).cast("double") * F.lit(1e6)).cast("long")
+    mv = micro(F.col(value_col))
     hist = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(mv.alias("__v"))
@@ -1619,7 +1574,7 @@ def spearman_corr(
         F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
 
     def rank_map(col: str, tag: str) -> DataFrame:
-        mv = F.round(F.col(col).cast("double") * F.lit(1e6)).cast("long")
+        mv = micro(F.col(col))
         hist = (
             base.groupBy(mv.alias(f"__v{tag}"))
             .agg(F.count("*").cast("long").alias("__t"))
@@ -1653,28 +1608,19 @@ def spearman_corr(
         )
 
     ra, rb = rank_map(col_a, "a"), rank_map(col_b, "b")
-    mva = F.round(F.col(col_a).cast("double") * F.lit(1e6)).cast("long")
-    mvb = F.round(F.col(col_b).cast("double") * F.lit(1e6)).cast("long")
     joined = (
-        base.select(mva.alias("__va"), mvb.alias("__vb"))
+        base.select(micro(F.col(col_a)).alias("__va"),
+                    micro(F.col(col_b)).alias("__vb"))
         .join(F.broadcast(ra), "__va")
         .join(F.broadcast(rb), "__vb")
     )
-    dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
-    D = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x, y = F.col("__ra"), F.col("__rb")
-    m = joined.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(x).cast("decimal(38,0)").alias("sx"),
-        F.sum(y).cast("decimal(38,0)").alias("sy"),
-        F.sum((dec(x) * dec(y)).cast("decimal(38,0)")).alias("sxy"),
-        F.sum((dec(x) * dec(x)).cast("decimal(38,0)")).alias("sxx"),
-        F.sum((dec(y) * dec(y)).cast("decimal(38,0)")).alias("syy"),
-    )
-    n = F.col("n")
-    cov = (D(n) * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    va = (D(n) * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    vb = (D(n) * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    m = joined.agg(*moments(
+        None, "n", sx=x, sy=y, sxy=(x, y), sxx=(x, x), syy=(y, y)))
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    cov = spread(n, sx, sy, F.col("sxy"))
+    va = spread(n, sx, sx, F.col("sxx"))
+    vb = spread(n, sy, sy, F.col("syy"))
     rho = F.when(
         (va > 0) & (vb > 0),
         F.round(cov / (F.sqrt(va) * F.sqrt(vb)), 6))
