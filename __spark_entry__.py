@@ -1959,10 +1959,17 @@ _R13_WINDOW = [
     "num_quantiles_state",
     "events_funnel_state",
     "events_retention_forget",
-    # r13: two ops created that round — first-/last-touch attribution
-    # and the exact midrank column transform
-    "events_attribution",
-    "num_rank_transform",
+    # resample's sum and avg now sum micro-units in decimal(38,0)
+    # (datapipe/_moments.py) instead of long, so both resample queries
+    # on that path re-enter (audit rule; events_rolling below and
+    # events_cuped, whose user_period_metrics input moved the same way,
+    # are already in; the state queries above cover the new
+    # _layout.build / _layout.append write forms). Vacated for them:
+    # events_attribution and num_rank_transform (created r13, green
+    # r13-r14, code paths unchanged; both stay green in
+    # tools/oracle_parity.py)
+    "events_resample",
+    "events_resample_interp",
     # mask-shuffle's draw-table UDF and the catalog-/table-lookup dict
     # sides (now LocalRelations) changed their code paths, so their
     # queries re-enter (audit rule; cleanse_recipe and table_lookup are

@@ -4,7 +4,8 @@ Series at 1e12 carry ~1e18 micro-units a cell, so nine of them sum past
 a long's ~9.2e18: a statistic that sums micro-units in ``long`` wraps to
 a wrong number with ANSI off and raises ARITHMETIC_OVERFLOW with it on.
 On the helper every such sum runs in decimal(38,0) and the results
-match Python's, in both modes. The structure test keeps the contract in
+match Python's, in both modes: the series ops, mean imputation, and
+resample's and user_period_metrics' value sums. The structure test keeps the contract in
 the one helper: no hand-rolled copy of it comes back in ``numeric.py``
 or ``events.py``."""
 
@@ -13,6 +14,7 @@ import statistics
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe import events, numeric
 
@@ -83,6 +85,25 @@ def test_impute_mean_matches_python(series):
     filled = _rows(numeric.impute_column(df, "v", strategy="mean"))
     assert filled[-1]["v"] == pytest.approx(MEAN, rel=1e-12)
     assert [r["v"] for r in filled[:-1]] == VALUES
+
+
+def _events(series):
+    return series.withColumn("ts", F.timestamp_seconds(F.col("bucket")))
+
+
+def test_resample_sum_and_avg_match_python(series):
+    ev = _events(series)
+    for agg, want in (("sum", sum(VALUES)), ("avg", MEAN)):
+        rows = events.resample(ev, "key", "ts", "v", every_minutes=60, agg=agg).collect()
+        assert len(rows) == 1
+        assert rows[0]["value"] == pytest.approx(want, rel=1e-12)
+
+
+def test_user_period_metrics_sums_match_python(series):
+    rows = events.user_period_metrics(_events(series), "key", "ts", "v", "2000-01-01").collect()
+    assert len(rows) == 1
+    assert rows[0]["pre"] == pytest.approx(sum(VALUES), rel=1e-12)
+    assert rows[0]["post"] == 0.0
 
 
 # ---- the contract lives in one helper ----

@@ -33,12 +33,25 @@ when no committed version exists, and the first compaction migrates the
 artifact into ``v_000001`` without touching the flat datasets (vacuum
 removes them once a committed version supersedes them).
 
+Every writer goes through one of two write forms, context managers on
+``(spark, path)``: :func:`build` writes a NEW version (a build, a
+meta-only init, a compaction) and commits it on a clean exit;
+:func:`append` writes into the CURRENT version (a fold, an index
+append, a tombstone write), resolved under the lease. The error rule:
+a body that raises releases what its writer took before the exception
+leaves the ``with`` — the lease (a build also abandons its version)
+and, since both run the body in a ``checkpoint_scope``, the blocks the
+body checkpointed — so a failed write never locks its artifact for the
+lease TTL. The 1-row ``meta`` is written and read only through
+:func:`write_meta`, :func:`read_meta` and :func:`has_meta`.
+
 Single-writer contract (ENFORCED by a lease): builds, appends, and
 compactions of the SAME artifact must not race each other — probes may
 race any of them freely. The enforcement is a create-exclusive
-``<path>/_LOCK`` file: ``begin_version`` (and the append family, via
-:func:`writer_lease`) acquires it, ``commit_version`` /
-``abandon_version`` releases it, and a SECOND writer fails loudly with
+``<path>/_LOCK`` file that both write forms hold (the protocol steps
+they compose, :func:`begin_version` / :func:`commit_version` /
+:func:`abandon_version` and :func:`writer_lease`, are called nowhere
+else): a SECOND writer fails loudly with
 :class:`ConcurrentWriterError` instead of silently interleaving its
 files under the winner's version. A writer that crashed without
 releasing leaves a stale lock; a later acquire steals it once it is
@@ -101,10 +114,14 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from wrangler_spark.datapipe._checkpoint import checkpoint_scope
+from wrangler_spark.datapipe._local import local_table
+
 _VERSION_RE = re.compile(r"^v_(\d{6,})$")
 _MARKER = "_COMMITTED"
 _LOCK = "_LOCK"
 _LEDGER = "_batches"
+META = "meta"
 
 # fencing tokens for leases held by THIS process, keyed by artifact
 # path: acquire writes the token into _LOCK, commit re-verifies it on
@@ -267,10 +284,8 @@ def release_lease(spark: SparkSession, path: str) -> None:
 @contextmanager
 def writer_lease(spark: SparkSession, path: str,
                  ttl_sec: int = DEFAULT_LEASE_TTL_SEC):
-    """Hold the writer lease for a non-versioned mutation (the
-    log-structured append family): acquire → body → release, releasing
-    on error too — an append crash leaves only a stale lock, never a
-    half-visible version."""
+    """Hold the writer lease around the body (the lease step of
+    :func:`append`): acquire → body → release, releasing on error too."""
     acquire_lease(spark, path, ttl_sec)
     try:
         yield
@@ -303,15 +318,9 @@ def begin_version(spark: SparkSession, path: str,
 def commit_version(spark: SparkSession, version_dir: str) -> None:
     """Flip the version visible: create its empty ``_COMMITTED`` marker
     (one atomic file create — the whole commit protocol), then release
-    the writer lease ``begin_version`` took.
-
-    FENCED: immediately before the marker create, the lock is re-read
-    and must still contain this process's acquire token. A writer whose
-    stale lock was stolen (and possibly re-stolen — the double-steal
-    window) finds a foreign token here and raises
-    :class:`ConcurrentWriterError` WITHOUT publishing its version: the
-    files it wrote stay invisible (no marker) and are vacuumed like any
-    abandoned build."""
+    the writer lease ``begin_version`` took. FENCED (see the module
+    docstring): a foreign token in the lock raises
+    :class:`ConcurrentWriterError` WITHOUT publishing the version."""
     path = version_dir.rsplit("/", 1)[0]
     fs, vroot, jvm = _fs(spark, version_dir)
     with _HELD_MU:
@@ -338,6 +347,54 @@ def abandon_version(spark: SparkSession, version_dir: str) -> None:
     is reclaimed by the next :func:`vacuum` — same end state as a
     writer crash, but without waiting out the lease TTL."""
     release_lease(spark, version_dir.rsplit("/", 1)[0])
+
+
+@contextmanager
+def build(spark: SparkSession, path: str):
+    """Write a new version of the artifact at ``path``: take the lease,
+    yield a fresh ``v_NNNNNN`` dir for the body to write every dataset
+    into, and commit it when the body returns. A body that raises, or a
+    commit that is fenced out, abandons the version instead: the lease
+    is released at once and the dir stays invisible until vacuum. The
+    body runs in a ``checkpoint_scope``."""
+    vdir = begin_version(spark, path)
+    try:
+        with checkpoint_scope():
+            yield vdir
+        commit_version(spark, vdir)
+    except BaseException:
+        abandon_version(spark, vdir)
+        raise
+
+
+@contextmanager
+def append(spark: SparkSession, path: str):
+    """Write into the artifact's current version: take the lease, then
+    yield the root resolved under it, so a compaction cannot commit
+    between the resolve and the write. The lease is released on exit,
+    error or not, and the body runs in a ``checkpoint_scope``."""
+    with writer_lease(spark, path), checkpoint_scope():
+        yield resolve(spark, path)
+
+
+def write_meta(spark: SparkSession, vdir: str, row: tuple, schema: str) -> None:
+    """Pin ``row`` (DDL ``schema``) as the 1-row ``meta`` of the version
+    a :func:`build` is writing."""
+    local_table(spark, [row], schema).write.parquet(f"{vdir}/{META}")
+
+
+def read_meta(spark: SparkSession, root: str):
+    """The 1-row ``meta`` under a resolved ``root``, as a Row (one Spark
+    job). Reading a root without one raises Spark's path-not-found
+    ``AnalysisException``."""
+    return spark.read.parquet(f"{root}/{META}").collect()[0]
+
+
+def has_meta(spark: SparkSession, root: str) -> bool:
+    """Whether a resolved ``root`` holds a ``meta`` — a file test, no
+    Spark job."""
+    fs, jroot, jvm = _fs(spark, root)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(jroot, META))
 
 
 def vacuum(spark: SparkSession, path: str, keep: int = 2) -> list[str]:
@@ -423,16 +480,15 @@ def _backfill_ledger(spark: SparkSession, path: str, root: str) -> None:
 
 @contextmanager
 def fold_once(spark: SparkSession, path: str, batch_id: str):
-    """Run one state fold exactly once per ``batch_id``: hold the
-    writer lease, then yield the resolved root the fold appends under,
+    """Run one state fold exactly once per ``batch_id``: an
+    :func:`append` that yields the resolved root the fold appends under,
     or ``None`` when the batch is already folded (the caller returns).
     The done marker is written only after the body returns; a body that
     raises leaves its ``.pending`` mark, so the next attempt probes the
     rows. See the module docstring for the protocol and its crash
     windows. An empty ``batch_id`` yields the root with no ledger
     access at all."""
-    with writer_lease(spark, path):
-        root = resolve(spark, path)
+    with append(spark, path) as root:
         if not batch_id:
             yield root
             return

@@ -52,8 +52,8 @@ The rows' schema is the family's on-disk contract: once states exist,
 its column names, types and order do not change.
 
 Retention and funnel also pin a 1-row ``meta`` (period/calendar,
-steps/window): :func:`read_meta`, :func:`has_meta` and
-:func:`init_meta` are their shared meta reader and meta-only init.
+steps/window), read with ``_layout.read_meta``: :func:`init_meta` is
+their shared meta-only init.
 """
 
 from __future__ import annotations
@@ -65,7 +65,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wrangler_spark.datapipe import _layout
-from wrangler_spark.datapipe._local import local_table
 
 
 # merge rule -> (aggregate over the rows, the value a ledger row carries)
@@ -218,24 +217,11 @@ def merge(df: DataFrame, fam: Family, compact: bool = False) -> DataFrame:
     )
 
 
-def read_meta(spark: SparkSession, path: str, version: int | None = None):
-    """The 1-row ``meta`` of a meta-pinned state (retention, funnel)."""
-    return spark.read.parquet(f"{_layout.resolve(spark, path, version)}/meta").collect()[0]
-
-
-def has_meta(spark: SparkSession, path: str) -> bool:
-    """Whether the state at ``path`` has a committed (or flat) ``meta`` —
-    a file test, no Spark job."""
-    fs, _, jvm = _layout._fs(spark, path)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{_layout.resolve(spark, path)}/meta"))
-
-
 def init_meta(spark: SparkSession, path: str, row: tuple, schema: str) -> None:
     """Commit a meta-only version of a meta-pinned state: ``row`` as the
     1-row ``meta``, no data datasets (they materialize on the first
     fold). The new version holds no rows, so the replay ledger is
     dropped first: ids folded into an earlier definition fold again."""
-    vdir = _layout.begin_version(spark, path)
-    local_table(spark, [row], schema).write.parquet(f"{vdir}/meta")
-    _layout.drop_ledger(spark, path)
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        _layout.write_meta(spark, vdir, row, schema)
+        _layout.drop_ledger(spark, path)

@@ -1577,34 +1577,30 @@ def bloom_write_index(
     of a live index becomes visible only at the commit marker, so a
     crash mid-build leaves the previous version probing correctly, and
     new-geometry meta can never pair with old words. Appends land in
-    the CURRENT resolved version (log-structured, O(batch))."""
+    the CURRENT version, resolved and geometry-checked under the writer
+    lease (log-structured, O(batch))."""
     from wrangler_spark.datapipe import _layout
 
     spark = df_old.sparkSession
     if bits < 64 or num_hashes < 1:
         raise ValueError(f"bloom geometry must be bits>=64, k>=1 — got ({bits}, {num_hashes})")
-    if append:
-        root = _layout.resolve(spark, path)
-        meta = spark.read.parquet(f"{root}/meta").collect()[0]
-        _bloom_check_scheme(meta)
-        if (int(meta["bits"]), int(meta["num_hashes"])) != (int(bits), int(num_hashes)):
-            raise ValueError(
-                f"bloom geometry mismatch: index has (bits={meta['bits']}, "
-                f"num_hashes={meta['num_hashes']}), got ({bits}, {num_hashes})"
-            )
     key = F.md5(normalize_text(F.col(text_col)))
-    keys = df_old.select(key.alias("__k")).distinct()
+    words = bloom_words(df_old.select(key.alias("__k")).distinct(), "__k", bits, num_hashes)
     if append:
-        with _layout.writer_lease(spark, path):
-            bloom_words(keys, "__k", bits, num_hashes).write.mode("append").parquet(f"{root}/words")
+        with _layout.append(spark, path) as root:
+            meta = _layout.read_meta(spark, root)
+            _bloom_check_scheme(meta)
+            if (int(meta["bits"]), int(meta["num_hashes"])) != (int(bits), int(num_hashes)):
+                raise ValueError(
+                    f"bloom geometry mismatch: index has (bits={meta['bits']}, "
+                    f"num_hashes={meta['num_hashes']}), got ({bits}, {num_hashes})"
+                )
+            words.write.mode("append").parquet(f"{root}/words")
         return
-    vdir = _layout.begin_version(spark, path)
-    bloom_words(keys, "__k", bits, num_hashes).write.parquet(f"{vdir}/words")
-    local_table(spark,
-        [(int(bits), int(num_hashes), _BLOOM_SCHEME)],
-        "bits long, num_hashes int, scheme int",
-    ).write.parquet(f"{vdir}/meta")
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        words.write.parquet(f"{vdir}/words")
+        _layout.write_meta(spark, vdir, (int(bits), int(num_hashes), _BLOOM_SCHEME),
+                           "bits long, num_hashes int, scheme int")
 
 
 # position-derivation version persisted in every index's meta: ANY change
@@ -1642,7 +1638,7 @@ def bloom_probe_index(
 
     spark = df_new.sparkSession
     root = _layout.resolve(spark, path)
-    meta = spark.read.parquet(f"{root}/meta").collect()[0]
+    meta = _layout.read_meta(spark, root)
     _bloom_check_scheme(meta)
     bits, k = int(meta["bits"]), int(meta["num_hashes"])
     # the OR-merge aggregate feeds k broadcast consumers; aliased
@@ -1801,21 +1797,18 @@ def minhash_write_index(
     # validate BEFORE any write — an invalid geometry must never clobber
     # a live index's meta (it used to, pre-_sig_bands-validation)
     _check_lsh_geometry(int(bands), int(rows_per_band))
-    vdir = _layout.begin_version(spark, path)
-    local_table(spark,
-        [(int(bands), int(rows_per_band))], "bands int, rows_per_band int"
-    ).write.parquet(f"{vdir}/meta")
-    if sweep is not None:
-        sweep.write.parquet(f"{vdir}/sweep")
-    base_o, bands_o = _sig_bands(df_old, id_col, text_col, bands, rows_per_band)
-    (
-        bands_o.groupBy("band", "key")
-        .agg(F.expr(f"slice(array_sort(collect_list(id)), 1, {int(max_bucket_size)})").alias("__olds"))
-        .write.parquet(f"{vdir}/buckets")
-    )
-    base_o.write.parquet(f"{vdir}/shingles")
-    release(base_o)
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        _layout.write_meta(spark, vdir, (int(bands), int(rows_per_band)),
+                           "bands int, rows_per_band int")
+        if sweep is not None:
+            sweep.write.parquet(f"{vdir}/sweep")
+        base_o, bands_o = _sig_bands(df_old, id_col, text_col, bands, rows_per_band)
+        (
+            bands_o.groupBy("band", "key")
+            .agg(F.expr(f"slice(array_sort(collect_list(id)), 1, {int(max_bucket_size)})").alias("__olds"))
+            .write.parquet(f"{vdir}/buckets")
+        )
+        base_o.write.parquet(f"{vdir}/shingles")
 
 
 def minhash_pairs_against_index(
@@ -1832,23 +1825,18 @@ def minhash_pairs_against_index(
     tuned index is always probed in its own signature space. The index
     root resolves to the latest committed version (``_layout``), so the
     probe can run concurrently with a rebuild or compaction."""
-    from pyspark.errors import AnalysisException
-
     from wrangler_spark.datapipe import _layout
 
     spark = df_new.sparkSession
     root = _layout.resolve(spark, path)
-    try:
-        meta = spark.read.parquet(f"{root}/meta").collect()[0]
+    # ONLY a missing meta means the pre-meta index layout; any other
+    # failure (corrupt parquet, permissions, empty meta) must raise —
+    # silently probing at the default geometry against tuned buckets
+    # would return (almost) no pairs with no error
+    bands, rows = LSH_BANDS, LSH_ROWS
+    if _layout.has_meta(spark, root):
+        meta = _layout.read_meta(spark, root)
         bands, rows = int(meta["bands"]), int(meta["rows_per_band"])
-    except AnalysisException as ex:
-        # ONLY a missing meta directory means the pre-meta index layout;
-        # any other failure (corrupt parquet, permissions, empty meta)
-        # must raise — silently probing at the default geometry against
-        # tuned buckets would return (almost) no pairs with no error
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        bands, rows = LSH_BANDS, LSH_ROWS
     base_n, bands_n = _sig_bands(df_new, id_col, text_col, bands, rows)
     return _pairs_against_tail(
         base_n, bands_n,
@@ -1995,25 +1983,22 @@ def embedding_write_index(
     # versioned snapshot build (see minhash_write_index): nothing is
     # visible until the commit marker, so a rebuild-in-place crash can
     # never pair new planes with old buckets
-    vdir = _layout.begin_version(spark, path)
-    # one materialization serves both artifact writes (bucket aggregate
-    # + vector payloads); released after the writes complete
-    sigs_o = eager_checkpoint(_plane_sigs(df_old, id_col, vec_col, planes, broadcast_planes))
-    (
-        sigs_o.groupBy("sig")
-        .agg(F.expr(f"slice(array_sort(collect_list(id)), 1, {int(max_bucket_size)})").alias("__olds"))
-        .write.parquet(f"{vdir}/buckets")
-    )
-    sigs_o.select(
-        F.col("id").alias("id_old"), F.col("v").alias("__vo")
-    ).write.parquet(f"{vdir}/vectors")
-    local_table(spark,
-        [([[float(x) for x in p] for p in planes],)], "planes ARRAY<ARRAY<DOUBLE>>"
-    ).write.parquet(f"{vdir}/meta")
-    if sweep is not None:
-        sweep.write.parquet(f"{vdir}/sweep")
-    release(sigs_o)
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        # one materialization serves both artifact writes (bucket
+        # aggregate + vector payloads); the build releases it
+        sigs_o = eager_checkpoint(_plane_sigs(df_old, id_col, vec_col, planes, broadcast_planes))
+        (
+            sigs_o.groupBy("sig")
+            .agg(F.expr(f"slice(array_sort(collect_list(id)), 1, {int(max_bucket_size)})").alias("__olds"))
+            .write.parquet(f"{vdir}/buckets")
+        )
+        sigs_o.select(
+            F.col("id").alias("id_old"), F.col("v").alias("__vo")
+        ).write.parquet(f"{vdir}/vectors")
+        _layout.write_meta(spark, vdir, ([[float(x) for x in p] for p in planes],),
+                           "planes ARRAY<ARRAY<DOUBLE>>")
+        if sweep is not None:
+            sweep.write.parquet(f"{vdir}/sweep")
 
 
 def embedding_pairs_against_index(
@@ -2031,8 +2016,7 @@ def embedding_pairs_against_index(
 
     spark = df_new.sparkSession
     root = _layout.resolve(spark, path)
-    meta = spark.read.parquet(f"{root}/meta").collect()[0]
-    planes = [[float(x) for x in p] for p in meta["planes"]]
+    planes = [[float(x) for x in p] for p in _layout.read_meta(spark, root)["planes"]]
     sigs_n = _plane_sigs(df_new, id_col, vec_col, planes, None)
     return _emb_against_tail(
         sigs_n,

@@ -461,7 +461,8 @@ def active_users_from_state(
     event log. Requires a day-granularity state (period_days=1, no
     month calendar) — anything coarser can't answer a daily window, so
     it raises rather than silently returning week-grained counts."""
-    period_days, cal = _read_state_meta(spark, path)
+    root = _layout.resolve(spark, path)
+    period_days, cal = _read_state_meta(spark, root)
     if period_days != 1 or cal is not None:
         raise ValueError(
             f"active_users_from_state needs a period_days=1 day-bucketed state, "
@@ -474,7 +475,6 @@ def active_users_from_state(
 
     from wrangler_spark.datapipe.maintenance import read_forgetting
 
-    root = _layout.resolve(spark, path)
     pairs = read_forgetting(spark, root, "pairs", "__u").select(
         "__u", F.col("__b").alias("__d")
     )
@@ -625,16 +625,13 @@ def retention_write_state(
     becomes visible only at its commit marker, never as new meta over
     old pairs."""
     spark = df.sparkSession
-    vdir = _layout.begin_version(spark, path)
-    (
-        _activity_pairs(df, user_col, ts_col, period_days, calendar)
-        .write.partitionBy("__b").parquet(f"{vdir}/pairs")
-    )
-    local_table(spark,
-        [(int(period_days), calendar or "", 2)],
-        "period_days int, calendar string, state_version int",
-    ).write.parquet(f"{vdir}/meta")
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        (
+            _activity_pairs(df, user_col, ts_col, period_days, calendar)
+            .write.partitionBy("__b").parquet(f"{vdir}/pairs")
+        )
+        _layout.write_meta(spark, vdir, (int(period_days), calendar or "", 2),
+                           "period_days int, calendar string, state_version int")
 
 
 def retention_update_state(
@@ -646,25 +643,20 @@ def retention_update_state(
     pairs append — dynamic partition append touches only the buckets the
     batch is active in, which for a daily ingest is one or two
     directories regardless of history size. The anti-join result is
-    eagerly checkpointed (and released) before the write so the append
-    never reads the directory it is writing. The whole fold (anti-join
-    read + append) runs under the ``_layout`` writer lease, so it can
-    never interleave with a compaction of the same state."""
-    from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
-
+    eagerly checkpointed (and released on exit) before the write so the
+    append never reads the directory it is writing. The whole fold
+    (anti-join read + append) is one ``_layout.append``, so it can never
+    interleave with a compaction of the same state."""
     spark = batch.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
-        period_days, cal = _read_state_meta(spark, path)
+    with _layout.append(spark, path) as root:
+        period_days, cal = _read_state_meta(spark, root)
         fresh = _activity_pairs(batch, user_col, ts_col, period_days, cal)
         # a meta-only state (retention_init_state / first stream batch)
         # has no pairs dataset yet — everything in the batch is fresh
         stored = _layout.read_dataset(spark, root, "pairs")
         if stored is not None:
             fresh = fresh.join(stored.select("__u", "__b"), ["__u", "__b"], "left_anti")
-        fresh = eager_checkpoint(fresh)
-        fresh.write.mode("append").partitionBy("__b").parquet(f"{root}/pairs")
-        release(fresh)
+        eager_checkpoint(fresh).write.mode("append").partitionBy("__b").parquet(f"{root}/pairs")
 
 
 def retention_init_state(
@@ -711,7 +703,7 @@ def retention_update_stream(
     compact_index/vacuum must not race the running sink (single-writer
     contract)."""
     spark = stream.sparkSession
-    if not _state.has_meta(spark, path):
+    if not _layout.has_meta(spark, _layout.resolve(spark, path)):
         retention_init_state(spark, path, period_days, calendar)
     return _layout.fold_stream(
         stream, checkpoint, trigger,
@@ -737,10 +729,9 @@ def retention_grid_from_state(
     the forgotten ids."""
     from wrangler_spark.datapipe.maintenance import read_forgetting
 
-    period_days, cal = _read_state_meta(spark, path, version)
-    b = read_forgetting(
-        spark, _layout.resolve(spark, path, version), "pairs", "__u"
-    ).select("__u", "__b")
+    root = _layout.resolve(spark, path, version)
+    period_days, cal = _read_state_meta(spark, root)
+    b = read_forgetting(spark, root, "pairs", "__u").select("__u", "__b")
     first = b.groupBy("__u").agg(F.min("__b").alias("__cb"))
     act = (
         b.join(first, "__u")
@@ -820,10 +811,10 @@ def funnel_latencies(
     return reduce(DataFrame.unionByName, rows)
 
 
-def _read_state_meta(spark, path: str, version: int | None = None) -> tuple[int, str | None]:
-    """(period_days, calendar) from a state's meta table; v1 states
-    (written before the calendar field) read as day-based."""
-    row = _state.read_meta(spark, path, version)
+def _read_state_meta(spark, root: str) -> tuple[int, str | None]:
+    """(period_days, calendar) from a resolved state root's meta; v1
+    states (written before the calendar field) read as day-based."""
+    row = _layout.read_meta(spark, root)
     cal = row["calendar"] if "calendar" in row.__fields__ else ""
     return int(row["period_days"]), (cal or None)
 
@@ -856,8 +847,8 @@ def funnel_init_state(
         "steps array<string>, within_minutes double, state_version int")
 
 
-def _read_funnel_meta(spark, path: str, version: int | None = None) -> tuple[list[str], float | None]:
-    row = _state.read_meta(spark, path, version)
+def _read_funnel_meta(spark, root: str) -> tuple[list[str], float | None]:
+    row = _layout.read_meta(spark, root)
     w = row["within_minutes"]
     return list(row["steps"]), (float(w) if w is not None else None)
 
@@ -934,7 +925,7 @@ def funnel_update_state(
     spark = batch.sparkSession
 
     def changed_chains(root):
-        steps, within = _read_funnel_meta(spark, path)
+        steps, within = _read_funnel_meta(spark, root)
         k = len(steps)
         u, t = F.col(user_col), F.col(ts_col)
         per_user = (
@@ -980,8 +971,8 @@ def funnel_from_state(spark, path: str, version: int | None = None) -> DataFrame
     small-table aggregate, never an event-history rescan (the
     retention_grid_from_state posture). All-zero rows when nothing has
     folded yet."""
-    steps, _ = _read_funnel_meta(spark, path, version)
     root = _layout.resolve(spark, path, version)
+    steps, _ = _read_funnel_meta(spark, root)
     steps_df = local_table(spark,
         [(i + 1, s) for i, s in enumerate(steps)], "step long, event_type string"
     )
@@ -1030,7 +1021,7 @@ def funnel_update_stream(
     at-least-once foreachBatch + the batch-id NO-OP = exactly-once
     folds under replay. Default trigger availableNow (drain-and-stop)."""
     spark = stream.sparkSession
-    if not _state.has_meta(spark, path):
+    if not _layout.has_meta(spark, _layout.resolve(spark, path)):
         if steps is None:
             raise ValueError(
                 "funnel_update_stream on a fresh path needs steps=[...] to pin")
@@ -1057,8 +1048,9 @@ def resample(
     then FILL the buckets where nothing happened (a raw groupBy
     silently skips them, and a downstream moving average over a sparse
     frame is simply wrong). ``agg``: count | sum | min | max | avg
-    (sum/avg integerize to micro-units before summing — the
-    cross-engine determinism contract; min/max are order-free).
+    (sum/avg integerize to micro-units and sum them in decimal(38,0) —
+    the cross-engine determinism contract of ``_moments``; min/max are
+    order-free).
     ``fill``: zero | none (NULL) | ffill (forward-fill from the key's
     last seen bucket; the grid starts at the key's first REAL cell, so
     ffill always has a source value) | interp (linear interpolation
@@ -1101,14 +1093,13 @@ def resample(
             F.count("*").cast("double").alias("__v"))
     else:
         v = F.col(value_col).cast("double")
-        micro = F.round(v * F.lit(1e6)).cast("long")
+        msum = F.sum(micro(v).cast(DEC)).cast("double")
         grp = base.filter(v.isNotNull()).groupBy(k.alias("__k"), b)
         if agg == "sum":
-            cells = grp.agg(
-                F.round(F.sum(micro) / F.lit(1e6), 6).alias("__v"))
+            cells = grp.agg(F.round(msum / F.lit(1e6), 6).alias("__v"))
         elif agg == "avg":
             cells = grp.agg(F.round(
-                (F.sum(micro) / F.count("*")) / F.lit(1e6), 6).alias("__v"))
+                (msum / F.count("*")) / F.lit(1e6), 6).alias("__v"))
         else:
             fn = F.min if agg == "min" else F.max
             cells = grp.agg(fn(v).alias("__v"))
@@ -1340,7 +1331,14 @@ def resample_update_state(
     compaction sum-merges it). The bucket grain is pinned in the state
     rows and checked on every fold; a non-empty ``batch_id`` already
     folded makes the fold a NO-OP (exactly-once under replay, through
-    the ``_layout`` replay ledger)."""
+    the ``_layout`` replay ledger).
+
+    Magnitude bound: ``msum`` is a ``long`` sum of micro-units (its type
+    is the family's on-disk contract), so a cell's summed values, and
+    the merge of a cell across batches, must stay below about 9.2e12 in
+    value units (9.2e18 micro-units). Past it an ANSI session raises
+    ``ARITHMETIC_OVERFLOW`` and a non-ANSI one wraps to a wrong sum;
+    the batch :func:`resample` sums in decimal and has no such bound."""
     if every_minutes < 1:
         raise ValueError(f"every_minutes must be >= 1, got {every_minutes}")
     step = int(every_minutes) * 60
@@ -1357,7 +1355,7 @@ def resample_update_state(
         .groupBy("key", "bucket")
         .agg(
             F.count("*").cast("long").alias("n"),
-            F.sum(F.round(F.col("__v") * F.lit(1e6)).cast("long")).alias("msum"),
+            F.sum(micro(F.col("__v"))).alias("msum"),
             F.count("__v").cast("long").alias("nv"),
             F.min("__v").alias("mn"),
             F.max("__v").alias("mx"),
@@ -2385,22 +2383,20 @@ def user_period_metrics(
 
     ONE hash aggregate keyed on the user column — the same shuffle
     every downstream per-user join reuses. Sums accumulate as integer
-    micro-units (exact, order-independent across engines) and convert
-    to doubles once, so the CUPED moments downstream see deterministic
-    inputs."""
+    micro-units in decimal(38,0) (``_moments``: exact, order-independent
+    across engines) and convert to doubles once, so the CUPED moments
+    downstream see deterministic inputs."""
     u, t = F.col(user_col), F.col(ts_col)
     mv = micro(F.col(value_col))
-    split = F.to_timestamp(F.lit(split_ts))
-    pre = F.sum(F.when(t.cast("timestamp") < split, mv).otherwise(F.lit(0)))
-    post = F.sum(F.when(t.cast("timestamp") >= split, mv).otherwise(F.lit(0)))
+    before = t.cast("timestamp") < F.to_timestamp(F.lit(split_ts))
     return (
         df.filter(u.isNotNull() & t.isNotNull()
                   & F.col(value_col).isNotNull())
         .groupBy(u.alias(user_col))
-        .agg(
-            F.round(pre / F.lit(1e6), 6).alias("pre"),
-            F.round(post / F.lit(1e6), 6).alias("post"),
-        )
+        .agg(*moments(before, None, pre=mv), *moments(~before, None, post=mv))
+        .withColumns({
+            c: F.round(F.coalesce(c, F.lit(0)).cast("double") / F.lit(1e6), 6)
+            for c in ("pre", "post")})
     )
 
 

@@ -60,12 +60,6 @@ _BLOOM_WORDS_COLS = {"__w", "__bits"}
 _FORGET_KEYS = ("__u", "vec_id", "id", "id_old")
 
 
-def _hadoop(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
 def _count_files(fs, jpath) -> int:
     """Data files under a dataset dir (recursive), ignoring hidden/_ files."""
     n = 0
@@ -122,100 +116,95 @@ def compact_index(spark: SparkSession, path: str) -> dict[str, dict[str, int]]:
     versions (and the flat legacy layout, after its first versioned
     compaction) are reclaimed separately by :func:`vacuum_index` —
     run it after the longest probe you'd ever have in flight.
-    Single-writer contract is ENFORCED: ``begin_version`` takes the
-    artifact's writer lease, so a compaction racing an append or
-    rebuild of the same artifact fails loudly with
-    ``ConcurrentWriterError`` instead of landing an append invisibly
-    in a superseded version."""
-    fs, _, jvm = _hadoop(spark, path)
-    src_root = _layout.resolve(spark, path)
-    _, src, _ = _hadoop(spark, src_root)
-    # tombstones (forget_ids) are APPLIED by this compaction: keyed rows
-    # dropped, bucket-membership arrays scrubbed, and the tombstones
-    # dataset itself not carried into the new version — the physical
-    # erasure point of the right-to-be-forgotten flow. Forget lists are
-    # request-sized by contract, so collecting them for the array scrub
-    # is bounded work.
-    tomb = _layout.read_dataset(spark, src_root, "tombstones")
-    forget = {r["__forget"] for r in tomb.collect()} if tomb is not None else set()
-    forget_arr = F.array(*[F.lit(v) for v in sorted(forget)]) if forget else None
-    vdir = _layout.begin_version(spark, path)
+    Single-writer contract is ENFORCED: the compaction is one
+    ``_layout.build`` that resolves its source under the lease, so a
+    compaction racing an append or rebuild of the same artifact fails
+    loudly with ``ConcurrentWriterError`` instead of landing an append
+    invisibly in a superseded version."""
     stats: dict[str, dict[str, int]] = {}
-    for st in fs.listStatus(src):
-        if not st.isDirectory():
-            continue
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")) or _layout._VERSION_RE.match(name):
-            continue
-        if name == "tombstones":
-            continue  # applied below, never carried forward
-        dpath = st.getPath()
-        if name == "meta":
-            # byte-copy: meta pins geometry — never re-encode it
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs, dpath, fs, jvm.org.apache.hadoop.fs.Path(f"{vdir}/meta"),
-                False, spark._jsc.hadoopConfiguration(),
-            )
-            continue
-        before = _count_files(fs, dpath)
-        parts = _partition_cols(fs, dpath)
-        df = spark.read.parquet(dpath.toString())
-        if forget:
-            keyed = [k for k in _FORGET_KEYS if k in df.columns]
-            if keyed:
-                # null keys are the state families' batch-id LEDGER rows,
-                # not data — isin's null semantics would silently drop them
-                df = df.filter(
-                    F.col(keyed[0]).isNull()
-                    | ~F.col(keyed[0]).cast("string").isin(*sorted(forget))
-                )
-            if "__olds" in df.columns:
-                # scrub bucket-membership arrays too (minhash/embedding
-                # index buckets): the keyed payload row is already gone,
-                # so this is reference erasure, not correctness
-                df = df.withColumn(
-                    "__olds",
-                    F.filter(
-                        "__olds",
-                        lambda x: ~F.array_contains(forget_arr, x.cast("string")),
-                    ),
-                ).filter(F.size("__olds") > 0)
-        fam = _state.family_of(df.columns) if name == "rows" else None
-        if set(df.columns) == _BLOOM_WORDS_COLS:
-            df = df.groupBy("__w").agg(F.expr("bit_or(__bits)").alias("__bits"))
-        elif fam is not None:
-            # the state family's read merge, precomputed; every original
-            # batch id survives as a null-key ledger row, so the replay
-            # ledger's row probe and legacy backfill (_layout.fold_once)
-            # still see it
-            df = _state.merge(df, fam, compact=True)
-        # size-based file target (~128 MB each): a compaction that
-        # coalesced a 100 TB vectors dataset to one file would be its
-        # own scale bug. With partition cols, hash-repartitioning ON
-        # those cols keeps every partition value in one task, so files
-        # per partition value stay at 1 until data volume needs more.
-        size = fs.getContentSummary(dpath).getLength()
-        tgt = max(1, -(-int(size) // (128 << 20)))
-        writer = (
-            df.repartition(tgt, *[F.col(c) for c in parts]) if parts
-            else df.repartition(tgt)
-        ).write
-        if parts:
-            writer = writer.partitionBy(*parts)
-        out = f"{vdir}/{name}"
-        writer.parquet(out)
-        # verification count of the rewrite before the commit; count(*)
-        # over parquet projects zero columns, so this is footer-bounded
-        # work, not a second data pass
-        rows = spark.read.parquet(out).count()
-        _, opath, _ = _hadoop(spark, out)
-        stats[name] = {
-            "files_before": before,
-            "files_after": _count_files(fs, opath),
-            "rows": rows,
-        }
-    _layout.commit_version(spark, vdir)
+    with _layout.build(spark, path) as vdir:
+        src_root = _layout.resolve(spark, path)
+        fs, src, jvm = _layout._fs(spark, src_root)
+        # tombstones (forget_ids) are APPLIED by this compaction: keyed
+        # rows dropped, bucket-membership arrays scrubbed, and the
+        # tombstones dataset itself not carried into the new version —
+        # the physical erasure point of the right-to-be-forgotten flow.
+        # Forget lists are request-sized by contract, so collecting them
+        # for the array scrub is bounded work.
+        tomb = _layout.read_dataset(spark, src_root, "tombstones")
+        forget = {r["__forget"] for r in tomb.collect()} if tomb is not None else set()
+        for st in fs.listStatus(src):
+            name = st.getPath().getName()
+            if (not st.isDirectory() or name.startswith(("_", "."))
+                    or _layout._VERSION_RE.match(name) or name == "tombstones"):
+                continue
+            if name == _layout.META:
+                # byte-copy: meta pins geometry — never re-encode it
+                jvm.org.apache.hadoop.fs.FileUtil.copy(
+                    fs, st.getPath(), fs, jvm.org.apache.hadoop.fs.Path(f"{vdir}/{name}"),
+                    False, spark._jsc.hadoopConfiguration())
+                continue
+            stats[name] = _compact_dataset(spark, fs, st.getPath(), f"{vdir}/{name}", forget)
     return stats
+
+
+def _compact_dataset(spark: SparkSession, fs, dpath, out: str, forget: set) -> dict[str, int]:
+    """Rewrite one dataset dir into ``out``: tombstones applied, the
+    Bloom words or a keyed state family's rows merged, ~128 MB files.
+    Returns its ``{files_before, files_after, rows}``."""
+    before = _count_files(fs, dpath)
+    parts = _partition_cols(fs, dpath)
+    df = spark.read.parquet(dpath.toString())
+    if forget:
+        keyed = [k for k in _FORGET_KEYS if k in df.columns]
+        if keyed:
+            # null keys are the state families' batch-id LEDGER rows,
+            # not data — isin's null semantics would silently drop them
+            df = df.filter(
+                F.col(keyed[0]).isNull()
+                | ~F.col(keyed[0]).cast("string").isin(*sorted(forget))
+            )
+        if "__olds" in df.columns:
+            # scrub bucket-membership arrays too (minhash/embedding
+            # index buckets): the keyed payload row is already gone,
+            # so this is reference erasure, not correctness
+            forget_arr = F.array(*[F.lit(v) for v in sorted(forget)])
+            df = df.withColumn(
+                "__olds",
+                F.filter(
+                    "__olds",
+                    lambda x: ~F.array_contains(forget_arr, x.cast("string")),
+                ),
+            ).filter(F.size("__olds") > 0)
+    fam = _state.family_of(df.columns) if dpath.getName() == "rows" else None
+    if set(df.columns) == _BLOOM_WORDS_COLS:
+        df = df.groupBy("__w").agg(F.expr("bit_or(__bits)").alias("__bits"))
+    elif fam is not None:
+        # the state family's read merge, precomputed; every original
+        # batch id survives as a null-key ledger row, so the replay
+        # ledger's row probe and legacy backfill (_layout.fold_once)
+        # still see it
+        df = _state.merge(df, fam, compact=True)
+    # size-based file target (~128 MB each): a compaction that
+    # coalesced a 100 TB vectors dataset to one file would be its
+    # own scale bug. With partition cols, hash-repartitioning ON
+    # those cols keeps every partition value in one task, so files
+    # per partition value stay at 1 until data volume needs more.
+    size = fs.getContentSummary(dpath).getLength()
+    tgt = max(1, -(-int(size) // (128 << 20)))
+    writer = (
+        df.repartition(tgt, *[F.col(c) for c in parts]) if parts
+        else df.repartition(tgt)
+    ).write
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(out)
+    # verification count of the rewrite before the commit; count(*)
+    # over parquet projects zero columns, so this is footer-bounded
+    # work, not a second data pass
+    rows = spark.read.parquet(out).count()
+    _, opath, _ = _layout._fs(spark, out)
+    return {"files_before": before, "files_after": _count_files(fs, opath), "rows": rows}
 
 
 def forget_ids(spark: SparkSession, path: str, values, key: str) -> None:
@@ -258,9 +247,8 @@ def forget_ids(spark: SparkSession, path: str, values, key: str) -> None:
             f"key must be one of {_FORGET_KEYS}, got {key!r} — the package's "
             "id-addressable artifact keys"
         )
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
-        fs, src, _ = _hadoop(spark, root)
+    with _layout.append(spark, path) as root:
+        fs, src, _ = _layout._fs(spark, root)
         keyed = []
         for st in fs.listStatus(src):
             name = st.getPath().getName()

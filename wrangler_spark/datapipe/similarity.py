@@ -781,59 +781,45 @@ def ivf_write_index(
     if pq_m and not dim:
         raise ValueError("pq_m requires an explicit dim")
     from wrangler_spark.datapipe import _layout
-    from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
+    from wrangler_spark.datapipe._checkpoint import eager_checkpoint
 
     # versioned snapshot build (see minhash_write_index): the rebuild
     # becomes visible only at the commit marker, so probes never see
     # new centroids over old vector partitions
-    vdir = _layout.begin_version(corpus.sparkSession, path)
-    if train_iters > 0:
-        cent = kmeans_centroids(corpus, n_centroids, train_iters, id_col, vec_col, dim=dim)
-    else:
-        cent = corpus.orderBy(id_col).limit(n_centroids).select(
-            F.col(id_col).alias("centroid_id"), _as_double(F.col(vec_col)).alias("zv")
-        )
-    # cent feeds the assignment AND the centroids write (plus the
-    # residual join in pq mode) — with train_iters > 0 an un-checkpointed
-    # cent re-runs the whole k-means per consumer
-    cent = eager_checkpoint(cent)
-    c = corpus.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cv"))
-    assign = _assign_prepared(c, cent, dim)
-    if pq_m:
-        # same 3-consumer shuffle-bearing subtree as ivf_pq_topk
-        resid = eager_checkpoint(
-            c.join(assign, "vec_id")
-            .join(F.broadcast(cent), "centroid_id")
-            .select(
-                "vec_id", "centroid_id",
-                F.zip_with("cv", "zv", lambda x, y: x - y).alias("rv"),
+    with _layout.build(corpus.sparkSession, path) as vdir:
+        if train_iters > 0:
+            cent = kmeans_centroids(corpus, n_centroids, train_iters, id_col, vec_col, dim=dim)
+        else:
+            cent = corpus.orderBy(id_col).limit(n_centroids).select(
+                F.col(id_col).alias("centroid_id"), _as_double(F.col(vec_col)).alias("zv")
             )
-        )
-        cb = pq_train(resid, dim, pq_m, pq_k, pq_iters, id_col="vec_id", vec_col="rv")
-        (
-            pq_encode(resid, cb, dim, pq_m, id_col="vec_id", vec_col="rv")
-            .select("vec_id", "pq_code", "centroid_id")
-            .write.partitionBy("centroid_id")
-            .parquet(f"{vdir}/vectors")
-        )
-        cb.write.parquet(f"{vdir}/codebook")
+        # cent feeds the assignment AND the centroids write (plus the
+        # residual join in pq mode) — with train_iters > 0 an
+        # un-checkpointed cent re-runs the whole k-means per consumer
+        cent = eager_checkpoint(cent)
+        c = corpus.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cv"))
+        assign = _assign_prepared(c, cent, dim)
+        if pq_m:
+            # same 3-consumer shuffle-bearing subtree as ivf_pq_topk
+            resid = eager_checkpoint(
+                c.join(assign, "vec_id")
+                .join(F.broadcast(cent), "centroid_id")
+                .select(
+                    "vec_id", "centroid_id",
+                    F.zip_with("cv", "zv", lambda x, y: x - y).alias("rv"),
+                )
+            )
+            cb = pq_train(resid, dim, pq_m, pq_k, pq_iters, id_col="vec_id", vec_col="rv")
+            cb.write.parquet(f"{vdir}/codebook")
+            vectors = pq_encode(resid, cb, dim, pq_m, id_col="vec_id", vec_col="rv").select(
+                "vec_id", "pq_code", "centroid_id")
+        else:
+            base = corpus.withColumnRenamed(id_col, "vec_id")
+            if quantize:
+                base = embedding_quantize(base, vec_col).drop(vec_col)
+            vectors = base.join(assign, "vec_id")
+        vectors.write.partitionBy("centroid_id").parquet(f"{vdir}/vectors")
         cent.write.parquet(f"{vdir}/centroids")
-        release(resid)
-        release(cb)
-        release(cent)
-        _layout.commit_version(corpus.sparkSession, vdir)
-        return
-    base = corpus.withColumnRenamed(id_col, "vec_id")
-    if quantize:
-        base = embedding_quantize(base, vec_col).drop(vec_col)
-    (
-        base.join(assign, "vec_id")
-        .write.partitionBy("centroid_id")
-        .parquet(f"{vdir}/vectors")
-    )
-    cent.write.parquet(f"{vdir}/centroids")
-    release(cent)
-    _layout.commit_version(corpus.sparkSession, vdir)
 
 
 def ivf_query_index(
@@ -1162,8 +1148,7 @@ def ivf_append_index(
     from wrangler_spark.datapipe import _layout
 
     spark = new_vectors.sparkSession
-    with _layout.writer_lease(spark, path):
-        root = _layout.resolve(spark, path)
+    with _layout.append(spark, path) as root:
         cent = spark.read.parquet(f"{root}/centroids")
         existing_cols = spark.read.parquet(f"{root}/vectors").schema.fieldNames()
         c = new_vectors.select(
@@ -1171,7 +1156,7 @@ def ivf_append_index(
         )
         assign = _assign_prepared(c, cent)
         if "pq_code" in existing_cols:
-            from wrangler_spark.datapipe._checkpoint import eager_checkpoint, release
+            from wrangler_spark.datapipe._checkpoint import eager_checkpoint
 
             cb = spark.read.parquet(f"{root}/codebook")
             shape = cb.agg(
@@ -1196,7 +1181,6 @@ def ivf_append_index(
                 .partitionBy("centroid_id")
                 .parquet(f"{root}/vectors")
             )
-            release(resid)
             return
         if quantize is None:
             quantize = "q" in existing_cols and vec_col not in existing_cols

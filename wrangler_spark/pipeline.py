@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from wrangler_spark.context import CompileContext
 from wrangler_spark.directive import Directive, bind_arguments
 from wrangler_spark.errors import DirectiveApplyError, PipelineAbortError
-from wrangler_spark.parser.recipe_parser import parse_recipe
+from wrangler_spark.parser.recipe_parser import parse_recipe, parse_statement
 from wrangler_spark.registry import Registry, load_builtins, registry as default_registry
 
 
@@ -60,6 +60,13 @@ class PipelineResult:
         return obs.get[name]
 
 
+def _bind(reg: Registry, stmt: str, line_no: int) -> Directive:
+    """One recipe statement parsed, looked up and bound to its directive."""
+    call = parse_statement(stmt, line_no)
+    dcls = reg.get(call.name)
+    return dcls(bind_arguments(call.name, dcls.usage, call.args), call)
+
+
 class Pipeline:
     """A compiled recipe: an ordered list of bound directive objects."""
 
@@ -87,7 +94,7 @@ class Pipeline:
         record is SKIPPED when the expression is true)."""
         from wrangler_spark.errors import DirectiveParseError, RecipeSyntaxError
         from wrangler_spark.parser.migrate import migrate_statement
-        from wrangler_spark.parser.recipe_parser import parse_statement, split_statements
+        from wrangler_spark.parser.recipe_parser import split_statements
 
         load_builtins()
         reg = registry or default_registry
@@ -112,18 +119,12 @@ class Pipeline:
             if stmt.startswith("#"):
                 continue
             try:
-                call = parse_statement(stmt, line_no)
-                dcls = reg.get(call.name)
-                args = bind_arguments(call.name, dcls.usage, call.args)
-                bound.append(dcls(args, call))
+                bound.append(_bind(reg, stmt, line_no))
             except (DirectiveParseError, RecipeSyntaxError):
                 migrated = migrate_statement(stmt)
                 if migrated is None:
                     raise
-                mcall = parse_statement(migrated, line_no)
-                dcls = reg.get(mcall.name)
-                args = bind_arguments(mcall.name, dcls.usage, mcall.args)
-                bound.append(dcls(args, mcall))
+                bound.append(_bind(reg, migrated, line_no))
         p = cls(bound, pragmas)
         p.precondition = precondition
         if cacheable:

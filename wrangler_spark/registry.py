@@ -10,7 +10,7 @@ same way from any imported module. Aliases and exclusions mirror
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Callable
+from typing import TYPE_CHECKING
 
 from wrangler_spark.errors import DirectiveParseError
 
@@ -65,5 +65,3 @@ def load_builtins() -> None:
     """Import all builtin directive modules (idempotent)."""
     import wrangler_spark.directives  # noqa: F401
 
-
-_ALIAS_FACTORIES: list[Callable[[], None]] = []
